@@ -71,57 +71,7 @@ object DedupQueries {
     * scratch) the verified frame is localCheckpointed once per (session,
     * sf dir) and reused; rows are identical, only the recompute disappears.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Bounded memoization: the checkpointed frames are pinned in block
-    * storage for as long as the map references them, so a session touching
-    * many sf dirs must not accumulate them forever — past a handful of
-    * entries the cache evicts every OTHER key, EXPLICITLY unpersisting any
-    * checkpointed frame it held (dropping the reference alone leaves the
-    * blocks pinned on executors until the ContextCleaner's next periodic
-    * GC — a slow leak over a long session). Hit/miss counters, when given,
-    * are derived from the mapping function itself (a flag set inside
-    * `computeIfAbsent`), so concurrent callers can never double-count the
-    * way a separate `containsKey` pre-check could. Eviction assumes the
-    * suite's sequential driver usage (Bench/Verify run queries one at a
-    * time and touch one dir); a frame evicted mid-job by a concurrent
-    * caller would lose its blocks with no lineage to recompute.
-    */
-  private[queries] def memo[V](
-      cache: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), V],
-      key: (SparkSession, String), make: () => V,
-      hits: java.util.concurrent.atomic.AtomicLong = null,
-      misses: java.util.concurrent.atomic.AtomicLong = null): V = {
-    if (cache.size > 3) {
-      val it = cache.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key) { unpersistDeep(e.getValue); it.remove() }
-      }
-    }
-    var missed = false
-    val v = cache.computeIfAbsent(key, _ => { missed = true; make() })
-    if (hits ne null) (if (missed) misses else hits).incrementAndGet()
-    v
-  }
-
-  /** Unpersist every checkpointed frame inside an evicted memo value
-    * (frames ride alone or in tuples). A `localCheckpoint(true)` plan is a
-    * `LogicalRDD` over the persisted RDD — unpersist THAT rdd; `df.rdd`
-    * would wrap it in a fresh deserializing RDD whose unpersist frees
-    * nothing.
-    */
-  private def unpersistDeep(v: Any): Unit = v match {
-    case df: org.apache.spark.sql.Dataset[_] =>
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    case it: Iterable[_] => it.foreach(unpersistDeep) // before Product: a
-      // List's cons cells are Products — iterating avoids spine recursion
-    case p: Product => p.productIterator.foreach(unpersistDeep)
-    case _ => ()
-  }
+  private val pairsMemo = Memo.entry[DataFrame]("minhashPairs")
 
   /** Fixture corpus/batch split: standing corpus = `doc_id < splitId`,
     * incoming batch = `doc_id >= splitId`, with splitId = n·4/5 in pure
@@ -134,14 +84,13 @@ object DedupQueries {
     * oracle restates the same integer expression as a scalar subquery
     * ([[splitSql]]); one tiny max() aggregate, cached per (session, dir).
     */
-  private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
+  private val splitMemo = Memo.entry[java.lang.Long]("splitId")
 
   private[graft] def splitId(s: SparkSession, d: String): Long =
-    memo[java.lang.Long](splitCache, (s, d), () => {
+    splitMemo(s, d) {
       val n = Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0) + 1L
       n * 4L / 5L
-    })
+    }
 
   /** [[splitId]] as a DuckDB scalar subquery — the identical integer
     * expression, so the two engines can never disagree on the boundary.
@@ -182,11 +131,7 @@ object DedupQueries {
     * new-batch×corpus join, not a signature rebuild. Verify leaves the flag
     * off, so the correctness gate always recomputes from scratch.
     */
-  private val bandsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-
-  private[queries] def share(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean
+  private val bandsMemo = Memo.entry[(DataFrame, DataFrame)]("tokensAndBands")
 
   /** Tokenized corpus frame `(doc_id, lang, n_chars, toks)` — the upstream
     * every shingle/span-family consumer starts from. Under `sharePairs`
@@ -203,25 +148,18 @@ object DedupQueries {
     * array element inside interpreted HOFs (the documented ~60x pitfall;
     * measured 5.8s -> 0.6s on the containment query).
     */
-  private val tokFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val tokMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val tokMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val tokFrameMemo = Memo.entry[DataFrame]("tokFrame")
 
   private[queries] def tokFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
               TextAnalysis.tokens(col("text")).as("toks"))
-    if (!share(s)) build()
-    else {
-      // Materialize.shared: hash-distribute on doc_id across the core count
-      // before checkpointing — a memo frame's partitioning is frozen, and
-      // AQE's byte-based coalescing otherwise leaves this compute-dense
-      // frame 1-2 partitions wide for every downstream consumer (r12)
-      memo(tokFrameCache, (s, d),
-           () => graft.operators.Materialize.shared(build(), col("doc_id")),
-           tokMemoHits, tokMemoMisses)
-    }
+    // Materialize.shared: hash-distribute on doc_id across the core count
+    // before checkpointing — a memo frame's partitioning is frozen, and
+    // AQE's byte-based coalescing otherwise leaves this compute-dense
+    // frame 1-2 partitions wide for every downstream consumer (r12)
+    if (!Memo.share(s)) build()
+    else tokFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
   }
 
   /** 3-gram shingle frame `(doc_id, lang, n_chars, sh)` over [[tokFrame]] —
@@ -231,20 +169,15 @@ object DedupQueries {
     * tokenize+shingle per read was the measured bottleneck
     * (see [[prefixPairs]]'s checkpoint-the-array-frame note).
     */
-  private val shingleFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val shMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val shMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val shingleFrameMemo = Memo.entry[DataFrame]("shingleFrame")
 
   private[queries] def shingleFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = tokFrame(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
               Dedup.ngramShingles(col("toks"), 3).as("sh"))
       .localCheckpoint(true)
-    if (!share(s)) build()
-    else {
-      memo(shingleFrameCache, (s, d), build, shMemoHits, shMemoMisses)
-    }
+    if (!Memo.share(s)) build()
+    else shingleFrameMemo(s, d)(build())
   }
 
   /** Corpus-wide 3-gram shingle MASK table `(doc_id, mm, sz)` — the
@@ -259,20 +192,13 @@ object DedupQueries {
     * vocab renumbering). Verify leaves the flag off, so the correctness
     * gate always exercises the per-query pruned build.
     */
-  private val maskCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val winCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val maskMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val maskMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val shingleMaskMemo = Memo.entry[DataFrame]("corpusShingleMasks")
 
-  private[queries] def corpusShingleMasks(s: SparkSession, d: String): DataFrame = {
-    memo(maskCache, (s, d), hits = maskMemoHits, misses = maskMemoMisses,
-      make = () => graft.operators.Materialize.shared(
-        Dedup.tokenMasks(
-          shingleFrame(s, d).select(col("doc_id"), explode(col("sh")).as("token")),
-          "doc_id"), col("doc_id")))
-  }
+  private[queries] def corpusShingleMasks(s: SparkSession, d: String): DataFrame =
+    shingleMaskMemo(s, d)(graft.operators.Materialize.shared(
+      Dedup.tokenMasks(
+        shingleFrame(s, d).select(col("doc_id"), explode(col("sh")).as("token")),
+        "doc_id"), col("doc_id")))
 
   /** Candidate-pair stats over the corpus 3-gram shingles: the per-query
     * (typically participant-pruned) mask build on the oracle path, or the
@@ -281,7 +207,7 @@ object DedupQueries {
     */
   private def shingleStats(s: SparkSession, d: String, cand: DataFrame,
                            tokenRows: => DataFrame): DataFrame =
-    if (share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusShingleMasks(s, d), "doc_id")
+    if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusShingleMasks(s, d), "doc_id")
     else Dedup.bitsetPairStats(cand, tokenRows, "doc_id")
 
   /** Corpus-wide WORD-token mask table `(doc_id, mm, sz)` — the
@@ -299,15 +225,11 @@ object DedupQueries {
     * Verify leaves the flag off — the correctness gate always exercises
     * the per-query participant-pruned build.
     */
-  private val wordMaskCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val wmaskMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val wmaskMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val wordMaskMemo = Memo.entry[DataFrame]("corpusWordMasks")
 
   private[queries] def corpusWordMasks(s: SparkSession, d: String): DataFrame =
-    memo(wordMaskCache, (s, d), hits = wmaskMemoHits, misses = wmaskMemoMisses,
-      make = () => graft.operators.Materialize.shared(
-        Dedup.tokenMasks(tokensAndBands(s, d)._1, "doc_id"), col("doc_id")))
+    wordMaskMemo(s, d)(graft.operators.Materialize.shared(
+      Dedup.tokenMasks(tokensAndBands(s, d)._1, "doc_id"), col("doc_id")))
 
   /** Exact Jaccard for word-token candidate pairs: the shared corpus mask
     * table under the bench memo (probe-only — no per-rep mask build), or
@@ -317,7 +239,7 @@ object DedupQueries {
   private def wordJaccard(s: SparkSession, d: String, cand: DataFrame,
                           tokenRows: => DataFrame): DataFrame = {
     val stats =
-      if (share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
+      if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
       else Dedup.bitsetPairStats(cand, tokenRows, "doc_id", materializeMasks = true)
     stats.select(col("a"), col("b"),
       (col("n_inter").cast("double") /
@@ -335,8 +257,8 @@ object DedupQueries {
        if (checkpoint) graft.operators.Materialize.shared(bands, col("doc_id"))
        else bands)
     }
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) build(false)
-    else memo(bandsCache, (s, d), () => build(true))
+    if (!Memo.share(s)) build(false)
+    else bandsMemo(s, d)(build(true))
   }
 
   /** Amortization observability: how often the verified-pair memo was hit
@@ -345,18 +267,12 @@ object DedupQueries {
     * construction (miss)" and "22 s of pure clustering (hit)" demand
     * different fixes, and medians alone cannot tell them apart.
     */
-  private val pairMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val pairMemoMisses = new java.util.concurrent.atomic.AtomicLong
   def pairsMemoStats: String =
-    s"hit=${pairMemoHits.get},miss=${pairMemoMisses.get}," +
-      s"toks=${tokMemoHits.get}/${tokMemoMisses.get}," +
-      s"sh=${shMemoHits.get}/${shMemoMisses.get}," +
-      s"mask=${maskMemoHits.get}/${maskMemoMisses.get}," +
-      s"wmask=${wmaskMemoHits.get}/${wmaskMemoMisses.get}," +
-      s"iedges=${ieMemoHits.get}/${ieMemoMisses.get}," +
-      s"sim=${simMemoHits.get}/${simMemoMisses.get}," +
-      s"cdc=${cdcMemoHits.get}/${cdcMemoMisses.get}," +
-      s"pfx=${pfxMemoHits.get}/${pfxMemoMisses.get}"
+    s"hit=${pairsMemo.hits},miss=${pairsMemo.misses}," +
+      s"toks=${Memo.stats(tokFrameMemo)},sh=${Memo.stats(shingleFrameMemo)}," +
+      s"mask=${Memo.stats(shingleMaskMemo)},wmask=${Memo.stats(wordMaskMemo)}," +
+      s"iedges=${Memo.stats(verifiedDeltaMemo)},sim=${Memo.stats(simhashMemo)}," +
+      s"cdc=${Memo.stats(cdcFrameMemo)},pfx=${Memo.stats(prefixIndexMemo)}"
 
   /** Full-corpus CDC chunk frame `(doc_id, chunk_idx, n_toks, chunk_md5)`
     * — the persisted chunk table a rolling deployment keeps (the
@@ -367,19 +283,12 @@ object DedupQueries {
     * Verify leaves the flag off, so the correctness gate always chunks
     * from scratch per query.
     */
-  private val cdcFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val cdcMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val cdcMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val cdcFrameMemo = Memo.entry[DataFrame]("cdcFrame")
 
   private def cdcFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = Dedup.cdcChunks(Tables.documents(s, d), "doc_id", "text")
-    if (!share(s)) build()
-    else {
-      memo(cdcFrameCache, (s, d),
-           () => graft.operators.Materialize.shared(build(), col("doc_id")),
-           cdcMemoHits, cdcMemoMisses)
-    }
+    if (!Memo.share(s)) build()
+    else cdcFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
   }
 
   private[queries] def minhashPairsRaw(s: SparkSession, d: String): DataFrame = {
@@ -389,16 +298,8 @@ object DedupQueries {
       Dedup.jaccardVerifyBitset(cand, toks, "doc_id", materializeMasks = true)
         .filter(col("jaccard") >= 0.7)
     }
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) build()
-    else {
-      val before = pairMemoMisses.get
-      val v = memo(pairCache, (s, d),
-                   () => graft.operators.Materialize.shared(build(), col("a")),
-                   pairMemoHits, pairMemoMisses)
-      System.err.println(s"[graft] minhashPairsRaw memo " +
-        s"${if (pairMemoMisses.get == before) "hit" else "miss"} for $d")
-      v
-    }
+    if (!Memo.share(s)) build()
+    else pairsMemo(s, d)(graft.operators.Materialize.shared(build(), col("a")))
   }
 
   def minhashPairs(s: SparkSession, d: String): DataFrame =
@@ -458,7 +359,7 @@ object DedupQueries {
     // proves it per round). The from-scratch path below keeps the banded
     // cross-split probe — the shape a deployment WITHOUT a standing pair
     // ledger runs, and what Verify gates.
-    if (share(s)) {
+    if (Memo.share(s)) {
       val evB = col("b") % 10 === 0
       return minhashPairsRaw(s, d)
         .filter((col("a") % 10 === 0) =!= evB)
@@ -483,7 +384,7 @@ object DedupQueries {
     // corpusWordMasks; train∪eval IS the full token relation, so the memo
     // covers every candidate); the oracle path keeps the per-query build
     val stats =
-      if (share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
+      if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
       else Dedup.bitsetPairStats(cand, toks, "doc_id")
     stats
       .select(col("a"), col("b"),
@@ -552,19 +453,12 @@ object DedupQueries {
     * rolling deployment keeps next to its band table, built once and
     * probed per query. Verify recomputes from scratch as always.
     */
-  private val simCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val simMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val simMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val simhashMemo = Memo.entry[DataFrame]("simhashFrame")
 
   private def simhashFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = Dedup.simhash(Tables.documents(s, d), "doc_id", "text")
-    if (!share(s)) build()
-    else {
-      memo(simCache, (s, d),
-           () => graft.operators.Materialize.shared(build(), col("doc_id")),
-           simMemoHits, simMemoMisses)
-    }
+    if (!Memo.share(s)) build()
+    else simhashMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
   }
 
   /** 60-bit SimHash per document. */
@@ -746,10 +640,7 @@ object DedupQueries {
     * flag off — the per-query build (still one-build thanks to the
     * checkpoint) is what the correctness gate times.
     */
-  private val prefixIdxCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val pfxMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val pfxMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val prefixIndexMemo = Memo.entry[DataFrame]("prefixIndex")
 
   private def prefixIndex(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -767,8 +658,8 @@ object DedupQueries {
           .select(col("doc_id"), col("token"), col("n"), col("rn")),
         col("token"))
     }
-    if (!share(s)) build()
-    else memo(prefixIdxCache, (s, d), build, pfxMemoHits, pfxMemoMisses)
+    if (!Memo.share(s)) build()
+    else prefixIndexMemo(s, d)(build())
   }
 
   def prefixPairs(s: SparkSession, d: String): DataFrame = {
@@ -908,7 +799,7 @@ object DedupQueries {
     // the frame stays lazy — no per-rep checkpoint; non-shared path keeps
     // the r12 shape (checkpoint the twice-consumed candidates, prune
     // participants, build masks once per query)
-    if (share(s)) {
+    if (Memo.share(s)) {
       wordJaccard(s, d, storedCandidateJoin(s, d, st),
         sys.error("tokenRows is never evaluated on the shared path"))
         .filter(col("jaccard") >= 0.7)
@@ -935,11 +826,10 @@ object DedupQueries {
   /** Ensure the fixture corpus's (doc_id < [[splitId]]) state tables exist — built
     * once per (session, dir), then reused by every rep/consumer.
     */
-  private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DedupState.Names]()
+  private val corpusStateMemo = Memo.entry[DedupState.Names]("corpusState")
 
   private[graft] def corpusState(s: SparkSession, d: String): DedupState.Names =
-    memo(stateCache, (s, d), () => {
+    corpusStateMemo(s, d) {
       val n = DedupState.names("graft_corpus", d)
       // bands/toks, the standing component assignments ([[clustersIncremental]]
       // contracts corpus endpoints through them so a batch merge never
@@ -948,7 +838,7 @@ object DedupQueries {
       buildFullState(s,
         Tables.documents(s, d).filter(col("doc_id") < splitId(s, d)), n)
       n
-    })
+    }
 
   /** Bench-only warmup: materialize the one-time persisted state tables
     * (and, under the `sharePairs` flag, the sanctioned cross-query memos)
@@ -965,7 +855,7 @@ object DedupQueries {
     GraphQueries.edgeState(s, d)
     MultimodalQueries.mmState(s, d)
     graft.queries.TextQueries.bm25State(s, d)
-    if (s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) {
+    if (Memo.share(s)) {
       tokensAndBands(s, d)
       batchToksAndBands(s, d)
       minhashPairsRaw(s, d).count()
@@ -1023,15 +913,14 @@ object DedupQueries {
     * re-clustering job reads; distinct from [[corpusState]], whose fixture
     * corpus is the doc_id < [[splitId]] standing half.
     */
-  private val fullStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DedupState.Names]()
+  private val fullStateMemo = Memo.entry[DedupState.Names]("fullCorpusState")
 
   private[graft] def fullCorpusState(s: SparkSession, d: String): DedupState.Names =
-    memo(fullStateCache, (s, d), () => {
+    fullStateMemo(s, d) {
       val n = DedupState.names("graft_all", d)
       DedupState.write(Tables.documents(s, d), "doc_id", "text", K, R, n, buckets = 16)
       n
-    })
+    }
 
   /** [[clusters]] from PERSISTED state — the periodic full re-clustering a
     * rolling corpus runs (incremental probes catch new×corpus duplicates
@@ -1058,18 +947,15 @@ object DedupQueries {
     * vs CC over stored-state pairs) instead of re-verifying per rep.
     * Verify leaves the flag off — the oracle path recomputes everything.
     */
-  private val storedEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val storedEdgesMemo = Memo.entry[DataFrame]("storedVerifiedEdges")
 
   private def storedVerifiedEdges(s: SparkSession, d: String): DataFrame = {
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean)
-      stateVerifiedEdges(s, fullCorpusState(s, d))
-    else memo(storedEdgesCache, (s, d),
-      // shared path: probe the memoized corpus mask table instead of
-      // building one inside this (once-per-session) edge derivation (r13)
-      () => graft.operators.Materialize.shared(
-        stateVerifiedEdges(s, fullCorpusState(s, d),
-          sharedMasks = Some(corpusWordMasks(s, d))), col("a")))
+    if (!Memo.share(s)) stateVerifiedEdges(s, fullCorpusState(s, d))
+    // shared path: probe the memoized corpus mask table instead of
+    // building one inside this (once-per-session) edge derivation (r13)
+    else storedEdgesMemo(s, d)(graft.operators.Materialize.shared(
+      stateVerifiedEdges(s, fullCorpusState(s, d),
+        sharedMasks = Some(corpusWordMasks(s, d))), col("a")))
   }
 
   /** Verified near-dup edges read entirely off a persisted state `n` —
@@ -1175,8 +1061,7 @@ object DedupQueries {
     * real per-batch pipeline signs the batch ONCE and probes with it.
     * Verify leaves the flag off — correctness always recomputes.
     */
-  private val batchCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  private val batchMemo = Memo.entry[(DataFrame, DataFrame)]("batchToksAndBands")
 
   private def batchToksAndBands(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     def build(checkpoint: Boolean): (DataFrame, DataFrame) = {
@@ -1192,8 +1077,8 @@ object DedupQueries {
        if (checkpoint) graft.operators.Materialize.shared(bands, col("doc_id"))
        else bands)
     }
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) build(false)
-    else memo(batchCache, (s, d), () => build(true))
+    if (!Memo.share(s)) build(false)
+    else batchMemo(s, d)(build(true))
   }
 
   /** The incoming batch's distinct-token rows (docs >= [[splitId]]). */
@@ -1210,10 +1095,7 @@ object DedupQueries {
     * so candidate formation splits cleanly by id class — the equivalence
     * [[clustersIncremental]]'s shared oracle proves).
     */
-  private val ieCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val ieMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val ieMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val verifiedDeltaMemo = Memo.entry[DataFrame]("incrementalVerifiedEdges")
 
   private[queries] def incrementalVerifiedEdges(s: SparkSession, d: String,
                                                 st: DedupState.Names): DataFrame = {
@@ -1225,7 +1107,7 @@ object DedupQueries {
       // NN pairs (both ids >= splitId) and NC pairs (exactly one corpus
       // side) are disjoint by construction — no distinct() needed
       val cand0 = candNN.unionByName(candNC)
-      if (share(s)) {
+      if (Memo.share(s)) {
         // shared path (r13): ONE consumer — the memoized corpus-mask probe
         // — so the candidate frame stays lazy and no per-rep mask table is
         // built (see corpusWordMasks); the result below is itself memoized
@@ -1261,10 +1143,8 @@ object DedupQueries {
     // `dedup_incremental`/`dedup_incremental_stored` do NOT read this memo:
     // they keep timing their own probe+verify every rep. Verify leaves the
     // flag off (full recompute); VerifyShared proves the memoized path.
-    if (!share(s)) build()
-    else memo(ieCache, (s, d),
-      () => graft.operators.Materialize.shared(build(), col("a")),
-      ieMemoHits, ieMemoMisses)
+    if (!Memo.share(s)) build()
+    else verifiedDeltaMemo(s, d)(graft.operators.Materialize.shared(build(), col("a")))
   }
 
   /** The new-batch × stored-corpus band probe join — exposed so
@@ -1362,8 +1242,8 @@ object DedupQueries {
     // identical every run — the same standing-state amortization the
     // winnowed span table gives spansIncremental)
     val w =
-      if (!share(s)) spanWindows(s, d).localCheckpoint(true)
-      else memo(winCache, (s, d), () =>
+      if (!Memo.share(s)) spanWindows(s, d).localCheckpoint(true)
+      else spanWindowMemo(s, d)(
         graft.operators.Materialize.shared(spanWindows(s, d), col("doc_id")))
     val dup = w.groupBy("span_md5")
       .agg(countDistinct("doc_id").as("nd"))
@@ -1496,6 +1376,8 @@ object DedupQueries {
         explode(graft.functions.WinnowFunctions.winnowSpans(col("toks"), spanW, winW)).as("sp"))
       .select(col("doc_id"), col("sp.start"), col("sp.span_md5"))
   }
+
+  private val spanWindowMemo = Memo.entry[DataFrame]("spanWindows")
 
   /** The positioned window-hash stream spans() dedups — exposed
     * pre-checkpoint so PlanAuditSpec can pin the scan shape (a

@@ -231,10 +231,9 @@ object JoinQueries {
     */
   private val MaxServedHotKeys = 65536
 
-  private val hotKeyCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Option[Seq[Long]]]()
+  private val hotKeysMemo = Memo.entry[Option[Seq[Long]]]("hotOrderKeys")
   private def hotOrderKeys(s: SparkSession, d: String): Option[Seq[Long]] =
-    hotKeyCache.computeIfAbsent((s, d), _ => {
+    hotKeysMemo(s, d) {
       // count first: never collect an over-bound census to the driver
       val census = Tables.lineitem(s, d)
         .groupBy("l_orderkey").agg(count(lit(1)).as("__f"))
@@ -242,7 +241,7 @@ object JoinQueries {
       if (census.limit(MaxServedHotKeys + 1).count() > MaxServedHotKeys) None
       else Some(census.select("l_orderkey")
         .collect().map(_.getLong(0)).sorted.toSeq)
-    })
+    }
 
   def saltedJoin(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)

@@ -529,12 +529,10 @@ object MiscQueries {
     * merge absorbing the remaining 1/5 — bucket-aligned append, the
     * standing table never read (the [[AggState]] contract).
     */
-  private val aggStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), AggState.Name]()
+  private val orderAggStateMemo = Memo.entry[AggState.Name]("orderAggState")
 
-  private[graft] def orderAggState(s: SparkSession, d: String): AggState.Name = {
-    if (aggStateCache.size > 3) aggStateCache.clear()
-    aggStateCache.computeIfAbsent((s, d), _ => {
+  private[graft] def orderAggState(s: SparkSession, d: String): AggState.Name =
+    orderAggStateMemo(s, d) {
       val n = AggState.name("graft_ordview", d)
       val o = Tables.orders(s, d)
       AggState.write(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) =!= 0L)),
@@ -542,8 +540,7 @@ object MiscQueries {
       AggState.merge(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) === 0L)),
         "o_custkey", n, buckets = 16)
       n
-    })
-  }
+    }
 
   /** Incremental materialized-view read ([[graft.operators.AggState]]):
     * the per-customer order rollup served from PERSISTED partial

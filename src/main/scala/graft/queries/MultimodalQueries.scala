@@ -85,13 +85,10 @@ object MultimodalQueries {
     * table a rolling media deployment keeps; Verify leaves the flag off so
     * the correctness gate always decodes from scratch.
     */
-  private val hashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val mmMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val mmMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val phashMemo = Memo.entry[DataFrame]("phashFrame")
 
   /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats). */
-  def mmMemoStats: String = s"${mmMemoHits.get}/${mmMemoMisses.get}"
+  def mmMemoStats: String = Memo.stats(phashMemo)
 
   private def hashBuild(s: SparkSession, d: String): DataFrame =
     Multimodal.ahash(Multimodal.mediaFromText(
@@ -100,9 +97,8 @@ object MultimodalQueries {
 
   private def phashFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = hashBuild(s, d).localCheckpoint(true)
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(hashCache, (s, d), () => build(),
-                           mmMemoHits, mmMemoMisses)
+    if (!Memo.share(s)) build()
+    else phashMemo(s, d)(build())
   }
 
   /** mm_phash_clusters — connected components over [[phashPairs]]'s edge
@@ -155,11 +151,10 @@ object MultimodalQueries {
     * every stored state here; an ingest epoch would bucket-aligned-APPEND
     * its batch rows (DedupState.merge's shape) rather than rewrite.
     */
-  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val mmStateMemo = Memo.entry[String]("mmState")
 
   private[queries] def mmState(s: SparkSession, d: String): String =
-    stateCache.computeIfAbsent((s, d), _ => {
+    mmStateMemo(s, d) {
       val tbl = graft.operators.DedupState.names("graft_mm", d).bands
       val standing = hashBuild(s, d)
         .filter(col("media_id") < DedupQueries.splitId(s, d))
@@ -168,7 +163,7 @@ object MultimodalQueries {
           standing, "media_id", "ahash", bits = 60, nBands = 4),
         "band_key", tbl, 4)
       tbl
-    })
+    }
 
   /** Epoch-advance the stored media band state: bucket-aligned APPEND of
     * one batch's fingerprint band rows — the media sibling of

@@ -190,16 +190,10 @@ object SamplingQueries {
     * relation. Verify leaves the flag off, so the correctness gate
     * featurizes from scratch per query.
     */
-  private val dsirFeatCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val dsirMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val dsirMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val dsirFeatMemo = Memo.entry[DataFrame]("dsirFeatures")
 
   /** Bench-artifact marker (the DedupQueries.pairsMemoStats contract). */
-  def dsirMemoStats: String = s"${dsirMemoHits.get}/${dsirMemoMisses.get}"
-
-  private def share(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean
+  def dsirMemoStats: String = Memo.stats(dsirFeatMemo)
 
   /** [[dsirFeatures]] of `documents` restricted to `pred` — per-query
     * build with the flag off, a filter over the shared corpus frame with
@@ -207,7 +201,7 @@ object SamplingQueries {
     */
   private def dsirFeaturesFor(s: SparkSession, d: String,
                               pred: Option[Column]): DataFrame =
-    if (!share(s))
+    if (!Memo.share(s))
       dsirFeatures(pred.foldLeft(Tables.documents(s, d))(_.filter(_)))
     else {
       // Materialize.shared, not a bare checkpoint: AQE coalesces the tiny
@@ -215,10 +209,8 @@ object SamplingQueries {
       // checkpoint FREEZES that layout for every consumer — the r12 memo
       // lesson, applied here in r13 (Profile: 0.6 s single-task λ/score
       // stages inside sample_dsir on a 32-core session)
-      val full = DedupQueries.memo(dsirFeatCache, (s, d),
-        () => graft.operators.Materialize.shared(
-          dsirFeaturesRaw(Tables.documents(s, d)), col("doc_id")),
-        dsirMemoHits, dsirMemoMisses)
+      val full = dsirFeatMemo(s, d)(graft.operators.Materialize.shared(
+        dsirFeaturesRaw(Tables.documents(s, d)), col("doc_id")))
       pred.foldLeft(full)(_.filter(_))
     }
 
@@ -270,20 +262,17 @@ object SamplingQueries {
     * (doc_id < the shared 4/5 boundary) persisted as a catalog table —
     * built once per (session, dir), then only read.
     */
-  private val dsirStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val dsirStateMemo = Memo.entry[String]("dsirState")
 
-  private[graft] def dsirState(s: SparkSession, d: String): String = {
-    if (dsirStateCache.size > 3) dsirStateCache.clear()
-    dsirStateCache.computeIfAbsent((s, d), _ => {
+  private[graft] def dsirState(s: SparkSession, d: String): String =
+    dsirStateMemo(s, d) {
       val tbl = graft.operators.AggState.name("graft_dsirlam", d).parts
       val corpusFeats = dsirFeaturesFor(s, d,
         Some(col("doc_id") < DedupQueries.splitId(s, d)))
       graft.operators.Layout.writeBucketed(
         dsirLam(s, corpusFeats), "bucket", tbl, 4)
       tbl
-    })
-  }
+    }
 
   /** Incoming-batch DSIR selection against the STORED λ model
     * ([[dsirState]]) — the data-selection sibling of the stored

@@ -32,13 +32,10 @@ object SimilarityQueries {
     * IVF cell table. Verify leaves the flag off, so the correctness gate
     * always buckets from scratch.
     */
-  private val bucketCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val annMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val annMemoMisses = new java.util.concurrent.atomic.AtomicLong
+  private val bucketedVecsMemo = Memo.entry[DataFrame]("bucketedVecs")
 
   /** Bench-artifact marker (the DedupQueries.pairsMemoStats contract). */
-  def annMemoStats: String = s"${annMemoHits.get}/${annMemoMisses.get}"
+  def annMemoStats: String = Memo.stats(bucketedVecsMemo, pqCodesFrameMemo)
 
   private def lshAnchors(vecs: DataFrame): DataFrame =
     vecs.filter(col("vec_id") < 8)
@@ -49,10 +46,8 @@ object SimilarityQueries {
       val vecs = prepared(Tables.embeddings(s, d))
       withBuckets(vecs, lshAnchors(vecs))
     }
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) build()
-    else DedupQueries.memo(bucketCache, (s, d),
-      () => graft.operators.Materialize.shared(build(), col("vec_id")),
-      annMemoHits, annMemoMisses)
+    if (!Memo.share(s)) build()
+    else bucketedVecsMemo(s, d)(graft.operators.Materialize.shared(build(), col("vec_id")))
   }
 
   /** Lloyd-refined PQ codebooks for the corpus, cached per (session, sf
@@ -62,11 +57,10 @@ object SimilarityQueries {
     * encode and scan against the same frozen codebooks, which is exactly
     * how a production PQ index amortizes its training.
     */
-  private val pqCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[(Int, Seq[Double])]]]()
+  private val pqCbsMemo = Memo.entry[Seq[Seq[(Int, Seq[Double])]]]("pqCodebooks")
 
   private def pqCbs(s: SparkSession, d: String): Seq[Seq[(Int, Seq[Double])]] =
-    DedupQueries.memo(pqCbCache, (s, d), () =>
+    pqCbsMemo(s, d)(
       Similarity.pqCodebooks(prepared(Tables.embeddings(s, d)).select("vec_id", "v")))
 
   /** PQ-encoded corpus frame `(vec_id, v, c0..c{M-1})` — the 8-byte-code
@@ -79,16 +73,13 @@ object SimilarityQueries {
     * memoized frame is row-identical to a per-query encode. Verify leaves
     * the flag off — the correctness gate always encodes from scratch.
     */
-  private val pqCodesFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val pqCodesFrameMemo = Memo.entry[DataFrame]("pqCodesFrame")
 
   private def pqCodesFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = Similarity.pqEncode(
       prepared(Tables.embeddings(s, d)).select("vec_id", "v"), pqCbs(s, d))
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(pqCodesFrameCache, (s, d),
-      () => graft.operators.Materialize.shared(build(), col("vec_id")),
-      annMemoHits, annMemoMisses)
+    if (!Memo.share(s)) build()
+    else pqCodesFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("vec_id")))
   }
 
   /** The shared k=5 / 2-round k-means model — `sim_kmeans`,
@@ -99,11 +90,10 @@ object SimilarityQueries {
     * applied to the coarse quantizer (r13: each rebuild paid ~2 rounds ×
     * collect jobs per query rep).
     */
-  private val km5Cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(Int, Seq[Double])]]()
+  private val kmeansMemo = Memo.entry[Seq[(Int, Seq[Double])]]("kmeans5x2")
 
   private[queries] def kmeans5x2(s: SparkSession, d: String): Seq[(Int, Seq[Double])] =
-    DedupQueries.memo(km5Cache, (s, d), () =>
+    kmeansMemo(s, d)(
       Similarity.kmeansFit(
         prepared(Tables.embeddings(s, d)).select("vec_id", "v"), k = 5, rounds = 2))
 
@@ -118,26 +108,23 @@ object SimilarityQueries {
     * trained index input: an index build materializes its input exactly
     * once.
     */
-  private val resFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val residualMemo = Memo.entry[DataFrame]("residualFrame")
   private def residualFrame(s: SparkSession, d: String): DataFrame =
-    resFrameCache.computeIfAbsent((s, d), _ => {
+    residualMemo(s, d) {
       graft.functions.VectorFunctions.register(s)
       val full = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
       val seeds = full.filter(col("vec_id") < lit(ivfK(s, d)))
         .select(col("vec_id").as("sid"), col("v").as("sv"))
       graft.operators.Materialize.frame(Similarity.cellResiduals(full, seeds))
-    })
+    }
 
   /** Residual PQ codebooks (trained on v − seed(cell), not raw vectors),
     * cached per (session, sf dir) like [[pqCbs]].
     */
-  private val pqResCbCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[Seq[(Int, Seq[Double])]]]()
+  private val pqResCbsMemo = Memo.entry[Seq[Seq[(Int, Seq[Double])]]]("pqResidualCodebooks")
 
   private def pqResCbs(s: SparkSession, d: String): Seq[Seq[(Int, Seq[Double])]] =
-    DedupQueries.memo(pqResCbCache, (s, d), () =>
-      Similarity.pqCodebooks(residualFrame(s, d).select("vec_id", "v")))
+    pqResCbsMemo(s, d)(Similarity.pqCodebooks(residualFrame(s, d).select("vec_id", "v")))
 
   /** C13 — brute-force cosine similarity to vector 0, top-10. */
   def c13(s: SparkSession, d: String): DataFrame = {
@@ -783,11 +770,9 @@ object SimilarityQueries {
     * = vec_id < split, incoming batch = vec_id >= split), mirroring the
     * document-side [[DedupQueries.splitId]] contract.
     */
-  private val esplitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
+  private val embNMemo = Memo.entry[java.lang.Long]("embN")
   private def embN(s: SparkSession, d: String): Long =
-    esplitCache.computeIfAbsent((s, d), _ =>
-      Tables.embeddings(s, d).agg(max(col("vec_id"))).head.getLong(0) + 1L)
+    embNMemo(s, d)(Tables.embeddings(s, d).agg(max(col("vec_id"))).head.getLong(0) + 1L)
   private[graft] def embSplit(s: SparkSession, d: String): Long =
     embN(s, d) * 4L / 5L
 
@@ -838,10 +823,9 @@ object SimilarityQueries {
     s"${prefix}_${sfx}_$tag"
   }
 
-  private val ivfStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ivfStateMemo = Memo.entry[String]("ivfState")
   private def ivfState(s: SparkSession, d: String): String =
-    ivfStateCache.computeIfAbsent((s, d), _ => {
+    ivfStateMemo(s, d) {
       val tbl = stateName("graft_ivf_cells", d)
       graft.functions.VectorFunctions.register(s)
       val corpus = prepared(Tables.embeddings(s, d))
@@ -852,7 +836,7 @@ object SimilarityQueries {
         .select(col("vec_id"), col("cell"), col("v"))
       graft.operators.Layout.writeBucketed(assigned, "cell", tbl, 4)
       tbl
-    })
+    }
 
   /** The persisted FULL-corpus IVF index behind the AD-HOC ANN family:
     * every embedding row as `(vec_id, cell, v, label)`, bucketed on
@@ -873,10 +857,9 @@ object SimilarityQueries {
     * to the source table — the metadata-filter attributes belong IN a
     * production vector index for exactly this reason.
     */
-  private val ivfFullCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val ivfFullMemo = Memo.entry[String]("ivfFullState")
   private[graft] def ivfFullState(s: SparkSession, d: String): String =
-    ivfFullCache.computeIfAbsent((s, d), _ => {
+    ivfFullMemo(s, d) {
       val tbl = stateName("graft_ivf_full", d)
       graft.functions.VectorFunctions.register(s)
       val vecs = prepared(Tables.embeddings(s, d))
@@ -887,7 +870,7 @@ object SimilarityQueries {
         .select(col("vec_id"), col("cell"), col("v"), col("label"))
       graft.operators.Layout.writeBucketed(assigned, "cell", tbl, 4)
       tbl
-    })
+    }
 
   /** Persisted PQ code postings `(vec_id, cell, c0..c7)` bucketed on
     * `cell` — the 8-byte-per-vector half of the IVF-PQ index, encoded
@@ -898,29 +881,27 @@ object SimilarityQueries {
     * compression" is FOR — the codes are what a 100 TB deployment keeps
     * hot, not the raw vectors.
     */
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val pqCodesStateMemo = Memo.entry[String]("pqCodesState")
   private def pqCodesState(s: SparkSession, d: String): String =
-    pqCodesCache.computeIfAbsent((s, d), _ => {
+    pqCodesStateMemo(s, d) {
       val tbl = stateName("graft_pq_codes", d)
       val assigned = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
       val codes = Similarity.pqEncode(assigned, pqCbs(s, d)).drop("v")
       graft.operators.Layout.writeBucketed(codes, "cell", tbl, 4)
       tbl
-    })
+    }
 
   /** [[pqCodesState]]'s residual twin: codes of v − seed(cell) against
     * the residual-trained [[pqResCbs]] codebooks (the IVFADC index rows).
     */
-  private val pqResCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val pqResCodesMemo = Memo.entry[String]("pqResCodesState")
   private def pqResCodesState(s: SparkSession, d: String): String =
-    pqResCodesCache.computeIfAbsent((s, d), _ => {
+    pqResCodesMemo(s, d) {
       val tbl = stateName("graft_pq_rescodes", d)
       val codes = Similarity.pqEncode(residualFrame(s, d), pqResCbs(s, d)).drop("v")
       graft.operators.Layout.writeBucketed(codes, "cell", tbl, 4)
       tbl
-    })
+    }
 
   /** Incremental ANN against a PERSISTED IVF index — the vector-side
     * rolling-ingest contract, mirroring dedup_incremental_stored: the

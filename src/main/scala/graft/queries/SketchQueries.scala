@@ -120,7 +120,7 @@ object SketchQueries {
     // this query rebuilding that stream as 3.4× its comparator); Verify
     // keeps the flag off and builds from scratch.
     val sh =
-      if (DedupQueries.share(s))
+      if (Memo.share(s))
         DedupQueries.shingleFrame(s, d).select(explode(col("sh")).as("shingle"))
       else shingleStream(s, d).localCheckpoint(true)
     val stats = sh

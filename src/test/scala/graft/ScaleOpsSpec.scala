@@ -281,7 +281,7 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("sharePairs flag yields bit-identical results for every share-enabled query") {
     // EVERY query the bench-only memo family reroutes (tokFrame /
-    // shingleFrame / corpusShingleMasks / simhashFrame / winCache /
+    // shingleFrame / corpusShingleMasks / simhashFrame / spanWindows /
     // bpeTrain / cdcFrame / dsirFeatures / bucketedVecs / minhash
     // pairs+bands) must produce the same rows flag-on and flag-off — the
     // bench path of a memoized query is otherwise never correctness-
@@ -308,7 +308,12 @@ class ScaleOpsSpec extends SparkSpec {
       "mm_phash_stored",
       // round-9 stored graph maintenance (batch bands memo feeds the
       // edge-state advance)
-      "graph_domain_rank_stored")
+      "graph_domain_rank_stored",
+      // the round-13 memos: domain edge frame + node count, PQ code
+      // frame, bigram LM, scored classifier batch, stored verified edges
+      "graph_domain_rank", "graph_domain_communities", "graph_triangles",
+      "sim_pq_ann", "sim_pq_rerank", "text_bigram_logprob", "text_clf_eval",
+      "dedup_clusters_stored")
     def run(q: String) = SparkEntry.queries(q)(spark, sf())
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     val off = qs.map(q => q -> run(q)).toMap
