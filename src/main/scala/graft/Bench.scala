@@ -34,15 +34,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // share the verified near-dup pair frame between dedup_minhash_pairs
-      // and dedup_clusters (bit-identical rows; Verify leaves this off so
-      // the correctness gate always recomputes from scratch).
-      // DECISION (round 6): dedup_clusters STAYS in the headline set —
-      // the pairs_memo marker in the artifact now distinguishes "number
-      // includes pair-pipeline construction" (miss) from "pure
-      // clustering" (hit), which was the only reason to consider
-      // dropping it.
-      .config("spark.graft.dedup.sharePairs", "true")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     // ERROR, not WARN: the driver tail-parses this process's output, and
@@ -202,6 +193,10 @@ object Bench {
     }
     val floorJson =
       s""","floor_sec":${"%.4f".format(floorSec)},"jobs":${jmap(jobsPerQuery.toSeq.sortBy(_._1))},"floor_adj":${jmap(floorAdj.map { case (k, v) => k -> (math.rint(v * 1000) / 1000) })}"""
+    // DECISION (round 6): dedup_clusters STAYS in the headline set — the
+    // pairs_memo marker distinguishes "number includes pair-pipeline
+    // construction" (miss) from "pure clustering" (hit), which was the
+    // only reason to consider dropping it.
     val memoStats = graft.queries.DedupQueries.pairsMemoStats +
       ",tf=" + graft.queries.TextQueries.tfMemoStats +
       ",bpe=" + graft.queries.TextQueries.bpeMemoStats +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** The lineage-truncation primitive for ITERATIVE operators (the CC
@@ -43,11 +43,17 @@ object Materialize {
     */
   val DirKey = "spark.graft.checkpoint.dir"
 
+  /** The session's checkpoint posture: the reliable root when [[DirKey]]
+    * is set (non-empty), `None` for `localCheckpoint`.
+    */
+  def checkpointDir(s: SparkSession): Option[String] =
+    s.conf.getOption(DirKey).filter(_.nonEmpty)
+
   /** Materialize `df` eagerly with truncated lineage, honoring [[DirKey]].
     */
   def frame(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    s.conf.getOption(DirKey).filter(_.nonEmpty) match {
+    checkpointDir(s) match {
       case Some(dir) =>
         // setCheckpointDir is sticky per SparkContext (it appends a
         // per-context UUID subdir); only (re)set it when the configured
@@ -67,23 +73,6 @@ object Materialize {
 
   private val lastDir = new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  /** Materialize a SHARED frame (memoized corpus state, multi-consumer
-    * candidate sets) hash-distributed on `key` across the session's core
-    * count before checkpointing.
-    *
-    * Why (r12, guide §2.5/§6): AQE coalesces shuffle partitions by BYTES,
-    * and several graft frames are compute-dense on tiny bytes — token
-    * arrays feeding band joins, bitmask maps feeding popcount verifies —
-    * so at bench scale the final stage of a memo build lands in 1-2
-    * partitions and EVERY downstream consumer inherits 2-way parallelism
-    * on a 32-core session (measured: an 11.6 s 2-task verify stage inside
-    * dedup_incremental at sf0.1). A checkpointed frame's partitioning is
-    * frozen (no exchange below it for AQE to re-split), so balance is
-    * established once, at build time, with one hash exchange on the frame's
-    * natural key — the same layout a production deployment gets from
-    * bucketing its stored state tables on that key. Row content identical;
-    * only the physical distribution changes.
-    */
   /** Hash-spread `df` on `key` to the session's core count — ONLY when its
     * physical plan would otherwise run in fewer partitions (guide §2.5
     * "input skew: one huge unsplittable file → repartition immediately
@@ -101,18 +90,31 @@ object Materialize {
     if (df.rdd.getNumPartitions >= p) df else df.repartition(p, key)
   }
 
-  def shared(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val s = df.sparkSession
-    // spark.graft.shared.parallelism: partition count for shared frames.
-    // Each partition of a checkpointed frame costs every consumer stage one
-    // task (~5-10 ms apiece on the bench box), so a CHEAP consumer pays
-    // ~p×task-overhead per read while a compute-dense consumer gains p-way
-    // parallelism. Default cores/2 — the measured sweet spot on a mixed
-    // cheap/heavy consumer set (A/B at p∈{8,16,32} on 14 queries: 25.6 /
-    // 23.1 / 25.4 s) — overridable per session.
-    val p = s.conf.getOption("spark.graft.shared.parallelism")
-      .map(_.toInt)
-      .getOrElse(math.max(2, s.sparkContext.defaultParallelism / 2))
-    frame(df.repartition(p, key))
-  }
+  /** Materialize a SHARED frame (memoized corpus state, multi-consumer
+    * candidate sets) hash-distributed on `key` across half the session's
+    * core count before checkpointing.
+    *
+    * Why (r12, guide §2.5/§6): AQE coalesces shuffle partitions by BYTES,
+    * and several graft frames are compute-dense on tiny bytes — token
+    * arrays feeding band joins, bitmask maps feeding popcount verifies —
+    * so at bench scale the final stage of a memo build lands in 1-2
+    * partitions and EVERY downstream consumer inherits 2-way parallelism
+    * on a 32-core session (measured: an 11.6 s 2-task verify stage inside
+    * dedup_incremental at sf0.1). A checkpointed frame's partitioning is
+    * frozen (no exchange below it for AQE to re-split), so balance is
+    * established once, at build time, with one hash exchange on the frame's
+    * natural key — the same layout a production deployment gets from
+    * bucketing its stored state tables on that key. Row content identical;
+    * only the physical distribution changes.
+    *
+    * Partition count: max(2, cores/2). Each partition of a checkpointed
+    * frame costs every consumer stage one task (~5-10 ms apiece on the
+    * bench box), so a CHEAP consumer pays ~p×task-overhead per read while
+    * a compute-dense consumer gains p-way parallelism; cores/2 was the
+    * measured sweet spot on a mixed cheap/heavy consumer set (A/B at
+    * p∈{8,16,32} on 14 queries: 25.6 / 23.1 / 25.4 s).
+    */
+  def shared(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
+    frame(df.repartition(
+      math.max(2, df.sparkSession.sparkContext.defaultParallelism / 2), key))
 }

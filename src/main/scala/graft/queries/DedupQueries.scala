@@ -64,12 +64,9 @@ object DedupQueries {
     * (which adds rounding + total order) and cluster formation (which
     * doesn't need either).
     *
-    * The LSH + jaccard pipeline is the most expensive sub-plan in the suite
-    * and both consumers run it back-to-back under the bench's per-query
-    * isolation. With `spark.graft.dedup.sharePairs=true` (set by Bench — the
-    * Verify/oracle path leaves it off so correctness always recomputes from
-    * scratch) the verified frame is localCheckpointed once per (session,
-    * sf dir) and reused; rows are identical, only the recompute disappears.
+    * The LSH + jaccard pipeline is the most expensive sub-plan in the suite,
+    * so the verified frame is checkpointed once per (session, sf dir) and
+    * reused by every consumer.
     */
   private val pairsMemo = Memo.entry[DataFrame]("minhashPairs")
 
@@ -124,24 +121,22 @@ object DedupQueries {
        |      FROM ${alias}_e)""".stripMargin
 
   /** Distinct-token rows + per-doc band table — the expensive upstream every
-    * MinHash consumer shares (K md5 hashes per (doc, token)). Under the same
-    * `sharePairs` flag both frames are localCheckpointed once per (session,
-    * sf dir): this is precisely the "stored band table" a rolling 100 TB
-    * deployment keeps between ingests — [[incremental]] then prices only the
-    * new-batch×corpus join, not a signature rebuild. Verify leaves the flag
-    * off, so the correctness gate always recomputes from scratch.
+    * MinHash consumer shares (K md5 hashes per (doc, token)). Both frames
+    * are checkpointed once per (session, sf dir): this is precisely the
+    * "stored band table" a rolling 100 TB deployment keeps between ingests —
+    * [[incremental]] then prices only the new-batch×corpus join, not a
+    * signature rebuild.
     */
   private val bandsMemo = Memo.entry[(DataFrame, DataFrame)]("tokensAndBands")
 
   /** Tokenized corpus frame `(doc_id, lang, n_chars, toks)` — the upstream
-    * every shingle/span-family consumer starts from. Under `sharePairs`
-    * (bench only; Verify recomputes from scratch) it is localCheckpointed
+    * every shingle/span-family consumer starts from. It is checkpointed
     * once per (session, sf dir) and shared across `dedup_spans`,
     * `dedup_spans_minimized`, `dedup_ngram_pairs`, `dedup_containment` and
     * `dedup_prefix_pairs` — the round-6 verdict measured those queries each
     * re-tokenizing the corpus from scratch as the dominant shared cost.
     * This is the same amortization a rolling 100 TB deployment gets from
-    * its stored tokenized corpus; rows are bit-identical either way.
+    * its stored tokenized corpus.
     *
     * The toks array is materialized in its OWN select before any consumer
     * lambda reads it: an inline tokens(...) expression is re-evaluated per
@@ -150,35 +145,39 @@ object DedupQueries {
     */
   private val tokFrameMemo = Memo.entry[DataFrame]("tokFrame")
 
-  private[queries] def tokFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), col("n_chars"),
-              TextAnalysis.tokens(col("text")).as("toks"))
+  private[queries] def tokFrame(s: SparkSession, d: String): DataFrame =
     // Materialize.shared: hash-distribute on doc_id across the core count
     // before checkpointing — a memo frame's partitioning is frozen, and
     // AQE's byte-based coalescing otherwise leaves this compute-dense
     // frame 1-2 partitions wide for every downstream consumer (r12)
-    if (!Memo.share(s)) build()
-    else tokFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
-  }
+    tokFrameMemo(s, d)(graft.operators.Materialize.shared(tokFrameBuild(s, d), col("doc_id")))
+
+  /** [[tokFrame]]'s builder — exposed pre-checkpoint so PlanAuditSpec can
+    * pin the scan shape (a checkpointed frame's plan starts at a Scan
+    * ExistingRDD).
+    */
+  private[graft] def tokFrameBuild(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+              TextAnalysis.tokens(col("text")).as("toks"))
 
   /** 3-gram shingle frame `(doc_id, lang, n_chars, sh)` over [[tokFrame]] —
-    * shared by the three shingle-set consumers (n-gram Jaccard, containment,
-    * prefix join). Checkpointed even UN-shared: every consumer reads it 3-4
-    * times (df counts, both join sides, verify masks) and re-running
-    * tokenize+shingle per read was the measured bottleneck
-    * (see [[prefixPairs]]'s checkpoint-the-array-frame note).
+    * shared by the shingle-set consumers (n-gram Jaccard, containment,
+    * prefix join, the corpus shingle masks, `cms_heavy_hitters`) and
+    * checkpointed once per (session, sf dir): re-running shingling per
+    * read was the measured bottleneck (see [[prefixPairs]]'s
+    * checkpoint-the-array-frame note).
     */
   private val shingleFrameMemo = Memo.entry[DataFrame]("shingleFrame")
 
-  private[queries] def shingleFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = tokFrame(s, d)
+  private[queries] def shingleFrame(s: SparkSession, d: String): DataFrame =
+    shingleFrameMemo(s, d)(shingleFrameBuild(s, d).localCheckpoint(true))
+
+  /** [[shingleFrame]]'s builder — exposed pre-checkpoint for PlanAuditSpec. */
+  private[graft] def shingleFrameBuild(s: SparkSession, d: String): DataFrame =
+    tokFrame(s, d)
       .select(col("doc_id"), col("lang"), col("n_chars"),
               Dedup.ngramShingles(col("toks"), 3).as("sh"))
-      .localCheckpoint(true)
-    if (!Memo.share(s)) build()
-    else shingleFrameMemo(s, d)(build())
-  }
 
   /** Corpus-wide 3-gram shingle MASK table `(doc_id, mm, sz)` — the
     * expensive verify-side half (dense vocab numbering + per-doc bitset
@@ -186,11 +185,10 @@ object DedupQueries {
     * `dedup_prefix_pairs` each rebuilt per query: at sf0.1 the candidate
     * participants cover ~99.9% of the corpus (measured 4996/5000), so the
     * per-query participant prune saves nothing and the mask build IS the
-    * query cost. Under the bench memo it is built once and probed per
+    * query cost. It is built once per (session, sf dir) and probed per
     * candidate set; [[Dedup.tokenMasks]] documents why superset-built
     * masks return bit-identical stats (n_inter/sz are invariant under the
-    * vocab renumbering). Verify leaves the flag off, so the correctness
-    * gate always exercises the per-query pruned build.
+    * vocab renumbering).
     */
   private val shingleMaskMemo = Memo.entry[DataFrame]("corpusShingleMasks")
 
@@ -200,21 +198,17 @@ object DedupQueries {
         shingleFrame(s, d).select(col("doc_id"), explode(col("sh")).as("token")),
         "doc_id"), col("doc_id")))
 
-  /** Candidate-pair stats over the corpus 3-gram shingles: the per-query
-    * (typically participant-pruned) mask build on the oracle path, or the
-    * shared corpus mask table under the bench memo — identical outputs
-    * either way (see [[corpusShingleMasks]]).
+  /** Candidate-pair stats over the corpus 3-gram shingles: a probe of the
+    * shared corpus mask table (see [[corpusShingleMasks]]).
     */
-  private def shingleStats(s: SparkSession, d: String, cand: DataFrame,
-                           tokenRows: => DataFrame): DataFrame =
-    if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusShingleMasks(s, d), "doc_id")
-    else Dedup.bitsetPairStats(cand, tokenRows, "doc_id")
+  private def shingleStats(s: SparkSession, d: String, cand: DataFrame): DataFrame =
+    Dedup.bitsetPairStatsFromMasks(cand, corpusShingleMasks(s, d), "doc_id")
 
   /** Corpus-wide WORD-token mask table `(doc_id, mm, sz)` — the
     * [[corpusShingleMasks]] pattern applied to the MinHash/word-token
-    * verify family (r13, guide §2.4 "build the index once"): under the
-    * bench memo the dense vocab numbering + per-doc bitset aggregation is
-    * built ONCE over the full distinct-token relation ([[tokensAndBands]]'s
+    * verify family (r13, guide §2.4 "build the index once"): the dense
+    * vocab numbering + per-doc bitset aggregation is built ONCE over the
+    * full distinct-token relation ([[tokensAndBands]]'s
     * token rows — every doc, so every candidate participant of every
     * incremental/stored verify is covered) and PROBED per candidate set.
     * The per-rep rebuild it replaces was ~10 AQE-stage jobs inside every
@@ -222,8 +216,6 @@ object DedupQueries {
     * most of dedup_incremental's 22 jobs/rep). [[Dedup.tokenMasks]]
     * documents why superset-built masks return bit-identical stats
     * (n_inter/sz_a/sz_b are invariant under the vocab renumbering).
-    * Verify leaves the flag off — the correctness gate always exercises
-    * the per-query participant-pruned build.
     */
   private val wordMaskMemo = Memo.entry[DataFrame]("corpusWordMasks")
 
@@ -231,35 +223,22 @@ object DedupQueries {
     wordMaskMemo(s, d)(graft.operators.Materialize.shared(
       Dedup.tokenMasks(tokensAndBands(s, d)._1, "doc_id"), col("doc_id")))
 
-  /** Exact Jaccard for word-token candidate pairs: the shared corpus mask
-    * table under the bench memo (probe-only — no per-rep mask build), or
-    * the participant-pruned one-build-per-query form on the oracle path —
-    * identical outputs either way (see [[corpusWordMasks]]).
+  /** Exact Jaccard for word-token candidate pairs: a probe of the shared
+    * corpus mask table — no per-query mask build (see [[corpusWordMasks]]).
     */
-  private def wordJaccard(s: SparkSession, d: String, cand: DataFrame,
-                          tokenRows: => DataFrame): DataFrame = {
-    val stats =
-      if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
-      else Dedup.bitsetPairStats(cand, tokenRows, "doc_id", materializeMasks = true)
-    stats.select(col("a"), col("b"),
-      (col("n_inter").cast("double") /
-       (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")).as("jaccard"))
-  }
+  private def wordJaccard(s: SparkSession, d: String, cand: DataFrame): DataFrame =
+    Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
+      .select(col("a"), col("b"),
+        (col("n_inter").cast("double") /
+         (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")).as("jaccard"))
 
-  private def tokensAndBands(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    def build(checkpoint: Boolean): (DataFrame, DataFrame) = {
-      val toks = Dedup.distinctTokenRows(Tables.documents(s, d), "doc_id", "text")
-      val kept =
-        if (checkpoint) graft.operators.Materialize.shared(toks, col("doc_id"))
-        else toks
-      val bands = Dedup.minhashBands(Dedup.minhashSignatures(kept, "doc_id", K), "doc_id", K, R)
-      (kept,
-       if (checkpoint) graft.operators.Materialize.shared(bands, col("doc_id"))
-       else bands)
+  private def tokensAndBands(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    bandsMemo(s, d) {
+      val toks = graft.operators.Materialize.shared(
+        Dedup.distinctTokenRows(Tables.documents(s, d), "doc_id", "text"), col("doc_id"))
+      val bands = Dedup.minhashBands(Dedup.minhashSignatures(toks, "doc_id", K), "doc_id", K, R)
+      (toks, graft.operators.Materialize.shared(bands, col("doc_id")))
     }
-    if (!Memo.share(s)) build(false)
-    else bandsMemo(s, d)(build(true))
-  }
 
   /** Amortization observability: how often the verified-pair memo was hit
     * vs built this JVM. The bench embeds this in its artifact so a slow
@@ -280,27 +259,22 @@ object DedupQueries {
     * Chunk boundaries are strictly per-document, so filtering this frame
     * by doc_id is bit-identical to chunking the filtered docs — which is
     * what lets the census and the incremental probe share one build.
-    * Verify leaves the flag off, so the correctness gate always chunks
-    * from scratch per query.
     */
   private val cdcFrameMemo = Memo.entry[DataFrame]("cdcFrame")
 
-  private def cdcFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = Dedup.cdcChunks(Tables.documents(s, d), "doc_id", "text")
-    if (!Memo.share(s)) build()
-    else cdcFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
-  }
+  private def cdcFrame(s: SparkSession, d: String): DataFrame =
+    cdcFrameMemo(s, d)(graft.operators.Materialize.shared(
+      Dedup.cdcChunks(Tables.documents(s, d), "doc_id", "text"), col("doc_id")))
 
-  private[queries] def minhashPairsRaw(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = {
+  private[queries] def minhashPairsRaw(s: SparkSession, d: String): DataFrame =
+    pairsMemo(s, d) {
       val (toks, bands) = tokensAndBands(s, d)
       val cand = Dedup.lshCandidatePairs(bands, "doc_id", K / R)
-      Dedup.jaccardVerifyBitset(cand, toks, "doc_id", materializeMasks = true)
-        .filter(col("jaccard") >= 0.7)
+      graft.operators.Materialize.shared(
+        Dedup.jaccardVerifyBitset(cand, toks, "doc_id", materializeMasks = true)
+          .filter(col("jaccard") >= 0.7),
+        col("a"))
     }
-    if (!Memo.share(s)) build()
-    else pairsMemo(s, d)(graft.operators.Materialize.shared(build(), col("a")))
-  }
 
   def minhashPairs(s: SparkSession, d: String): DataFrame =
     minhashPairsRaw(s, d)
@@ -339,59 +313,22 @@ object DedupQueries {
     * ≥0.7-Jaccard near-duplicate of an eval doc (shared eval convention
     * doc_id % 10 == 0) leaks the benchmark even when no byte or n-gram
     * matches exactly — the published contamination studies all flag at
-    * this fuzzy tier, not just exact match. Candidates come from the SAME
-    * minhash bands as the intra-corpus pair census (the factored
-    * `verifiedPairsCtesWith` chain — one notion of "near-duplicate"), but
-    * the band join runs ACROSS the split only: train bands × eval bands,
-    * never train×train or eval×eval, so the probe pays one LSH band probe
-    * against a corpus/10-sized side instead of the full intra-corpus pair
-    * work. Verification is the exact codegen bitset Jaccard. At 100 TB
-    * the eval side is benchmark-sized (thousands of docs) — its band
-    * table broadcasts and the probe is map-side.
+    * this fuzzy tier, not just exact match. The pairs are the train×eval
+    * subset of the SAME verified pair relation as the intra-corpus pair
+    * census (the factored `verifiedPairsCtesWith` chain — one notion of
+    * "near-duplicate"), so the query is a filter over standing state.
     */
   def decontamFuzzy(s: SparkSession, d: String): DataFrame = {
-    // Under the bench memo the fuzzy tier is a pure FILTER on the standing
-    // verified-pair state (r13): its oracle is verifiedPairsCtesWith
-    // restricted to train×eval, i.e. the cross-split subset of the ONE
-    // near-duplicate relation [[minhashPairsRaw]] memoizes — same band
-    // collision condition (∃ shared band), same exact bitset verify, same
-    // ≥0.7 predicate, so rows are identical by construction (VerifyShared
-    // proves it per round). The from-scratch path below keeps the banded
-    // cross-split probe — the shape a deployment WITHOUT a standing pair
-    // ledger runs, and what Verify gates.
-    if (Memo.share(s)) {
-      val evB = col("b") % 10 === 0
-      return minhashPairsRaw(s, d)
-        .filter((col("a") % 10 === 0) =!= evB)
-        .select(when(evB, col("a")).otherwise(col("b")).as("train_doc"),
-                when(evB, col("b")).otherwise(col("a")).as("eval_doc"),
-                round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("train_doc", "eval_doc")
-    }
-    val (toks, bands) = tokensAndBands(s, d)
-    val entries = bands.select(col("doc_id"), explode(array((0 until K / R).map(j =>
-        struct(lit(j).as("band_idx"), col(s"band$j").as("band_val"))): _*)).as("e"))
-      .select(col("doc_id"), col("e.band_idx").as("band_idx"),
-              col("e.band_val").as("band_val"))
-    val tr = entries.filter(col("doc_id") % 10 =!= 0)
-      .toDF("a", "band_idx", "band_val")
-    val ev = entries.filter(col("doc_id") % 10 === 0)
-      .toDF("b", "band_idx", "band_val")
-    val cand = tr.join(ev, Seq("band_idx", "band_val"))
-      .select("a", "b").distinct()
-    // shared path probes the memoized corpus mask table instead of
-    // rebuilding the vocab numbering + bitsets per rep (r13 — see
-    // corpusWordMasks; train∪eval IS the full token relation, so the memo
-    // covers every candidate); the oracle path keeps the per-query build
-    val stats =
-      if (Memo.share(s)) Dedup.bitsetPairStatsFromMasks(cand, corpusWordMasks(s, d), "doc_id")
-      else Dedup.bitsetPairStats(cand, toks, "doc_id")
-    stats
-      .select(col("a"), col("b"),
-        (col("n_inter").cast("double") /
-         (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= 0.7)
-      .select(col("a").as("train_doc"), col("b").as("eval_doc"),
+    // a pure FILTER on the standing verified-pair state (r13): the oracle
+    // is verifiedPairsCtesWith restricted to train×eval, i.e. the
+    // cross-split subset of the ONE near-duplicate relation
+    // [[minhashPairsRaw]] memoizes — same band collision condition
+    // (∃ shared band), same exact bitset verify, same ≥0.7 predicate
+    val evB = col("b") % 10 === 0
+    minhashPairsRaw(s, d)
+      .filter((col("a") % 10 === 0) =!= evB)
+      .select(when(evB, col("a")).otherwise(col("b")).as("train_doc"),
+              when(evB, col("b")).otherwise(col("a")).as("eval_doc"),
               round(col("jaccard"), 4).as("jaccard"))
       .orderBy("train_doc", "eval_doc")
   }
@@ -399,7 +336,7 @@ object DedupQueries {
   /** The full decontamination VERDICT — all three tiers of the ladder as
     * one declarative plan, per source: byte-identical text (md5 against
     * the eval hash set), whole-doc near-duplicate ([[decontamFuzzy]]'s
-    * banded cross-split probe, ≥0.7 Jaccard), and shared-8-gram leakage
+    * cross-split verified pairs, ≥0.7 Jaccard), and shared-8-gram leakage
     * (≥1 span window in common with any eval doc — the Bloom blocklist's
     * exact form). A training doc is CLEAN only if every tier clears it;
     * the report gives each tier's hit count and the surviving count — the
@@ -407,7 +344,7 @@ object DedupQueries {
     * audit an operator reads before enabling it. Scale shape: three
     * hash/band equi-joins (eval-sized or banded sides) feeding one
     * map-side-combined rollup; the fuzzy tier reuses the shared
-    * bands/masks machinery, the gram tier the shared span windows.
+    * verified pairs, the gram tier the shared span windows.
     */
   def decontamPurge(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -449,17 +386,17 @@ object DedupQueries {
 
   /** The 60-bit fingerprint frame both simhash queries read — one row per
     * doc, so the checkpoint is corpus-CARDINALITY (8 bytes of hash per
-    * doc): under the bench memo this is the stored fingerprint table a
-    * rolling deployment keeps next to its band table, built once and
-    * probed per query. Verify recomputes from scratch as always.
+    * doc): the stored fingerprint table a rolling deployment keeps next to
+    * its band table, built once per (session, sf dir) and probed per query.
     */
   private val simhashMemo = Memo.entry[DataFrame]("simhashFrame")
 
-  private def simhashFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = Dedup.simhash(Tables.documents(s, d), "doc_id", "text")
-    if (!Memo.share(s)) build()
-    else simhashMemo(s, d)(graft.operators.Materialize.shared(build(), col("doc_id")))
-  }
+  private def simhashFrame(s: SparkSession, d: String): DataFrame =
+    simhashMemo(s, d)(graft.operators.Materialize.shared(simhashBuild(s, d), col("doc_id")))
+
+  /** [[simhashFrame]]'s builder — exposed pre-checkpoint for PlanAuditSpec. */
+  private[graft] def simhashBuild(s: SparkSession, d: String): DataFrame =
+    Dedup.simhash(Tables.documents(s, d), "doc_id", "text")
 
   /** 60-bit SimHash per document. */
   def simhash(s: SparkSession, d: String): DataFrame =
@@ -484,12 +421,12 @@ object DedupQueries {
     * band range-join; the oracle states the same pairs with a plain
     * abs() predicate.
     *
-    * The shingle frame is localCheckpointed once: the pipeline reads it four
-    * times (both join sides, the vocabulary numbering, the mask builder) and
-    * each read would otherwise re-run tokenize+shingle over the corpus.
-    * Verification reuses the bitmask-popcount jaccard from the MinHash path
-    * (codegen'd merge-intersect) instead of per-pair string-array
-    * intersection — measured 2.3x faster at sf0.1, identical pairs.
+    * The shingle frame is the shared checkpointed [[shingleFrame]]: both
+    * join sides read it without re-running tokenize+shingle. Verification
+    * probes the shared corpus shingle masks with the bitmask-popcount
+    * jaccard from the MinHash path (codegen'd merge-intersect) instead of
+    * per-pair string-array intersection — measured 2.3x faster at sf0.1,
+    * identical pairs.
     */
   def ngramPairs(s: SparkSession, d: String): DataFrame = {
     val base = shingleFrame(s, d)
@@ -501,23 +438,12 @@ object DedupQueries {
         col("x.doc_id") < col("y.doc_id") &&
         abs(col("x.n_chars") - col("y.n_chars")) <= 5)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      // read 3x: both verify joins + participant set. Plain checkpoint, NO
-      // repartition: this candidate set is tiny (≤ tens of thousands of
-      // pairs) and its verify probes the memoized corpus mask table, so a
-      // hash-spread here is pure overhead (r12: measured +0.7 s)
+      // plain checkpoint, NO repartition: this candidate set is tiny
+      // (≤ tens of thousands of pairs) and its verify probes the memoized
+      // corpus mask table, so a hash-spread here is pure overhead (r12:
+      // measured +0.7 s)
       .localCheckpoint(true)
-    // masks/vocabulary only for candidate PARTICIPANTS (same semi-join
-    // prune as containment/prefixPairs): the verify cost tracks the
-    // candidate set, not the corpus — jaccard depends only on each
-    // participant's full shingle set, which the doc_id semi-join keeps
-    // intact, so the output is provably unchanged
-    lazy val shingleRows = {
-      val parts = cand.select(col("a").as("doc_id"))
-        .union(cand.select(col("b").as("doc_id"))).distinct()
-      base.select(col("doc_id"), explode(col("sh")).as("token"))
-        .join(parts, Seq("doc_id"), "left_semi")
-    }
-    shingleStats(s, d, cand, shingleRows)
+    shingleStats(s, d, cand)
       .select(col("a"), col("b"),
         (col("n_inter").cast("double") /
          (col("sz_a") + col("sz_b") - col("n_inter")).cast("double")).as("jaccard"))
@@ -538,15 +464,10 @@ object DedupQueries {
     * Blocking is a RARE-shingle inverted index (document frequency <= 5):
     * a contaminated pair shares many shingles, so it shares a rare one with
     * near-certainty, while the rare-df cap bounds the index fan-out — each
-    * posting list joins at most df eval-side rows. Verification reuses the
-    * bitset popcount machinery via [[Dedup.bitsetPairStats]].
-    *
-    * Scale note: masks/vocabulary are built only for candidate
-    * PARTICIPANTS (a semi-join on the distinct pair members), so the
-    * verify cost tracks the candidate set, not the corpus — at 100 TB
-    * candidates ≪ corpus is the whole point of the rare-shingle blocking.
-    * Containment denominators stay exact: every eval doc in a pair is a
-    * participant, so its full shingle set survives the semi-join.
+    * posting list joins at most df eval-side rows. Verification probes the
+    * shared corpus shingle masks ([[corpusShingleMasks]]) with the bitset
+    * popcount machinery; each mask holds a doc's full shingle set, so the
+    * containment denominators are exact.
     */
   def containment(s: SparkSession, d: String): DataFrame = {
     // toks materialize BEFORE the shingle lambda inside shingleFrame (the
@@ -561,12 +482,7 @@ object DedupQueries {
       .select(col("doc_id").as("b"), col("token"))
     val cand = evalShr.join(rare, "token").join(trainShr, "token")
       .select("a", "b").distinct().localCheckpoint(true)
-    lazy val shrParts = {
-      val parts = cand.select(col("a").as("doc_id"))
-        .union(cand.select(col("b").as("doc_id"))).distinct()
-      shr.join(parts, Seq("doc_id"), "left_semi")
-    }
-    shingleStats(s, d, cand, shrParts)
+    shingleStats(s, d, cand)
       .filter(col("sz_a") > 0)
       // filter on the UNROUNDED ratio (the oracle's WHERE does too — a
       // boundary value that rounds up to 0.5 must not diverge), round only
@@ -590,8 +506,8 @@ object DedupQueries {
     * (10·min(n_a,n_b) ≥ 6·max) prunes pairs that cannot reach t.
     * All threshold arithmetic is exact integers — ceil(0.6n) as
     * (6n+9) div 10, the verify cut as 10·|∩| ≥ 6·|∪| — so no float
-    * boundary can diverge between engines. Verification is the shared
-    * participant-pruned bitset popcount.
+    * boundary can diverge between engines. Verification probes the shared
+    * corpus shingle masks with the bitset popcount.
     *
     * On top of the per-side prefix cut sits PPJoin's POSITIONAL filter
     * (Xiao et al., "Efficient Similarity Joins for Near Duplicate
@@ -606,7 +522,7 @@ object DedupQueries {
     * (the earliest shared token of any qualifying pair satisfies it by
     * the suffix-count argument) and cheaper: measured 204k → 73k raw
     * candidates (193k → 69k distinct pairs) at sf0.1, which shrinks the
-    * verify stage's participant set in the same ratio. α stays
+    * verify stage's candidate set in the same ratio. α stays
     * integer-exact: ceil(3(n_x+n_y)/8) = (3(n_x+n_y)+7) div 8 for t = 0.6.
     *
     * SHINGLES, not unigram tokens, and deliberately so: prefix filtering
@@ -626,25 +542,27 @@ object DedupQueries {
     */
   /** The PPJoin prefix index `(doc_id, token, n, rn)` — each doc's
     * n − ⌈0.6n⌉ + 1 globally-rarest shingles with their rarity rank and
-    * the doc's distinct-shingle count. Built ONCE per query (the
+    * the doc's distinct-shingle count. Built ONCE per (session, dir) (the
     * candidate self-join reads it as both sides, and self-join expr-id
     * re-aliasing defeats exchange reuse — the same failure
     * [[Dedup.bitsetPairStats]] documents, so an un-checkpointed index
     * paid the df-join + ranking window TWICE); hash-distributed on the
-    * join probe key `token` and, under the bench memo, shared per
-    * (session, dir) — the prefix index is exactly the structure a PPJoin
-    * deployment persists next to its stored band tables. `n` rides the
-    * array length (`size(set)`): the shingle array is `array_distinct`'d
-    * at build, so the former per-doc `count() OVER (doc_id)` window was
-    * recomputing a value the array already carries. Verify leaves the
-    * flag off — the per-query build (still one-build thanks to the
-    * checkpoint) is what the correctness gate times.
+    * join probe key `token` — the prefix index is exactly the structure a
+    * PPJoin deployment persists next to its stored band tables. `n` rides
+    * the array length (`size(set)`): the shingle array is
+    * `array_distinct`'d at build, so the former per-doc
+    * `count() OVER (doc_id)` window was recomputing a value the array
+    * already carries.
     */
   private val prefixIndexMemo = Memo.entry[DataFrame]("prefixIndex")
 
-  private def prefixIndex(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def build(): DataFrame = {
+  private def prefixIndex(s: SparkSession, d: String): DataFrame =
+    prefixIndexMemo(s, d) {
+      import org.apache.spark.sql.expressions.Window
+      // explode off the checkpointed ARRAY frame: measured FASTER (4.7s vs
+      // 5.7s at sf0.1) than checkpointing the exploded long form — the
+      // explode is codegen'd and cheap, while the long form's checkpoint
+      // stores one string shingle per row
       val sets = shingleFrame(s, d)
         .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
                 explode(col("sh")).as("token"))
@@ -658,19 +576,8 @@ object DedupQueries {
           .select(col("doc_id"), col("token"), col("n"), col("rn")),
         col("token"))
     }
-    if (!Memo.share(s)) build()
-    else prefixIndexMemo(s, d)(build())
-  }
 
   def prefixPairs(s: SparkSession, d: String): DataFrame = {
-    // checkpoint the ARRAY frame and re-explode per consumer: measured
-    // FASTER (4.7s vs 5.7s at sf0.1) than checkpointing the exploded long
-    // form — the explode is codegen'd and cheap, while the long form's
-    // checkpoint stores one string shingle per row. shingleFrame IS that
-    // checkpointed array frame (read 3x here: df, prefix ranking, verify
-    // masks), shared with ngramPairs/containment under the bench memo.
-    val sets = shingleFrame(s, d).select(col("doc_id"), col("sh").as("set"))
-    val tokRows = sets.select(col("doc_id"), explode(col("set")).as("token"))
     val pref = prefixIndex(s, d)
     val alpha = floor(((col("x.n") + col("y.n")) * 3 + 7) / 8)
     val cand = pref.alias("x").join(pref.alias("y"),
@@ -681,12 +588,7 @@ object DedupQueries {
         lit(1) + least(col("x.n") - col("x.rn"), col("y.n") - col("y.rn")) >= alpha)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    lazy val tokRowsParts = {
-      val parts = cand.select(col("a").as("doc_id"))
-        .union(cand.select(col("b").as("doc_id"))).distinct()
-      tokRows.join(parts, Seq("doc_id"), "left_semi")
-    }
-    shingleStats(s, d, cand, tokRowsParts)
+    shingleStats(s, d, cand)
       .withColumn("u", col("sz_a") + col("sz_b") - col("n_inter"))
       .filter(col("n_inter") * 10 >= col("u") * 6)
       .select(col("a").as("doc_a"), col("b").as("doc_b"),
@@ -758,25 +660,16 @@ object DedupQueries {
   /** Incremental near-dup: match an INCOMING batch (doc_id >= [[splitId]]) against
     * the STANDING corpus (doc_id < [[splitId]]) without re-pairing the corpus with
     * itself — the operation a rolling 100 TB ingest actually runs: the
-    * corpus side is a stored band table (here recomputed because the
-    * fixture has no persisted state); only new×corpus band collisions are
-    * candidates, new×new and corpus×corpus pairs never form. Verification
-    * reuses the bitset jaccard over candidate participants only.
+    * corpus side is the shared band table ([[tokensAndBands]]); only
+    * new×corpus band collisions are candidates, new×new and corpus×corpus
+    * pairs never form. Verification probes the shared corpus word masks.
     */
   def incremental(s: SparkSession, d: String): DataFrame = {
-    val (toks, bands) = tokensAndBands(s, d)
+    val (_, bands) = tokensAndBands(s, d)
     val cand = Dedup.lshCrossCandidatePairs(
       bands.filter(col("doc_id") >= splitId(s, d)), bands.filter(col("doc_id") < splitId(s, d)),
       "doc_id", K / R)
-    // participant pruning only matters on the non-shared path (it bounds
-    // the per-query mask build); the shared path probes the memoized
-    // corpus mask table and never builds one (r13 — see corpusWordMasks)
-    lazy val tokenRows = {
-      val parts = cand.select(col("a").as("doc_id"))
-        .union(cand.select(col("b").as("doc_id"))).distinct()
-      toks.join(parts, Seq("doc_id"), "left_semi")
-    }
-    wordJaccard(s, d, cand, tokenRows)
+    wordJaccard(s, d, cand)
       .filter(col("jaccard") >= 0.7)
       .select(col("a").as("new_id"), col("b").as("corpus_id"),
               round(col("jaccard"), 4).as("jaccard"))
@@ -795,32 +688,13 @@ object DedupQueries {
     */
   def incrementalStored(s: SparkSession, d: String): DataFrame = {
     val st = corpusState(s, d)
-    // shared path: candidates feed ONE consumer (the mask-table probe), so
-    // the frame stays lazy — no per-rep checkpoint; non-shared path keeps
-    // the r12 shape (checkpoint the twice-consumed candidates, prune
-    // participants, build masks once per query)
-    if (Memo.share(s)) {
-      wordJaccard(s, d, storedCandidateJoin(s, d, st),
-        sys.error("tokenRows is never evaluated on the shared path"))
-        .filter(col("jaccard") >= 0.7)
-        .select(col("a").as("new_id"), col("b").as("corpus_id"),
-                round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("new_id", "corpus_id")
-    } else {
-      val cand = graft.operators.Materialize.shared(
-        storedCandidateJoin(s, d, st), col("a"))
-      val parts = cand.select(col("a").as("doc_id"))
-        .union(cand.select(col("b").as("doc_id"))).distinct()
-      // union then ONE semi-join — see incrementalVerifiedEdges (r12)
-      val tokenRows = newBatchToks(s, d)
-        .unionByName(DedupState.toks(s, st))
-        .join(parts, Seq("doc_id"), "left_semi")
-      Dedup.jaccardVerifyBitset(cand, tokenRows, "doc_id", materializeMasks = true)
-        .filter(col("jaccard") >= 0.7)
-        .select(col("a").as("new_id"), col("b").as("corpus_id"),
-                round(col("jaccard"), 4).as("jaccard"))
-        .orderBy("new_id", "corpus_id")
-    }
+    // candidates feed ONE consumer (the mask-table probe), so the frame
+    // stays lazy — no per-query checkpoint
+    wordJaccard(s, d, storedCandidateJoin(s, d, st))
+      .filter(col("jaccard") >= 0.7)
+      .select(col("a").as("new_id"), col("b").as("corpus_id"),
+              round(col("jaccard"), 4).as("jaccard"))
+      .orderBy("new_id", "corpus_id")
   }
 
   /** Ensure the fixture corpus's (doc_id < [[splitId]]) state tables exist — built
@@ -841,13 +715,12 @@ object DedupQueries {
     }
 
   /** Bench-only warmup: materialize the one-time persisted state tables
-    * (and, under the `sharePairs` flag, the sanctioned cross-query memos)
-    * BEFORE any query is timed, so the stored/incremental medians measure
-    * the per-batch probe/merge — the number the rolling-ingest contract
-    * actually makes a claim about — and not the corpus state writes that a
-    * real deployment pays once per ingest epoch, not once per query.
-    * Verify never calls this: the correctness gate always pays full
-    * construction from scratch.
+    * and the sanctioned cross-query memos BEFORE any query is timed, so
+    * the stored/incremental medians measure the per-batch probe/merge —
+    * the number the rolling-ingest contract actually makes a claim about —
+    * and not the corpus state writes that a real deployment pays once per
+    * ingest epoch, not once per query. Verify never calls this: each piece
+    * of state is built by the first query that needs it.
     */
   private[graft] def warmupStoredState(s: SparkSession, d: String): Unit = {
     corpusState(s, d)
@@ -855,12 +728,10 @@ object DedupQueries {
     GraphQueries.edgeState(s, d)
     MultimodalQueries.mmState(s, d)
     graft.queries.TextQueries.bm25State(s, d)
-    if (Memo.share(s)) {
-      tokensAndBands(s, d)
-      batchToksAndBands(s, d)
-      minhashPairsRaw(s, d).count()
-      storedVerifiedEdges(s, d).count()
-    }
+    tokensAndBands(s, d)
+    batchToksAndBands(s, d)
+    minhashPairsRaw(s, d).count()
+    storedVerifiedEdges(s, d).count()
   }
 
   /** Incremental cluster maintenance — the third leg of the rolling-corpus
@@ -928,9 +799,8 @@ object DedupQueries {
     * e.g. when a new doc bridges two standing clusters). The stored long
     * band table self-joins on its own bucket key, so candidate formation
     * reads pre-bucketed state with NO exchange on either side
-    * (PlanAuditSpec pins it); the token masks for the verify stage come
-    * off the doc_id-bucketed token table, participant-pruned. Output is
-    * row-identical to [[clusters]] (same oracle).
+    * (PlanAuditSpec pins it); the verify probes the shared corpus word
+    * masks. Output is row-identical to [[clusters]] (same oracle).
     */
   def clustersStored(s: SparkSession, d: String): DataFrame = {
     val edges = storedVerifiedEdges(s, d)
@@ -940,30 +810,27 @@ object DedupQueries {
   }
 
   /** The verified near-dup edge set read off the persisted full-corpus
-    * state. Under the bench's `sharePairs` flag the frame is
-    * localCheckpointed once per (session, sf dir) — the same sanctioned
+    * state, checkpointed once per (session, sf dir) — the same sanctioned
     * amortization [[minhashPairsRaw]] gives [[clusters]], so the two
-    * cluster queries bench their own distinct work (CC over shared pairs
-    * vs CC over stored-state pairs) instead of re-verifying per rep.
-    * Verify leaves the flag off — the oracle path recomputes everything.
+    * cluster queries run their own distinct work (CC over shared pairs
+    * vs CC over stored-state pairs) instead of re-verifying per query.
+    * The verify probes the memoized corpus mask table instead of building
+    * one inside this edge derivation (r13).
     */
   private val storedEdgesMemo = Memo.entry[DataFrame]("storedVerifiedEdges")
 
-  private def storedVerifiedEdges(s: SparkSession, d: String): DataFrame = {
-    if (!Memo.share(s)) stateVerifiedEdges(s, fullCorpusState(s, d))
-    // shared path: probe the memoized corpus mask table instead of
-    // building one inside this (once-per-session) edge derivation (r13)
-    else storedEdgesMemo(s, d)(graft.operators.Materialize.shared(
+  private def storedVerifiedEdges(s: SparkSession, d: String): DataFrame =
+    storedEdgesMemo(s, d)(graft.operators.Materialize.shared(
       stateVerifiedEdges(s, fullCorpusState(s, d),
         sharedMasks = Some(corpusWordMasks(s, d))), col("a")))
-  }
 
   /** Verified near-dup edges read entirely off a persisted state `n` —
     * shared by [[storedVerifiedEdges]], [[buildFullState]] and the
-    * merge-equivalence spec. `sharedMasks` (bench memo only) supplies a
-    * prebuilt superset mask table covering every doc in the state — the
-    * probe is then the whole verify and the candidate frame has one
-    * consumer, so nothing is checkpointed per call.
+    * merge-equivalence spec. `sharedMasks` supplies a prebuilt superset
+    * mask table covering every doc in the state — the probe is then the
+    * whole verify and the candidate frame has one consumer, so nothing is
+    * checkpointed per call. Without it the masks are built from the
+    * state's own token table, so the edges depend on nothing but `n`.
     */
   private[graft] def stateVerifiedEdges(s: SparkSession, n: DedupState.Names,
       sharedMasks: Option[DataFrame] = None): DataFrame = sharedMasks match {
@@ -1050,40 +917,24 @@ object DedupQueries {
   }
 
   /** The incoming batch's (docs >= [[splitId]]) distinct-token rows and long-form
-    * band table. Under the bench's `sharePairs` flag both are
-    * localCheckpointed once per (session, sf dir) — the SAME amortization
-    * [[tokensAndBands]] already gives the recomputing queries, without
-    * which the stored-state variants would re-tokenize and re-sign the
-    * batch side every rep while [[incremental]] reads its bands from the
-    * memo: the bench would then compare "stored corpus + fresh batch"
-    * against "memoized everything" and conclude persisted state is slower,
-    * a fixture artifact (this fixture's batch is most of the corpus). A
-    * real per-batch pipeline signs the batch ONCE and probes with it.
-    * Verify leaves the flag off — correctness always recomputes.
+    * band table, checkpointed once per (session, sf dir) — the SAME
+    * amortization [[tokensAndBands]] gives the corpus side, without which
+    * the stored-state variants would re-tokenize and re-sign the batch
+    * side every query while [[incremental]] reads its bands from the memo.
+    * A real per-batch pipeline signs the batch ONCE and probes with it.
     */
   private val batchMemo = Memo.entry[(DataFrame, DataFrame)]("batchToksAndBands")
 
-  private def batchToksAndBands(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    def build(checkpoint: Boolean): (DataFrame, DataFrame) = {
-      val toks = Dedup.distinctTokenRows(
-        Tables.documents(s, d).filter(col("doc_id") >= splitId(s, d)), "doc_id", "text")
-      val kept =
-        if (checkpoint) graft.operators.Materialize.shared(toks, col("doc_id"))
-        else toks
+  private def batchToksAndBands(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    batchMemo(s, d) {
+      val toks = graft.operators.Materialize.shared(Dedup.distinctTokenRows(
+        Tables.documents(s, d).filter(col("doc_id") >= splitId(s, d)), "doc_id", "text"),
+        col("doc_id"))
       val bands = Dedup.longBands(
-        Dedup.minhashBands(Dedup.minhashSignatures(kept, "doc_id", K), "doc_id", K, R),
+        Dedup.minhashBands(Dedup.minhashSignatures(toks, "doc_id", K), "doc_id", K, R),
         "doc_id", K / R)
-      (kept,
-       if (checkpoint) graft.operators.Materialize.shared(bands, col("doc_id"))
-       else bands)
+      (toks, graft.operators.Materialize.shared(bands, col("doc_id")))
     }
-    if (!Memo.share(s)) build(false)
-    else batchMemo(s, d)(build(true))
-  }
-
-  /** The incoming batch's distinct-token rows (docs >= [[splitId]]). */
-  private def newBatchToks(s: SparkSession, d: String): DataFrame =
-    batchToksAndBands(s, d)._1
 
   /** The VERIFIED near-dup edges one ingest epoch contributes —
     * batch-self plus batch×corpus, the corpus side read off the persisted
@@ -1105,46 +956,22 @@ object DedupQueries {
       val candNC = Dedup.lshCrossCandidatePairsLong(
         batchBands, DedupState.bands(s, st), "doc_id", K / R)
       // NN pairs (both ids >= splitId) and NC pairs (exactly one corpus
-      // side) are disjoint by construction — no distinct() needed
-      val cand0 = candNN.unionByName(candNC)
-      if (Memo.share(s)) {
-        // shared path (r13): ONE consumer — the memoized corpus-mask probe
-        // — so the candidate frame stays lazy and no per-rep mask table is
-        // built (see corpusWordMasks); the result below is itself memoized
-        wordJaccard(s, d, cand0,
-            sys.error("tokenRows is never evaluated on the shared path"))
-          .filter(col("jaccard") >= 0.7).select("a", "b")
-      } else {
-        // Materialize hash-spread on `a` (Materialize.shared): the
-        // candidate frame's frozen partitioning IS the verify probe's
-        // parallelism once the mask sides broadcast (r12 — this stage
-        // previously ran 2-4 tasks wide)
-        val cand = graft.operators.Materialize.shared(cand0, col("a"))
-        val parts = cand.select(col("a").as("doc_id"))
-          .union(cand.select(col("b").as("doc_id"))).distinct()
-        // union THEN one semi-join (identical rows — a semi-join
-        // distributes over union): two per-branch semi-joins duplicated
-        // the `parts` subtree, and self-join dedup stops exchange reuse
-        // from collapsing the copies (r12)
-        val tokenRows = newBatchToks(s, d)
-          .unionByName(DedupState.toks(s, st))
-          .join(parts, Seq("doc_id"), "left_semi")
-        Dedup.jaccardVerifyBitset(cand, tokenRows, "doc_id", materializeMasks = true)
-          .filter(col("jaccard") >= 0.7).select("a", "b")
-      }
+      // side) are disjoint by construction — no distinct() needed. ONE
+      // consumer — the memoized corpus-mask probe (r13) — so the
+      // candidate frame stays lazy and no per-query mask table is built
+      wordJaccard(s, d, candNN.unionByName(candNC))
+        .filter(col("jaccard") >= 0.7).select("a", "b")
     }
     // The one ingest epoch's verified pair DELTA is shared state, not
     // per-query work: a rolling deployment computes it once per epoch and
     // every incremental consumer reads it (`dedup_clusters_incremental`'s
-    // merge, the graph edge-state advance). Under the bench memo it is
-    // checkpointed once per (session, dir) — the same sanctioned
-    // amortization `storedVerifiedEdges` already gives `clustersStored` —
-    // so the cluster-merge query times the MERGE, not a re-verify per rep.
+    // merge, the graph edge-state advance). It is checkpointed once per
+    // (session, dir) — the same sanctioned amortization
+    // `storedVerifiedEdges` gives `clustersStored` — so the cluster-merge
+    // query times the MERGE, not a re-verify per query.
     // `dedup_incremental`/`dedup_incremental_stored` do NOT read this memo:
-    // they keep timing their own probe+verify every rep. Verify leaves the
-    // flag off (full recompute); VerifyShared proves the memoized path.
-    if (!Memo.share(s)) build()
-    else verifiedDeltaMemo(s, d)(graft.operators.Materialize.shared(build(), col("a")))
+    // they keep running their own probe+verify every query.
+    verifiedDeltaMemo(s, d)(graft.operators.Materialize.shared(build(), col("a")))
   }
 
   /** The new-batch × stored-corpus band probe join — exposed so
@@ -1236,15 +1063,12 @@ object DedupQueries {
     */
   def spans(s: SparkSession, d: String): DataFrame = {
     // consumed twice (duplicate-set groupBy, occurrence semi-join) —
-    // checkpoint so the window md5s are computed once; under the bench
-    // memo the checkpointed frame itself is shared across reps (the
-    // stride-1 window-md5 build is the query's dominant cost and is
-    // identical every run — the same standing-state amortization the
-    // winnowed span table gives spansIncremental)
-    val w =
-      if (!Memo.share(s)) spanWindows(s, d).localCheckpoint(true)
-      else spanWindowMemo(s, d)(
-        graft.operators.Materialize.shared(spanWindows(s, d), col("doc_id")))
+    // checkpointed once per (session, dir): the stride-1 window-md5 build
+    // is the query's dominant cost and is identical every run — the same
+    // standing-state amortization the winnowed span table gives
+    // spansIncremental
+    val w = spanWindowMemo(s, d)(
+      graft.operators.Materialize.shared(spanWindows(s, d), col("doc_id")))
     val dup = w.groupBy("span_md5")
       .agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2)

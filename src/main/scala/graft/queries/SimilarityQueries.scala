@@ -26,11 +26,9 @@ object SimilarityQueries {
     * `sim_lsh_multiprobe` both rebuild per query: bucketing is 8
     * interpreted-HOF dot folds per corpus row (the round-7 bench measured
     * the rebuild as sim_lsh_multiprobe's entire 21× comparator gap).
-    * Under the bench's cross-query memo flag (the DedupQueries.tokFrame
-    * contract) it is localCheckpointed once per (session, sf dir) — the
-    * persisted bucket index a rolling deployment keeps, like the stored
-    * IVF cell table. Verify leaves the flag off, so the correctness gate
-    * always buckets from scratch.
+    * It is checkpointed once per (session, sf dir) (the
+    * DedupQueries.tokFrame contract) — the persisted bucket index a
+    * rolling deployment keeps, like the stored IVF cell table.
     */
   private val bucketedVecsMemo = Memo.entry[DataFrame]("bucketedVecs")
 
@@ -41,14 +39,11 @@ object SimilarityQueries {
     vecs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("aid"), col("v").as("av"))
 
-  private def bucketedVecs(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = {
+  private def bucketedVecs(s: SparkSession, d: String): DataFrame =
+    bucketedVecsMemo(s, d) {
       val vecs = prepared(Tables.embeddings(s, d))
-      withBuckets(vecs, lshAnchors(vecs))
+      graft.operators.Materialize.shared(withBuckets(vecs, lshAnchors(vecs)), col("vec_id"))
     }
-    if (!Memo.share(s)) build()
-    else bucketedVecsMemo(s, d)(graft.operators.Materialize.shared(build(), col("vec_id")))
-  }
 
   /** Lloyd-refined PQ codebooks for the corpus, cached per (session, sf
     * dir) like every trained index here ([[ivfState]], the stored
@@ -64,23 +59,19 @@ object SimilarityQueries {
       Similarity.pqCodebooks(prepared(Tables.embeddings(s, d)).select("vec_id", "v")))
 
   /** PQ-encoded corpus frame `(vec_id, v, c0..c{M-1})` — the 8-byte-code
-    * index `sim_pq_ann` scans and `sim_pq_rerank` shortlists from. Under
-    * the bench memo it is encoded once per (session, dir) and probed per
-    * query — the [[bucketedVecs]] contract applied to the PQ tier (a
-    * production deployment persists exactly this as its code table;
-    * [[ivfPqAnn]] already reads the bucketed form). Encoding is
-    * bit-deterministic (6dp-rounded distances, codeword-id ties), so the
-    * memoized frame is row-identical to a per-query encode. Verify leaves
-    * the flag off — the correctness gate always encodes from scratch.
+    * index `sim_pq_ann` scans and `sim_pq_rerank` shortlists from. It is
+    * encoded once per (session, dir) and probed per query — the
+    * [[bucketedVecs]] contract applied to the PQ tier (a production
+    * deployment persists exactly this as its code table; [[ivfPqAnn]]
+    * already reads the bucketed form). Encoding is bit-deterministic
+    * (6dp-rounded distances, codeword-id ties).
     */
   private val pqCodesFrameMemo = Memo.entry[DataFrame]("pqCodesFrame")
 
-  private def pqCodesFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = Similarity.pqEncode(
-      prepared(Tables.embeddings(s, d)).select("vec_id", "v"), pqCbs(s, d))
-    if (!Memo.share(s)) build()
-    else pqCodesFrameMemo(s, d)(graft.operators.Materialize.shared(build(), col("vec_id")))
-  }
+  private def pqCodesFrame(s: SparkSession, d: String): DataFrame =
+    pqCodesFrameMemo(s, d)(graft.operators.Materialize.shared(
+      Similarity.pqEncode(prepared(Tables.embeddings(s, d)).select("vec_id", "v"), pqCbs(s, d)),
+      col("vec_id")))
 
   /** The shared k=5 / 2-round k-means model — `sim_kmeans`,
     * `dedup_semantic` and `sample_diverse` all train the IDENTICAL model
@@ -735,9 +726,8 @@ object SimilarityQueries {
   def sparseTopk(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     // the (doc_id, token, tf) relation IS TextQueries.tfFrame — ride the
-    // shared memo under the bench flag (r13: this query rebuilt it per rep
-    // in one task off the single-split scan); the non-share build is the
-    // identical expression
+    // shared memo (r13: this query rebuilt it per rep in one task off the
+    // single-split scan)
     val tf = TextQueries.tfFrame(s, d)
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= SparseDfCap)

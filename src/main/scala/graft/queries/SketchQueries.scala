@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Bloom, Cms, KmvOps}
-import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -109,20 +108,14 @@ object SketchQueries {
     // the recount re-verifies), so the choice never changes an output
     // row — only where the shuffle bytes go.
     // ONE materialization serves the stats pass AND whichever plan it
-    // picks: the checkpoint sits ABOVE the stats aggregate, so tokenize +
-    // shingle runs exactly once per query on both paths (previously the
-    // bypass path re-scanned: stats + groupBy = 2 passes where 1.5 would
-    // do). The checkpointed stream is doc-distinct shingle OCCURRENCES —
-    // the same rows every consumer needs. Under the bench-only sharePairs
-    // memo the occurrences explode off DedupQueries.shingleFrame — the
-    // SAME tokenize+ngramShingles construction, already checkpointed and
-    // shared with the whole shingle family (the round-8 verdict measured
-    // this query rebuilding that stream as 3.4× its comparator); Verify
-    // keeps the flag off and builds from scratch.
-    val sh =
-      if (Memo.share(s))
-        DedupQueries.shingleFrame(s, d).select(explode(col("sh")).as("shingle"))
-      else shingleStream(s, d).localCheckpoint(true)
+    // picks: the stream explodes off the checkpointed
+    // DedupQueries.shingleFrame, so tokenize + shingle never re-runs on
+    // either path. Its rows are doc-distinct shingle OCCURRENCES — the
+    // same rows every consumer needs — from the SAME
+    // tokenize+ngramShingles construction the whole shingle family
+    // shares (the round-8 verdict measured this query rebuilding that
+    // stream as 3.4× its comparator).
+    val sh = DedupQueries.shingleFrame(s, d).select(explode(col("sh")).as("shingle"))
     val stats = sh
       .agg(count(lit(1)).as("n"),
            approx_count_distinct(col("shingle"), 0.05).as("d")).head()
@@ -145,17 +138,6 @@ object SketchQueries {
         .orderBy(desc("df"), col("shingle"))
     }
   }
-
-  /** The doc-distinct 3-gram shingle stream cms_heavy_hitters surveys —
-    * exposed pre-checkpoint so PlanAuditSpec can pin the scan shape (a
-    * checkpointed frame's plan starts at a Scan ExistingRDD).
-    */
-  private[graft] def shingleStream(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      // materialize toks before the shingle HOF (the documented
-      // interpreted-lambda re-evaluation pitfall — see dedup_containment)
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(explode(Dedup.ngramShingles(col("toks"), 3)).as("shingle"))
 
   /** Sketch width for a stream of `n` rows: next power of two >= n/4
     * (expected collision noise ~< 1 after the min over depth rows),

@@ -48,7 +48,6 @@ object BenchCluster {
         .appName("graft-bench-cluster")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.graft.dedup.sharePairs", "true")
         // forked executor JVMs need the run classpath and the JDK17 opens
         // (spark-submit normally injects both); the GCLocker retry budget
         // matches build.sbt's driver-side workaround

@@ -8,8 +8,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes `<outDir>/<query>_<suffix>.txt` for each selected query. Runs on
-  * the same session shape as Bench (local[$SPARK_GRAFT_CPUS], AQE on,
-  * sharePairs on) so the captured plan is the one the bench actually times.
+  * the same session shape as Bench (local[$SPARK_GRAFT_CPUS], AQE on) so
+  * the captured plan is the one the bench actually times.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -23,7 +23,6 @@ object PlanDump {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.graft.dedup.sharePairs", "true")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import graft.operators.Materialize
 import graft.queries.Memo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions._
 
 /** The cross-query memo registry ([[graft.queries.Memo]]): lookup
   * counting under concurrency, nested builds, per-name eviction that
-  * unpersists checkpointed frames, and the content-fingerprint key.
+  * unpersists checkpointed frames, and the key's content fingerprint and
+  * checkpoint posture.
   */
 class MemoSpec extends SparkSpec {
 
@@ -69,28 +71,49 @@ class MemoSpec extends SparkSpec {
   }
 
   test("rewriting the parquet at the same dir rebuilds memoized state") {
-    val src = Path.of(sf())
-    val d = tempDir("memo-content")
-    Files.list(src).forEach { t =>
-      Files.walk(t).forEach { p =>
-        Files.copy(p, Path.of(d).resolve(src.relativize(p).toString))
+    def copyOf(prefix: String): String = {
+      val src = Path.of(sf())
+      val d = tempDir(prefix)
+      Files.list(src).forEach { t =>
+        Files.walk(t).forEach { p =>
+          Files.copy(p, Path.of(d).resolve(src.relativize(p).toString))
+        }
       }
+      d
     }
-    val qs = Seq("dedup_minhash_pairs", "text_tfidf", "dedup_incremental_stored")
-    def run(q: String) = SparkEntry.queries(q)(spark, d)
-      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    spark.conf.set("spark.graft.dedup.sharePairs", "true")
-    try {
-      val before = qs.map(run)
+    def rewrite(d: String): Unit =
       Tables.documents(spark, sf()).filter(col("doc_id") < 300)
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      val after = qs.map(run)
-      spark.conf.set("spark.graft.dedup.sharePairs", "false")
-      val off = qs.map(run)
-      qs.indices.foreach { i =>
-        assert(after(i) === off(i), s"${qs(i)} served stale memoized state")
-        assert(off(i) !== before(i), s"${qs(i)}: the subset must change the output")
-      }
-    } finally spark.conf.unset("spark.graft.dedup.sharePairs")
+    val qs = Seq("dedup_minhash_pairs", "text_tfidf", "dedup_incremental_stored")
+    def run(d: String)(q: String) = SparkEntry.queries(q)(spark, d)
+      .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    val d = copyOf("memo-content")
+    val before = qs.map(run(d))
+    rewrite(d)
+    val after = qs.map(run(d))
+    // the reference: the same rewritten content under a dir no lookup has
+    // seen, so its state is built fresh
+    val fresh = copyOf("memo-content-fresh")
+    rewrite(fresh)
+    val ref = qs.map(run(fresh))
+    qs.indices.foreach { i =>
+      assert(after(i) === ref(i), s"${qs(i)} served stale memoized state")
+      assert(ref(i) !== before(i), s"${qs(i)}: the subset must change the output")
+    }
+  }
+
+  test("setting the checkpoint dir rebuilds state built under localCheckpoint") {
+    val e = Memo.entry[String]("spec.posture")
+    val builds = new AtomicInteger
+    def lookup(): String = e(spark, sf()) {
+      s"${spark.conf.getOption(Materialize.DirKey)}#${builds.incrementAndGet()}"
+    }
+    assert(lookup() === "None#1")
+    assert(lookup() === "None#1")
+    val dir = tempDir("memo-posture")
+    spark.conf.set(Materialize.DirKey, dir)
+    try assert(lookup() === s"Some($dir)#2", "local-posture state served to a reliable session")
+    finally spark.conf.unset(Materialize.DirKey)
+    assert((e.hits, e.misses) === (1L, 2L))
   }
 }

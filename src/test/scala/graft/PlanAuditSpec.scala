@@ -16,6 +16,18 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
   }
 
+  /** The shared token frame every span/shingle builder reads: one
+    * exchange-free pass over exactly the four columns it keeps.
+    */
+  private def assertTokFrameScan(): Unit = {
+    val plan = finalPlan(DedupQueries.tokFrameBuild(spark, sf()))
+    assert(!plan.contains("Exchange"), plan)
+    val scanCols = "FileScan parquet \\[([^\\]]*)\\]".r
+      .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
+    assert(scanCols.split(",").map(_.split("#")(0).trim).toSet ===
+      Set("doc_id", "lang", "n_chars", "text"), plan)
+  }
+
   test("r4: linenumber filter is pushed to the lineitem scan") {
     val plan = finalPlan(RefQueries.r4(spark, sf()))
     assert(plan.contains("PushedFilters: [IsNotNull(l_linenumber), EqualTo(l_linenumber,1)]"), plan)
@@ -108,14 +120,16 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("simhash has no explode: votes are aggregate columns, not 60x rows") {
-    val df = DedupQueries.simhash(spark, sf())
+    // pinned on the pre-checkpoint fingerprint builder: the query's own
+    // plan starts at the memoized frame (Scan ExistingRDD)
+    val df = DedupQueries.simhashBuild(spark, sf())
     val optimized = df.queryExecution.optimizedPlan.treeString
     // exactly ONE Generate — the tokenizer explode (inherent, 1 row/token);
     // the 60-bit vote fan-out must NOT appear as an explode(sequence(...))
     assert(!optimized.contains("explode(sequence"), optimized)
     assert("Generate".r.findAllIn(optimized).size === 1, optimized)
     val plan = finalPlan(df)
-    // one hash exchange for the doc-id aggregate, one range for the sort
+    // hash exchanges for the aggregates only
     val n = "Exchange".r.findAllIn(plan).size
     assert(n <= 3, s"$n exchanges:\n$plan")
   }
@@ -283,26 +297,25 @@ class PlanAuditSpec extends SparkSpec {
     assert("Exchange hashpartitioning".r.findAllIn(plan).size <= 1, plan)
   }
 
-  test("cms_heavy_hitters shingle stream: text-only scan, no shuffle") {
-    val plan = finalPlan(SketchQueries.shingleStream(spark, sf()))
+  test("cms_heavy_hitters shingle stream: shingles the shared tokens, no shuffle") {
+    // the stream explodes off the memoized shingle frame; its builder
+    // shingles the memoized token frame without a shuffle or a second
+    // parquet scan, and the token frame's one scan is pinned here too
+    val plan = finalPlan(DedupQueries.shingleFrameBuild(spark, sf()))
     assert(!plan.contains("Exchange"), plan)
-    // the documents scan reads ONLY text (doc_id is not in the output)
-    val scanCols = "FileScan parquet \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
-    assert(scanCols.split(",").map(_.split("#")(0).trim).toSet === Set("text"), plan)
+    assert(!plan.contains("FileScan"), plan)
+    assertTokFrameScan()
   }
 
   test("dedup_spans: hash-only shuffles downstream, minimal scan upstream") {
     val plan = finalPlan(DedupQueries.spans(spark, sf()))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    // scan shape pinned on the pre-checkpoint window builder (see above)
+    // the pre-checkpoint window builder reads the memoized token frame
+    // with no shuffle; the scan shape is pinned on that frame's builder
     val wPlan = finalPlan(DedupQueries.spanWindows(spark, sf()))
     assert(!wPlan.contains("Exchange"), wPlan)
-    val scanCols = "FileScan parquet \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(wPlan).map(_.group(1)).getOrElse("")
-    assert(scanCols.split(",").map(_.split("#")(0).trim).toSet ===
-      Set("doc_id", "text"), wPlan)
+    assertTokFrameScan()
   }
 
   test("dedup_spans_minimized: selection is exchange-free; shuffles see only the winnowed sample") {
@@ -312,10 +325,7 @@ class PlanAuditSpec extends SparkSpec {
     val wPlan = finalPlan(DedupQueries.winnowedWindows(spark, sf()))
     assert(!wPlan.contains("Exchange"), wPlan)
     assert(wPlan.contains("winnow_spans"), wPlan)
-    val scanCols = "FileScan parquet \\[([^\\]]*)\\]".r
-      .findFirstMatchIn(wPlan).map(_.group(1)).getOrElse("")
-    assert(scanCols.split(",").map(_.split("#")(0).trim).toSet ===
-      Set("doc_id", "text"), wPlan)
+    assertTokFrameScan()
     val plan = finalPlan(DedupQueries.spansMinimized(spark, sf()))
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
