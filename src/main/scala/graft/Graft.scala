@@ -97,6 +97,10 @@ object Graft {
     * three-tier purge `dedup_decontam_purge` runs, train×eval only so
     * probe cost scales with the benchmark, not the corpus. Returns the
     * surviving training rows.
+    *
+    * `train` and `eval` ids must be disjoint, one row per id: the fuzzy
+    * tier pairs train ids with eval ids only
+    * ([[Dedup.fuzzyContaminatedIds]]'s cross-pair contract).
     */
   def decontaminate(train: DataFrame, eval: DataFrame,
                     idCol: String = "doc_id",

@@ -104,6 +104,19 @@ object Dedup {
     tokenRows.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** [[minhashSignatures]] over per-document distinct token sets
+    * (`(idCol, set)`, as [[distinctTokenSets]] returns): element i is the
+    * set's MIN of `md5("<i>:" + token)`, bit-identical to the grouped form
+    * over the same distinct tokens, but a per-row map with no shuffle. A
+    * zero-token document gets null elements, so its bands are null and it
+    * pairs with nothing, as it has no token rows in the grouped form.
+    * Returns (idCol, m0..m{k-1}).
+    */
+  def minhashSetSignatures(sets: DataFrame, idCol: String, k: Int): DataFrame =
+    sets.select(col(idCol) +: (0 until k).map { i =>
+      array_min(transform(col("set"), t => md5(concat_ws(":", lit(i), t)))).as(s"m$i")
+    }: _*)
+
   /** LSH bands over a signature: band j = md5(concat of its r signature
     * elements). Returns (idCol, band0..band{k/r-1}).
     */
@@ -403,9 +416,17 @@ object Dedup {
     * per pair). Pairs sharing zero elements keep jaccard 0 (inner joins only
     * touch the id columns, so no pair is lost).
     */
-  def jaccardVerify(cand: DataFrame, docSets: DataFrame, idCol: String): DataFrame = {
-    val sa = docSets.select(col(idCol).as("a"), col("set").as("__sa"))
-    val sb = docSets.select(col(idCol).as("b"), col("set").as("__sb"))
+  def jaccardVerify(cand: DataFrame, docSets: DataFrame, idCol: String): DataFrame =
+    jaccardVerifyCross(cand, docSets, docSets, idCol)
+
+  /** [[jaccardVerify]] with the pair's two sides read from two set frames:
+    * `a` ids from `setsA`, `b` ids from `setsB` (the cross-candidate shape
+    * of [[lshCrossCandidatePairs]]).
+    */
+  def jaccardVerifyCross(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
+                         idCol: String): DataFrame = {
+    val sa = setsA.select(col(idCol).as("a"), col("set").as("__sa"))
+    val sb = setsB.select(col(idCol).as("b"), col("set").as("__sb"))
     val inter = size(array_intersect(col("__sa"), col("__sb"))).cast("double")
     val union = (size(col("__sa")) + size(col("__sb"))).cast("double") - inter
     cand.join(sa, "a").join(sb, "b")
@@ -974,23 +995,35 @@ object Dedup {
     * `dedup_decontam_fuzzy` query shape, factored for the curation
     * pipeline): MinHash band CROSS-candidates only (train × eval — never
     * train × train, the corpus is never self-paired here), then the exact
-    * bitset-Jaccard verify at `minJaccard`. Id sets must be disjoint.
-    * Returns a one-column frame (`idCol`) of contaminated training ids;
-    * scale shape is the incremental-probe shape — candidates are
-    * eval-blocked, the verify stage candidate-sized.
+    * Jaccard verify at `minJaccard`. Returns a one-column frame (`idCol`)
+    * of contaminated training ids.
+    *
+    * Contract: train and eval ids must be disjoint, and each id must name
+    * one row per side. A candidate `(a, b)` is read as a = train id,
+    * b = eval id; the verify joins a to the train sets and b to the eval
+    * sets, so a shared id would pair a document with its own side.
+    *
+    * Scale shape: everything before the candidate join is map-only. Each
+    * document carries its distinct token SET ([[distinctTokenSets]]), and
+    * signature element i is the set's minimum `md5("<i>:" + token)`, the
+    * same value [[minhashSignatures]] aggregates from exploded token rows,
+    * with no (doc, token) row stream and no groupBy shuffle. The candidate
+    * set is train × eval and eval is benchmark-sized, so the verify runs
+    * one `array_intersect` per candidate on sets the pair already joined
+    * to: nothing is built over the train vocabulary, unlike the bitset
+    * verify ([[bitsetPairStats]]), whose dense token numbering pays for
+    * itself only when candidates are corpus × corpus and the masks are
+    * shared across queries.
     */
   def fuzzyContaminatedIds(train: DataFrame, eval: DataFrame, idCol: String,
                            textCol: String, k: Int = 16, r: Int = 4,
                            minJaccard: Double = 0.7): DataFrame = {
-    val tT = distinctTokenRows(train, idCol, textCol).localCheckpoint(true)
-    val tE = distinctTokenRows(eval, idCol, textCol).localCheckpoint(true)
-    val bT = minhashBands(minhashSignatures(tT, idCol, k), idCol, k, r)
-    val bE = minhashBands(minhashSignatures(tE, idCol, k), idCol, k, r)
-    val cand = lshCrossCandidatePairs(bT, bE, idCol, k / r).localCheckpoint(true)
-    val parts = cand.select(col("a").as(idCol))
-      .union(cand.select(col("b").as(idCol))).distinct()
-    val toks = tT.unionByName(tE).join(parts, Seq(idCol), "left_semi")
-    jaccardVerifyBitset(cand, toks, idCol)
+    val setsT = distinctTokenSets(train, idCol, textCol)
+    val setsE = distinctTokenSets(eval, idCol, textCol)
+    def bands(sets: DataFrame) =
+      minhashBands(minhashSetSignatures(sets, idCol, k), idCol, k, r)
+    val cand = lshCrossCandidatePairs(bands(setsT), bands(setsE), idCol, k / r)
+    jaccardVerifyCross(cand, setsT, setsE, idCol)
       .filter(col("jaccard") >= minJaccard)
       .select(col("a").as(idCol)).distinct()
   }

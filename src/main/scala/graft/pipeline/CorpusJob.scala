@@ -22,8 +22,15 @@ import org.apache.spark.sql.functions._
   *     second-line tool, available as [[graft.queries.DedupQueries]]);
   *  3. decontamination — drop training docs whose exact text hash appears
   *     in the eval blocklist (doc_id % 10 = 0), bloom-prefiltered so only
-  *     probe hits pay the anti-join; the fuzzy near-dup tier (3a) runs in
-  *     the shared release tail, and the opt-in media tier (3a' —
+  *     probe hits pay the anti-join;
+  *  3a. fuzzy decontamination (in the shared release tail, on by
+  *     default) — drop training docs whose token set is a MinHash-banded
+  *     near-duplicate (exact Jaccard ≥ 0.7) of any ORIGINAL eval doc
+  *     ([[graft.operators.Dedup.fuzzyContaminatedIds]]): signatures are
+  *     a per-row map over each doc's distinct token set, train × eval
+  *     band candidates are verified by one set intersection per pair, so
+  *     the tier shuffles band rows and candidates, never the corpus's
+  *     (doc, token) rows. The opt-in media tier (3a' —
   *     `--media-decontam`) drops docs whose media fingerprint near-dups an
   *     eval doc's;
   *  3b. substring-span cut — delete every later copy of a cross-doc
@@ -263,9 +270,14 @@ object CorpusJob {
     * ORIGINAL text, pre-dedup (the batch job passes the raw input's eval
     * half; the stream its per-epoch eval state table — identical unions).
     */
-  private[pipeline] def curateTail(spark: SparkSession, clean0: DataFrame,
+  private[pipeline] def curateTail(spark: SparkSession, decontaminated: DataFrame,
                                    evalDocs: DataFrame, nInput: Long,
                                    cfg: Config, store: StageStore): (DataFrame, TailCounts) = {
+    // the count, the fuzzy tier's train side and its anti-join all read
+    // clean0: materialize it once, or each re-runs the Bloom
+    // decontamination (and, in the stream, the raw ⋉ keepers join) and
+    // ships the filter literal inside every task binary
+    val clean0 = decontaminated.localCheckpoint(true)
     val nClean0 = clean0.count()
 
     // 3a. FUZZY decontamination (the dedup_decontam_fuzzy tier composed):
@@ -306,7 +318,7 @@ object CorpusJob {
           .select(col("a").as("doc_id")).distinct()
         fuzzy.join(bad, Seq("doc_id"), "left_anti").localCheckpoint(true)
       }
-    val nMm = mm.count()
+    val nMm = if (cfg.mediaDecontam) mm.count() else nFuzzy
     require(nMm > 0,
       s"media decontamination emptied the corpus (fuzzy=$nFuzzy)")
 
@@ -468,7 +480,7 @@ object CorpusJob {
           .select("doc_id")
         mixed.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(true)
       }
-    val nDiverse = diverse.count()
+    val nDiverse = if (cfg.diversePerCell > 0) diverse.count() else nMixed
     require(nDiverse > 0, "diversity cap emptied the corpus: raise --diverse-per-cell")
 
     // 4c. context-window packing (the text_pack_bins contract applied):
@@ -486,7 +498,6 @@ object CorpusJob {
         Seq(col("doc_id")), col("n_toks"), "__cum")
       .withColumn("bin", floor((col("__cum") - col("n_toks")) / lit(cfg.binTokens)))
       .drop("n_toks", "__cum")
-    val nBins = packed.select("lang", "bin").distinct().count()
 
     // 5. deterministic split + 6. idempotent write. The overwrite is
     // STATIC (whole path), not dynamic-per-split: a curation is one atomic
@@ -511,8 +522,11 @@ object CorpusJob {
           DedupQueries.SpanW, DedupQueries.WinnowW),
         graft.operators.DedupState.names("corpus_job", cfg.out), buckets = 16)
     }
-    val perSplit = out.groupBy("split").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // bins × splits rows: both counts from one aggregate over the written
+    // corpus instead of re-running the packing for the bin count
+    val binCounts = out.groupBy("split", "lang", "bin").count().collect()
+    val nBins = binCounts.map(r => (r.get(1), r.get(2))).distinct.length.toLong
+    val perSplit = binCounts.groupMapReduce(_.getString(0))(_.getLong(3))(_ + _)
     (out, TailCounts(nClean0, nFuzzy, nMm, nSpanCutDocs, nScreened, nQuality,
                      nBudget, nMixed, nDiverse, nBins, perSplit))
   }

@@ -39,6 +39,18 @@ class CorpusJobSpec extends SparkSpec {
       "splits must partition the curated corpus exactly")
   }
 
+  test("sf0.001 funnel is pinned, skipped stages and bin count included") {
+    // every count is pinned: skipped stages report their input's count,
+    // and nBins/perSplit come from one aggregate over the written corpus
+    val (_, f) = result
+    assert(f === CorpusJob.Funnel(
+      input = 500, exactKept = 500, bowKept = 500, nearKept = 478,
+      cleanKept = 431, fuzzyKept = 105, mmKept = 105, spanCutDocs = 3,
+      screenedKept = 102, qualityKept = 102, budgetKept = 92, mixKept = 66,
+      diverseKept = 66, nBins = 4,
+      perSplit = Map("train" -> 64L, "val" -> 1L, "test" -> 1L)))
+  }
+
   test("media decontamination tier drops media-fingerprint near-dups of eval docs") {
     // fuzzy OFF so the media tier is the only near-dup decontamination in
     // play: the docs whose derived media fingerprint Hamming-near-dups an

@@ -656,6 +656,23 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("fuzzy decontamination tier: no vocabulary numbering, bounded exchanges") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
+    val plan = finalPlan(graft.operators.Dedup.fuzzyContaminatedIds(
+      docs.filter(col("doc_id") % 10 =!= 0), docs.filter(col("doc_id") % 10 === 0),
+      "doc_id", "text"))
+    // the bitset verify's dense token numbering (row_number + offsets
+    // windows, bit_or word masks, map_from_entries) must not come back:
+    // the verify intersects the sets each candidate already joined to
+    for (op <- Seq("Window", "bit_or", "map_from_entries"))
+      assert(!plan.contains(op), s"$op in\n$plan")
+    // measured at sf0.001: three broadcasts (eval band rows, train sets,
+    // eval sets) and the hash exchange of the final distinct
+    val n = "Exchange".r.findAllIn(plan).size
+    assert(n === 4, s"$n exchanges:\n$plan")
+  }
+
   test("text_bm25_topk: the inverted-index probe joins on keys only") {
     val plan = finalPlan(TextQueries.bm25TopK(spark, sf()))
     // query terms × postings must be the token equi-join (the probe-sized
