@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * pass over the feature relation (per-doc margin via a doc-partitioned
   * window, residual per row, per-bucket class-split gradients via a
   * map-side-combined groupBy) against a broadcast 2^b-row weight
-  * relation. No parameter server, no per-row mutation, no randomness.
+  * relation that lives on the driver between rounds. No parameter
+  * server, no per-row mutation, no randomness.
   *
   * Two standard stabilizers, both load-bearing (the naive tf-feature,
   * unit-rate form overshoots the 5%-positive label into ±40-logit
@@ -56,31 +57,33 @@ object Classifier {
 
   /** Train on `dbx` = [[milliFeatures]] output (doc_id, y ∈ {0,1},
     * bucket ∈ [0, buckets), xm). Returns the final (bucket, w) relation,
-    * w in integer micro-logits. Unit learning rate (folded into the
-    * quantization); `rounds` is the entire schedule — no convergence
-    * probe, so the round count is the exact number of jobs, known in
-    * advance.
+    * w in integer micro-logits, as a local frame. Unit learning rate
+    * (folded into the quantization); `rounds` is the entire schedule — no
+    * convergence probe. The weights live on the driver: the class counts
+    * are one aggregate, each round collects its 2^b-row gradient
+    * (bucket, gp, gn) and applies the update in Scala with the same
+    * two-division, one-addition double expression the SQL oracle
+    * evaluates, so a round is one gradient query.
     */
   def trainLogreg(dbx: DataFrame, buckets: Int, rounds: Int): DataFrame = {
     val s = dbx.sparkSession
+    import s.implicits._
+    val n = dbx.agg(
+        countDistinct(when(col("y") === 1L, col("doc_id"))).as("npos"),
+        countDistinct(when(col("y") === 0L, col("doc_id"))).as("nneg"))
+      .head()
     // the balanced update divides by each class count, so a single-class
-    // corpus would turn every weight into floor(NaN) → silent nulls. The
-    // guard is an in-plan raise_error (no extra training-time pass): a
-    // mislabeled corpus fails the first round's job loudly.
-    def positive(c: Column, cls: String): Column =
-      when(c > 0, c).otherwise(raise_error(concat(
-        lit(s"trainLogreg needs both classes in the corpus; $cls count = "),
-        c.cast("string"))))
-    val nFrame = dbx.agg(
-        countDistinct(when(col("y") === 1L, col("doc_id"))).cast("double").as("npos"),
-        countDistinct(when(col("y") === 0L, col("doc_id"))).cast("double").as("nneg"))
-      .select(positive(col("npos"), "positive").as("npos"),
-              positive(col("nneg"), "negative").as("nneg"))
-    var w = s.range(0, buckets).select(col("id").cast("long").as("bucket"),
-      lit(0L).as("w"))
+    // corpus would turn every weight into floor(NaN): fail loudly instead
+    def positive(c: Long, cls: String): Double = {
+      require(c > 0, s"trainLogreg needs both classes in the corpus; $cls count = $c")
+      c.toDouble
+    }
+    val npos = positive(n.getLong(0), "positive")
+    val nneg = positive(n.getLong(1), "negative")
     val byDoc = Window.partitionBy("doc_id")
+    var w = Array.fill(buckets)(0L)
     for (_ <- 1 to rounds) {
-      val g = dbx.join(broadcast(w), Seq("bucket"))
+      val g = dbx.join(broadcast(weights(w).toDF("bucket", "w")), Seq("bucket"))
         .withColumn("z", sum(col("xm") * col("w")).over(byDoc))
         .withColumn("r", floor((col("y").cast("double")
           - lit(1.0) / (lit(1.0) + exp(-col("z").cast("double") / lit(1e9))))
@@ -88,19 +91,22 @@ object Classifier {
         .groupBy("bucket")
         .agg(sum(when(col("y") === 1L, col("xm") * col("r")).otherwise(0L)).as("gp"),
              sum(when(col("y") === 0L, col("xm") * col("r")).otherwise(0L)).as("gn"))
-      w = w.join(g, Seq("bucket"), "left")
-        .crossJoin(broadcast(nFrame))
-        .select(col("bucket"),
-          (col("w") + floor(
-            (coalesce(col("gp"), lit(0L)).cast("double") / (lit(2.0) * col("npos"))
-              + coalesce(col("gn"), lit(0L)).cast("double") / (lit(2.0) * col("nneg")))
-            / lit(1000.0)).cast("long")).as("w"))
-        // bucket-sized; materialize so each round's lineage is one pass,
-        // not a rederivation of every earlier round
-        .localCheckpoint(true)
+        .as[(Long, Long, Long)].collect()
+        .map { case (b, gp, gn) => b.toInt -> (gp, gn) }.toMap
+      w = w.zipWithIndex.map { case (wb, b) =>
+        val (gp, gn) = g.getOrElse(b, (0L, 0L))
+        wb + math.floor((gp.toDouble / (2.0 * npos) + gn.toDouble / (2.0 * nneg))
+          / 1000.0).toLong
+      }
     }
-    w
+    // one partition, like the driver-side array it holds: a bucketed
+    // write of the model then emits one file per bucket, not one per
+    // bucket per local slice
+    weights(w).toDF("bucket", "w").coalesce(1)
   }
+
+  private def weights(w: Array[Long]): Seq[(Long, Long)] =
+    w.indices.map(b => (b.toLong, w(b)))
 
   /** Margins for `dbx` under weight relation `w`:
     * (doc_id, y, score_nano) — exact integer nano-logits, one broadcast

@@ -54,6 +54,27 @@ import org.apache.spark.sql.functions._
   *
   * Every stage count is reported in one JSON line (the funnel a data-lead
   * actually reviews); the returned frame is the curated corpus.
+  *
+  * Checkpoints, and who reads them. Each active stage's output is one
+  * eager `localCheckpoint`, and its funnel count is an `Observation` on
+  * that checkpoint's own job ([[StageStore.observed]]), so a count costs
+  * no job. Their readers:
+  *  - exact, bow: the next stage's key aggregate and its semi-join;
+  *  - near: both branches of the Bloom decontamination split;
+  *  - clean0 (the tail's input): the fuzzy tier's train side and its
+  *    anti-join;
+  *  - fuzzy/mm: the span cut's winnowing and its left join;
+  *  - spancut: the screens only — one reader; it stays as the resume
+  *    boundary that carries the span-cut count;
+  *  - screened: the LM fit and its join back; quality: the budget
+  *    stage's features, token weights and keep join;
+  *  - budget's inner `feats` (every training round, then scoring) and
+  *    `scored` (the selection's bounds and histogram passes, the tie
+  *    prefix sum, the keep set);
+  *  - budget, mixed, diverse: the next stage's rates/keys and its sample,
+  *    or the packing's two prefix-sum phases.
+  * With a resume dir a sealed stage is read back from parquet instead and
+  * its count is taken over the read-back.
   */
 object CorpusJob {
 
@@ -193,42 +214,36 @@ object CorpusJob {
 
     // 1. exact dedup: min doc_id per text hash, via a broadcast-friendly
     // self semi-join on (hash, min_id)
-    val exact = store.stage("exact", "") {
+    val (exact, nExact) = counted(store, "exact", "") {
       val keepIds = docs.select(col("doc_id"), md5(col("text")).as("h"))
         .groupBy("h").agg(min("doc_id").as("doc_id"))
         .select("doc_id")
       docs.join(keepIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
     }
-    val nExact = exact.count()
 
     // 1b. bag-of-words dedup: min doc_id per sorted-token-multiset hash —
     // catches reordered-content duplicates the text hash misses, still a
     // per-row map + one hash agg (far cheaper than the near-dup machinery
     // it shields)
-    val bow = store.stage("bow", "") {
+    val (bow, nBow) = counted(store, "bow", "") {
       val bowKeep = exact
         .select(col("doc_id"),
           md5(concat_ws(" ", sort_array(TextAnalysis.tokens(col("text"))))).as("bh"))
         .groupBy("bh").agg(min("doc_id").as("doc_id"))
         .select("doc_id")
       exact.join(bowKeep, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
     }
-    val nBow = bow.count()
 
     // 2. near-dup: simhash Hamming<=3 pairs (the shared Dedup.simhashPairs
     // definition) -> components -> keep each component's minimum doc
-    val near = store.stage("near", "") {
+    val (near, nNear) = counted(store, "near", "") {
       val pairs = Dedup.simhashPairs(bow, "doc_id", "text", maxHamming = 3)
         .select("a", "b")
       val comps = Dedup.connectedComponents(pairs, bow.select("doc_id"), "doc_id")
       bow.join(
           comps.filter(col("doc_id") === col("comp")).select("doc_id"),
           Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
     }
-    val nNear = near.count()
 
     // 3. decontamination vs the eval blocklist (doc_id % 10 = 0), via the
     // shared bloom-split anti-join. Runs BEFORE the span cut: the
@@ -271,28 +286,27 @@ object CorpusJob {
     * half; the stream its per-epoch eval state table — identical unions).
     */
   private[pipeline] def curateTail(spark: SparkSession, decontaminated: DataFrame,
-                                   evalDocs: DataFrame, nInput: Long,
+                                   evalDocs: DataFrame, nInput: => Long,
                                    cfg: Config, store: StageStore): (DataFrame, TailCounts) = {
-    // the count, the fuzzy tier's train side and its anti-join all read
-    // clean0: materialize it once, or each re-runs the Bloom
-    // decontamination (and, in the stream, the raw ⋉ keepers join) and
-    // ships the filter literal inside every task binary
-    val clean0 = decontaminated.localCheckpoint(true)
-    val nClean0 = clean0.count()
+    // the fuzzy tier's train side and its anti-join both read clean0:
+    // materialize it once, or each re-runs the Bloom decontamination (and,
+    // in the stream, the raw ⋉ keepers join) and ships the filter literal
+    // inside every task binary
+    val (clean0, clean0Stats) = StageStore.checkpointObserved(decontaminated, rowCount)
+    val nClean0 = rows(clean0Stats)
 
     // 3a. FUZZY decontamination (the dedup_decontam_fuzzy tier composed):
     // drop training docs that are banded-MinHash near-duplicates
     // (Jaccard >= 0.7) of ANY eval doc — the leakage the exact-hash
     // blocklist cannot see. Cross-candidates only: the surviving corpus
     // is never self-paired, the eval side is benchmark-sized.
-    val fuzzy =
-      if (!cfg.fuzzyDecontam) { store.skip("fuzzy", "off"); clean0 }
-      else store.stage("fuzzy", "on") {
+    val (fuzzy, nFuzzy) =
+      if (!cfg.fuzzyDecontam) { store.skip("fuzzy", "off"); (clean0, nClean0) }
+      else counted(store, "fuzzy", "on") {
         val bad = Dedup.fuzzyContaminatedIds(
           clean0.select("doc_id", "text"), evalDocs, "doc_id", "text")
-        clean0.join(bad, Seq("doc_id"), "left_anti").localCheckpoint(true)
+        clean0.join(bad, Seq("doc_id"), "left_anti")
       }
-    val nFuzzy = fuzzy.count()
     require(nFuzzy > 0,
       s"fuzzy decontamination emptied the corpus (clean=$nClean0)")
 
@@ -304,9 +318,9 @@ object CorpusJob {
     // through the persistable long-band shape); eval side derives from
     // the SAME pre-dedup evalDocs the fuzzy tier probes, so a
     // deduplicated-away eval twin still contaminates.
-    val mm =
-      if (!cfg.mediaDecontam) { store.skip("mm", "off"); fuzzy }
-      else store.stage("mm", "on") {
+    val (mm, nMm) =
+      if (!cfg.mediaDecontam) { store.skip("mm", "off"); (fuzzy, nFuzzy) }
+      else counted(store, "mm", "on") {
         import graft.multimodal.Multimodal
         def fp(df: DataFrame): DataFrame = Dedup.hammingLongBands(
           Multimodal.ahash(Multimodal.mediaFromText(
@@ -316,9 +330,8 @@ object CorpusJob {
         val bad = Dedup.hammingCrossPairsLong(fp(fuzzy), fp(evalDocs),
             "media_id", "ahash", bits = 60, nBands = 4, maxHamming = 3)
           .select(col("a").as("doc_id")).distinct()
-        fuzzy.join(bad, Seq("doc_id"), "left_anti").localCheckpoint(true)
+        fuzzy.join(bad, Seq("doc_id"), "left_anti")
       }
-    val nMm = if (cfg.mediaDecontam) mm.count() else nFuzzy
     require(nMm > 0,
       s"media decontamination emptied the corpus (fuzzy=$nFuzzy)")
 
@@ -330,19 +343,19 @@ object CorpusJob {
     // kept first occurrence. Zero-token docs fall out of the operator's
     // token stream; the left join + coalesce keeps them with their
     // original text.
-    val cutAll = store.stage("spancut", "") {
+    val (cutAll, cutStats) = store.observed("spancut", "",
+        count(when(col("n_cut") > 0, lit(1))).as("cut")) {
       val kept = Dedup.spanCut(mm, "doc_id", "text", w = 8)
         .select(col("doc_id"), col("n_cut"), col("kept_text"))
       mm.join(kept, Seq("doc_id"), "left_outer")
         .withColumn("text", coalesce(col("kept_text"), col("text")))
         .drop("kept_text")
-        .localCheckpoint(true)
     }
-    val nSpanCutDocs = cutAll.filter(col("n_cut") > 0).count()
+    val nSpanCutDocs = cutStats("cut").asInstanceOf[Long]
     val clean = cutAll.drop("n_cut")
 
     // 4. quality screens on materialized tokens (never inline in a HOF)
-    val screened = store.stage("screened",
+    val (screened, nScreened) = counted(store, "screened",
         s"${cfg.minTokens}|${cfg.minDistinctRatio}") {
       clean
         .withColumn("toks", TextAnalysis.tokens(col("text")))
@@ -350,9 +363,7 @@ object CorpusJob {
         .filter(size(array_distinct(col("toks"))).cast("double") >=
           size(col("toks")).cast("double") * cfg.minDistinctRatio)
         .drop("toks")
-        .localCheckpoint(true)
     }
-    val nScreened = screened.count()
     require(nScreened > 0,
       s"curation emptied the corpus (input=$nInput): relax --min-tokens/--min-distinct-ratio")
 
@@ -363,17 +374,16 @@ object CorpusJob {
     // have no LM rows at all; they are KEPT via the left join's null
     // branch — the screen judges corpus-typicality, and "no evidence" must
     // not silently count as atypical.
-    val quality =
+    val (quality, nQuality) =
       if (cfg.minAvgLogp == Double.NegativeInfinity) {
-        store.skip("quality", "off"); screened
-      } else store.stage("quality", s"${cfg.minAvgLogp}") {
+        store.skip("quality", "off"); (screened, nScreened)
+      } else counted(store, "quality", s"${cfg.minAvgLogp}") {
         val lm = TextAnalysis.unigramLogprob(screened, "doc_id", "text")
           .select("doc_id", "avg_logp")
         screened.join(lm, Seq("doc_id"), "left")
           .filter(col("avg_logp").isNull || col("avg_logp") >= cfg.minAvgLogp)
-          .drop("avg_logp").localCheckpoint(true)
+          .drop("avg_logp")
       }
-    val nQuality = quality.count()
     require(nQuality > 0,
       s"LM screen emptied the corpus (screened=$nScreened): relax --min-avg-logp")
 
@@ -388,9 +398,9 @@ object CorpusJob {
     // never a global sort — and ties at the threshold are admitted in
     // deterministic doc_id order through the two-phase grouped prefix
     // sum, so the cut is exact to the last partial document.
-    val budgeted =
-      if (cfg.budgetShare >= 1.0) { store.skip("budget", "off"); quality }
-      else store.stage("budget", s"${cfg.budgetShare}|${cfg.clfTarget}") {
+    val (budgeted, nBudget) =
+      if (cfg.budgetShare >= 1.0) { store.skip("budget", "off"); (quality, nQuality) }
+      else counted(store, "budget", s"${cfg.budgetShare}|${cfg.clfTarget}") {
         // labeled, doc-normalized hashed-unigram features (the
         // text_quality_classifier construction with the configurable
         // trusted-domain label)
@@ -409,10 +419,12 @@ object CorpusJob {
             size(TextAnalysis.tokens(col("text"))).cast("long").as("__nt")),
             "doc_id")
           .localCheckpoint(true)
-        val total = scored.agg(sum("__nt")).head().getLong(0)
-        val budget = (total * cfg.budgetShare).toLong
-        val (t, above, _) = graft.operators.OrderStats.selectWeightedDesc(
-          scored.select(col("score_nano").as("v"), col("__nt").as("w")), budget)
+        // the selection's bounds pass sums the token weights anyway: the
+        // budget derives from that total instead of a separate aggregate
+        def budgetOf(total: Long): Long = (total * cfg.budgetShare).toLong
+        val (total, t, above, _) = graft.operators.OrderStats.selectWeightedDescOf(
+          scored.select(col("score_nano").as("v"), col("__nt").as("w")), budgetOf)
+        val budget = budgetOf(total)
         val ties = graft.operators.PrefixSum.runningSumGrouped(
             scored.filter(col("score_nano") === t).withColumn("__g", lit(1)),
             Seq("__g"),
@@ -421,9 +433,8 @@ object CorpusJob {
           .filter(col("__cum") + lit(above) <= lit(budget))
         val keep = scored.filter(col("score_nano") > t).select("doc_id")
           .unionByName(ties.select("doc_id"))
-        quality.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(true)
+        quality.join(keep, Seq("doc_id"), "left_semi")
       }
-    val nBudget = budgeted.count()
     require(nBudget > 0, "token-budget cut emptied the corpus: raise --budget-share")
 
     // 4b. language-mix sampling (the sample_mix_plan contract applied):
@@ -431,9 +442,9 @@ object CorpusJob {
     // realized as the DETERMINISTIC stratified hash sample so reruns and
     // retries keep the same docs. The per-lang frame is #languages rows —
     // the one collect a mix plan is allowed.
-    val mixed =
-      if (cfg.mix.isEmpty) { store.skip("mixed", "off"); budgeted }
-      else store.stage("mixed",
+    val (mixed, nMixed) =
+      if (cfg.mix.isEmpty) { store.skip("mixed", "off"); (budgeted, nBudget) }
+      else counted(store, "mixed",
           cfg.mix.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(",") +
             s"|${cfg.salt}") {
         val rates = budgeted.groupBy("lang").agg(count(lit(1)).as("n")).collect()
@@ -443,9 +454,7 @@ object CorpusJob {
             lang -> math.min(1.0, share * nBudget / r.getLong(1).toDouble)
           }.toMap
         Sampling.stratified(budgeted, col("lang"), rates, col("doc_id"), cfg.salt)
-          .localCheckpoint(true)
       }
-    val nMixed = mixed.count()
     require(nMixed > 0, "mix sampling emptied the corpus: check --mix shares")
 
     // 4b'. cluster-balanced DIVERSITY cap (the sample_diverse contract
@@ -454,9 +463,9 @@ object CorpusJob {
     // the semantic-redundancy bound mix sampling (which only sees `lang`)
     // cannot provide. Docs without an embedding row are kept: the cap
     // bounds known redundancy, absence of evidence is not redundancy.
-    val diverse =
-      if (cfg.diversePerCell <= 0) { store.skip("diverse", "off"); mixed }
-      else store.stage("diverse",
+    val (diverse, nDiverse) =
+      if (cfg.diversePerCell <= 0) { store.skip("diverse", "off"); (mixed, nMixed) }
+      else counted(store, "diverse",
           // embeddings are a SECOND input the chain seed doesn't cover:
           // fingerprint their content too, not just the dir path
           s"${cfg.diversePerCell}|${cfg.embeddingsDir}|" +
@@ -478,9 +487,8 @@ object CorpusJob {
           .withColumn("__rnk", row_number().over(w))
           .filter(col("__cell").isNull || col("__rnk") <= cfg.diversePerCell)
           .select("doc_id")
-        mixed.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(true)
+        mixed.join(keep, Seq("doc_id"), "left_semi")
       }
-    val nDiverse = if (cfg.diversePerCell > 0) diverse.count() else nMixed
     require(nDiverse > 0, "diversity cap emptied the corpus: raise --diverse-per-cell")
 
     // 4c. context-window packing (the text_pack_bins contract applied):
@@ -529,6 +537,20 @@ object CorpusJob {
     val perSplit = binCounts.groupMapReduce(_.getString(0))(_.getLong(3))(_ + _)
     (out, TailCounts(nClean0, nFuzzy, nMm, nSpanCutDocs, nScreened, nQuality,
                      nBudget, nMixed, nDiverse, nBins, perSplit))
+  }
+
+  /** The row count every stage reports, observed on its checkpoint. */
+  private def rowCount = count(lit(1)).as("rows")
+  private def rows(observed: Map[String, Any]): Long =
+    observed("rows").asInstanceOf[Long]
+
+  /** A stage and its row count, both from the stage's one checkpoint job
+    * ([[StageStore.observed]]); `compute` returns the un-checkpointed frame.
+    */
+  private def counted(store: StageStore, name: String, conf: String)(
+      compute: => DataFrame): (DataFrame, Long) = {
+    val (df, m) = store.observed(name, conf, rowCount)(compute)
+    (df, rows(m))
   }
 
   def main(args: Array[String]): Unit = {

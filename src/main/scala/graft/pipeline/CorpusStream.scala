@@ -296,17 +296,19 @@ object CorpusStream {
     if (wm.hwm.exists(epoch <= _)) return // replay of a committed epoch: no-op
     require(wm.hwm.forall(epoch == _ + 1),
       s"epoch $epoch is not the successor of the committed high-watermark ${wm.hwm.get}")
-    val b = batch0.localCheckpoint(true)
     // ascending-ingest contract, checked against the persisted standing
-    // max (one tiny agg over the checkpointed batch)
-    val ids = b.agg(min("doc_id").as("lo"), max("doc_id").as("hi")).head()
-    val batchMaxId =
-      if (ids.isNullAt(1)) wm.maxDocId.getOrElse(-1L) else ids.getLong(1)
-    if (!ids.isNullAt(0)) wm.maxDocId.foreach(standing =>
-      require(ids.getLong(0) > standing,
-        s"batch min doc_id ${ids.getLong(0)} does not exceed the standing max " +
+    // max: the batch's id range is observed on its own checkpoint job
+    // (both ends null for an empty batch)
+    val (b, ids) = StageStore.checkpointObserved(batch0,
+      min("doc_id").as("lo"), max("doc_id").as("hi"))
+    val lo = Option(ids("lo")).map(_.asInstanceOf[Long])
+    val batchMaxId = Option(ids("hi")).map(_.asInstanceOf[Long])
+      .getOrElse(wm.maxDocId.getOrElse(-1L))
+    lo.foreach(l => wm.maxDocId.foreach(standing =>
+      require(l > standing,
+        s"batch min doc_id $l does not exceed the standing max " +
           s"$standing — out-of-order ingest would silently lose documents " +
-          "to established min-id keepers"))
+          "to established min-id keepers")))
     // 1. exact dedup head: one row per NEW text hash, keeper = batch min
     val bh = b.select(col("doc_id"), md5(col("text")).as("h"))
       .groupBy("h").agg(min("doc_id").as("doc_id"))
@@ -381,6 +383,8 @@ object CorpusStream {
       stateTable(s, n, n.block, wm, sys.error("block state table missing")))
     val evalDocs = stateTable(s, n, n.evals, wm,
       sys.error("evals state table missing"))
+    // the input count only words the tail's empty-corpus error: by-name,
+    // so a healthy publish never pays for it
     val res = CorpusJob.curateTail(s, clean0, evalDocs, raw.count(), cfg,
       StageStore.disabled(s))
     // optional versioned release: every epoch's snapshot goes through the

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -106,6 +106,28 @@ final class StageStore(spark: SparkSession, dir: String, seed: String) {
       spark.read.parquet(data.toString)
     }
   }
+
+  /** [[stage]] for a stage whose output the caller also aggregates (its
+    * row count, ...): `compute`'s frame is checkpointed eagerly with
+    * `aggs` observed on the checkpoint's own job
+    * ([[StageStore.checkpointObserved]]), so the aggregates cost no job of
+    * their own. A sealed hit never runs `compute` — an observation that
+    * never fires would block its reader forever — so there the aggregates
+    * are computed over the read-back instead. `aggs` must be named.
+    */
+  def observed(name: String, conf: String, aggs: Column*)(
+      compute: => DataFrame): (DataFrame, Map[String, Any]) = {
+    var seen: Option[Map[String, Any]] = None
+    val out = stage(name, conf) {
+      val (cp, m) = StageStore.checkpointObserved(compute, aggs: _*)
+      seen = Some(m)
+      cp
+    }
+    (out, seen.getOrElse {
+      val r = out.agg(aggs.head, aggs.tail: _*).head()
+      r.getValuesMap[Any](r.schema.fieldNames)
+    })
+  }
 }
 
 object StageStore {
@@ -115,6 +137,19 @@ object StageStore {
     * replay contract, not stage files.
     */
   def disabled(spark: SparkSession): StageStore = new StageStore(spark, "", "")
+
+  /** `df` checkpointed eagerly (`localCheckpoint`) with the named
+    * aggregates `aggs` observed on the checkpoint's own job: the row
+    * count (or min/max, ...) a caller would otherwise take with a second
+    * action over the checkpoint comes back with the materialization.
+    * Returns (checkpoint, aggregate name → value; null over an empty
+    * frame where the aggregate is).
+    */
+  def checkpointObserved(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint(true)
+    (cp, obs.get)
+  }
 
   private[pipeline] def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

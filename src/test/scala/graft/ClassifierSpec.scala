@@ -2,7 +2,8 @@ package graft
 
 import graft.operators.{Classifier, TextAnalysis}
 import graft.queries.TextQueries
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The trained-quality-filter contract: gradient descent actually
@@ -100,6 +101,65 @@ class ClassifierSpec extends SparkSpec {
     val w2 = Classifier.trainLogreg(dbx.repartition(7), 256, rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(w1 === w2)
+  }
+
+  /** The relational training form: weights as a broadcast relation
+    * updated by a join with the gradient and the class counts, every
+    * round checkpointed. Kept here as the reference the driver-side
+    * update must match bit for bit.
+    */
+  private def relationalTrain(dbx: DataFrame, buckets: Int, rounds: Int): DataFrame = {
+    def positive(c: Column, cls: String): Column =
+      when(c > 0, c).otherwise(raise_error(concat(
+        lit(s"trainLogreg needs both classes in the corpus; $cls count = "),
+        c.cast("string"))))
+    val nFrame = dbx.agg(
+        countDistinct(when(col("y") === 1L, col("doc_id"))).cast("double").as("npos"),
+        countDistinct(when(col("y") === 0L, col("doc_id"))).cast("double").as("nneg"))
+      .select(positive(col("npos"), "positive").as("npos"),
+              positive(col("nneg"), "negative").as("nneg"))
+    var w = spark.range(0, buckets).select(col("id").cast("long").as("bucket"),
+      lit(0L).as("w"))
+    val byDoc = Window.partitionBy("doc_id")
+    for (_ <- 1 to rounds) {
+      val g = dbx.join(broadcast(w), Seq("bucket"))
+        .withColumn("z", sum(col("xm") * col("w")).over(byDoc))
+        .withColumn("r", floor((col("y").cast("double")
+          - lit(1.0) / (lit(1.0) + exp(-col("z").cast("double") / lit(1e9))))
+          * lit(1e6)).cast("long"))
+        .groupBy("bucket")
+        .agg(sum(when(col("y") === 1L, col("xm") * col("r")).otherwise(0L)).as("gp"),
+             sum(when(col("y") === 0L, col("xm") * col("r")).otherwise(0L)).as("gn"))
+      w = w.join(g, Seq("bucket"), "left")
+        .crossJoin(broadcast(nFrame))
+        .select(col("bucket"),
+          (col("w") + floor(
+            (coalesce(col("gp"), lit(0L)).cast("double") / (lit(2.0) * col("npos"))
+              + coalesce(col("gn"), lit(0L)).cast("double") / (lit(2.0) * col("nneg")))
+            / lit(1000.0)).cast("long")).as("w"))
+        .localCheckpoint(true)
+    }
+    w
+  }
+
+  test("driver-side weight updates are bit-identical to the relational form") {
+    for (d <- Seq("sf0.001", "sf0.01")) {
+      val dbx = TextQueries.clfFeatures(spark, sf(d)).localCheckpoint(true)
+      val got = Classifier.trainLogreg(dbx, 256, rounds = 3)
+        .as[(Long, Long)].collect().toMap
+      val want = relationalTrain(dbx, 256, rounds = 3)
+        .as[(Long, Long)].collect().toMap
+      assert(got.size === 256 && got === want, s"weights differ at $d")
+      assert(got.values.exists(_ != 0L), s"training did not move the weights at $d")
+    }
+  }
+
+  test("a single-class corpus fails loudly") {
+    val oneClass = plantedFeatures.filter($"y" === 0L)
+    val e = intercept[IllegalArgumentException](
+      Classifier.trainLogreg(oneClass, Buckets, rounds = 1))
+    assert(e.getMessage.contains(
+      "trainLogreg needs both classes in the corpus; positive count = 0"))
   }
 
   test("evaluation curve: counts partition the batch, recall never rises with the threshold") {

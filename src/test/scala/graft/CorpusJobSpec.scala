@@ -1,7 +1,11 @@
 package graft
 
-import graft.pipeline.CorpusJob
+import graft.pipeline.{CorpusJob, CorpusStream}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** End-to-end corpus curation: the funnel only narrows, the output is
   * decontaminated and deduplicated, splits partition it, and a re-run is
@@ -229,6 +233,54 @@ class CorpusJobSpec extends SparkSpec {
     // corpus side exchange-free (same layout contract DedupState documents)
     val ddl = spark.sql(s"DESCRIBE EXTENDED ${n.spans}").collect().mkString("\n")
     assert(ddl.contains("span_md5"), ddl)
+  }
+
+  /** Jobs `f` submits, AQE stage and broadcast jobs included (they
+    * inherit the calling thread's job group). A marker job submitted after
+    * `f` flushes the listener bus, which delivers events in order.
+    */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-flush"
+    val jobs = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job budget")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: one execute and one publish at sf0.001 stay within their pins") {
+    // Spark jobs are this pipeline's unit of fixed cost (scheduling plus
+    // planning per job, tens of ms each on a 4-vCPU box), so the counts
+    // are pinned at their measured values: a change may lower a pin,
+    // never raise it
+    val executeJobs = jobsOf(CorpusJob.execute(spark, cfg.copy(
+      out = java.nio.file.Files.createTempDirectory("graft-budget-exec").toString)))
+    val n = CorpusStream.names("graft_job_budget")
+    CorpusStream.reset(spark, n)
+    val docs = Tables.documents(spark, cfg.input)
+    CorpusStream.ingest(spark, docs.filter($"doc_id" < 250), n, 0L)
+    CorpusStream.ingest(spark, docs.filter($"doc_id" >= 250), n, 1L)
+    val publishJobs = jobsOf(CorpusStream.publish(spark, n, cfg.copy(
+      out = java.nio.file.Files.createTempDirectory("graft-budget-pub").toString)))
+    info(s"jobs: execute $executeJobs, publish $publishJobs")
+    assert(executeJobs <= 100, s"execute ran $executeJobs jobs")
+    assert(publishJobs <= 83, s"publish ran $publishJobs jobs")
   }
 
   test("config parsing validates and round-trips") {
