@@ -5,6 +5,7 @@ import graft.functions.Bloom
 import graft.operators.{Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end training-corpus curation — the LLM-data sibling of
   * [[TrendsJob]], runnable with
@@ -516,7 +517,12 @@ object CorpusJob {
     curated.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("split").parquet(cfg.out)
 
-    val out = spark.read.parquet(cfg.out)
+    // read back with the schema just written (every column nullable, as
+    // a parquet read gives it): inferring it would merge the footers in a
+    // Spark job of its own per execute and per stream publish
+    val out = spark.read
+      .schema(StructType(curated.schema.map(_.copy(nullable = true))))
+      .parquet(cfg.out)
     // --span-state: persist the curated corpus's winnowed span
     // fingerprints as the bucketed standing table the NEXT ingest epoch's
     // incremental span dedup probes ([[graft.queries.DedupQueries

@@ -7,10 +7,11 @@ import graft.pipeline.StageStore
 import org.apache.spark.sql.SparkSession
 
 /** The cross-query memo registry: every piece of corpus state a query
-  * module reuses across the queries of one session (tokenized frames,
-  * band tables, trained models, stored-state table names, …) is one
-  * named [[Memo.Entry]], declared next to the code that builds it with
-  * `Memo.entry[V]("name")` and looked up with `entry(s, d) { build }`.
+  * module reuses across the queries of one session (resolved input
+  * tables in [[graft.Tables]], tokenized frames, band tables, trained
+  * models, stored-state table names, …) is one named [[Memo.Entry]],
+  * declared next to the code that builds it with `Memo.entry[V]("name")`
+  * and looked up with `entry(s, d) { build }`.
   *
   *  - Key: `(session, dir, content fingerprint of dir, checkpoint
   *    posture)`. The fingerprint is [[StageStore.contentFingerprint]] (the
