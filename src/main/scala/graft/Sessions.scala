@@ -40,9 +40,10 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   def withGraftConf(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries parquet timestamp[ns], which Spark 4 only
-      // reads as raw longs under this legacy flag; Tables.events converts
-      // the longs to µs timestamps explicitly.
+      // an events.parquet written as timestamp[ns] is readable in Spark 4
+      // only as raw long nanos under this legacy flag; Tables.events
+      // floors the longs to µs timestamps. (The committed testdata's
+      // events.ts is timestamp[us] and reads as TIMESTAMP_NTZ.)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // catalog tables (DedupState's bucketed corpus state) go to a
       // per-process temp warehouse: entry points stay hermetic and never

@@ -52,11 +52,15 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** `events.ts` is parquet timestamp[ns], which Spark 4 rejects
-    * (PARQUET_TYPE_ILLEGAL) unless `spark.sql.legacy.parquet.nanosAsLong` is
-    * on. Read it as raw long nanos and normalize to TimestampType µs
-    * (floor division — matches DuckDB's ns value at every granularity the
-    * oracle compares at).
+  /** `events.ts` normalized to a TimestampType µs column, whatever the
+    * parquet carries:
+    *  - timestamp[us] (the committed testdata at every scale; written
+    *    without a zone, so Spark reads TIMESTAMP_NTZ) is cast in the UTC
+    *    session zone, which keeps its µs value;
+    *  - timestamp[ns], which Spark 4 rejects (PARQUET_TYPE_ILLEGAL) unless
+    *    `spark.sql.legacy.parquet.nanosAsLong` is on, arrives as long
+    *    nanos and is FLOOR-divided to µs: −1 ns is −1 µs, −1500 ns is
+    *    −2 µs (`TablesSpec` pins both on a committed ns fixture).
     *
     * The flag must be set at session BUILD time (see [[Sessions.withGraftConf]],
     * used by Verify/Bench/the test harness): the scan consults it at
@@ -65,7 +69,7 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     require(s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true",
-      "events.parquet carries timestamp[ns]: build the session with " +
+      "events.parquet may carry timestamp[ns]: build the session with " +
         "Sessions.withGraftConf (sets spark.sql.legacy.parquet.nanosAsLong)")
     val df = table(s, d, "events")
     df.schema("ts").dataType match {
@@ -75,7 +79,6 @@ object Tables {
         // toward zero, shifting pre-epoch timestamps up a microsecond
         df.withColumn("ts", timestamp_micros(
           expr("(ts div 1000) - (CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END)")))
-      case TimestampType => df
       case _ => df.withColumn("ts", col("ts").cast(TimestampType))
     }
   }

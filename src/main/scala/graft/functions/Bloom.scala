@@ -286,8 +286,11 @@ case class BloomMergeAgg(
   *
   * CodegenFallback would deserialize the filter bytes per row; instead the
   * probe is evaluated per-row but the deserialized words are cached keyed
-  * on the byte array's identity, so a broadcast filter is decoded once per
-  * task, not once per row.
+  * on the byte array's identity, so a constant filter is decoded once per
+  * task, not once per row. A constant filter (`lit(bytes)`, as
+  * [[Bloom.filterLiteral]] builds it) arrives as a [[ConstBytes]] payload
+  * node ([[Bloom.containsBuilder]]), not a `Literal` that would print every
+  * byte as hex in each plan string.
   */
 case class BloomContains(left: Expression, right: Expression)
     extends BinaryExpression
@@ -307,7 +310,7 @@ case class BloomContains(left: Expression, right: Expression)
 
   @transient private lazy val (h1, h2) = BloomFilterBits.hashers(right.dataType)
 
-  // decode cache: the filter is usually ONE Literal probed by millions of
+  // decode cache: the filter is usually ONE ConstBytes probed by millions of
   // rows — reference-identity beats re-parsing bytes per row. A single
   // volatile (ref, parsed) pair, because an interpreted expression instance
   // can be shared by every task thread of a stage (CodegenFallback holds
@@ -315,8 +318,8 @@ case class BloomContains(left: Expression, right: Expression)
   // could tear under concurrent misses, pairing one filter's ref with
   // another filter's decoded words. Soundness rests on the same invariant
   // documented at CmsQuery's cache: no Spark accessor re-presents one
-  // Array[Byte] reference with mutated contents (Literals are immutable,
-  // row accessors allocate fresh copies).
+  // Array[Byte] reference with mutated contents (ConstBytes and Literal
+  // values are never written to, row accessors allocate fresh copies).
   @transient private lazy val probeTc = BloomFilterBits.typeClass(right.dataType)
   @transient @volatile private var cache: (AnyRef, (Int, Int, Int, Array[Long])) = _
 
@@ -352,13 +355,17 @@ object Bloom {
     * as one call.
     *
     * The filter bytes are collected (exactly ONE bounded-size binary value;
-    * shape-validated) and embedded as a Literal rather than attached via a
-    * 1-row broadcast join: a join-produced binary column is re-copied by
-    * UnsafeRow on every access, defeating [[BloomContains]]'s
+    * shape-validated) and embedded in the plan as a constant rather than
+    * attached via a 1-row broadcast join: a join-produced binary column is
+    * re-copied by UnsafeRow on every access, defeating [[BloomContains]]'s
     * decode-once-per-task cache — measured 10s vs 0.3s over 600k probe rows.
-    * A Literal deserializes once per task closure and keeps one stable array
-    * reference, which is exactly the broadcast-variable pattern expressions
-    * need. The collect is the scan of the SMALL side a bloom build always
+    * A constant deserializes once per task closure and keeps one stable
+    * array reference, which is exactly the broadcast-variable pattern
+    * expressions need. The constant rides as a [[ConstBytes]] payload node,
+    * which prints its size and digest, not a `Literal`, which prints its
+    * hex: each AQE stage update re-renders the whole plan string, and a
+    * 128 KiB filter made that 2.6 M characters (`bloom_decontam` at
+    * sf0.01). The collect is the scan of the SMALL side a bloom build always
     * pays; at 100 TB the driving side of a prefilter is small by
     * construction (a blocklist, a filtered dim) or the pattern doesn't
     * apply.
@@ -389,8 +396,9 @@ object Bloom {
       .drop("__bl_k", "__bl_maybe")
   }
 
-  /** Build a filter over `keys`' single column and return it as a Literal
-    * column — see [[prefilter]] for why a Literal (and not a 1-row
+  /** Build a filter over `keys`' single column and return it as a constant
+    * column (`lit(bytes)`, which [[contains]] carries as a [[ConstBytes]]
+    * payload) — see [[prefilter]] for why a constant (and not a 1-row
     * broadcast join) is the right carrier for a probe-side filter.
     */
   def filterLiteral(keys: DataFrame,
@@ -426,8 +434,11 @@ object Bloom {
     case other => throw new IllegalArgumentException(
       s"bloom_merge takes (filter[, numBits, numHashes]), got ${other.size} args")
   }
+  /** A foldable filter argument rides as a [[ConstBytes]] payload; a
+    * filter column keeps the plain [[BloomContains]] path.
+    */
   private[graft] val containsBuilder: Seq[Expression] => Expression = {
-    case Seq(f, v) => BloomContains(f, v)
+    case Seq(f, v) => BloomContains(ConstBytes.fold("bloom_filter", f), v)
     case other => throw new IllegalArgumentException(
       s"bloom_contains takes (filter, value), got ${other.size} args")
   }

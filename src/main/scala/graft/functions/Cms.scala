@@ -231,9 +231,11 @@ case class CmsMergeAgg(
   * end-to-end on the cms_heavy_hitters probe pass at the 10x smoke scale,
   * because the scan→filter→partial-agg pipeline degrades to interpreted
   * row iterators. The decode cache keeps the bytes→counters parse off the
-  * per-row path, so a Literal sketch probed by millions of rows parses
+  * per-row path, so a constant sketch probed by millions of rows parses
   * once per task (the heavy-hitter analog of [[BloomContains]]'s probe
-  * pattern).
+  * pattern). A constant sketch (`lit(bytes)`) arrives as a [[ConstBytes]]
+  * payload node, not a `Literal` ([[Cms.queryBuilder]]): a `Literal`
+  * would print every byte as hex in each plan string.
   */
 case class CmsQuery(left: Expression, right: Expression) extends BinaryExpression {
 
@@ -253,14 +255,15 @@ case class CmsQuery(left: Expression, right: Expression) extends BinaryExpressio
 
   // decode cache, same shape as BloomContains': one volatile (ref, parsed)
   // pair keyed on reference identity, because the common carrier is a
-  // single Literal whose byte array keeps one stable reference across every
-  // probe of a task — and a single atomic pair can't tear when the
+  // single ConstBytes whose byte array keeps one stable reference across
+  // every probe of a task — and a single atomic pair can't tear when the
   // expression instance is shared across task threads.
   //
   // INVARIANT (shared with BloomContains): reference-identity caching is
   // sound only because no Spark code path re-presents the SAME Array[Byte]
-  // reference with mutated contents — a Literal's value is immutable by
-  // contract, and column-sourced arrays are fresh copies per row
+  // reference with mutated contents — a ConstBytes (like a Literal) hands
+  // out one array nothing writes to, and column-sourced arrays are fresh
+  // copies per row
   // (UnsafeRow.getBinary allocates). If a future accessor ever hands out a
   // reused mutable buffer, this cache would serve stale counters; any such
   // change must switch the key to a content hash.
@@ -317,8 +320,11 @@ object Cms {
     case other => throw new IllegalArgumentException(
       s"cms_merge takes (sketch[, depth, width]), got ${other.size} args")
   }
+  /** A foldable sketch argument rides as a [[ConstBytes]] payload; a
+    * sketch column keeps the plain [[CmsQuery]] path.
+    */
   private[graft] val queryBuilder: Seq[Expression] => Expression = {
-    case Seq(s, v) => CmsQuery(s, v)
+    case Seq(s, v) => CmsQuery(ConstBytes.fold("cms_sketch", s), v)
     case other => throw new IllegalArgumentException(
       s"cms_query takes (sketch, value), got ${other.size} args")
   }

@@ -129,9 +129,9 @@ object SamplingQueries {
       .select("doc_id", "lang", "n_chars")
       .orderBy("doc_id")
 
-  private val DsirBuckets = 256
+  private[graft] val DsirBuckets = 256
   private val DsirK = 100
-  private val DsirTarget = "src0"
+  private[graft] val DsirTarget = "src0"
 
   /** DSIR-style data selection (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling"): score every doc by the
@@ -167,7 +167,7 @@ object SamplingQueries {
   /** The hashed-unigram tf relation (doc_id, source, bucket, tf) for an
     * arbitrary documents frame.
     */
-  private def dsirFeatures(docs: DataFrame): DataFrame =
+  private[graft] def dsirFeatures(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -209,16 +209,25 @@ object SamplingQueries {
     * smoothed out-of-vocabulary): raw and target counts in ONE
     * conditional-sum pass over the model-side tf frame, Laplace-smoothed
     * micronat log-ratio per bucket.
+    *
+    * The totals are a whole-frame window over the same [[DsirBuckets]]
+    * rows, so the tf frame is aggregated once. A second aggregate of
+    * `counts` for the totals re-ran that pass: exchange reuse misses it,
+    * because the join side carries a pushed `isnotnull(bucket)` filter.
+    * Buckets absent from `counts` add null, which `sum` skips, so the
+    * totals are the plain sums of the counts.
     */
-  private def dsirLam(s: SparkSession, db: DataFrame): DataFrame = {
+  private[graft] def dsirLam(s: SparkSession, db: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val counts = db.groupBy("bucket").agg(
       sum("tf").as("rc"),
       sum(when(col("source") === DsirTarget, col("tf")).otherwise(0L)).as("tc"))
-    val totals = counts.agg(sum("rc").as("rtot"), sum("tc").as("ttot"))
+    val all = Window.partitionBy()
     val micronats = (p: Column) => floor(log(p) * lit(1e6)).cast("long")
     s.range(0, DsirBuckets).select(col("id").as("bucket"))
       .join(counts, Seq("bucket"), "left")
-      .crossJoin(broadcast(totals))
+      .withColumn("rtot", sum("rc").over(all))
+      .withColumn("ttot", sum("tc").over(all))
       .select(col("bucket"),
         (micronats((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double")
             / (col("ttot").cast("double") + lit(DsirBuckets.toDouble)))

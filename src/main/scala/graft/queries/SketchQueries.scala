@@ -29,7 +29,7 @@ object SketchQueries {
   /** Revenue of lineitems belonging to URGENT orders. The bloom prefilter
     * runs BEFORE the exact semi-join: one 128 KiB filter over the
     * qualifying orderkeys, carried to the fact scan as a task-closure
-    * Literal (see [[graft.functions.Bloom.prefilter]]). At 100 TB the
+    * constant (see [[graft.functions.Bloom.prefilter]]). At 100 TB the
     * semi-join's shuffle then carries only rows that can match (plus the
     * ~1% false-positive tail the exact join removes) instead of the whole
     * fact table.
@@ -91,6 +91,13 @@ object SketchQueries {
     * thin candidate slice; width is sized so expected collision noise
     * (N/width per row, min over depth rows) stays below the threshold —
     * scale width with stream size, the sketch stays megabytes.
+    *
+    * The collected sketch (4 MiB at the 2^17 width floor) rides pass 2's
+    * filter as `lit(sk)`, which `cms_query` carries as a
+    * [[graft.functions.ConstBytes]] payload printed as its size and
+    * digest. As a plain `Literal` its hex made one render of this query's
+    * plan 33.5 M characters at sf0.01, and AQE re-renders the plan after
+    * every stage.
     */
   def cmsHeavyHitters(s: SparkSession, d: String): DataFrame = {
     Cms.register(s)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Cms
+import graft.functions.{Cms, ConstBytes, CmsQuery}
 import org.apache.spark.sql.functions._
 
 /** Mergeable Count-Min contract: point estimates are ALWAYS upper bounds on
@@ -130,5 +130,30 @@ class CmsSpec extends SparkSpec {
       """SELECT cms_query(cms_sketch(id, 5, 2048), CAST(7 AS BIGINT)) AS n
         |FROM range(0, 50)""".stripMargin).as[Long].head()
     assert(est === 1L)
+  }
+
+  test("a constant sketch rides as a ConstBytes payload: bounded print, content equality") {
+    Cms.register(spark)
+    val sk = spark.range(100).agg(Cms.sketch($"id", 3, 64).as("sk"))
+      .select($"sk").as[Array[Byte]].head()
+    val viaConst = spark.range(10).select($"id", Cms.query(lit(sk), $"id").as("est"))
+    val probes = viaConst.queryExecution.optimizedPlan.expressions
+      .flatMap(_.collect { case q: CmsQuery => q.left })
+    assert(probes.size === 1)
+    val payload = probes.head.asInstanceOf[ConstBytes]
+    assert(!payload.foldable && !payload.nullable)
+    assert(payload.toString.matches(s"cms_sketch<${sk.length} B xxh64=[0-9a-f]{16}>"),
+      payload.toString)
+    // equal bytes under another reference are one node; one changed byte is not
+    assert(ConstBytes("cms_sketch", sk.clone) === payload)
+    assert(ConstBytes("cms_sketch", sk.clone).hashCode === payload.hashCode)
+    val other = sk.clone
+    other(other.length - 1) = (other.last + 1).toByte
+    assert(ConstBytes("cms_sketch", other) !== payload)
+    // the same probes as the sketch taken from a column
+    val viaColumn = spark.range(10).crossJoin(spark.range(1).select(lit(sk).as("sk")))
+      .select($"id", Cms.query($"sk", $"id").as("est"))
+    assert(viaConst.as[(Long, Long)].collect().toMap ===
+      viaColumn.as[(Long, Long)].collect().toMap)
   }
 }

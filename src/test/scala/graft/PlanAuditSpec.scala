@@ -186,9 +186,10 @@ class PlanAuditSpec extends SparkSpec {
     val plan = finalPlan(SketchQueries.bloomSemiRevenue(spark, sf()))
     // the selective dim predicate reaches the orders scan
     assert(plan.contains("EqualTo(o_orderpriority,1-URGENT)"), plan)
-    // the filter rides as a Literal in the predicate — NO join attaches it
-    // (a join-produced binary column is re-copied per row by UnsafeRow,
-    // defeating the decode-once cache: measured 10s vs 0.3s at sf0.1)
+    // the filter rides as a constant (a ConstBytes payload) in the
+    // predicate — NO join attaches it (a join-produced binary column is
+    // re-copied per row by UnsafeRow, defeating the decode-once cache:
+    // measured 10s vs 0.3s at sf0.1)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     // the exact semi-join stays a broadcast hash join (urgent side is small)
@@ -205,6 +206,47 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
     assert(plan.contains("LeftAnti"), plan)
+  }
+
+  /** The whole `QueryExecution` string of an executed frame — parsed,
+    * analyzed, optimized and physical plans, what each AQE stage update
+    * re-renders on the driver — stays under 64 KiB, and the constant
+    * sketch or filter in it prints as `payload` (its name and byte
+    * length), not as hex.
+    */
+  private def assertBoundedPlan(df: DataFrame, payload: String): Unit = {
+    df.collect()
+    val qe = df.queryExecution.toString
+    assert(qe.length < 64 * 1024, s"plan string is ${qe.length} chars")
+    assert(qe.contains(payload), qe)
+  }
+
+  // a 128 KiB filter: Bloom.DefaultBits / 8 + the 12-byte header
+  private val BloomPayload = "bloom_filter<131084 B"
+
+  test("cms_heavy_hitters: the 4 MiB sketch prints as a bounded payload") {
+    // measured at the parent, where the sketch was a Literal: 33.5 M chars
+    // at sf0.01 (the width floor 2^17 × depth 4 + the 8-byte header)
+    assertBoundedPlan(SketchQueries.cmsHeavyHitters(spark, sf()), "cms_sketch<4194312 B")
+  }
+
+  test("bloom_decontam: the filter prints as a bounded payload") {
+    assertBoundedPlan(SketchQueries.bloomDecontam(spark, sf()), BloomPayload)
+  }
+
+  test("bloom_semi_revenue: the filter prints as a bounded payload") {
+    assertBoundedPlan(SketchQueries.bloomSemiRevenue(spark, sf()), BloomPayload)
+  }
+
+  test("a clean0-shaped Bloom.decontaminate frame prints its filter as a bounded payload") {
+    // the CorpusJob / CorpusStream decontamination stage: train docs
+    // against the md5 blocklist of the eval docs
+    import org.apache.spark.sql.functions.{col, md5}
+    val docs = Tables.documents(spark, sf())
+    assertBoundedPlan(graft.functions.Bloom.decontaminate(
+      docs.filter(col("doc_id") % 10 =!= 0), md5(col("text")),
+      docs.filter(col("doc_id") % 10 === 0).select(md5(col("text")).as("h"))),
+      BloomPayload)
   }
 
   test("sim_quant_int8 is a pure map stage: no hash exchange at all") {
@@ -288,9 +330,9 @@ class PlanAuditSpec extends SparkSpec {
   test("cms_heavy_hitters: literal sketch prefilter, no join, bounded shuffles") {
     // the downstream plan starts at the checkpointed shingle frame (Scan
     // ExistingRDD), so the FileScan shape is pinned on the pre-checkpoint
-    // builder below; here: the sketch rides as a Literal in a map-side
-    // Filter — NO join attaches it, and the only shuffles are the
-    // candidate groupBy + final ORDER BY
+    // builder below; here: the sketch rides as a constant (a ConstBytes
+    // payload) in a map-side Filter — NO join attaches it, and the only
+    // shuffles are the candidate groupBy + final ORDER BY
     val plan = finalPlan(SketchQueries.cmsHeavyHitters(spark, sf()))
     assert(!plan.contains("Join"), plan)
     assert(plan.contains("cms_query"), plan)

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Sampling
+import graft.queries.{DedupQueries, SamplingQueries}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic sampling contract: exact reproducibility (the property
@@ -177,5 +179,40 @@ class SamplingSpec extends SparkSpec {
       .select($"doc_id", Sampling.poissonMultiplicity($"doc_id", "boot0").as("m"))
       .as[(Long, Long)].collect().toMap
     assert(a === b)
+  }
+
+  test("dsir λ matches the two-aggregate model bit for bit; a warm sample_dsir runs ≤ 8 jobs") {
+    import SamplingQueries.{DsirBuckets, DsirTarget}
+    // the reference: totals from a second aggregate of the counts, as
+    // the model was first written (and as the oracle's dsirChainSql states it)
+    def reference(db: DataFrame): DataFrame = {
+      val counts = db.groupBy("bucket").agg(sum("tf").as("rc"),
+        sum(when(col("source") === DsirTarget, col("tf")).otherwise(0L)).as("tc"))
+      val totals = counts.agg(sum("rc").as("rtot"), sum("tc").as("ttot"))
+      val micronats = (p: Column) => floor(log(p) * lit(1e6)).cast("long")
+      spark.range(0, DsirBuckets).select(col("id").as("bucket"))
+        .join(counts, Seq("bucket"), "left").crossJoin(totals)
+        .select(col("bucket"),
+          (micronats((coalesce(col("tc"), lit(0L)) + lit(1L)).cast("double")
+              / (col("ttot").cast("double") + lit(DsirBuckets.toDouble)))
+            - micronats((coalesce(col("rc"), lit(0L)) + lit(1L)).cast("double")
+              / (col("rtot").cast("double") + lit(DsirBuckets.toDouble)))).as("lam"))
+    }
+    def lam(df: DataFrame): Map[Long, Long] =
+      df.select("bucket", "lam").as[(Long, Long)].collect().toMap
+    val tf = SamplingQueries.dsirFeatures(Tables.documents(spark, sf()))
+    val standing = tf.filter(col("doc_id") < DedupQueries.splitId(spark, sf()))
+    // sample_dsir's model (the whole corpus) and sample_dsir_stored's table
+    val whole = lam(reference(tf))
+    assert(whole.size === DsirBuckets)
+    assert(lam(SamplingQueries.dsirLam(spark, tf)) === whole)
+    assert(lam(spark.table(SamplingQueries.dsirState(spark, sf()))) === lam(reference(standing)))
+
+    val q = SparkEntry.queries("sample_dsir")
+    q(spark, sf()).count()
+    val jobs = jobsOf(q(spark, sf()).count())
+    info(s"warm sample_dsir count: $jobs jobs")
+    // measured: 10 when the totals re-aggregated the tf frame
+    assert(jobs <= 8, s"a warm sample_dsir count ran $jobs jobs")
   }
 }

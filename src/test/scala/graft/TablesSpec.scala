@@ -71,6 +71,26 @@ class TablesSpec extends SparkSpec {
     assert(r === Row(1000L, 1704067798778549L, 1706657176220708L, 492011626L))
   }
 
+  test("a timestamp[ns] events.ts floors to microseconds, pre-epoch too") {
+    // src/test/resources/events_ns/events.parquet, written with pyarrow:
+    //   ns = [-1500, -1, 0, 1, 999, 1000, 1704067798778549123]
+    //   pq.write_table(pa.table({"event_id": pa.array(range(7), pa.int64()),
+    //     "ts": pa.array(ns, pa.timestamp("ns"))}), "events.parquet")
+    // The expected µs are DuckDB's floor of the same nanos,
+    //   CAST(floor(CAST(ns AS DECIMAL(38,0)) / 1000) AS BIGINT),
+    // which differs from truncation (DuckDB 1.0's own ns parquet read:
+    // -1 and 0 for the first two rows) only before the epoch.
+    val dir = java.nio.file.Paths.get(
+      getClass.getResource("/events_ns/events.parquet").toURI).getParent.toString
+    assert(spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType ===
+      org.apache.spark.sql.types.LongType)
+    val ev = Tables.events(spark, dir)
+    assert(ev.schema("ts").dataType === TimestampType)
+    val micros = ev.orderBy("event_id").select(unix_micros(col("ts")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(micros === Seq(-2L, -1L, 0L, 0L, 0L, 1L, 1704067798778549L))
+  }
+
   test("calls past the eviction of older dirs still read each dir's content") {
     val (dirs, expected) = (1 to 5).map { i =>
       val d = copyOf(s"tables-evict-$i")
