@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -28,14 +26,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cores
     val reps = envInt("SPARK_GRAFT_BENCH_REPS", 3).max(1)
-    val spark = Sessions.withGraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench", cpus).getOrCreate()
     // ERROR, not WARN: the driver tail-parses this process's output, and
     // any log chatter near exit (shutdown hooks flush to stderr AFTER the
     // result line when streams are merged) can bury the JSON
@@ -85,35 +78,26 @@ object Bench {
     // embedded single-process comparator (DuckDB) does not; at sf0.1 many
     // structurally-sound multi-job plans are dominated by that floor, not
     // by data work. Measure the floor once per run (median of an
-    // effectively-empty 32-task job) and count each query's jobs via a
-    // job-group listener, so the artifact can carry a machine-readable
-    // adjudication for every query above 2x the comparator:
-    // floor_adj[q] = max(0, median - jobs*floor) / duck — "the ratio after
-    // subtracting what N job submissions cost on an empty plan". Job
-    // counts are averaged over the timed reps; jobs spawned from helper
-    // threads (the CC loop's concurrent materialization) may not inherit
-    // the group, which UNDERcounts jobs and leaves the adjudication
-    // conservative.
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = js.properties.getProperty("spark.jobGroup.id")
-        if (g != null && g.startsWith("graft:"))
-          jobsByGroup.computeIfAbsent(g,
-            _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
-      }
-    })
-    val nTasks = scala.util.Try(cpus.toInt).getOrElse(32)
+    // effectively-empty one-task-per-core job) and count each query's jobs
+    // in the run ledger under its job group, so the artifact can carry a
+    // machine-readable adjudication for every query above 2x the
+    // comparator: floor_adj[q] = max(0, median - jobs*floor) / duck — "the
+    // ratio after subtracting what N job submissions cost on an empty
+    // plan". Job counts are averaged over the timed reps; jobs spawned
+    // from helper threads may not inherit the group, which UNDERcounts
+    // jobs and leaves the adjudication conservative.
     val floorSec = {
       val xs = (1 to 7).map { _ =>
         val t0 = System.nanoTime()
-        spark.range(0L, nTasks.toLong, 1L, nTasks).count()
+        spark.range(0L, cpus.toLong, 1L, cpus).count()
         (System.nanoTime() - t0) / 1e9
       }.sorted
       xs(xs.size / 2)
     }
+    // the ledger sees only the timed reps, so its file (beside the
+    // artifact, `<out>_jobs.json`) holds jobs × reps rows: each job's
+    // wall, gap since the previous job of its query, tasks and stages
+    val ledger = RunLedger.attach(spark.sparkContext)
     // rep-major order (full pass 1, full pass 2, ...) so one rep's JVM/GC
     // state doesn't bias all reps of the same query
     val samples: Seq[Seq[(String, Double)]] = (1 to reps).map { _ =>
@@ -129,6 +113,7 @@ object Bench {
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
     }
+    ledger.flush()
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       // true median: average the two middle elements for even sizes (an
@@ -181,8 +166,7 @@ object Bench {
     // comment). Lives in the FULL artifact; floor_sec also rides the
     // compact line so a log tail can sanity-check the run's floor.
     val jobsPerQuery: Map[String, Double] = names.map { case (name, _) =>
-      val c = Option(jobsByGroup.get(s"graft:$name")).map(_.get).getOrElse(0L)
-      name -> c.toDouble / reps
+      name -> ledger.jobs(s"graft:$name").size.toDouble / reps
     }.toMap
     val floorAdj: Seq[(String, Double)] = duck.toSeq.flatMap { case (_, per) =>
       perQuery.collect {
@@ -213,10 +197,12 @@ object Bench {
     val outPath = args.sliding(2).collectFirst { case Array("--out", p) => p }
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
+    val jobsPath = outPath.stripSuffix(".json") + "_jobs.json"
+    Seq(outPath -> (json + "\n"), jobsPath -> ledger.json).foreach { case (p, txt) =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(p), txt.getBytes("UTF-8"))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
+    }
     // The driver keeps only the LAST ~2000 chars of the run's output, and
     // sbt appends a "[success] Total time ..." line after main returns —
     // rounds 2 and 3 both lost the official JSON to that window (the

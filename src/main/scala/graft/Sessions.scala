@@ -53,4 +53,18 @@ object Sessions {
       // compile once per JVM (see the scaladoc above)
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** The session every main in this repo runs on: `local[cpus]`, one
+    * shuffle partition per core, no UI.
+    */
+  def local(app: String, cpus: Int = cores): SparkSession.Builder =
+    withGraftConf(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(app)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false"))
+
+  /** `SPARK_GRAFT_CPUS` if set, else this machine's core count. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 }

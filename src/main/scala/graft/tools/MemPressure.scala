@@ -1,10 +1,6 @@
 package graft.tools
 
-import graft.Sessions
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-import java.util.concurrent.atomic.AtomicLong
+import graft.{RunLedger, Sessions}
 
 /** Memory-pressure pin at 10× scale: every other scale argument in this
   * repo is wall-time; this one is about DEGRADING GRACEFULLY. The
@@ -40,25 +36,10 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object MemPressure {
 
-  private final class SpillListener extends SparkListener {
-    val memSpilled = new AtomicLong(0L)
-    val diskSpilled = new AtomicLong(0L)
-    val peakExecMem = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        memSpilled.addAndGet(m.memoryBytesSpilled)
-        diskSpilled.addAndGet(m.diskBytesSpilled)
-        peakExecMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_MEM_DIR"))
       .getOrElse("/tmp/graft-10x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // SPARK_GRAFT_MEM_CKPT_DIR switches the probe to the RELIABLE
     // checkpoint posture (Materialize writes iterative/memo state to this
     // dir and unpersists — the cluster deployment shape): the r13 30×
@@ -69,18 +50,14 @@ object MemPressure {
     // state on disk and completes. Both points are reported; the knob is
     // the same spark.graft.checkpoint.dir a real cluster sets.
     val ckptDir = sys.env.get("SPARK_GRAFT_MEM_CKPT_DIR").filter(_.nonEmpty)
-    val b0 = Sessions.withGraftConf(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-mem-pressure")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false"))
+    val b0 = Sessions.local("graft-mem-pressure",
+        sys.env.get("SPARK_GRAFT_CPUS").fold(8)(_.trim.toInt))
+      .config("spark.sql.shuffle.partitions", "32")
     val spark = ckptDir.fold(b0)(dir =>
         b0.config(graft.operators.Materialize.DirKey, dir))
       .getOrCreate()
     val heapMb = Runtime.getRuntime.maxMemory() / (1024 * 1024)
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
+    val ledger = RunLedger.attach(spark.sparkContext)
 
     def timed(f: => Long): (Double, Long) = {
       val t0 = System.nanoTime()
@@ -119,8 +96,8 @@ object MemPressure {
     val (tRank, nRank) = timed(
       graft.queries.GraphQueries.defs("graph_domain_rank")(spark, dir).count())
 
-    val spillMem = listener.memSpilled.get()
-    val spillDisk = listener.diskSpilled.get()
+    ledger.flush()
+    val (spillMem, spillDisk, peakExec) = ledger.spill
     require(nClusters > 0L && nIvf > 0L && nRank > 0L,
       "workloads returned no rows")
     require(spillMem + spillDisk > 0L,
@@ -128,7 +105,7 @@ object MemPressure {
         "lower SPARK_DRIVER_MEM or raise the replica size")
 
     val json =
-      f"""{"metric":"mem_pressure","dir":"$dir","ckpt":"${ckptDir.fold("local")(_ => "reliable")}","heap_mb":$heapMb,"spill_mem_bytes":$spillMem,"spill_disk_bytes":$spillDisk,"peak_exec_mem_bytes":${listener.peakExecMem.get()},"clusters_sec":$tClusters%.2f,"clusters":$nClusters,"state_build_sec":$tBuild%.2f,"merge_sec":$tMerge%.2f,"ivf_sec":$tIvf%.2f,"ivf_rows":$nIvf,"rank_sec":$tRank%.2f,"rank_rows":$nRank}"""
+      f"""{"metric":"mem_pressure","dir":"$dir","ckpt":"${ckptDir.fold("local")(_ => "reliable")}","heap_mb":$heapMb,"spill_mem_bytes":$spillMem,"spill_disk_bytes":$spillDisk,"peak_exec_mem_bytes":$peakExec,"clusters_sec":$tClusters%.2f,"clusters":$nClusters,"state_build_sec":$tBuild%.2f,"merge_sec":$tMerge%.2f,"ivf_sec":$tIvf%.2f,"ivf_rows":$nIvf,"rank_sec":$tRank%.2f,"rank_rows":$nRank}"""
     // SPARK_GRAFT_MEM_OUT redirects the artifact — the N× scale ladder
     // (10× vs 30× under the same executor shape) runs this probe once per
     // replica dir with distinct outputs and adjudicates the ratios

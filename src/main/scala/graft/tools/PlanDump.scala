@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries into a directory — the
@@ -8,7 +7,7 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   * Writes `<outDir>/<query>_<suffix>.txt` for each selected query. Runs on
-  * the same session shape as Bench (local[$SPARK_GRAFT_CPUS], AQE on) so
+  * the same session shape as Bench ([[graft.Sessions.local]]) so
   * the captured plan is the one the bench actually times.
   */
 object PlanDump {
@@ -18,13 +17,7 @@ object PlanDump {
     val suffix = args(2)
     val only = args.drop(3).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.withGraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.Sessions.local("graft-plan-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -74,12 +74,7 @@ object Replicate10x {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_REPL_OUT", "/tmp/graft-10x")
     val copies = sys.env.getOrElse("SPARK_GRAFT_REPL_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.withGraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-replicate").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, base, out, copies)
     println(s"""{"metric":"replicate","out":"$out","copies":$copies}""")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, Tables}
+import graft.{RunLedger, Sessions, Tables}
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,46 +27,6 @@ object ScaleSmoke {
   /** doc_id offset between replicas — also the replica discriminator. */
   val Offset = 10000000L
 
-  /** Per-stage task durations for the skew pins: the straggler metric is
-    * max/median task duration over QUALIFYING stages (≥ 16 tasks, max ≥
-    * 300 ms — below that, scheduler noise dominates and a "4x" means
-    * nothing).
-    */
-  private final class TaskDurListener extends org.apache.spark.scheduler.SparkListener {
-    private val durs = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]]()
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      if (te.taskInfo != null && te.taskInfo.successful) {
-        durs.computeIfAbsent(te.stageId,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]())
-          .add(te.taskInfo.duration)
-      }
-    }
-    def worstStragglerRatio(): Double = {
-      import scala.jdk.CollectionConverters._
-      val ratios = durs.values.asScala.toSeq.map(_.asScala.map(_.toLong).toSeq)
-        .filter(ts => ts.size >= 16 && ts.max >= 300L)
-        .map { ts =>
-          val sorted = ts.sorted
-          val med = math.max(sorted(sorted.size / 2), 1L)
-          sorted.last.toDouble / med
-        }
-      if (ratios.isEmpty) 1.0 else ratios.max
-    }
-    def reset(): Unit = durs.clear()
-
-    /** Per-stage (stageId, nTasks, medianMs, maxMs) for pin debugging. */
-    def stageStats(): Seq[(Int, Int, Long, Long)] = {
-      import scala.jdk.CollectionConverters._
-      durs.asScala.toSeq.sortBy(_._1).map { case (sid, q) =>
-        val ts = q.asScala.map(_.toLong).toSeq.sorted
-        (sid, ts.size, if (ts.isEmpty) 0L else ts(ts.size / 2),
-          if (ts.isEmpty) 0L else ts.last)
-      }
-    }
-  }
-
   final case class SkewResult(twoPathSec: Double, plainSec: Double,
                               twoStraggler: Double, plainStraggler: Double,
                               twoPathAqeSec: Double)
@@ -78,8 +38,9 @@ object ScaleSmoke {
     * shuffles, bucketed sides, off-plan engines). AQE partition
     * coalescing is disabled too: it would merge the 32 reducers of a
     * ~modest-MB shuffle into a handful of tasks, dropping the join stage
-    * below the listener's ≥16-task qualifier and making the straggler
-    * metric read scheduler noise instead of the planted skew. The pins:
+    * below [[RunLedger.straggler]]'s ≥16-task qualifier and making the
+    * straggler metric read scheduler noise instead of the planted skew.
+    * The pins:
     * the fixture genuinely bites (the plain join's widest stage has a
     * ≥4x-median straggler task), the two-path form has NO task past 4x
     * its stage median, its row count is identical, and it holds wall-time
@@ -114,38 +75,39 @@ object ScaleSmoke {
         .head()
       (r.getLong(0), r.getLong(1))
     }
-    val stats = new TaskDurListener
-    spark.sparkContext.addSparkListener(stats)
-    val confKeys = Seq("spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val prevConf = confKeys.map(k => k -> spark.conf.get(k, "true"))
-    confKeys.foreach(spark.conf.set(_, "false"))
-    val (tTwoPath, nTwoPath, twoStraggler) =
+    val sc = spark.sparkContext
+    val ledger = RunLedger.attach(sc)
+    // one arm under its own job group: (wall s, probe result, worst
+    // straggler ratio, its stages' task stats for the pins' messages)
+    def arm(name: String)(run: => (Long, Long)): (Double, (Long, Long), Double, String) = {
+      val group = s"graft-skew:$name"
+      sc.setJobGroup(group, name)
+      val t0 = System.nanoTime()
+      val n = try run finally sc.clearJobGroup()
+      val t = (System.nanoTime() - t0) / 1e9
+      ledger.flush()
+      val stages = ledger.stageStats(group)
+        .map { case (id, k, med, mx) => s"$id:$k/$med/$mx" }.mkString(" ")
+      (t, n, ledger.straggler(group), s"stages (id:tasks/median ms/max ms) $stages")
+    }
+    // 32 reducers whatever the session's core count, so the join stage
+    // clears the ≥16-task qualifier on a small box too
+    val measureConf = Seq("spark.sql.adaptive.skewJoin.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "32")
+    val prevConf = measureConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    measureConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val ((tTwoPath, nTwoPath, twoStraggler, twoStages),
+         (tPlainJoin, nPlainJoin, plainStraggler, plainStages)) =
       try {
-        val t0 = System.nanoTime()
-        val n = probeAgg(graft.operators.Skew.hotScopedJoin(skewFact, skewDim,
-          "k", "dk", hotMinRows = rows / 100L, salts = 64, saltOn = col("rowid")))
-        val t = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(2000) // listener bus drain
-        if (sys.env.contains("SPARK_GRAFT_SKEW_DEBUG"))
-          stats.stageStats().foreach { case (sid, k, med, mx) =>
-            println(s"[skew-debug two-path] stage=$sid tasks=$k medMs=$med maxMs=$mx") }
-        (t, n, stats.worstStragglerRatio())
-      } finally stats.reset()
-    val (tPlainJoin, nPlainJoin, plainStraggler) =
-      try {
-        val t0 = System.nanoTime()
-        val n = probeAgg(skewFact
-          .join(skewDim.hint("merge"), col("k") === col("dk")))
-        val t = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(2000)
-        if (sys.env.contains("SPARK_GRAFT_SKEW_DEBUG"))
-          stats.stageStats().foreach { case (sid, k, med, mx) =>
-            println(s"[skew-debug plain] stage=$sid tasks=$k medMs=$med maxMs=$mx") }
-        (t, n, stats.worstStragglerRatio())
+        (arm("two-path")(probeAgg(graft.operators.Skew.hotScopedJoin(skewFact,
+          skewDim, "k", "dk", hotMinRows = rows / 100L, salts = 64,
+          saltOn = col("rowid")))),
+         arm("plain")(probeAgg(skewFact
+          .join(skewDim.hint("merge"), col("k") === col("dk")))))
       } finally {
-        spark.sparkContext.removeSparkListener(stats)
-        prevConf.foreach { case (k, v) => spark.conf.set(k, v) }
+        ledger.detach()
+        prevConf.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
       }
     // AQE-COMPATIBILITY arm: the measurement above disables AQE's skew
     // split to expose the planted straggler; production runs with it ON,
@@ -182,9 +144,11 @@ object ScaleSmoke {
     require(tTwoAqe <= math.max(tTwoPath, tPlainJoin) * 2.0,
       f"two-path salted join under AQE blew up: $tTwoAqe%.1fs vs AQE-off $tTwoPath%.1fs")
     require(plainStraggler >= 4.0,
-      f"planted skew did not bite (plain-join straggler $plainStraggler%.1fx) — the pin is vacuous")
+      f"planted skew did not bite (plain-join straggler $plainStraggler%.1fx) — " +
+        s"the pin is vacuous; $plainStages")
     require(twoStraggler <= 4.0,
-      f"two-path salted join still straggles: worst task $twoStraggler%.1fx its stage median")
+      f"two-path salted join still straggles: worst task $twoStraggler%.1fx " +
+        s"its stage median; $twoStages")
     require(tTwoPath <= tPlainJoin * 1.5,
       f"two-path salted join lost wall-time parity: $tTwoPath%.1fs vs plain $tPlainJoin%.1fs")
     SkewResult(tTwoPath, tPlainJoin, twoStraggler, plainStraggler, tTwoAqe)
@@ -205,19 +169,14 @@ object ScaleSmoke {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SMOKE_COPIES", "10").toInt
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_SMOKE_BUDGET_SEC", "600").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cores
     val dir = java.nio.file.Files.createTempDirectory("graft-sf1").toString
-    val spark = Sessions.withGraftConf(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local("graft-scale-smoke", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nBase = Tables.documents(spark, base).count()
     replicate(Tables.documents(spark, base), copies)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val nDocs = Tables.documents(spark, dir).count()
     require(nDocs == nBase * copies, s"replication produced $nDocs of ${nBase * copies}")
@@ -234,7 +193,7 @@ object ScaleSmoke {
     // 10x scale should coalesce to a modest partition count, not fan out
     val pairParts = graft.queries.DedupQueries.defs("dedup_minhash_pairs")(spark, dir)
       .rdd.getNumPartitions
-    require(pairParts <= 8 * cpus.toInt,
+    require(pairParts <= 8 * cpus,
       s"pair-join exchange unbounded: $pairParts partitions")
     val (tClusters, nClusters) = timed("dedup_clusters")
     val (tNgram, nNgram) = timed("dedup_ngram_pairs")
@@ -369,7 +328,7 @@ object ScaleSmoke {
       Tables.documents(spark, base).select(
         (col("doc_id") + lit(i * Offset)).as("doc_id"),
         col("text"), col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt)
+    }.reduce(_ unionByName _).repartition(cpus)
       .write.mode("overwrite").parquet(s"$bpeDir/documents.parquet")
     val t0Bpe = System.nanoTime()
     val merges10 = graft.queries.TextQueries.defs("text_bpe_merges")(spark, bpeDir)

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,32 +10,19 @@ trait SparkSpec extends AnyFunSuite {
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
   /** Jobs `f` submits, AQE stage and broadcast jobs included (they
-    * inherit the calling thread's job group). A marker job submitted after
-    * `f` flushes the listener bus, which delivers events in order.
+    * inherit the calling thread's job group), as the run ledger counts
+    * them once its bus is flushed.
     */
   def jobsOf(f: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"graft-jobs-of-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-flush"
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
+    val ledger = RunLedger.attach(sc)
     try {
       sc.setJobGroup(group, "jobs of")
       try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
+      ledger.flush()
+      ledger.jobs(group).size
+    } finally ledger.detach()
   }
 }
 
@@ -48,12 +32,5 @@ trait SparkSpec extends AnyFunSuite {
   */
 object SparkSpec {
   def session(appName: String): SparkSession =
-    Sessions.withGraftConf(SparkSession.builder()
-      .master("local[4]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    Sessions.local(appName, 4).getOrCreate()
 }
