@@ -128,14 +128,11 @@ object Dedup {
     sig.select(col(idCol) +: bands: _*)
   }
 
-  /** Candidate pairs (a < b) sharing at least one LSH band.
-    *
-    * Dedup across bands uses the first-matching-band rule (emit a pair only
-    * from the lowest band index where it collides, requiring all earlier
-    * bands to differ) instead of a `distinct()` — that removes an exchange
-    * over the band-duplicated pair stream entirely, which at sf0.1 is the
-    * single largest cost of the whole MinHash path (pairs collide in ~4
-    * bands each on near-identical docs).
+  /** Candidate pairs (a < b) sharing at least one LSH band: [[longBands]]
+    * self-joined through [[firstBandJoin]], so each pair is emitted once,
+    * at its lowest shared band, with no `distinct()` exchange over the
+    * band-duplicated pair stream (pairs collide in ~4 bands each on
+    * near-identical docs).
     *
     * `maxBucket` (optional) neutralizes band values shared by more than that
     * many docs before pairing — the skew guard for 100 TB corpora, where a
@@ -145,19 +142,9 @@ object Dedup {
     * shares a small band is still emitted there — only pairs whose every
     * shared band is hot are suppressed (those are exact-dedup's job).
     * The oracle queries use the uncapped default for bit-parity.
-    *
-    * Exchange-width gate (`maxWideBands`): the first-matching-band rule
-    * needs every band value on both sides of the join, which widens the
-    * exploded frame by nBands columns per row — a fine trade at the 4 bands
-    * the oracle uses, an 8× shuffle-width tax at the 32+ bands a production
-    * K would run. Above the gate the narrow (id, band_idx, band_val) frame
-    * joins instead and band-duplicated pairs collapse through one
-    * `distinct()` exchange over two-long rows — same pair set, opposite
-    * width/exchange trade, each chosen where it wins.
     */
   def lshCandidatePairs(bands: DataFrame, idCol: String, nBands: Int,
-                        maxBucket: Option[Int] = None,
-                        maxWideBands: Int = 8): DataFrame = {
+                        maxBucket: Option[Int] = None): DataFrame = {
     val capped = maxBucket match {
       case None => bands
       case Some(cap) =>
@@ -171,72 +158,69 @@ object Dedup {
             .drop("__hv")
         }
     }
-    val bandCols = (0 until nBands).map(j => col(s"band$j"))
-    val entries = array((0 until nBands).map(j =>
-      struct(lit(j).as("bi"), col(s"band$j").as("bv"))): _*)
-    if (nBands > maxWideBands) {
-      val narrow = capped
-        .select(col(idCol), explode(entries).as("e"))
-        .select(col(idCol), col("e.bi").as("band_idx"), col("e.bv").as("band_val"))
-        .filter(col("band_val").isNotNull)
-      return narrow.toDF("a", "band_idx", "band_val")
-        .join(narrow.toDF("b", "band_idx", "band_val"), Seq("band_idx", "band_val"))
-        .filter(col("a") < col("b"))
-        .select("a", "b")
-        .distinct()
-    }
-    val long = capped
-      .select(col(idCol) +: bandCols :+ explode(entries).as("e"): _*)
-      .select(col(idCol) +: bandCols :+ col("e.bi").as("band_idx") :+ col("e.bv").as("band_val"): _*)
-      .filter(col("band_val").isNotNull) // nulled hot bands never pair
-    def pfx(p: String) = long.toDF(long.columns.map(c => s"$p$c").toIndexedSeq: _*)
-    // earlier band i blocks this match only if BOTH values survived capping
-    // and are equal; a nulled (hot) band never counts as a match
-    val firstMatchOnly = (0 until nBands).map { i =>
-      (col("a_band_idx") <= lit(i)) ||
-        col(s"a_band$i").isNull || col(s"b_band$i").isNull ||
-        (col(s"a_band$i") =!= col(s"b_band$i"))
-    }.reduce(_ && _)
-    pfx("a_").join(pfx("b_"),
-        col("a_band_idx") === col("b_band_idx") &&
-        col("a_band_val") === col("b_band_val") &&
-        col(s"a_$idCol") < col(s"b_$idCol") &&
-        firstMatchOnly)
-      .select(col(s"a_$idCol").as("a"), col(s"b_$idCol").as("b"))
+    lshSelfCandidatePairsLong(longBands(capped, idCol, nBands), idCol, nBands)
   }
 
-  /** Wide band table exploded to long form
-    * `(idCol, band0..band{n-1}, band_idx, band_val, band_key)` — one row
-    * per (doc, band), null band values dropped. The wide columns ride
-    * along because the first-matching-band rule needs every band value on
-    * both join sides. `band_key` fuses (band_idx, band_val) into ONE
-    * column: probe joins cluster on it alone, which is what lets a table
-    * bucketed on `band_key` feed the join with no exchange — Spark's
-    * co-partitioning requires the bucket columns to be exactly the equi
-    * keys (a two-key join over a one-column bucketing is rejected by the
-    * planner). This is the PERSISTABLE shape of LSH dedup state
+  /** Long band rows: one row per (row, band) holding the `carry` columns,
+    * then `band_idx`, `band_val` and `band_key`, with null band values
+    * dropped. `band_key` fuses (band_idx, band_val) into ONE column (':'
+    * cannot occur in the int band_idx, so key equality IS pair equality):
+    * a join clusters on it alone, which is what lets a table bucketed on
+    * `band_key` feed [[firstBandJoin]] with no exchange — Spark
+    * co-partitions only when the bucket columns are exactly the equi keys.
+    */
+  private[operators] def explodeBands(df: DataFrame, carry: Seq[String],
+                                      bands: Seq[Column]): DataFrame = {
+    val entries = array(bands.zipWithIndex.map { case (b, j) =>
+      struct(lit(j).as("bi"), b.as("bv")) }: _*)
+    val kept = carry.map(col)
+    df.select(kept :+ explode(entries).as("e"): _*)
+      .select(kept :+ col("e.bi").as("band_idx") :+ col("e.bv").as("band_val"): _*)
+      .filter(col("band_val").isNotNull)
+      .withColumn("band_key", concat_ws(":", col("band_idx"), col("band_val")))
+  }
+
+  /** The one band join every LSH and Hamming family pairs through: two
+    * [[explodeBands]] frames equi-joined on `band_key`, keeping a pair only
+    * at the LOWEST band index both rows share (the first-matching-band
+    * rule), so a pair colliding in several bands is emitted once and no
+    * `distinct()` exchange is paid. Every column comes back prefixed `a_` /
+    * `b_`. `band(p, i)` reads band i of the side whose columns carry prefix
+    * `p`: a carried band column, a band recomputed from a carried hash, or
+    * an array element. A null band never matches. `selfId` makes it a
+    * self-join that keeps only a < b on that column.
+    */
+  private[operators] def firstBandJoin(a: DataFrame, b: DataFrame, nBands: Int,
+                                       band: (String, Int) => Column,
+                                       selfId: Option[String] = None): DataFrame = {
+    def pfx(df: DataFrame, p: String) = df.toDF(df.columns.map(p + _).toIndexedSeq: _*)
+    val firstMatch = (0 until nBands).map { i =>
+      col("a_band_idx") <= i || coalesce(band("a_", i) =!= band("b_", i), lit(true))
+    }
+    val conds = (col("a_band_key") === col("b_band_key")) +:
+      (selfId.map(id => col(s"a_$id") < col(s"b_$id")).toSeq ++ firstMatch)
+    pfx(a, "a_").join(pfx(b, "b_"), conds.reduce(_ && _))
+  }
+
+  /** Band i of a [[longBands]] side: its carried `band<i>` column. */
+  private def carriedBand(p: String, i: Int): Column = col(s"${p}band$i")
+
+  /** Wide band table `(idCol, band0..band{n-1})` in [[explodeBands]]'s long
+    * form `(idCol, band0..band{n-1}, band_idx, band_val, band_key)`. The
+    * wide columns ride along because [[firstBandJoin]] reads every band on
+    * both sides. This is the PERSISTABLE shape of LSH dedup state
     * ([[Layout.writeBucketed]] on `band_key`).
     */
   def longBands(bands: DataFrame, idCol: String, nBands: Int): DataFrame = {
-    val bandCols = (0 until nBands).map(j => col(s"band$j"))
-    val entries = array((0 until nBands).map(j =>
-      struct(lit(j).as("bi"), col(s"band$j").as("bv"))): _*)
-    bands
-      .select(col(idCol) +: bandCols :+ explode(entries).as("e"): _*)
-      .select(col(idCol) +: bandCols :+ col("e.bi").as("band_idx") :+ col("e.bv").as("band_val"): _*)
-      .filter(col("band_val").isNotNull)
-      // ':' is unambiguous (band_idx is an int, band_val 32 hex chars), so
-      // band_key equality IS (band_idx, band_val) equality
-      .withColumn("band_key", concat_ws(":", col("band_idx"), col("band_val")))
+    val bandCols = (0 until nBands).map(j => s"band$j")
+    explodeBands(bands, idCol +: bandCols, bandCols.map(col))
   }
 
   /** Cross-set candidate pairs `(a, b)`: a from `bandsA`, b from `bandsB`,
     * sharing at least one LSH band — the INCREMENTAL form of
     * [[lshCandidatePairs]] for matching an incoming batch against a
     * standing corpus (ids must be disjoint across the two frames; no
-    * within-set pairs form). Uses the same first-matching-band rule, so
-    * band-duplicated collisions never exist and no `distinct()` exchange
-    * is paid.
+    * within-set pairs form).
     */
   def lshCrossCandidatePairs(bandsA: DataFrame, bandsB: DataFrame,
                              idCol: String, nBands: Int): DataFrame =
@@ -245,24 +229,14 @@ object Dedup {
 
   /** [[lshCrossCandidatePairs]] over ALREADY-long band frames (the stored
     * form [[longBands]] produces) — the rolling-ingest entry point: the
-    * equi key is the single fused `band_key`, so the corpus side coming
-    * off a `band_key`-bucketed table satisfies the join's clustering
-    * exactly and the (huge) corpus never shuffles; only the (small)
-    * incoming batch does.
+    * corpus side coming off a `band_key`-bucketed table satisfies
+    * [[firstBandJoin]]'s clustering exactly and the (huge) corpus never
+    * shuffles; only the (small) incoming batch does.
     */
   def lshCrossCandidatePairsLong(longA: DataFrame, longB: DataFrame,
-                                 idCol: String, nBands: Int): DataFrame = {
-    def pfx(df: DataFrame, p: String) = df.toDF(df.columns.map(c => s"$p$c").toIndexedSeq: _*)
-    val a = pfx(longA, "a_")
-    val b = pfx(longB, "b_")
-    val firstMatchOnly = (0 until nBands).map { i =>
-      (col("a_band_idx") <= lit(i)) ||
-        col(s"a_band$i").isNull || col(s"b_band$i").isNull ||
-        (col(s"a_band$i") =!= col(s"b_band$i"))
-    }.reduce(_ && _)
-    a.join(b, col("a_band_key") === col("b_band_key") && firstMatchOnly)
+                                 idCol: String, nBands: Int): DataFrame =
+    firstBandJoin(longA, longB, nBands, carriedBand)
       .select(col(s"a_$idCol").as("a"), col(s"b_$idCol").as("b"))
-  }
 
   /** WITHIN-set candidate pairs (a < b) over one ALREADY-long band frame —
     * [[lshCandidatePairs]] for a corpus whose band table is persisted
@@ -270,22 +244,11 @@ object Dedup {
     * `band_key`). Self-joining a table bucketed on exactly the equi key
     * means NEITHER side shuffles: full-corpus re-clustering reads the
     * stored state twice and pays zero exchanges before the verify stage.
-    * Same first-matching-band rule as the recomputing form, so the pair
-    * set is bit-identical and no `distinct()` exchange is ever paid.
     */
   def lshSelfCandidatePairsLong(long: DataFrame, idCol: String,
-                                nBands: Int): DataFrame = {
-    def pfx(p: String) = long.toDF(long.columns.map(c => s"$p$c").toIndexedSeq: _*)
-    val firstMatchOnly = (0 until nBands).map { i =>
-      (col("a_band_idx") <= lit(i)) ||
-        col(s"a_band$i").isNull || col(s"b_band$i").isNull ||
-        (col(s"a_band$i") =!= col(s"b_band$i"))
-    }.reduce(_ && _)
-    pfx("a_").join(pfx("b_"),
-        col("a_band_key") === col("b_band_key") &&
-        col(s"a_$idCol") < col(s"b_$idCol") && firstMatchOnly)
+                                nBands: Int): DataFrame =
+    firstBandJoin(long, long, nBands, carriedBand, Some(idCol))
       .select(col(s"a_$idCol").as("a"), col(s"b_$idCol").as("b"))
-  }
 
   /** Exact set-overlap statistics `(a, b, n_inter, sz_a, sz_b)` for
     * candidate pairs via packed 64-bit token bitmasks: tokens get dense ids
@@ -911,9 +874,8 @@ object Dedup {
     * `maxHamming`, blocked by pigeonhole banding: the 60-bit simhash splits
     * into 4 bands of 15 bits, and any pair within distance 3 must agree
     * EXACTLY on at least one band (3 bit flips touch at most 3 of the 4
-    * bands) — so candidates come from the same first-matching-band
-    * equi-join the MinHash path uses, never an all-pairs comparison.
-    * Verification is one codegen'd `bit_count(xor)` per candidate. The ONE
+    * bands) — so candidates come from the same band join the MinHash path
+    * uses ([[firstBandJoin]]), never an all-pairs comparison. The ONE
     * near-dup-pair definition shared by the `dedup_simhash_pairs` query
     * and [[graft.pipeline.CorpusJob]]'s curation stage.
     */
@@ -922,73 +884,30 @@ object Dedup {
     hammingPairs(simhash(df, idCol, textCol), idCol, "simhash",
       bits = 60, nBands = 4, maxHamming = maxHamming)
 
-  /** Banded Hamming near-dup pairs `(a, b, hamming)` over ANY precomputed
-    * `bits`-bit hash column — the pigeonhole blocking [[simhashPairs]]
-    * introduced, factored out so every bit-fingerprint family (simhash,
-    * multimodal aHash, ...) shares the one candidate-formation path: the
-    * hash splits into `nBands` equal bands, and a pair within Hamming
-    * distance `maxHamming` ≤ nBands−1 must agree EXACTLY on some band, so
-    * candidates come from a band equi-join — never an all-pairs scan.
-    * Verification is one codegen'd `bit_count(xor)` per candidate.
+  /** Banded Hamming near-dup pairs `(a, b, hamming)` (a < b) over ANY
+    * precomputed `bits`-bit hash column — the pigeonhole blocking
+    * [[simhashPairs]] introduced, shared by every bit-fingerprint family
+    * (simhash, multimodal aHash, ...): [[hammingLongBands]] self-joined
+    * through [[hammingJoin]], never an all-pairs scan.
     */
   def hammingPairs(hashes: DataFrame, idCol: String, hashCol: String,
                    bits: Int, nBands: Int, maxHamming: Int): DataFrame = {
-    require(bits % nBands == 0, s"bits=$bits not divisible into $nBands bands")
-    require(maxHamming >= 0 && maxHamming <= nBands - 1,
-      s"$nBands-band pigeonhole is complete only for Hamming <= ${nBands - 1}, got $maxHamming")
-    val bw = bits / nBands
-    val mask = (1L << bw) - 1
-    val banded = hashes.select(col(idCol) +: (0 until nBands).map { j =>
-      shiftrightunsigned(col(hashCol), bw * j).bitwiseAND(lit(mask)).as(s"band$j")
-    }: _*)
-    val cand = lshCandidatePairs(banded, idCol, nBands)
-    cand.join(hashes.select(col(idCol).as("a"), col(hashCol).as("ha")), "a")
-      .join(hashes.select(col(idCol).as("b"), col(hashCol).as("hb")), "b")
-      .select(col("a"), col("b"),
-              bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    val long = hammingLongBands(hashes, idCol, hashCol, bits, nBands)
+    hammingJoin(long, long, idCol, hashCol, bits, nBands, maxHamming, self = true)
   }
 
   /** [[hammingPairs]] across a PROBE frame and a STANDING frame with
-    * disjoint id sets — the incremental-epoch form: per-band equi-joins
-    * probe × standing replace the self-join (the standing side is never
-    * self-paired — its internal pairs were found in their own epochs), and
-    * the same codegen popcount verifies. A candidate sharing several bands
-    * is emitted once via the first-matching-band rule, so no `distinct()`
-    * exchange is paid. Output `(a, b, hamming)` with a = probe id.
+    * disjoint id sets — the incremental-epoch form: probe × standing
+    * replaces the self-join (the standing side is never self-paired — its
+    * internal pairs were found in their own epochs). Output
+    * `(a, b, hamming)` with a = probe id.
     */
   def hammingCrossPairs(probe: DataFrame, standing: DataFrame, idCol: String,
                         hashCol: String, bits: Int, nBands: Int,
-                        maxHamming: Int): DataFrame = {
-    require(bits % nBands == 0, s"bits=$bits not divisible into $nBands bands")
-    require(maxHamming >= 0 && maxHamming <= nBands - 1,
-      s"$nBands-band pigeonhole is complete only for Hamming <= ${nBands - 1}, got $maxHamming")
-    val bw = bits / nBands
-    val mask = (1L << bw) - 1
-    def long(df: DataFrame, p: String): DataFrame = {
-      val bandCols = (0 until nBands).map { j =>
-        shiftrightunsigned(col(hashCol), bw * j).bitwiseAND(lit(mask))
-          .as(s"${p}_band$j")
-      }
-      val wide = df.select(
-        Seq(col(idCol).as(p), col(hashCol).as(s"${p}_h")) ++ bandCols: _*)
-      val entries = array((0 until nBands).map(j =>
-        struct(lit(j).as("bi"), col(s"${p}_band$j").as("bv"))): _*)
-      wide.select(wide.columns.map(col) :+ explode(entries).as("e"): _*)
-        .select(wide.columns.map(col) :+
-          col("e.bi").as(s"${p}_bi") :+ col("e.bv").as(s"${p}_bv"): _*)
-    }
-    val a = long(probe, "a")
-    val b = long(standing, "b")
-    val firstMatchOnly = (0 until nBands).map { i =>
-      (col("a_bi") <= lit(i)) || (col(s"a_band$i") =!= col(s"b_band$i"))
-    }.reduce(_ && _)
-    a.join(b, col("a_bi") === col("b_bi") && col("a_bv") === col("b_bv") &&
-        firstMatchOnly)
-      .select(col("a"), col("b"),
-              bit_count(col("a_h").bitwiseXOR(col("b_h"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-  }
+                        maxHamming: Int): DataFrame =
+    hammingCrossPairsLong(hammingLongBands(probe, idCol, hashCol, bits, nBands),
+      hammingLongBands(standing, idCol, hashCol, bits, nBands),
+      idCol, hashCol, bits, nBands, maxHamming)
 
   /** Ids of `train` docs whose token set near-duplicates ANY `eval` doc —
     * the fuzzy decontamination tier as a reusable operator (the
@@ -1029,65 +948,57 @@ object Dedup {
   }
 
   /** Long-form Hamming band rows `(id, hash, band_idx, band_val,
-    * band_key)` — [[longBands]]'s analogue for the bit-fingerprint family
-    * ([[hammingPairs]]/[[hammingCrossPairs]]): one row per (id, band),
-    * with the fused string `band_key` as the SINGLE equi key a probe
-    * joins on. This is the PERSISTABLE shape of Hamming dedup state: a
-    * standing fingerprint table written via [[Layout.writeBucketed]] on
-    * `band_key` feeds [[hammingCrossPairsLong]] with NO exchange on the
-    * corpus side — the rolling-ingest contract for media fingerprints,
-    * identical in structure to the MinHash band state ([[graft.operators
-    * .DedupState]]).
+    * band_key)` — [[longBands]]'s analogue for the bit-fingerprint family:
+    * [[explodeBands]] over the hash's `nBands` equal bit bands, with the
+    * hash carried so [[hammingJoin]] recomputes every band from it (no
+    * per-band columns on the stored table). This is the PERSISTABLE shape
+    * of Hamming dedup state: a standing fingerprint table written via
+    * [[Layout.writeBucketed]] on `band_key` feeds [[hammingCrossPairsLong]]
+    * with NO exchange on the corpus side — the rolling-ingest contract for
+    * media fingerprints, identical in structure to the MinHash band state
+    * ([[graft.operators.DedupState]]).
     */
   def hammingLongBands(hashes: DataFrame, idCol: String, hashCol: String,
-                       bits: Int, nBands: Int): DataFrame = {
-    require(bits % nBands == 0, s"bits=$bits not divisible into $nBands bands")
-    val bw = bits / nBands
-    val mask = (1L << bw) - 1
-    val entries = array((0 until nBands).map { j =>
-      struct(lit(j).as("bi"),
-        shiftrightunsigned(col(hashCol), bw * j).bitwiseAND(lit(mask)).as("bv"))
-    }: _*)
-    hashes.select(col(idCol), col(hashCol), explode(entries).as("e"))
-      .select(col(idCol), col(hashCol),
-        col("e.bi").as("band_idx"), col("e.bv").as("band_val"))
-      // ':' is unambiguous (band_idx is a small int, band_val decimal), so
-      // band_key equality IS (band_idx, band_val) equality
-      .withColumn("band_key", concat_ws(":", col("band_idx"), col("band_val")))
-  }
+                       bits: Int, nBands: Int): DataFrame =
+    explodeBands(hashes, Seq(idCol, hashCol),
+      (0 until nBands).map(j => hashBand(col(hashCol), bits, nBands, j)))
 
   /** [[hammingCrossPairs]] over ALREADY-long band frames (the stored form
     * [[hammingLongBands]] produces) — the rolling-ingest entry point for
-    * bit fingerprints: the equi key is the single fused `band_key`, so the
-    * standing side coming off a `band_key`-bucketed table satisfies the
-    * join's clustering exactly and the (huge) corpus state never shuffles;
-    * only the (small) incoming batch does. The first-matching-band rule
-    * recomputes each side's bands FROM the hash column it carries (no
-    * per-band columns needed on the stored table), so a candidate sharing
-    * several bands is emitted once and no `distinct()` exchange is paid.
-    * Verification is the same codegen popcount. Output `(a, b, hamming)`
-    * with a = probe id; id sets must be disjoint.
+    * bit fingerprints: the standing side coming off a `band_key`-bucketed
+    * table satisfies [[firstBandJoin]]'s clustering exactly and the (huge)
+    * corpus state never shuffles; only the (small) incoming batch does.
+    * Output `(a, b, hamming)` with a = probe id; id sets must be disjoint.
     */
   def hammingCrossPairsLong(longProbe: DataFrame, longStanding: DataFrame,
                             idCol: String, hashCol: String, bits: Int,
-                            nBands: Int, maxHamming: Int): DataFrame = {
+                            nBands: Int, maxHamming: Int): DataFrame =
+    hammingJoin(longProbe, longStanding, idCol, hashCol, bits, nBands,
+      maxHamming, self = false)
+
+  /** Band j of a `bits`-bit hash split into `nBands` equal bands. */
+  private def hashBand(h: Column, bits: Int, nBands: Int, j: Int): Column = {
     require(bits % nBands == 0, s"bits=$bits not divisible into $nBands bands")
+    val bw = bits / nBands
+    shiftrightunsigned(h, bw * j).bitwiseAND(lit((1L << bw) - 1))
+  }
+
+  /** [[firstBandJoin]] over two [[hammingLongBands]] frames, each side's
+    * bands recomputed from its carried hash, then one codegen'd
+    * `bit_count(xor)` per candidate keeps Hamming <= `maxHamming`. A pair
+    * within Hamming nBands−1 agrees EXACTLY on some band (each flipped bit
+    * touches one band), so the blocking loses no pair up to that bound.
+    */
+  private def hammingJoin(a: DataFrame, b: DataFrame, idCol: String,
+                          hashCol: String, bits: Int, nBands: Int,
+                          maxHamming: Int, self: Boolean): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= nBands - 1,
       s"$nBands-band pigeonhole is complete only for Hamming <= ${nBands - 1}, got $maxHamming")
-    val bw = bits / nBands
-    val mask = (1L << bw) - 1
-    def band(h: org.apache.spark.sql.Column, j: Int) =
-      shiftrightunsigned(h, bw * j).bitwiseAND(lit(mask))
-    val a = longProbe.select(col(idCol).as("a"), col(hashCol).as("a_h"),
-      col("band_idx").as("a_bi"), col("band_key").as("a_bk"))
-    val b = longStanding.select(col(idCol).as("b"), col(hashCol).as("b_h"),
-      col("band_key").as("b_bk"))
-    val firstMatchOnly = (0 until nBands).map { i =>
-      (col("a_bi") <= lit(i)) || (band(col("a_h"), i) =!= band(col("b_h"), i))
-    }.reduce(_ && _)
-    a.join(b, col("a_bk") === col("b_bk") && firstMatchOnly)
-      .select(col("a"), col("b"),
-              bit_count(col("a_h").bitwiseXOR(col("b_h"))).as("hamming"))
+    firstBandJoin(a, b, nBands,
+        (p, j) => hashBand(col(p + hashCol), bits, nBands, j),
+        if (self) Some(idCol) else None)
+      .select(col(s"a_$idCol").as("a"), col(s"b_$idCol").as("b"),
+              bit_count(col(s"a_$hashCol").bitwiseXOR(col(s"b_$hashCol"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 }

@@ -255,24 +255,24 @@ object Similarity {
   }
 
   /** Candidate (query, corpus) pairs under banded codes: a pair qualifies if
-    * it agrees on any band; emitted exactly once via the first-matching-band
-    * rule (keep the joined row iff its band index is the FIRST index where
-    * the two band arrays agree) — no distinct() exchange, same trick as the
-    * MinHash LSH pair pipeline. Both sides explode by band index, so the
-    * exchange is nBands× the corpus — the accepted banding cost, identical
-    * in shape to the dedup pipeline's band join.
+    * it agrees on any band and is emitted exactly once — the same join the
+    * dedup families pair through ([[Dedup.firstBandJoin]]), each side's
+    * bands read from its code array. Both sides explode by band index, so
+    * the exchange is nBands× the corpus — the accepted banding cost.
     *
     * `corpus` must carry (vec_id, v, bands); `queries` (qid, qv, qbands).
+    * Output: the corpus columns, `cb`/`cbv` (its band index and value), the
+    * query columns, `qb`/`qbv`.
     */
   def bandCandidates(corpus: DataFrame, queries: DataFrame, nBands: Int): DataFrame = {
-    val bandIdx = array((0 until nBands).map(lit): _*)
-    val c = corpus.withColumn("cb", explode(bandIdx))
-      .withColumn("cbv", element_at(col("bands"), col("cb") + 1))
-    val q = queries.withColumn("qb", explode(bandIdx))
-      .withColumn("qbv", element_at(col("qbands"), col("qb") + 1))
-    c.join(q, c("cb") === q("qb") && c("cbv") === q("qbv"))
-      .filter(col("cb") ===
-        array_position(zip_with(col("bands"), col("qbands"), (x, y) => x === y), true) - 1)
+    def long(df: DataFrame, bands: String) = Dedup.explodeBands(df,
+      df.columns.toIndexedSeq, (1 to nBands).map(j => element_at(col(bands), j)))
+    def side(df: DataFrame, p: String, bi: String, bv: String) =
+      df.columns.map(c => col(p + c).as(c)) ++
+        Seq(col(s"${p}band_idx").as(bi), col(s"${p}band_val").as(bv))
+    Dedup.firstBandJoin(long(corpus, "bands"), long(queries, "qbands"), nBands,
+        (p, i) => element_at(col(if (p == "a_") "a_bands" else "b_qbands"), i + 1))
+      .select(side(corpus, "a_", "cb", "cbv") ++ side(queries, "b_", "qb", "qbv"): _*)
   }
 
   // ---- product quantization -------------------------------------------------

@@ -145,7 +145,7 @@ object DedupQueries {
     */
   private val tokFrameMemo = Memo.entry[DataFrame]("tokFrame")
 
-  private[queries] def tokFrame(s: SparkSession, d: String): DataFrame =
+  private[graft] def tokFrame(s: SparkSession, d: String): DataFrame =
     // Materialize.shared: hash-distribute on doc_id across the core count
     // before checkpointing — a memo frame's partitioning is frozen, and
     // AQE's byte-based coalescing otherwise leaves this compute-dense
@@ -164,14 +164,16 @@ object DedupQueries {
   /** 3-gram shingle frame `(doc_id, lang, n_chars, sh)` over [[tokFrame]] —
     * shared by the shingle-set consumers (n-gram Jaccard, containment,
     * prefix join, the corpus shingle masks, `cms_heavy_hitters`) and
-    * checkpointed once per (session, sf dir): re-running shingling per
-    * read was the measured bottleneck (see [[prefixPairs]]'s
-    * checkpoint-the-array-frame note).
+    * checkpointed once per (session, sf dir) through
+    * [[graft.operators.Materialize.frame]], so it honours the checkpoint
+    * posture: re-running shingling per read was the measured bottleneck
+    * (see [[prefixPairs]]'s checkpoint-the-array-frame note).
     */
   private val shingleFrameMemo = Memo.entry[DataFrame]("shingleFrame")
 
-  private[queries] def shingleFrame(s: SparkSession, d: String): DataFrame =
-    shingleFrameMemo(s, d)(shingleFrameBuild(s, d).localCheckpoint(true))
+  private[graft] def shingleFrame(s: SparkSession, d: String): DataFrame =
+    shingleFrameMemo(s, d)(
+      graft.operators.Materialize.frame(shingleFrameBuild(s, d)))
 
   /** [[shingleFrame]]'s builder — exposed pre-checkpoint for PlanAuditSpec. */
   private[graft] def shingleFrameBuild(s: SparkSession, d: String): DataFrame =
@@ -438,11 +440,6 @@ object DedupQueries {
         col("x.doc_id") < col("y.doc_id") &&
         abs(col("x.n_chars") - col("y.n_chars")) <= 5)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      // plain checkpoint, NO repartition: this candidate set is tiny
-      // (≤ tens of thousands of pairs) and its verify probes the memoized
-      // corpus mask table, so a hash-spread here is pure overhead (r12:
-      // measured +0.7 s)
-      .localCheckpoint(true)
     shingleStats(s, d, cand)
       .select(col("a"), col("b"),
         (col("n_inter").cast("double") /
@@ -481,7 +478,7 @@ object DedupQueries {
     val trainShr = shr.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id").as("b"), col("token"))
     val cand = evalShr.join(rare, "token").join(trainShr, "token")
-      .select("a", "b").distinct().localCheckpoint(true)
+      .select("a", "b").distinct()
     shingleStats(s, d, cand)
       .filter(col("sz_a") > 0)
       // filter on the UNROUNDED ratio (the oracle's WHERE does too — a

@@ -95,7 +95,7 @@ object MultimodalQueries {
       .filter(col("n_bytes") > 0)
 
   private def phashFrame(s: SparkSession, d: String): DataFrame =
-    phashMemo(s, d)(hashBuild(s, d).localCheckpoint(true))
+    phashMemo(s, d)(graft.operators.Materialize.frame(hashBuild(s, d)))
 
   /** mm_phash_clusters — connected components over [[phashPairs]]'s edge
     * set: the multimodal member of the cluster family, the exact

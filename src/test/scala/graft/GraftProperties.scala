@@ -139,7 +139,7 @@ object GraftAlgoProperties extends Properties("graft.algo") {
       got == unionFind(n, edges)
     }
 
-  property("wide (first-match) and narrow LSH paths emit identical pair sets") =
+  property("lshCandidatePairs = brute-force pairs sharing a band within the bucket cap, exactly once") =
     Prop.forAll(for {
       n <- Gen.chooseNum(2, 18)
       vals <- Gen.chooseNum(1, 3) // tiny value alphabet -> heavy collisions
@@ -150,11 +150,53 @@ object GraftAlgoProperties extends Properties("graft.algo") {
       val bands = rows.zipWithIndex
         .map { case (bs, i) => (i.toLong, s"v${bs(0)}", s"v${bs(1)}", s"v${bs(2)}", s"v${bs(3)}") }
         .toDF("doc_id", "band0", "band1", "band2", "band3")
-      val wide = graft.operators.Dedup.lshCandidatePairs(bands, "doc_id", 4, cap)
-        .as[(Long, Long)].collect().toSet
-      val narrow = graft.operators.Dedup.lshCandidatePairs(bands, "doc_id", 4, cap, maxWideBands = 0)
-        .as[(Long, Long)].collect().toSet
-      wide == narrow
+      // collect WITH duplicates: each pair must come out exactly once
+      val got = graft.operators.Dedup.lshCandidatePairs(bands, "doc_id", 4, cap)
+        .as[(Long, Long)].collect().toSeq.sorted
+      // band k's bucket for value v holds every row whose band k is v
+      def small(k: Int, v: Int) = cap.forall(c => rows.count(_(k) == v) <= c)
+      val want = (for {
+        (x, i) <- rows.zipWithIndex
+        (y, j) <- rows.zipWithIndex if i < j
+        if (0 until 4).exists(k => x(k) == y(k) && small(k, x(k)))
+      } yield (i.toLong, j.toLong)).sorted
+      got == want
+    }
+
+  /** 60-bit hashes a few bit flips away from a few random bases, so that
+    * pairs within Hamming 3 exist; plus a probe/standing split point.
+    */
+  private def hashesGen: Gen[(Seq[Long], Int)] = for {
+    nBases <- Gen.chooseNum(1, 3)
+    bases <- Gen.listOfN(nBases, Gen.chooseNum(0L, (1L << 60) - 1))
+    n <- Gen.chooseNum(2, 16)
+    hashes <- Gen.listOfN(n, for {
+      base <- Gen.oneOf(bases)
+      flips <- Gen.chooseNum(0, 5)
+      bits <- Gen.listOfN(flips, Gen.chooseNum(0, 59))
+    } yield bits.foldLeft(base)((h, bit) => h ^ (1L << bit)))
+    split <- Gen.chooseNum(1, n - 1)
+  } yield (hashes, split)
+
+  property("Hamming self, cross and stored-probe pairs = brute-force popcount(xor) <= 3, exactly once") =
+    Prop.forAll(hashesGen) { case (hashes, split) =>
+      import spark.implicits._
+      import graft.operators.Dedup
+      val df = hashes.zipWithIndex.map { case (h, i) => (i.toLong, h) }.toDF("doc_id", "h")
+      val probe = df.filter(col("doc_id") < split)
+      val standing = df.filter(col("doc_id") >= split)
+      def rows(pairs: org.apache.spark.sql.DataFrame) =
+        pairs.select("a", "b", "hamming").as[(Long, Long, Int)].collect().toSeq.sorted
+      def want(keep: (Int, Int) => Boolean) = (for {
+        (x, i) <- hashes.zipWithIndex
+        (y, j) <- hashes.zipWithIndex if keep(i, j)
+        d = java.lang.Long.bitCount(x ^ y) if d <= 3
+      } yield (i.toLong, j.toLong, d)).sorted
+      val cross = want((i, j) => i < split && j >= split)
+      def long(f: org.apache.spark.sql.DataFrame) = Dedup.hammingLongBands(f, "doc_id", "h", 60, 4)
+      rows(Dedup.hammingPairs(df, "doc_id", "h", 60, 4, 3)) == want(_ < _) &&
+        rows(Dedup.hammingCrossPairs(probe, standing, "doc_id", "h", 60, 4, 3)) == cross &&
+        rows(Dedup.hammingCrossPairsLong(long(probe), long(standing), "doc_id", "h", 60, 4, 3)) == cross
     }
 
   property("cross-set first-match pairs = brute-force any-band cross pairs, exactly once") =

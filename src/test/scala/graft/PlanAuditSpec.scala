@@ -182,6 +182,14 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("dedup_simhash_pairs: the band self-join is the only join") {
+    // the hash rides the long band rows, so the popcount verify reads both
+    // sides' hashes off the candidate row instead of re-joining them
+    val joins = DedupQueries.simhashPairs(spark, sf()).queryExecution.optimizedPlan
+      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.size === 1, joins.mkString("\n"))
+  }
+
   test("bloom_semi_revenue: pushed dim filter, literal filter carrier, broadcast semi-join") {
     val plan = finalPlan(SketchQueries.bloomSemiRevenue(spark, sf()))
     // the selective dim predicate reaches the orders scan
@@ -421,10 +429,10 @@ class PlanAuditSpec extends SparkSpec {
       // the standing fingerprint side is a bucketed scan on band_key...
       assert(plan.contains("Bucketed: true"), plan)
       // ... and NO exchange touches it: the only band-key partitioning is
-      // the probe batch's move into the bucket layout (b_bk comes straight
-      // off the bucketed scan's band_key)
-      assert("Exchange hashpartitioning\\(b_bk".r.findAllIn(plan).isEmpty, plan)
-      assert("Exchange hashpartitioning\\(a_bk".r.findAllIn(plan).size <= 1, plan)
+      // the probe batch's move into the bucket layout (b_band_key comes
+      // straight off the bucketed scan's band_key)
+      assert("Exchange hashpartitioning\\(b_band_key".r.findAllIn(plan).isEmpty, plan)
+      assert("Exchange hashpartitioning\\(a_band_key".r.findAllIn(plan).size <= 1, plan)
       assert(!plan.contains("CartesianProduct") &&
              !plan.contains("BroadcastNestedLoopJoin"), plan)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

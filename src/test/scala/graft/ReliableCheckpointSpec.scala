@@ -43,4 +43,18 @@ class ReliableCheckpointSpec extends SparkSpec {
       assert(rddDirsUnder(dir) > 0)
     } finally spark.conf.unset(Materialize.DirKey)
   }
+
+  test("memo frames honour the posture: shingleFrame checkpoints under the configured dir") {
+    val dir = Files.createTempDirectory("graft-reliable-ck-memo").toString
+    spark.conf.set(Materialize.DirKey, dir)
+    try {
+      // the token frame beneath is a memo frame of its own: build it first,
+      // so the count below moves only for the shingle frame's checkpoint
+      graft.queries.DedupQueries.tokFrame(spark, sf())
+      val before = rddDirsUnder(dir)
+      graft.queries.DedupQueries.shingleFrame(spark, sf())
+      assert(rddDirsUnder(dir) > before,
+        "shingleFrame must checkpoint reliably under the configured root")
+    } finally spark.conf.unset(Materialize.DirKey)
+  }
 }

@@ -169,25 +169,6 @@ class ScaleOpsSpec extends SparkSpec {
       ms(sEdges.toDF("a", "b").coalesce(1)))
   }
 
-  test("narrow LSH path (many bands) yields exactly the wide first-match pair set") {
-    import graft.operators.Dedup
-    val docs = Tables.documents(spark, sf())
-    val toks = Dedup.distinctTokenRows(docs, "doc_id", "text")
-    val bands = Dedup.minhashBands(Dedup.minhashSignatures(toks, "doc_id", 16), "doc_id", 16, 4)
-    val wide = Dedup.lshCandidatePairs(bands, "doc_id", 4)
-      .as[(Long, Long)].collect().toSet
-    val narrow = Dedup.lshCandidatePairs(bands, "doc_id", 4, maxWideBands = 0)
-      .as[(Long, Long)].collect().toSet
-    assert(wide.nonEmpty)
-    assert(narrow === wide)
-    // the capped variants must agree too (hot bands nulled before pairing)
-    val wideCap = Dedup.lshCandidatePairs(bands, "doc_id", 4, maxBucket = Some(3))
-      .as[(Long, Long)].collect().toSet
-    val narrowCap = Dedup.lshCandidatePairs(bands, "doc_id", 4, maxBucket = Some(3), maxWideBands = 0)
-      .as[(Long, Long)].collect().toSet
-    assert(narrowCap === wideCap)
-  }
-
   test("bitset jaccard survives with broadcast joins disabled (no forced vocab broadcast)") {
     import graft.operators.Dedup
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
