@@ -1,35 +1,35 @@
 package graft.operators
 
+import graft.sinks.SnapshotStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Crash-safe compaction for the bucketed standing-state tables.
   *
   * Every rolling-ingest surface in this engine advances its standing state
-  * by bucket-aligned APPEND ([[DedupState.merge]], [[AggState.merge]], the
-  * graph edge partials, the media band state): the standing table is never
-  * read or rewritten on ingest, which is exactly the 100 TB cost profile —
-  * but each epoch adds one file per bucket, so after E epochs every bucket
-  * holds E files. Co-partitioning survives (the bucketed-join guarantee is
-  * on the bucket hash, not the file count), but scan cost does not: E
-  * parquet footers + E sorted runs per bucket, and on an object store E
-  * GETs per bucket per probe. Compaction periodically folds each bucket
+  * by bucket-aligned APPEND ([[Layout.appendBucketed]]: the dedup state,
+  * aggregate partials, graph edge partials, media bands, BM25 postings):
+  * the standing table is never read or rewritten on ingest, which is
+  * exactly the 100 TB cost profile — but each epoch adds one file per
+  * bucket, so after E epochs every bucket holds E files. Co-partitioning
+  * survives (the bucketed-join guarantee is on the bucket hash, not the
+  * file count), but scan cost does not: E parquet footers + E sorted runs
+  * per bucket, and on an object store E GETs per bucket per probe.
+  * Compaction periodically folds each bucket
   * back to one file, restoring day-one read cost without ever giving up
   * the append-cheap ingest path.
   *
   * The naive rewrite — `saveAsTable(Overwrite)` over the live name — is a
-  * DROP-then-recreate: a crash mid-write loses the entire standing state,
-  * the exact hazard class the staged meta migration in
-  * [[graft.pipeline.CorpusStream]] exists to avoid. This operator uses the
-  * same two-rename protocol:
+  * DROP-then-recreate: a crash mid-write loses the entire standing state.
+  * This operator is the engine's one staged swap, a two-rename protocol:
   *
   *  1. stage the compacted copy under `<t>__cstage` (a side name nothing
   *     reads; a partial stage from an earlier crash is dropped and
   *     rewritten),
   *  2. read the staged FILES back and verify row count + order-independent
   *     content hash against the frame that was written (the
-  *     [[graft.sinks.SnapshotStore]] validation stance: trust the disk,
-  *     not the job),
+  *     [[graft.sinks.SnapshotStore.integrity]] check: trust the disk, not
+  *     the job),
   *  3. COMMIT POINT: `ALTER TABLE t RENAME TO t__cretired` — the retired
   *     marker's existence proves the stage was complete and verified,
   *  4. promote: `ALTER TABLE t__cstage RENAME TO t`,
@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * is untouched and the orphan stage is swept; after it, the retired
   * marker proves the stage complete, so recovery promotes it. The only
   * window where the live NAME is vacant is between the two renames, and
-  * the retired marker makes that window self-healing — the same argument
-  * (and the same kill-at-every-step spec shape) as the meta migration.
+  * the retired marker makes that window self-healing (CompactionSpec kills
+  * the protocol after every step prefix).
   *
   * READER visibility: these standing-state tables are serving tables —
   * probes read them — and during the rename window (steps 3→4, two
@@ -61,10 +61,9 @@ import org.apache.spark.sql.functions._
   * table is row-for-row the same multiset (verified by hash before the
   * commit point — CompactionSpec pins probe-result identity and that the
   * bucket spec, and therefore the exchange-free probe plan, survives the
-  * rename). With a caller `fold` (the [[AggState]] case: collapse
-  * accumulated partials to one row per key), the fold output is what is
-  * hash-verified on disk; reader-equivalence is the fold's own contract
-  * (the monoid laws, pinned by AggStateSpec).
+  * rename). With a caller `fold` (aggregate partials collapsed to one row
+  * per key), the fold output is what is hash-verified on disk;
+  * reader-equivalence is the fold's own contract (see [[compactBucketed]]).
   */
 object Compaction {
 
@@ -75,25 +74,17 @@ object Compaction {
   private def stageName(t: String) = s"${t}__cstage"
   private def retiredName(t: String) = s"${t}__cretired"
 
-  /** Distinct parquet files behind a catalog table — the quantity
-    * compaction exists to bound (per-probe footer reads scale with it).
+  /** Parquet data files behind a catalog table — the quantity compaction
+    * exists to bound (per-probe footer reads scale with it). A recursive
+    * listing of the table location: no Spark job, no table scan, so the
+    * [[StateAdmin]] ceiling check can run per target per epoch. Counts
+    * non-hidden files (skips `_SUCCESS` and dot-files), which equals the
+    * distinct `input_file_name()` count whenever every data file holds
+    * rows — always true for the append-only bucketed writers (pinned in
+    * CompactionSpec); an empty file only ever OVER-counts, which for a
+    * compaction trigger errs safe.
     */
-  def fileCount(s: SparkSession, table: String): Long =
-    s.table(table).select(input_file_name()).distinct().count()
-
-  /** [[fileCount]] by filesystem METADATA listing of the table location —
-    * no Spark job, no table scan. The [[StateAdmin]] ceiling check runs
-    * on every administration call (per epoch on the stream's commit
-    * path); pricing it as a full-table `input_file_name()` scan per
-    * target per epoch is exactly the hidden-recurring-scan shape this
-    * engine avoids, while a recursive listing is one namenode/object-
-    * store round-trip per table. Counts non-hidden data files (skips
-    * `_SUCCESS` and dot-files); agrees with [[fileCount]] whenever every
-    * data file holds rows — always true for these append-only bucketed
-    * writers — and an empty-file discrepancy only ever OVER-counts,
-    * which for a compaction trigger errs safe.
-    */
-  def fileCountMeta(s: SparkSession, table: String): Long = {
+  def fileCount(s: SparkSession, table: String): Long = {
     val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
     val loc = new org.apache.hadoop.fs.Path(
       s.sessionState.catalog.getTableMetadata(ident).location)
@@ -105,19 +96,6 @@ object Compaction {
       if (!name.startsWith("_") && !name.startsWith(".")) n += 1
     }
     n
-  }
-
-  /** Row count + order-independent content hash in one pass: decimal(38,0)
-    * sum of per-row xxhash64 over all columns — partitioning- and
-    * order-insensitive, overflow-free to ~10^19 rows (|xxhash64| ≤ 2^63).
-    */
-  private def integrity(df: DataFrame): (Long, String) = {
-    val r = df.agg(
-      count(lit(1)).cast("long").as("rows"),
-      coalesce(sum(xxhash64(df.columns.map(col).toIndexedSeq: _*)
-          .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
-        .cast("decimal(38,0)").as("hash")).head()
-    (r.getLong(0), String.valueOf(r.getDecimal(1)))
   }
 
   /** Heal a crashed compaction of `table`. Idempotent; no-op when clean.
@@ -146,6 +124,18 @@ object Compaction {
     * `key` with `buckets` buckets — the spec its writers used) back to one
     * file per bucket, optionally folding rows through `fold` first.
     * Returns before/after [[Stats]]. Safe to re-run after any crash.
+    *
+    * @param fold the table's own row-combining aggregation, e.g. collapse
+    *   accumulated per-epoch aggregate partials to one row per key. It
+    *   must be reader-equivalent: readers that fold the table with the
+    *   same aggregation get the same answer before and after. That holds
+    *   for ALGEBRAIC aggregates, whose partials form a commutative monoid
+    *   (count / sum / min / max and everything derived from them — avg,
+    *   rates, ratios): reassociating them changes nothing (AggStateSpec
+    *   pins it). Holistic aggregates (exact percentiles, exact distinct)
+    *   do not decompose; keep those as mergeable sketches
+    *   ([[graft.functions.Hll]], [[graft.functions.Kmv]]), whose binary
+    *   values are themselves monoid partials and fold the same way.
     */
   def compactBucketed(s: SparkSession, table: String, key: String,
                       buckets: Int,
@@ -167,7 +157,7 @@ object Compaction {
     // never read the table mid-protocol, and under spark.graft.checkpoint
     // .dir the materialization is itself fault-tolerant.
     val folded = Materialize.frame(fold(s.table(table)))
-    val (wantRows, wantHash) = integrity(folded)
+    val (wantRows, wantHash) = SnapshotStore.integrity(folded)
 
     var steps = 0
     def step(f: => Unit): Unit = if (steps < maxSteps) { f; steps += 1 }
@@ -175,14 +165,12 @@ object Compaction {
     // (1) stage the compacted copy under a side name nothing reads
     step {
       s.sql(s"DROP TABLE IF EXISTS ${stageName(table)}")
-      folded.repartition(buckets, col(key))
-        .write.mode("errorifexists").format("parquet")
-        .bucketBy(buckets, key).sortBy(key)
-        .saveAsTable(stageName(table))
+      Layout.writeBucketed(folded.repartition(buckets, col(key)), key,
+        stageName(table), buckets)
     }
     // (2) validate the staged FILES against the frame that was written
     step {
-      val (gotRows, gotHash) = integrity(s.table(stageName(table)))
+      val (gotRows, gotHash) = SnapshotStore.integrity(s.table(stageName(table)))
       if (gotRows != wantRows || gotHash != wantHash) {
         s.sql(s"DROP TABLE IF EXISTS ${stageName(table)}")
         throw new IllegalStateException(

@@ -35,19 +35,14 @@ object DedupState {
   final case class Names(bands: String, toks: String, comps: String,
                          spans: String)
 
-  /** Deterministic, catalog-safe names derived from the corpus dir. The
-    * md5 tag keeps the mapping injective: sanitizing alone would collapse
-    * distinct dirs like `/data/sf0.1` and `/data/sf0_1` onto one name and
-    * silently share state between different corpora.
+  /** Deterministic, catalog-safe names derived from the corpus dir
+    * ([[Layout.stateName]]).
     */
-  def names(prefix: String, dir: String): Names = {
-    val sfx = dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    Names(s"${prefix}_bands_${sfx}_$tag", s"${prefix}_toks_${sfx}_$tag",
-          s"${prefix}_comps_${sfx}_$tag", s"${prefix}_spans_${sfx}_$tag")
-  }
+  def names(prefix: String, dir: String): Names =
+    Names(Layout.stateName(s"${prefix}_bands", dir),
+          Layout.stateName(s"${prefix}_toks", dir),
+          Layout.stateName(s"${prefix}_comps", dir),
+          Layout.stateName(s"${prefix}_spans", dir))
 
   /** Build and persist the corpus state: distinct-token rows plus the
     * long-form LSH band table, both bucketed for exchange-free probes.
@@ -63,18 +58,6 @@ object DedupState {
     Layout.writeBucketed(Dedup.longBands(bands, idCol, k / r), "band_key", n.bands, buckets)
     Layout.writeBucketed(toks, idCol, n.toks, buckets)
   }
-
-  /** Bucket-aligned APPEND into an existing state table: Spark validates
-    * the bucket spec against the catalog, so a mismatched layout fails
-    * loudly instead of silently degrading the exchange-free probe
-    * contract. Appending adds new files per bucket (multiple files per
-    * bucket is legal; the bucketed-join co-partitioning guarantee is on
-    * the bucket hash, not file count).
-    */
-  private def append(df: DataFrame, key: String, table: String, buckets: Int): Unit =
-    df.write.mode("append").format("parquet")
-      .bucketBy(buckets, key).sortBy(key)
-      .saveAsTable(table)
 
   /** Epoch-advance: absorb one processed batch into the standing state —
     * `merge(state, batch) ≡ write(corpus ∪ batch)` on all four tables
@@ -121,9 +104,9 @@ object DedupState {
             batchSpans: DataFrame, verifiedEdges: DataFrame,
             n: Names, buckets: Int): Unit = {
     val updated = mergedComps(s, idCol, batchIds, verifiedEdges, comps(s, n))
-    append(batchBands, "band_key", n.bands, buckets)
-    append(batchToks, idCol, n.toks, buckets)
-    append(batchSpans, "span_md5", n.spans, buckets)
+    Layout.appendBucketed(batchBands, "band_key", n.bands, buckets)
+    Layout.appendBucketed(batchToks, idCol, n.toks, buckets)
+    Layout.appendBucketed(batchSpans, "span_md5", n.spans, buckets)
     writeComps(updated, idCol, n, buckets)
   }
 

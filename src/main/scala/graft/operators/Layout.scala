@@ -228,7 +228,36 @@ object Layout {
     * current one.
     */
   def writeBucketed(df: DataFrame, key: String, table: String, numBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
+    saveBucketed(df, "overwrite", key, table, numBuckets)
+
+  /** Epoch-advance of a [[writeBucketed]] table: bucket-aligned APPEND of
+    * one batch's rows. The standing table is never read or rewritten;
+    * Spark validates the bucket spec against the catalog, so a mismatched
+    * layout fails loudly instead of silently breaking co-partitioning.
+    * Each append adds files per bucket (legal: co-partitioning rides the
+    * bucket hash, not the file count); [[Compaction.compactBucketed]]
+    * folds them back.
+    */
+  def appendBucketed(df: DataFrame, key: String, table: String, numBuckets: Int): Unit =
+    saveBucketed(df, "append", key, table, numBuckets)
+
+  private def saveBucketed(df: DataFrame, mode: String, key: String,
+                           table: String, numBuckets: Int): Unit =
+    df.write.mode(mode).format("parquet")
       .bucketBy(numBuckets, key).sortBy(key)
       .saveAsTable(table)
+
+  /** The catalog name of a standing-state table derived from `dir`:
+    * `<prefix>_<sanitized dir>_<md5 tag>`. The 4-byte md5 tag keeps the
+    * mapping injective: sanitizing alone would collapse distinct dirs like
+    * `/data/sf0.1` and `/data/sf0_1` onto one name and silently share state
+    * between different corpora.
+    */
+  def stateName(prefix: String, dir: String): String = {
+    val sfx = dir.toLowerCase.replaceAll("[^a-z0-9]+", "_")
+      .stripPrefix("_").stripSuffix("_")
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    s"${prefix}_${sfx}_$tag"
+  }
 }

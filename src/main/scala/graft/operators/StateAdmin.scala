@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The debts it settles, and where they come from:
   *
   *  - **Bucketed-state file growth.** Every rolling-ingest surface
-  *    advances by bucket-aligned append ([[DedupState.merge]],
-  *    [[AggState.merge]], the graph edge partials, the media band state,
-  *    the BM25 postings) — one new file per bucket per epoch, so after E
+  *    advances by bucket-aligned append ([[Layout.appendBucketed]]: the
+  *    dedup state, aggregate partials, graph edge partials, media bands,
+  *    BM25 postings) — one new file per bucket per epoch, so after E
   *    epochs every probe pays E parquet footers + E sorted runs per
   *    bucket. [[Compaction.compactBucketed]] settles it; StateAdmin
   *    decides WHEN: on an epoch cadence, or early when a table's file
@@ -55,7 +55,8 @@ object StateAdmin {
 
   /** One bucketed standing table: its name, bucket key and bucket count
     * (the spec its writers used), plus the optional fold
-    * ([[AggState]]-style partial collapse) to apply while compacting.
+    * (aggregate partials collapsed per key, see
+    * [[Compaction.compactBucketed]]) to apply while compacting.
     */
   final case class Target(table: String, key: String, buckets: Int,
                           fold: DataFrame => DataFrame = identity)
@@ -84,9 +85,7 @@ object StateAdmin {
     val present = targets.filter(t => s.catalog.tableExists(t.table))
     val outcomes = present.flatMap { t =>
       try {
-        // metadata listing, not a table scan: this check runs per epoch
-        // per target on the stream's commit path
-        val files = Compaction.fileCountMeta(s, t.table)
+        val files = Compaction.fileCount(s, t.table)
         val due = cadenceDue || files > policy.maxFilesPerTable
         // already at one file per bucket: a rewrite buys nothing
         if (due && files > t.buckets)

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import graft.functions.Bloom
-import graft.operators.{Dedup, DedupState, TextAnalysis}
+import graft.operators.{Dedup, DedupState, Layout, TextAnalysis}
+import graft.sinks.TableSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -57,7 +58,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    self-idempotent; superseded snapshot partitions are dropped by
   *    [[vacuum]] (run() trims after every committed epoch);
   *  - a replay of an ALREADY-committed epoch (crash after marker, before
-  *    the streaming checkpoint commit) is a no-op guard at entry.
+  *    the streaming checkpoint commit) is a no-op guard at entry;
+  *  - a marker row is `(epoch, max_doc_id)`. A meta table with only the
+  *    `epoch` column (an old release's schema) is refused on read: reset
+  *    the stream and re-ingest. Nothing upgrades it in place.
   *
   * CorpusStreamCrashSpec kills the transition after every prefix of its
   * eight writes and proves the replay converges to the clean-run state.
@@ -80,16 +84,14 @@ object CorpusStream {
                s"${prefix}_sims", s"${prefix}_comps", s"${prefix}_block",
                s"${prefix}_evals", s"${prefix}_meta")
 
-  /** Drop all state tables (test hygiene / stream reset) — including the
-    * migration side tables a crashed [[migrateLegacyMeta]] can leave.
-    */
-  def reset(s: SparkSession, n: StateNames): Unit =
-    Seq(n.hashes, n.bows, n.raw, n.sims, n.comps, n.block, n.evals, n.meta,
-        migratingName(n), retiredName(n))
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+  /** The state names [[main]] derives from the output path. */
+  private[graft] def namesFor(out: String): StateNames =
+    names(Layout.stateName("corpus_stream", out))
 
-  private def appendTable(df: DataFrame, table: String): Unit =
-    df.write.mode("append").format("parquet").saveAsTable(table)
+  /** Drop all state tables (test hygiene / stream reset). */
+  def reset(s: SparkSession, n: StateNames): Unit =
+    Seq(n.hashes, n.bows, n.raw, n.sims, n.comps, n.block, n.evals, n.meta)
+      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
 
   /** Replace exactly the `epoch` partition of `table` (creating the
     * partitioned table on first write) — the idempotent write primitive
@@ -124,102 +126,12 @@ object CorpusStream {
     */
   private final case class Watermark(hwm: Option[Long], maxDocId: Option[Long])
 
-  /** Migration side tables: `__migrating` stages the new-schema copy,
-    * `__retired` is the renamed-away legacy table — its EXISTENCE is the
-    * commit marker that the staged copy is complete (the rename that
-    * creates it runs only after the staged write fully succeeded).
-    */
-  private def migratingName(n: StateNames): String = s"${n.meta}__migrating"
-  private def retiredName(n: StateNames): String = s"${n.meta}__retired"
-
-  /** Explicit one-time upgrade of a legacy `(epoch)`-only meta table to the
-    * `(epoch, max_doc_id)` schema: existing marker rows keep their epochs
-    * with `max_doc_id = -1` ("unknown — predates tracking"), which the
-    * ascending-ingest check treats as unverifiable (any doc_id ≥ 0 exceeds
-    * it) until the next commit backfills a real max. The legacy commit rule
-    * (`done.forall(_ < epoch)`) admitted GAPPED epoch sets that the
-    * contiguous `epoch <= hwm` range read cannot represent — a gap would
-    * expose the crashed epoch's partial partitions — so gapped legacy state
-    * fails loudly (reset + re-ingest required) instead of resuming wrong.
-    *
-    * Crash safety (the meta table holds EVERY commit marker — losing it
-    * resets the watermark to None while data partitions persist, breaking
-    * the marker-written-last invariant): the upgrade never overwrites the
-    * live table in place. It stages the new-schema copy under a side name,
-    * then swaps through two catalog renames; retiring the legacy table is
-    * the commit point. A crash at any step is recoverable: before the
-    * commit point the legacy table is untouched (re-run the migration; a
-    * partial staged copy is dropped and rewritten), after it the retired
-    * marker lets [[resumeMigration]] — invoked from the read path when the
-    * meta table is absent — finish the swap. Run once from an operator
-    * entry point (or [[main]] startup), not from reads.
-    */
-  def migrateLegacyMeta(s: SparkSession, n: StateNames): Unit =
-    migrateLegacyMetaUpTo(s, n, Int.MaxValue)
-
-  /** [[migrateLegacyMeta]] with a step budget — the crash-injection hook
-    * CorpusStreamCrashSpec uses to kill the swap after every step prefix.
-    */
-  private[graft] def migrateLegacyMetaUpTo(s: SparkSession, n: StateNames,
-                                           maxSteps: Int): Unit = {
-    resumeMigration(s, n) // finish a previously crashed swap first
-    if (!s.catalog.tableExists(n.meta)) return
-    if (s.table(n.meta).columns.contains("max_doc_id")) return // current
-    import s.implicits._
-    val epochs = s.table(n.meta).select("epoch").distinct()
-      .collect().map(_.getLong(0)).sorted // marker rows: one per epoch, tiny
-    epochs.headOption.foreach { lo =>
-      require(epochs.last - lo + 1 == epochs.length,
-        s"legacy meta table ${n.meta} has non-contiguous committed epochs " +
-          s"${epochs.mkString(",")} — a gap can hide a crashed epoch's " +
-          "partial partitions under the watermark range read; reset the " +
-          "stream state and re-ingest")
-    }
-    var steps = 0
-    def step(f: => Unit): Unit = if (steps < maxSteps) { f; steps += 1 }
-    // (1) stage the new-schema copy under a side name nothing reads; a
-    //     partial stage from an earlier crash is dropped and rewritten
-    step {
-      s.sql(s"DROP TABLE IF EXISTS ${migratingName(n)}")
-      epochs.map(e => (e, -1L)).toSeq.toDF("epoch", "max_doc_id")
-        .write.mode("errorifexists").format("parquet")
-        .saveAsTable(migratingName(n))
-    }
-    // (2) COMMIT POINT: retire the legacy table (runs only after the stage
-    //     fully succeeded, so the retired marker proves the stage complete)
-    step(s.sql(s"ALTER TABLE ${n.meta} RENAME TO ${retiredName(n)}"))
-    // (3) promote the staged copy to the live name
-    step(s.sql(s"ALTER TABLE ${migratingName(n)} RENAME TO ${n.meta}"))
-    // (4) cleanup
-    step(s.sql(s"DROP TABLE IF EXISTS ${retiredName(n)}"))
-  }
-
-  /** Complete a [[migrateLegacyMeta]] swap a crash interrupted after its
-    * commit point: the retired marker proves the staged copy is complete,
-    * so promote it (if the live name is still vacant) and drop the marker.
-    * Idempotent; a no-op when no retired marker exists.
-    */
-  private def resumeMigration(s: SparkSession, n: StateNames): Unit =
-    if (s.catalog.tableExists(retiredName(n))) {
-      if (!s.catalog.tableExists(n.meta))
-        s.sql(s"ALTER TABLE ${migratingName(n)} RENAME TO ${n.meta}")
-      s.sql(s"DROP TABLE IF EXISTS ${retiredName(n)}")
-    }
-
   private def watermark(s: SparkSession, n: StateNames): Watermark = {
-    if (!s.catalog.tableExists(n.meta)) {
-      // the one legal way the meta table is absent while state exists: a
-      // migration crash between its two renames — the retired marker makes
-      // that window recoverable from any read
-      resumeMigration(s, n)
-      if (!s.catalog.tableExists(n.meta)) return Watermark(None, None)
-    }
+    if (!s.catalog.tableExists(n.meta)) return Watermark(None, None)
     if (!s.table(n.meta).columns.contains("max_doc_id"))
       throw new IllegalStateException(
-        s"meta table ${n.meta} has the legacy (epoch)-only schema — run " +
-          "CorpusStream.migrateLegacyMeta(spark, names) once before " +
-          "resuming the stream (the upgrade is staged and crash-safe; " +
-          "an in-place lazy rewrite here could lose every commit marker)")
+        s"meta table ${n.meta} has the (epoch)-only schema of an old release " +
+          "— reset the stream (CorpusStream.reset) and re-ingest")
     val r = s.table(n.meta)
       .agg(max("epoch").as("h"), max("max_doc_id").as("m")).head()
     if (r.isNullAt(0)) Watermark(None, None)
@@ -360,7 +272,7 @@ object CorpusStream {
     w(writeEpoch(blockDelta, n.block, epoch))
     w(writeEpoch(evalDelta, n.evals, epoch))
     w(writeEpoch(compsSnap, n.comps, epoch))
-    w(appendTable(Seq((epoch, batchMaxId)).toDF("epoch", "max_doc_id"), n.meta))
+    w(TableSink.appendTable(Seq((epoch, batchMaxId)).toDF("epoch", "max_doc_id"), n.meta))
   }
 
   /** Republish the curated corpus snapshot from the standing state: derive
@@ -512,24 +424,17 @@ object CorpusStream {
     * batches to land in ascending doc_id order), `--out` receives the
     * republished curated snapshot after every micro-batch; the remaining
     * flags are [[CorpusJob.parse]]'s. State tables are derived from the
-    * output path (same injective naming rule as DedupState.names).
+    * output path ([[namesFor]]).
     */
   def main(args: Array[String]): Unit = {
     val cfg = CorpusJob.parse(args)
     val b0 = SparkSession.builder().appName("graft-corpus-stream")
     val b = sys.env.get("SPARK_GRAFT_MASTER").fold(b0)(b0.master)
     val spark = graft.Sessions.withGraftConf(b).getOrCreate()
-    val sfx = cfg.out.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(cfg.out.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
     val source = spark.readStream
       .schema("doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
       .parquet(cfg.input)
-    val n = names(s"corpus_stream_${sfx}_$tag")
-    // explicit migration entry point: upgrade pre-round-9 meta state once,
-    // at startup, before any read path can trip over the legacy schema
-    migrateLegacyMeta(spark, n)
+    val n = namesFor(cfg.out)
     // durable checkpoint next to the output: a restarted submit resumes
     // from the last committed offset instead of re-delivering the corpus
     run(source, cfg, n,

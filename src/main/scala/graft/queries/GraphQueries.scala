@@ -190,9 +190,10 @@ object GraphQueries {
   }
 
   /** The standing domain-edge STATE: per-epoch `(src, dst, w)` partial
-    * weights persisted as a bucketed catalog table — the AggState pattern
-    * applied to the graph tier, so the corpus-sized pair work behind the
-    * edge relation is paid once per ingest epoch, never per rank run.
+    * weights persisted as a bucketed catalog table — the aggregate-partials
+    * pattern of [[MiscQueries.aggIncremental]] applied to the graph tier,
+    * so the corpus-sized pair work behind the edge relation is paid once
+    * per ingest epoch, never per rank run.
     *
     *  - epoch 0: the standing corpus's verified pairs, read off the
     *    bucketed [[graft.operators.DedupState]] band/token tables
@@ -216,7 +217,7 @@ object GraphQueries {
 
   private[graft] def edgeState(s: SparkSession, d: String): String =
     edgeStateMemo(s, d) {
-      val tbl = graft.operators.AggState.name("graft_graphedges", d).parts
+      val tbl = graft.operators.Layout.stateName("graft_graphedges_parts", d)
       val docsrc = Tables.documents(s, d).select(col("doc_id"), col("source"))
       def weights(pairs: DataFrame): DataFrame = {
         val crossSrc = pairs
@@ -232,9 +233,8 @@ object GraphQueries {
       graft.operators.Layout.writeBucketed(
         weights(DedupQueries.stateVerifiedEdges(s, st).select("a", "b")),
         "src", tbl, 4)
-      weights(DedupQueries.incrementalVerifiedEdges(s, d, st))
-        .write.mode("append").format("parquet")
-        .bucketBy(4, "src").sortBy("src").saveAsTable(tbl)
+      graft.operators.Layout.appendBucketed(
+        weights(DedupQueries.incrementalVerifiedEdges(s, d, st)), "src", tbl, 4)
       tbl
     }
 

@@ -247,12 +247,7 @@ object JoinQueries {
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"),
               col("l_linenumber"))
-    // spread the dim before the salt fan-out: a single-split orders scan
-    // otherwise runs the ×salts explode + exchange write in ONE task
-    // (Profile: 0.32 s of the query); identity at scale (Materialize.spread)
-    val ords = graft.operators.Materialize.spread(
-      Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
-      col("o_orderkey"))
+    val ords = Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
     hotOrderKeys(s, d).fold(
         graft.operators.Skew.hotScopedJoin(li, ords, "l_orderkey",
           "o_orderkey", hotMinRows = HotKeyMinRows, salts = SaltS,

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.CentroidAgg
-import graft.operators.{AggState, AsOfJoin, Layout, Similarity}
+import graft.operators.{AsOfJoin, Layout, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -527,36 +527,36 @@ object MiscQueries {
   /** Build the fixture view state once per (session, dir): partials from
     * the standing 4/5 of orders (o_orderkey % 5 ≠ 0), then one epoch
     * merge absorbing the remaining 1/5 — bucket-aligned append, the
-    * standing table never read (the [[AggState]] contract).
+    * standing table never read ([[Layout.appendBucketed]]). Returns the
+    * state table's name.
     */
-  private val orderAggStateMemo = Memo.entry[AggState.Name]("orderAggState")
+  private val orderAggStateMemo = Memo.entry[String]("orderAggState")
 
-  private[graft] def orderAggState(s: SparkSession, d: String): AggState.Name =
+  private[graft] def orderAggState(s: SparkSession, d: String): String =
     orderAggStateMemo(s, d) {
-      val n = AggState.name("graft_ordview", d)
+      val n = Layout.stateName("graft_ordview_parts", d)
       val o = Tables.orders(s, d)
-      AggState.write(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) =!= 0L)),
-        "o_custkey", n, buckets = 16)
-      AggState.merge(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) === 0L)),
-        "o_custkey", n, buckets = 16)
+      Layout.writeBucketed(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) =!= 0L)),
+        "o_custkey", n, 16)
+      Layout.appendBucketed(orderPartials(o.filter(pmod(col("o_orderkey"), lit(5L)) === 0L)),
+        "o_custkey", n, 16)
       n
     }
 
-  /** Incremental materialized-view read ([[graft.operators.AggState]]):
-    * the per-customer order rollup served from PERSISTED partial
-    * aggregates — write once, absorb each ingest epoch as a bucket-aligned
-    * append of batch partials, serve reads by folding the partials. The
-    * query here is ONLY the read-side fold; because the state table is
-    * bucketed on the grouping key, the fold plans with NO exchange
-    * (AggStateSpec pins it), so serving the view after any number of
-    * epochs costs one co-located aggregation, never a fact rescan. The
+  /** Incremental materialized-view read: the per-customer order rollup
+    * served from PERSISTED partial aggregates (commutative-monoid
+    * partials: counts and sums) — write once, absorb each ingest epoch
+    * as a bucket-aligned append of batch partials, serve reads by folding
+    * the partials. The query here is ONLY the read-side fold; because the
+    * state table is bucketed on the grouping key, the fold plans with NO
+    * exchange (AggStateSpec pins it), so serving the view after any number
+    * of epochs costs one co-located aggregation, never a fact rescan. The
     * oracle is the plain rollup over ALL orders — merge ≡ rebuild stated
     * as SQL, the same equivalence DedupStateMergeSpec pins for the dedup
     * state family.
     */
   def aggIncremental(s: SparkSession, d: String): DataFrame = {
-    val n = orderAggState(s, d)
-    AggState.read(s, n)
+    s.table(orderAggState(s, d))
       .groupBy("o_custkey")
       .agg(sum("n_part").as("n_orders"), sum("cents_part").as("sum_cents"))
       // the average in exact integer MICRO-dollars (floor division):

@@ -174,11 +174,10 @@ object MultimodalQueries {
     */
   private[graft] def mmAdvance(s: SparkSession, tbl: String,
                                batchHashes: DataFrame): Unit =
-    graft.operators.Dedup.hammingLongBands(
-        batchHashes, "media_id", "ahash", bits = 60, nBands = 4)
-      .write.mode("append").format("parquet")
-      .bucketBy(4, "band_key").sortBy("band_key")
-      .saveAsTable(tbl)
+    graft.operators.Layout.appendBucketed(
+      graft.operators.Dedup.hammingLongBands(
+        batchHashes, "media_id", "ahash", bits = 60, nBands = 4),
+      "band_key", tbl, 4)
 
   /** mm_phash_stored — [[phashIncremental]] against the PERSISTED band
     * state ([[mmState]]): the honest form of the rolling media ingest —

@@ -266,7 +266,7 @@ object SamplingQueries {
 
   private[graft] def dsirState(s: SparkSession, d: String): String =
     dsirStateMemo(s, d) {
-      val tbl = graft.operators.AggState.name("graft_dsirlam", d).parts
+      val tbl = graft.operators.Layout.stateName("graft_dsirlam_parts", d)
       val corpusFeats = dsirFeaturesFor(s, d,
         Some(col("doc_id") < DedupQueries.splitId(s, d)))
       graft.operators.Layout.writeBucketed(

@@ -801,22 +801,10 @@ object SimilarityQueries {
     * [[ivfAnn]] uses (nearest of the first 10 corpus vectors by rounded
     * cosine, ties to the lower seed id).
     */
-  /** Deterministic catalog-table name for a per-corpus index snapshot:
-    * `<prefix>_<sanitized dir>_<md5 tag>` — the tag disambiguates dirs
-    * that sanitize to the same suffix.
-    */
-  private def stateName(prefix: String, d: String): String = {
-    val sfx = d.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-      .stripPrefix("_").stripSuffix("_")
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${prefix}_${sfx}_$tag"
-  }
-
   private val ivfStateMemo = Memo.entry[String]("ivfState")
   private def ivfState(s: SparkSession, d: String): String =
     ivfStateMemo(s, d) {
-      val tbl = stateName("graft_ivf_cells", d)
+      val tbl = graft.operators.Layout.stateName("graft_ivf_cells", d)
       graft.functions.VectorFunctions.register(s)
       val corpus = prepared(Tables.embeddings(s, d))
         .filter(col("vec_id") < embSplit(s, d))
@@ -850,7 +838,7 @@ object SimilarityQueries {
   private val ivfFullMemo = Memo.entry[String]("ivfFullState")
   private[graft] def ivfFullState(s: SparkSession, d: String): String =
     ivfFullMemo(s, d) {
-      val tbl = stateName("graft_ivf_full", d)
+      val tbl = graft.operators.Layout.stateName("graft_ivf_full", d)
       graft.functions.VectorFunctions.register(s)
       val vecs = prepared(Tables.embeddings(s, d))
       val seeds = vecs.filter(col("vec_id") < lit(ivfK(s, d)))
@@ -874,7 +862,7 @@ object SimilarityQueries {
   private val pqCodesStateMemo = Memo.entry[String]("pqCodesState")
   private def pqCodesState(s: SparkSession, d: String): String =
     pqCodesStateMemo(s, d) {
-      val tbl = stateName("graft_pq_codes", d)
+      val tbl = graft.operators.Layout.stateName("graft_pq_codes", d)
       val assigned = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
       val codes = Similarity.pqEncode(assigned, pqCbs(s, d)).drop("v")
       graft.operators.Layout.writeBucketed(codes, "cell", tbl, 4)
@@ -887,7 +875,7 @@ object SimilarityQueries {
   private val pqResCodesMemo = Memo.entry[String]("pqResCodesState")
   private def pqResCodesState(s: SparkSession, d: String): String =
     pqResCodesMemo(s, d) {
-      val tbl = stateName("graft_pq_rescodes", d)
+      val tbl = graft.operators.Layout.stateName("graft_pq_rescodes", d)
       val codes = Similarity.pqEncode(residualFrame(s, d), pqResCbs(s, d)).drop("v")
       graft.operators.Layout.writeBucketed(codes, "cell", tbl, 4)
       tbl

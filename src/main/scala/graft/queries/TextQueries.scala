@@ -555,9 +555,9 @@ object TextQueries {
 
   private[graft] def bm25State(s: SparkSession, d: String): (String, String, String) =
     bm25StateMemo(s, d) {
-      val pTbl = graft.operators.AggState.name("graft_bm25p", d).parts
-      val tTbl = graft.operators.AggState.name("graft_bm25t", d).parts
-      val sTbl = graft.operators.AggState.name("graft_bm25s", d).parts
+      val pTbl = graft.operators.Layout.stateName("graft_bm25p_parts", d)
+      val tTbl = graft.operators.Layout.stateName("graft_bm25t_parts", d)
+      val sTbl = graft.operators.Layout.stateName("graft_bm25s_parts", d)
       val standing = Tables.documents(s, d)
         .filter(col("doc_id") < DedupQueries.splitId(s, d))
       val tf = TextAnalysis.tokenRows(standing, "doc_id", "text")
@@ -654,9 +654,9 @@ object TextQueries {
 
   private[graft] def bm25AdvState(s: SparkSession, d: String): (String, String, String) =
     bm25AdvMemo(s, d) {
-      val pTbl = graft.operators.AggState.name("graft_bm25pa", d).parts
-      val tTbl = graft.operators.AggState.name("graft_bm25ta", d).parts
-      val sTbl = graft.operators.AggState.name("graft_bm25sa", d).parts
+      val pTbl = graft.operators.Layout.stateName("graft_bm25pa_parts", d)
+      val tTbl = graft.operators.Layout.stateName("graft_bm25ta_parts", d)
+      val sTbl = graft.operators.Layout.stateName("graft_bm25sa_parts", d)
       val split = DedupQueries.splitId(s, d)
       val t2 = split * 3L / 4L
       val all = Tables.documents(s, d)
@@ -668,11 +668,9 @@ object TextQueries {
       // epoch advance: three bucket-aligned appends of batch partials
       val (p1, t1, s1) = bm25Partials(
         all.filter(col("doc_id") >= t2 && col("doc_id") < split))
-      p1.write.mode("append").format("parquet")
-        .bucketBy(4, "token").sortBy("token").saveAsTable(pTbl)
-      t1.write.mode("append").format("parquet")
-        .bucketBy(4, "token").sortBy("token").saveAsTable(tTbl)
-      s1.write.mode("append").format("parquet").saveAsTable(sTbl)
+      graft.operators.Layout.appendBucketed(p1, "token", pTbl, 4)
+      graft.operators.Layout.appendBucketed(t1, "token", tTbl, 4)
+      graft.sinks.TableSink.appendTable(s1, sTbl)
       (pTbl, tTbl, sTbl)
     }
 
@@ -1171,7 +1169,7 @@ object TextQueries {
 
   private[graft] def clfState(s: SparkSession, d: String): String =
     clfStateMemo(s, d) {
-      val tbl = graft.operators.AggState.name("graft_clfw", d).parts
+      val tbl = graft.operators.Layout.stateName("graft_clfw_parts", d)
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") < DedupQueries.splitId(s, d))
       val w = Classifier.trainLogreg(clfFeaturesOf(corpus), ClfBuckets, ClfRounds)

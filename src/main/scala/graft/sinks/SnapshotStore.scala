@@ -112,6 +112,16 @@ object SnapshotStore {
         .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)"))
       .cast("decimal(38,0)").as("hash"))
 
+  /** [[integrityAggs]] computed in one pass over `df`: (rows, hash). The
+    * read-back check of every staged write, here and in
+    * [[graft.operators.Compaction]].
+    */
+  private[graft] def integrity(df: DataFrame): (Long, String) = {
+    val aggs = integrityAggs(df)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    (r.getLong(0), String.valueOf(r.getDecimal(1)))
+  }
+
   /** Publish `df` as the next snapshot version of `root`. Returns the
     * published version number. See the object doc for the protocol and
     * crash behavior; `validator` (optional) sees the staged READ-BACK
@@ -139,10 +149,7 @@ object SnapshotStore {
 
     // (2) validate the files, not the job: read back and recompute
     val staged = spark.read.parquet(staging.toString)
-    val backAggs = integrityAggs(staged)
-    val back = staged.agg(backAggs.head, backAggs.tail: _*).head()
-    val stagedRows = back.getLong(0)
-    val stagedHash = String.valueOf(back.getDecimal(1))
+    val (stagedRows, stagedHash) = integrity(staged)
     if (stagedRows != writtenRows || stagedHash != writtenHash) {
       throw new IllegalStateException(
         s"staged snapshot fails integrity check: wrote $writtenRows rows " +

@@ -1,15 +1,18 @@
 package graft
 
-import graft.operators.AggState
+import graft.operators.{Compaction, Layout}
 import graft.queries.MiscQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The incremental materialized-view contract ([[AggState]]): epoch
-  * merges are indistinguishable from a from-scratch rebuild, compaction
-  * preserves the view, and the read-side fold really is exchange-free on
-  * the bucket key — the three claims that make "append partials, never
-  * rescan the fact table" sound at 100 TB.
+/** The incremental materialized-view contract: per-key aggregate
+  * partials written with [[Layout.writeBucketed]], each epoch's batch
+  * partials added with [[Layout.appendBucketed]], reads folding them with
+  * the view's groupBy. Epoch merges are indistinguishable from a
+  * from-scratch rebuild, compaction ([[Compaction.compactBucketed]] with a
+  * fold) preserves the view, and the read-side fold really is
+  * exchange-free on the bucket key — the three claims that make "append
+  * partials, never rescan the fact table" sound at 100 TB.
   */
 class AggStateSpec extends SparkSpec {
   import spark.implicits._
@@ -22,73 +25,76 @@ class AggStateSpec extends SparkSpec {
     df.groupBy("o_custkey")
       .agg(sum("n_part").as("n_orders"), sum("cents_part").as("sum_cents"))
 
-  private def folded(n: AggState.Name): Seq[(Long, Long, Long)] =
-    fold(AggState.read(spark, n))
+  private def name(prefix: String): String =
+    Layout.stateName(s"${prefix}_parts", sf())
+
+  private def folded(n: String): Seq[(Long, Long, Long)] =
+    fold(spark.table(n))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
 
   test("merge(state, batch) ≡ write(corpus ∪ batch) on the folded view") {
-    val nm = AggState.name("aggspec_m1", sf())
-    val nf = AggState.name("aggspec_f1", sf())
-    AggState.write(MiscQueries.orderPartials(
+    val nm = name("aggspec_m1")
+    val nf = name("aggspec_f1")
+    Layout.writeBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) =!= 0L)), "o_custkey", nm, Buckets)
-    AggState.merge(MiscQueries.orderPartials(
+    Layout.appendBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) === 0L)), "o_custkey", nm, Buckets)
-    AggState.write(MiscQueries.orderPartials(orders), "o_custkey", nf, Buckets)
+    Layout.writeBucketed(MiscQueries.orderPartials(orders), "o_custkey", nf, Buckets)
     assert(folded(nm) === folded(nf))
   }
 
   test("two consecutive epoch merges ≡ one rebuild (a merged state is a valid base)") {
-    val nm = AggState.name("aggspec_m2", sf())
-    val nf = AggState.name("aggspec_f2", sf())
-    AggState.write(MiscQueries.orderPartials(
+    val nm = name("aggspec_m2")
+    val nf = name("aggspec_f2")
+    Layout.writeBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)).isin(0L, 1L, 2L))), "o_custkey", nm, Buckets)
-    AggState.merge(MiscQueries.orderPartials(
+    Layout.appendBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) === 3L)), "o_custkey", nm, Buckets)
-    AggState.merge(MiscQueries.orderPartials(
+    Layout.appendBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) === 4L)), "o_custkey", nm, Buckets)
-    AggState.write(MiscQueries.orderPartials(orders), "o_custkey", nf, Buckets)
+    Layout.writeBucketed(MiscQueries.orderPartials(orders), "o_custkey", nf, Buckets)
     assert(folded(nm) === folded(nf))
   }
 
   test("compact folds to one partial per key and preserves the view") {
-    val n = AggState.name("aggspec_c", sf())
-    AggState.write(MiscQueries.orderPartials(
+    val n = name("aggspec_c")
+    Layout.writeBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) =!= 0L)), "o_custkey", n, Buckets)
-    AggState.merge(MiscQueries.orderPartials(
+    Layout.appendBucketed(MiscQueries.orderPartials(
       orders.filter(pmod($"o_orderkey", lit(5L)) === 0L)), "o_custkey", n, Buckets)
     val before = folded(n)
-    val rowsBefore = AggState.read(spark, n).count()
-    AggState.compact(spark, n, "o_custkey", Buckets)(fold(_)
+    val rowsBefore = spark.table(n).count()
+    Compaction.compactBucketed(spark, n, "o_custkey", Buckets, fold(_)
       .withColumnRenamed("n_orders", "n_part")
       .withColumnRenamed("sum_cents", "cents_part"))
-    val after = AggState.read(spark, n)
+    val after = spark.table(n)
     assert(after.count() === after.select("o_custkey").distinct().count())
     assert(after.count() < rowsBefore, "compaction should shrink the partial set")
     assert(folded(n) === before)
     // idempotent: a replayed (crashed) compaction leaves the same state
-    AggState.compact(spark, n, "o_custkey", Buckets)(fold(_)
+    Compaction.compactBucketed(spark, n, "o_custkey", Buckets, fold(_)
       .withColumnRenamed("n_orders", "n_part")
       .withColumnRenamed("sum_cents", "cents_part"))
     assert(folded(n) === before)
   }
 
   test("sketch binaries ride the state table as monoid partials (HLL)") {
-    // AggState's docstring claims holistic aggregates decompose onto the
-    // same tables when carried as mergeable sketch binaries — tested:
-    // per-epoch HLL partials of distinct customers per order status,
+    // compactBucketed's fold contract claims holistic aggregates decompose
+    // onto the same tables when carried as mergeable sketch binaries —
+    // tested: per-epoch HLL partials of distinct customers per order status,
     // appended like any monoid partial; the merged read's union estimate
     // must equal the one-shot sketch over all orders (HllSpec pins
     // union == one-shot register-exact, so estimates are bit-equal)
     graft.functions.Hll.register(spark)
-    val n = AggState.name("aggspec_hll", sf())
+    val n = name("aggspec_hll")
     def partials(df: DataFrame) =
       df.groupBy("o_orderstatus")
         .agg(expr("hll_sketch(o_custkey)").as("sk"))
-    AggState.write(partials(orders.filter(pmod($"o_orderkey", lit(5L)) =!= 0L)),
+    Layout.writeBucketed(partials(orders.filter(pmod($"o_orderkey", lit(5L)) =!= 0L)),
       "o_orderstatus", n, Buckets)
-    AggState.merge(partials(orders.filter(pmod($"o_orderkey", lit(5L)) === 0L)),
+    Layout.appendBucketed(partials(orders.filter(pmod($"o_orderkey", lit(5L)) === 0L)),
       "o_orderstatus", n, Buckets)
-    val merged = AggState.read(spark, n)
+    val merged = spark.table(n)
       .groupBy("o_orderstatus")
       .agg(expr("hll_estimate(hll_union(sk))").as("est"))
       .as[(String, Long)].collect().toMap
@@ -100,7 +106,7 @@ class AggStateSpec extends SparkSpec {
 
   test("read-side fold plans with no exchange (bucketed on the grouping key)") {
     val n = MiscQueries.orderAggState(spark, sf())
-    val df = fold(AggState.read(spark, n))
+    val df = fold(spark.table(n))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!plan.contains("Exchange hashpartitioning"),

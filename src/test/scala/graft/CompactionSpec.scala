@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AggState, Compaction, Dedup, DedupState}
+import graft.operators.{Compaction, Dedup, DedupState, Layout}
 import graft.queries.DedupQueries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,14 +9,20 @@ import org.apache.spark.sql.functions._
   * appends a bucket holds E files; `Compaction.compactBucketed` must fold
   * it back to one file per bucket WITHOUT changing a single row, without
   * breaking the exchange-free probe plan the bucket spec buys, and without
-  * any crash window in which the state is lost — the protocol is the same
-  * staged two-rename swap as the stream's meta migration, and this spec
-  * kills it after every step prefix the way CorpusStreamCrashSpec does.
+  * any crash window in which the state is lost — the protocol is a staged
+  * two-rename swap, and this spec kills it after every step prefix the way
+  * CorpusStreamCrashSpec kills the stream's epoch writes.
   */
 class CompactionSpec extends SparkSpec {
 
   private val dir = sf()
   private def docs = Tables.documents(spark, dir)
+
+  /** The reference count `Compaction.fileCount`'s listing must equal:
+    * distinct files a scan of the table actually reads.
+    */
+  private def scannedFiles(t: String): Long =
+    spark.table(t).select(input_file_name()).distinct().count()
 
   private def sameRows(a: DataFrame, b: DataFrame, what: String): Unit =
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
@@ -35,6 +41,8 @@ class CompactionSpec extends SparkSpec {
       .map(t => t -> spark.table(t).localCheckpoint(true)).toMap
     val probeBefore = DedupQueries.stateVerifiedEdges(spark, n).localCheckpoint(true)
     val bandFilesBefore = Compaction.fileCount(spark, n.bands)
+    assert(bandFilesBefore === scannedFiles(n.bands),
+      "the listing disagrees with a scan on the appended table")
     assert(bandFilesBefore > buckets,
       s"fixture must accumulate >$buckets band files to exercise compaction " +
         s"(got $bandFilesBefore)")
@@ -48,6 +56,8 @@ class CompactionSpec extends SparkSpec {
         s"${st.table}: row count changed ${st.rowsBefore} -> ${st.rowsAfter}")
     }
     assert(stats.find(_.table == n.bands).get.filesAfter < bandFilesBefore)
+    assert(Compaction.fileCount(spark, n.bands) === scannedFiles(n.bands),
+      "the listing disagrees with a scan on the compacted table")
 
     before.foreach { case (t, b) => sameRows(spark.table(t), b, t) }
     sameRows(DedupQueries.stateVerifiedEdges(spark, n), probeBefore,
@@ -78,9 +88,8 @@ class CompactionSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"DROP TABLE IF EXISTS ${t}__cstage")
       spark.sql(s"DROP TABLE IF EXISTS ${t}__cretired")
-      graft.operators.Layout.writeBucketed(base, key, t, buckets)
-      extra.write.mode("append").format("parquet")
-        .bucketBy(buckets, key).sortBy(key).saveAsTable(t)
+      Layout.writeBucketed(base, key, t, buckets)
+      Layout.appendBucketed(extra, key, t, buckets)
 
       Compaction.compactUpTo(spark, t, key, buckets, identity, maxSteps)
 
@@ -110,7 +119,7 @@ class CompactionSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}__cstage")
     val df = (0L until 100L).map(i => (i % 7, i)).toDF("k", "v")
-    graft.operators.Layout.writeBucketed(df, "k", t, 2)
+    Layout.writeBucketed(df, "k", t, 2)
     // kill after staging (step 1) and after validation (step 2): both are
     // before the commit rename, so the live table must be bit-identical
     for (maxSteps <- 1 to 2) {
@@ -141,10 +150,10 @@ class CompactionSpec extends SparkSpec {
   test("graph edge partials compact with an identical stored rank") {
     val q = graft.queries.GraphQueries.defs("graph_domain_rank_stored")
     val before = q(spark, dir).collect().map(_.toSeq).toSeq
-    val tbl = AggState.name("graft_graphedges", dir).parts
+    val tbl = Layout.stateName("graft_graphedges_parts", dir)
     // identity fold: the per-epoch partial rows are themselves pinned by
     // other suites, so only the file layout is folded here (the monoid
-    // fold path is exercised by the AggState test below)
+    // fold path is exercised by the aggregate-partials test below)
     val st = Compaction.compactBucketed(spark, tbl, "src", 4)
     assert(st.rowsAfter === st.rowsBefore, s"$st")
     assert(st.filesAfter <= 4 && st.filesAfter <= st.filesBefore, s"$st")
@@ -154,21 +163,21 @@ class CompactionSpec extends SparkSpec {
 
   test("AggState.compact rides the crash-safe swap and stays idempotent") {
     import spark.implicits._
-    val n = AggState.Name("graft_compact_aggstate")
-    spark.sql(s"DROP TABLE IF EXISTS ${n.parts}")
+    val n = "graft_compact_aggstate"
+    spark.sql(s"DROP TABLE IF EXISTS $n")
     val fold: DataFrame => DataFrame =
       _.groupBy("k").agg(sum("cnt").as("cnt"))
     val p1 = Seq((1L, 5L), (2L, 3L)).toDF("k", "cnt")
     val p2 = Seq((1L, 2L), (3L, 9L)).toDF("k", "cnt")
-    AggState.write(p1, "k", n, 2)
-    AggState.merge(p2, "k", n, 2)
-    val st = AggState.compact(spark, n, "k", 2)(fold)
+    Layout.writeBucketed(p1, "k", n, 2)
+    Layout.appendBucketed(p2, "k", n, 2)
+    val st = Compaction.compactBucketed(spark, n, "k", 2, fold)
     assert(st.rowsBefore === 4L && st.rowsAfter === 3L)
-    val got = AggState.read(spark, n).as[(Long, Long)].collect().sortBy(_._1)
+    val got = spark.table(n).as[(Long, Long)].collect().sortBy(_._1)
     assert(got.toSeq === Seq((1L, 7L), (2L, 3L), (3L, 9L)))
     // idempotent: replaying the (crashed) compaction changes nothing
-    AggState.compact(spark, n, "k", 2)(fold)
-    val again = AggState.read(spark, n).as[(Long, Long)].collect().sortBy(_._1)
+    Compaction.compactBucketed(spark, n, "k", 2, fold)
+    val again = spark.table(n).as[(Long, Long)].collect().sortBy(_._1)
     assert(again.toSeq === Seq((1L, 7L), (2L, 3L), (3L, 9L)))
   }
 }

@@ -57,79 +57,18 @@ class CorpusStreamCrashSpec extends SparkSpec {
     assert(e.getMessage.contains("successor"))
   }
 
-  test("legacy (epoch)-only meta: reads refuse loudly, explicit migration upgrades, gapped state fails") {
+  test("an (epoch)-only meta table is refused loudly") {
     import spark.implicits._
     val n = CorpusStream.names("graft_crash_legacy")
     CorpusStream.reset(spark, n)
     CorpusStream.ingest(spark, epochs(0), n, 0L)
-    // downgrade the meta table to the legacy single-column schema (state
-    // written by the pre-round-9 code)
+    // the meta schema before max_doc_id was tracked: only the epoch column
     val eps = spark.table(n.meta).select("epoch").collect().map(_.getLong(0)).toSeq
     eps.toDF("epoch").write.mode("overwrite").format("parquet").saveAsTable(n.meta)
-    // reads must NOT migrate lazily (an in-place rewrite from a read path
-    // could lose every commit marker on a crash) — they refuse and name
-    // the explicit entry point
-    val e0 = intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       CorpusStream.ingest(spark, epochs(1), n, 1L)
     }
-    assert(e0.getMessage.contains("migrateLegacyMeta"))
-    CorpusStream.migrateLegacyMeta(spark, n)
-    CorpusStream.ingest(spark, epochs(1), n, 1L)
-    assert(spark.table(n.meta).columns.contains("max_doc_id"))
-    val rows = spark.table(n.meta).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(rows(0L) === -1L, s"migrated marker must carry the sentinel: $rows")
-    assert(rows(1L) === 159L, s"new epoch must record its real max: $rows")
-    // GAPPED legacy state could expose a crashed epoch's partials under
-    // the contiguous range read — must refuse, not resume wrong
-    val n2 = CorpusStream.names("graft_crash_legacy_gap")
-    CorpusStream.reset(spark, n2)
-    Seq(0L, 2L).toDF("epoch").write.mode("overwrite").format("parquet")
-      .saveAsTable(n2.meta)
-    val e = intercept[IllegalArgumentException] {
-      CorpusStream.migrateLegacyMeta(spark, n2)
-    }
-    assert(e.getMessage.contains("non-contiguous"))
-  }
-
-  for (cut <- 0 to 4) {
-    test(s"meta migration crashed after $cut/4 steps never loses a commit marker") {
-      import spark.implicits._
-      val n = CorpusStream.names(s"graft_crash_mig_$cut")
-      CorpusStream.reset(spark, n)
-      CorpusStream.ingest(spark, epochs(0), n, 0L)
-      val eps = spark.table(n.meta).select("epoch").collect().map(_.getLong(0)).toSeq
-      eps.toDF("epoch").write.mode("overwrite").format("parquet").saveAsTable(n.meta)
-      CorpusStream.migrateLegacyMetaUpTo(spark, n, cut) // the crash
-      // recovery: before the commit point (cut <= 1) the legacy table is
-      // untouched and the migration re-runs; after it, the retired marker
-      // lets the swap resume — in both cases every marker survives
-      CorpusStream.migrateLegacyMeta(spark, n)
-      assert(spark.table(n.meta).columns.contains("max_doc_id"))
-      assert(spark.table(n.meta).select("epoch").collect().map(_.getLong(0)).toSet
-        === eps.toSet, s"commit markers lost by a crash at step $cut")
-      assert(!spark.catalog.tableExists(s"${n.meta}__migrating") &&
-             !spark.catalog.tableExists(s"${n.meta}__retired"),
-        "migration side tables must not linger after completion")
-      // the stream resumes: next epoch ingests against the migrated state
-      CorpusStream.ingest(spark, epochs(1), n, 1L)
-    }
-  }
-
-  test("migration crash between the renames auto-resumes from the read path") {
-    import spark.implicits._
-    val n = CorpusStream.names("graft_crash_mig_read")
-    CorpusStream.reset(spark, n)
-    CorpusStream.ingest(spark, epochs(0), n, 0L)
-    val eps = spark.table(n.meta).select("epoch").collect().map(_.getLong(0)).toSeq
-    eps.toDF("epoch").write.mode("overwrite").format("parquet").saveAsTable(n.meta)
-    CorpusStream.migrateLegacyMetaUpTo(spark, n, 2) // meta absent, marker live
-    assert(!spark.catalog.tableExists(n.meta))
-    // a bare read (no explicit migration call) finds the retired marker and
-    // finishes the swap instead of treating the stream as fresh
-    CorpusStream.ingest(spark, epochs(1), n, 1L)
-    assert(spark.table(n.meta).select("epoch").collect().map(_.getLong(0)).toSet
-      === Set(0L, 1L))
+    assert(e.getMessage.contains("reset the stream"), e.getMessage)
   }
 
   test("vacuum drops superseded comps snapshots; publish still serves the watermark") {

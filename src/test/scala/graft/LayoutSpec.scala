@@ -23,6 +23,25 @@ class LayoutSpec extends SparkSpec {
     z
   }
 
+  test("standing-state table names are pinned per family and injective") {
+    val d = "/data/sf0.1"
+    assert(graft.operators.DedupState.names("graft_corpus", d) ===
+      graft.operators.DedupState.Names(
+        "graft_corpus_bands_data_sf0_1_3aef3614",
+        "graft_corpus_toks_data_sf0_1_3aef3614",
+        "graft_corpus_comps_data_sf0_1_3aef3614",
+        "graft_corpus_spans_data_sf0_1_3aef3614"))
+    assert(Layout.stateName("graft_ordview_parts", d) ===
+      "graft_ordview_parts_data_sf0_1_3aef3614")
+    assert(Layout.stateName("graft_ivf_cells", d) ===
+      "graft_ivf_cells_data_sf0_1_3aef3614")
+    assert(graft.pipeline.CorpusStream.namesFor(d).meta ===
+      "corpus_stream_data_sf0_1_3aef3614_meta")
+    // both dirs sanitize to data_sf0_1; the md5 tag keeps them apart
+    assert(Layout.stateName("graft_ivf_cells", "/data/sf0_1") ===
+      "graft_ivf_cells_data_sf0_1_1b31b7c6")
+  }
+
   test("zvalue matches the plain-Scala Morton reference on the full corner set") {
     val probes = for {
       a <- Seq(0L, 1L, 2L, 3L, 5L, 1023L, 2048L, 4095L)
