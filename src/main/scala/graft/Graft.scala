@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object Graft {
 
-  /** A session wired with the engine's conventions: UTC, the ns-timestamp
-    * parquet flag, a hermetic temp warehouse ([[Sessions.withGraftConf]])
-    * and the [[graft.plans.GraftExtensions]] surface (the
-    * `PruneExpandBranches` optimizer rule + every custom function:
-    * sketches, cosine/sq-dist, winnowing, CDC, Hilbert). On a cluster,
-    * prefer `spark-submit --conf spark.sql.extensions=
-    * graft.plans.GraftExtensions` and your own builder; this factory is
-    * the embedded/notebook path.
+  /** A session wired with the engine's conventions
+    * ([[Sessions.withGraftConf]]): UTC, the ns-timestamp parquet flag, a
+    * hermetic temp warehouse and the [[graft.plans.GraftExtensions]]
+    * surface (the `PruneExpandBranches` optimizer rule + every custom
+    * function: sketches, cosine/sq-dist, winnowing, CDC, Hilbert). On a
+    * cluster with your own builder, pass `--conf spark.sql.extensions=
+    * graft.plans.GraftExtensions` instead; this factory is the
+    * embedded/notebook path.
     */
   def session(appName: String = "graft", master: String = "local[*]",
               shufflePartitions: Int = 32): SparkSession =
@@ -40,8 +40,7 @@ object Graft {
         .master(master)
         .appName(appName)
         .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .withExtensions(new graft.plans.GraftExtensions))
+        .config("spark.sql.adaptive.enabled", "true"))
       .getOrCreate()
 
   // ------------------------------------------------------------------
@@ -171,7 +170,6 @@ object Graft {
     * approximate path. Use for probe-sized query sets only.
     */
   def knn(vecs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(vecs.sparkSession)
     Similarity.bruteForceTopK(vecs, queries, k)
   }
 
@@ -182,7 +180,6 @@ object Graft {
     * on.
     */
   def lshBands(vecs: DataFrame, anchors: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(vecs.sparkSession)
     Similarity.withBuckets(vecs, anchors)
   }
 

@@ -3,10 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session-construction conventions shared by every entry point (Verify,
-  * Bench, TrendsJob, the test harness). These are settings that must be in
-  * place before the first query is planned — flipping them mid-session from
-  * inside a loader would be a global side effect racing against every other
-  * query on the same session.
+  * Bench, TrendsJob, CorpusJob, CorpusStream, [[Graft.session]], the test
+  * harness). These are settings that must be in place before the first
+  * query is planned — flipping them mid-session from inside a loader would
+  * be a global side effect racing against every other query on the same
+  * session.
+  *
+  * The builder also installs [[graft.plans.GraftExtensions]], the one
+  * install path of graft's SQL functions and optimizer rule: every graft
+  * session has them from the moment it is built, and no query registers
+  * anything.
   *
   * Two of them make compiled code a per-JVM asset. The engine's work is a
   * small set of plan shapes run over and over: a query pass repeats its
@@ -53,6 +59,7 @@ object Sessions {
       // compile once per JVM (see the scaladoc above)
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .withExtensions(new graft.plans.GraftExtensions)
 
   /** The session every main in this repo runs on: `local[cpus]`, one
     * shuffle partition per core, no UI.

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -127,18 +127,15 @@ case class BitsetIntersectCount(left: Expression, right: Expression)
 }
 
 object BitsetFunctions {
-  // shared by register() and build-time GraftExtensions injection
   private[graft] val intersectBuilder: Seq[Expression] => Expression = {
     case Seq(a, b) => BitsetIntersectCount(a, b)
     case other => throw new IllegalArgumentException(
       s"bitset_intersect takes (map<bigint,bigint>, map<bigint,bigint>), got ${other.size} args")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitset_intersect", intersectBuilder, "scala_udf")
-
-  /** Native merge-intersect popcount; requires [[register]] first. */
+  /** Native merge-intersect popcount (`bitset_intersect`, installed by
+    * [[graft.plans.GraftExtensions]]).
+    */
   def bitsetIntersect(a: Column, b: Column): Column =
     call_function("bitset_intersect", a, b)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -346,7 +346,7 @@ case class BloomContains(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-level API for the Bloom family. */
+/** Builders + Column-level API for the Bloom family. */
 object Bloom {
   import org.apache.spark.sql.DataFrame
 
@@ -441,13 +441,6 @@ object Bloom {
     case Seq(f, v) => BloomContains(ConstBytes.fold("bloom_filter", f), v)
     case other => throw new IllegalArgumentException(
       s"bloom_contains takes (filter, value), got ${other.size} args")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("bloom_agg", aggBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("bloom_merge", mergeBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("bloom_contains", containsBuilder, "scala_udf")
   }
 
   def agg(c: Column, numBits: Int = DefaultBits, numHashes: Int = DefaultHashes): Column =

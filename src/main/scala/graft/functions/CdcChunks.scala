@@ -1,7 +1,7 @@
 package graft.functions
 
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -140,17 +140,14 @@ object CdcChunks {
 }
 
 object CdcFunctions {
-  // shared by register() and build-time GraftExtensions injection
   private[graft] val cdcBuilder: Seq[Expression] => Expression = {
     case Seq(a) => CdcChunks(a)
     case other => throw new IllegalArgumentException(
       s"cdc_chunks takes (array<string>), got ${other.size} args")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", cdcBuilder, "scala_udf")
-
-  /** Native CDC chunk rows; requires [[register]] first. */
+  /** Native CDC chunk rows (`cdc_chunks`, installed by
+    * [[graft.plans.GraftExtensions]]).
+    */
   def cdcChunks(toks: Column): Column = call_function("cdc_chunks", toks)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -298,7 +298,7 @@ case class CmsQuery(left: Expression, right: Expression) extends BinaryExpressio
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-level API for the CMS family. */
+/** Builders + Column-level API for the CMS family. */
 object Cms {
   val DefaultDepth = 5     // error probability e^-5 ≈ 0.7%
   val DefaultWidth = 2048  // overestimate ≤ e·N/2048 ≈ 0.13% of stream size
@@ -327,13 +327,6 @@ object Cms {
     case Seq(s, v) => CmsQuery(ConstBytes.fold("cms_sketch", s), v)
     case other => throw new IllegalArgumentException(
       s"cms_query takes (sketch, value), got ${other.size} args")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("cms_sketch", sketchBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("cms_merge", mergeBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("cms_query", queryBuilder, "scala_udf")
   }
 
   def sketch(c: Column, depth: Int = DefaultDepth, width: Int = DefaultWidth): Column =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,19 +92,16 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-level access for the native functions. */
+/** Builder + Column-level access for the native function. */
 object VectorFunctions {
-  // shared by register() and build-time GraftExtensions injection
   private[graft] val cosineBuilder: Seq[Expression] => Expression = {
     case Seq(a, b) => CosineSimilarity(a, b)
     case other => throw new IllegalArgumentException(
       s"cosine_sim takes (array<double>, array<double>), got ${other.size} args")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineBuilder, "scala_udf")
-
-  /** Native codegen'd cosine; requires [[register]] on the session first. */
+  /** Native codegen'd cosine (`cosine_sim`, installed by
+    * [[graft.plans.GraftExtensions]]).
+    */
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -98,11 +98,9 @@ object Hilbert {
       s"hilbert_index takes (x, y[, bits]), got ${other.size} args")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hilbert_index", indexBuilder, "scala_udf")
-
-  /** Native Hilbert index; requires [[register]] first. */
+  /** Native Hilbert index (`hilbert_index`, installed by
+    * [[graft.plans.GraftExtensions]]).
+    */
   def index(x: Column, y: Column, bits: Int = Bits): Column =
     call_function("hilbert_index", x, y, lit(bits))
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
@@ -222,7 +222,7 @@ case class HllEstimate(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session registration + Column-level API for the HLL family. */
+/** Builders + Column-level API for the HLL family. */
 object Hll {
   val DefaultPrecision = 12 // 4096 registers, rsd ~1.6%
 
@@ -231,7 +231,6 @@ object Hll {
     e.eval().asInstanceOf[Number].intValue()
   }
 
-  // builders shared by per-session registration and build-time extensions
   private[graft] val sketchBuilder: Seq[Expression] => Expression = {
     case Seq(c)    => HllSketchAgg(c, DefaultPrecision)
     case Seq(c, p) => HllSketchAgg(c, litInt(p, "hll_sketch"))
@@ -248,13 +247,6 @@ object Hll {
     case Seq(c) => HllEstimate(c)
     case other => throw new IllegalArgumentException(
       s"hll_estimate takes (sketch), got ${other.size} args")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("hll_sketch", sketchBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("hll_union", unionBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("hll_estimate", estimateBuilder, "scala_udf")
   }
 
   def sketch(c: Column, p: Int = DefaultPrecision): Column =

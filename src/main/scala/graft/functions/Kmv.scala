@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -325,7 +325,7 @@ case class KmvJaccardMicro(left: Expression, right: Expression, k: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-level API for the KMV family. */
+/** Builders + Column-level API for the KMV family. */
 object Kmv {
   val DefaultK = 64
 
@@ -365,16 +365,6 @@ object Kmv {
     case Seq(a, b, p) => KmvJaccardMicro(a, b, litInt(p, "kmv_jaccard_micro"))
     case other => throw new IllegalArgumentException(
       s"kmv_jaccard_micro takes (a, b, k), got ${other.size} args")
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val r = spark.sessionState.functionRegistry
-    r.createOrReplaceTempFunction("kmv_sketch", sketchBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("kmv_union", unionBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("kmv_estimate", estimateBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("kmv_union_est", unionEstBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("kmv_inter_est", interEstBuilder, "scala_udf")
-    r.createOrReplaceTempFunction("kmv_jaccard_micro", jaccardBuilder, "scala_udf")
   }
 
   def sketch(c: Column, k: Int = DefaultK): Column =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
   *
   * Usage: `SetMembership.inLiteralSet(col("k"), lit(keys.toArray))` —
   * the second argument MUST be a foldable array whose element type
-  * matches the column. Registered build-time via
+  * matches the column. Installed at session build by
   * [[graft.plans.GraftExtensions]] like every other native function.
   */
 case class InLiteralSet(child: Expression, hset: Set[Any], elemDesc: String)
@@ -81,12 +81,8 @@ object SetMembership {
         other.map(_.dataType.simpleString).mkString(", "))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_in_set", inLiteralSetBuilder, "scala_udf")
-
-  /** Membership of `c` in the foldable array literal `values`; requires
-    * [[register]] (or the build-time extensions install).
+  /** Membership of `c` in the foldable array literal `values`
+    * (`graft_in_set`, installed by [[graft.plans.GraftExtensions]]).
     */
   def inLiteralSet(c: Column, values: Column): Column =
     call_function("graft_in_set", c, values)

@@ -97,12 +97,8 @@ object DistanceFunctions {
       s"sq_dist takes (array<double>, array<double>), got ${other.size} args")
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist", sqDistBuilder, "scala_udf")
-
-  /** Native codegen'd squared L2; requires [[register]] (or the build-time
-    * GraftExtensions install) on the session first.
+  /** Native codegen'd squared L2 (`sq_dist`, installed by
+    * [[graft.plans.GraftExtensions]]).
     */
   def sqDist(a: Column, b: Column): Column = call_function("sq_dist", a, b)
 }

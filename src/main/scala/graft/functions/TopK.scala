@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -130,23 +130,18 @@ case class TopKMinAgg(
     copy(child = newChild)
 }
 
-/** Session registration + Column-level API. */
+/** Builder + Column-level API. */
 object TopK {
   private def litInt(e: Expression, what: String): Int = {
     require(e.foldable, s"$what k must be a literal")
     e.eval().asInstanceOf[Number].intValue()
   }
 
-  // shared by register() and build-time GraftExtensions injection
   private[graft] val minBuilder: Seq[Expression] => Expression = {
     case Seq(c, p) => TopKMinAgg(c, litInt(p, "topk_min"))
     case other => throw new IllegalArgumentException(
       s"topk_min takes (value, k), got ${other.size} args")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("topk_min", minBuilder, "scala_udf")
 
   def minK(value: Column, k: Int): Column =
     call_function("topk_min", value, lit(k))

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -152,7 +152,6 @@ case class WinnowSpans(child: Expression, spanW: Int, winW: Int)
 }
 
 object WinnowFunctions {
-  // shared by register() and build-time GraftExtensions injection
   private[graft] val winnowBuilder: Seq[Expression] => Expression = {
     case Seq(a, s, w) if s.foldable && w.foldable =>
       WinnowSpans(a,
@@ -162,11 +161,9 @@ object WinnowFunctions {
       s"winnow_spans takes (array<string>, int literal, int literal), got ${other.size} args")
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_spans", winnowBuilder, "scala_udf")
-
-  /** Native winnowed span fingerprints; requires [[register]] first. */
+  /** Native winnowed span fingerprints (`winnow_spans`, installed by
+    * [[graft.plans.GraftExtensions]]).
+    */
   def winnowSpans(toks: Column, spanW: Int, winW: Int): Column =
     call_function("winnow_spans", toks,
       org.apache.spark.sql.functions.lit(spanW),

@@ -353,7 +353,6 @@ object Dedup {
     // dedup path. The native merge-intersect expression stays inside
     // whole-stage codegen (the equivalent aggregate(map_keys(...)) HOF is
     // an interpreted per-pair lambda with per-element map probes).
-    graft.functions.BitsetFunctions.register(masks.sparkSession)
     val inter = graft.functions.BitsetFunctions.bitsetIntersect(col("__ma"), col("__mb"))
     cand.join(ma, "a").join(mb, "b") // AQE broadcasts when the mask table is small
       .withColumn("__i", inter)
@@ -832,7 +831,6 @@ object Dedup {
     * contract).
     */
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.CdcFunctions.register(docs.sparkSession)
     docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)

@@ -84,7 +84,6 @@ object IndexMaintenance {
     * (rounded squared-L2 asc, vec_id asc).
     */
   def probe(snap: DataFrame, queries: DataFrame, topK: Int): DataFrame = {
-    graft.functions.DistanceFunctions.register(queries.sparkSession)
     val cents = centroidsOf(snap)
     val posts = snap.filter(col("kind") === "post")
       .select(col("id").as("vec_id"), col("cell"), col("v"))
@@ -106,7 +105,6 @@ object IndexMaintenance {
     */
   private def exactTopK(corpus: DataFrame, queries: DataFrame,
                         topK: Int): DataFrame = {
-    graft.functions.DistanceFunctions.register(corpus.sparkSession)
     val w = Window.partitionBy("qid").orderBy(asc("d"), asc("vec_id"))
     corpus.crossJoin(broadcast(queries.select(col("qid"), col("qv"))))
       .filter(col("vec_id") =!= col("qid"))

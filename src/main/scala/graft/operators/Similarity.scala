@@ -28,11 +28,11 @@ object Similarity {
   def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
-  /** Composed-fold cosine (no session registration needed). */
+  /** Composed-fold cosine (plain Spark functions only). */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Native codegen'd cosine (bit-identical to [[cosine]]; requires
-    * graft.functions.VectorFunctions.register on the session).
+  /** Native codegen'd cosine (bit-identical to [[cosine]]; `cosine_sim`
+    * from [[graft.plans.GraftExtensions]]).
     */
   def cosineNative(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosineSim(a, b)
@@ -113,35 +113,37 @@ object Similarity {
     * (query, candidate) pair, because each candidate lives in exactly one
     * bucket.
     *
-    * Scale shape: still a narrow projection on the query side (anchors are
-    * inlined literals, margins computed per-row) followed by the same
-    * shuffle-on-bucket equi-join as single-probe LSH — the probe factor
-    * multiplies only the (small) query side, never the corpus.
+    * Scale shape: still a narrow projection on the query side (the anchors
+    * ride in one function's closure, margins computed per-row) followed by
+    * the same shuffle-on-bucket equi-join as single-probe LSH — the probe
+    * factor multiplies only the (small) query side, never the corpus.
     */
   def withProbes(queries: DataFrame, anchors: DataFrame, flip: Int): DataFrame = {
     val collected = collectAnchors(anchors)
     require(flip >= 1 && flip <= collected.length,
       s"flip must be in [1, ${collected.length}]")
     require(flip <= 16, "2^flip probes per query — cap flip at 16")
-    // (|margin|, aid) structs; array_sort's default struct ordering is
-    // lexicographic = margin asc, aid asc — the deterministic weak-bit order
-    val margins = array(collected.toIndexedSeq.map { case (aid, av) =>
-      val litAnchor = typedLit(av) // one Literal node (see withBuckets)
-      struct(abs(dot(col("v"), litAnchor)).as("m"), lit(aid.toInt).as("aid"))
-    }: _*)
-    // materialize the sorted weak-bit list once as a column: the probe
-    // expressions below reference it up to flip*2^flip times, and the fold
-    // inside `dot` is an interpreted HOF (CollapseProject keeps non-cheap
-    // multi-referenced aliases as separate projections, so this sticks)
-    val withWeak = queries
-      .withColumn("__weak", slice(array_sort(margins), 1, flip))
-    val probes = (0 until (1 << flip)).map { s =>
-      (0 until flip).filter(j => (s & (1 << j)) != 0)
-        .map(j => call_function("shiftleft", lit(1L),
-          element_at(col("__weak"), j + 1).getField("aid")))
-        .foldLeft(col("bucket"))(_ bitwiseXOR _)
+    val anchorVecs = collected.map { case (aid, av) => (aid.toInt, av.toArray) }
+    // the anchors ride in this function's closure, so the plan prints
+    // `UDF(v, bucket)`, not 8 × 64 literal doubles in every plan section
+    // and again in each predicate pushed through this projection (an
+    // explode's inferred `size(probes) > 0`)
+    val probesOf = udf { (v: Seq[java.lang.Double], bucket: Long) =>
+      // |dot(v, anchor)| by the same left-to-right fold as [[dot]]; None
+      // where that fold is null (null vector or element, length mismatch)
+      def margin(a: Array[Double]): Option[Double] =
+        if (v == null || v.length != a.length || v.contains(null)) None
+        else Some(math.abs(a.indices.foldLeft(0.0)((acc, i) => acc + v(i) * a(i))))
+      // the weak bits: (|margin|, aid) ascending, a null margin first
+      val weak = anchorVecs.map { case (aid, a) => (margin(a), aid) }
+        .sorted(Ordering.Tuple2(Ordering.Option(Ordering.Double.TotalOrdering), Ordering.Int))
+        .take(flip).map(w => 1L << w._2)
+      // probe s = bucket XOR the masks of s's set bits
+      (0 until (1 << flip)).map { s =>
+        weak.indices.foldLeft(bucket)((p, j) => if ((s >> j & 1) == 1) p ^ weak(j) else p)
+      }
     }
-    withWeak.withColumn("probes", array(probes: _*)).drop("__weak")
+    queries.withColumn("probes", probesOf(col("v"), col("bucket")))
   }
 
   /** Assignment step of Lloyd k-means: each vector gets the centroid with
@@ -156,7 +158,6 @@ object Similarity {
     // native codegen'd squared-L2 (bit-identical to the aggregate(zip_with)
     // fold it replaced — same strict left-to-right accumulation): the
     // assignment evaluates it k times per row, the suite's hottest scalar
-    graft.functions.DistanceFunctions.register(vecs.sparkSession)
     def sqDist(cv: Seq[Double]): Column = {
       val litC = typedLit(cv) // one Literal node (see withBuckets)
       round(graft.functions.DistanceFunctions.sqDist(col("v"), litC), 6)
@@ -317,7 +318,6 @@ object Similarity {
     * row.
     */
   def pqEncode(vecs: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    graft.functions.DistanceFunctions.register(vecs.sparkSession)
     cbs.zipWithIndex.foldLeft(vecs) { case (df, (cb, m)) =>
       val sub = slice(col("v"), m * PqSub + 1, PqSub)
       val scored = array(cb.map { case (cid, cv) =>

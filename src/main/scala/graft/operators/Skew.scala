@@ -176,7 +176,6 @@ object Skew {
         // membership as ONE InSet expression node (SetMembership): no
         // literal-per-key tree, no membership joins — the census rides
         // the plan as a single hash set on both sides
-        graft.functions.SetMembership.register(fact.sparkSession)
         val arr = hotKeys.head match {
           case _: Long | _: java.lang.Long =>
             lit(hotKeys.map { case n: Number => n.longValue }.toArray)

@@ -209,7 +209,6 @@ object CorpusJob {
     */
   private[graft] def executeWith(spark: SparkSession, cfg: Config,
                                  store: StageStore): (DataFrame, Funnel) = {
-    Bloom.register(spark) // no-op when GraftExtensions installed them already
     val docs = Tables.documents(spark, cfg.input)
     val nInput = docs.count()
 
@@ -473,7 +472,6 @@ object CorpusJob {
             s"${StageStore.contentFingerprint(spark, cfg.embeddingsDir)}|" +
             s"${cfg.salt}") {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(spark)
         val vecs = graft.operators.Similarity.prepared(
           Tables.embeddings(spark, cfg.embeddingsDir)).select("vec_id", "v")
         val cents = graft.operators.Similarity.kmeansFit(vecs, k = 5, rounds = 2)

@@ -282,7 +282,6 @@ object CorpusStream {
     */
   def publish(s: SparkSession, n: StateNames, cfg: CorpusJob.Config,
               snapshotRoot: Option[String] = None): (DataFrame, CorpusJob.TailCounts) = {
-    Bloom.register(s) // no-op when GraftExtensions installed them already
     val wm = watermark(s, n)
     require(wm.hwm.nonEmpty, "publish before any committed ingest epoch")
     val raw = stateTable(s, n, n.raw, wm,

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, AttributeSet, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Expand, Filter, LogicalPlan, Project}
@@ -65,80 +64,50 @@ object PruneExpandBranches extends Rule[LogicalPlan] {
   }
 }
 
-/** Installs graft's extra optimizer rules on a session (idempotent). Also
-  * usable at build time via `SparkSessionExtensions.injectOptimizerRule`.
-  */
-object GraftOptimizations {
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(PruneExpandBranches)) {
-      spark.experimental.extraOptimizations = cur :+ PruneExpandBranches
-    }
-  }
-}
-
-/** Build-time installation of the WHOLE graft surface — optimizer rule plus
-  * every custom function — so a deployment needs only
-  * `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) and no
-  * per-session `register` calls.
+/** The one install path of graft's session surface: the
+  * [[PruneExpandBranches]] optimizer rule (in the operator-optimization
+  * batch) and every graft SQL function, applied when the session is built.
+  * [[graft.Sessions.withGraftConf]] installs it, so every graft main,
+  * [[graft.Graft.session]] and the test harness have it; a session built
+  * elsewhere takes it through
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. Without it, the
+  * graft Column accessors fail at analysis with `UNRESOLVED_ROUTINE`,
+  * which names the function.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  import graft.functions._
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getName, name)
-
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => PruneExpandBranches)
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[graft.functions.CosineSimilarity]),
-      graft.functions.VectorFunctions.cosineBuilder))
-    e.injectFunction((FunctionIdentifier("sq_dist"),
-      info("sq_dist", classOf[graft.functions.SquaredDistance]),
-      graft.functions.DistanceFunctions.sqDistBuilder))
-    e.injectFunction((FunctionIdentifier("bitset_intersect"),
-      info("bitset_intersect", classOf[graft.functions.BitsetIntersectCount]),
-      graft.functions.BitsetFunctions.intersectBuilder))
-    e.injectFunction((FunctionIdentifier("graft_in_set"),
-      info("graft_in_set", classOf[graft.functions.InLiteralSet]),
-      graft.functions.SetMembership.inLiteralSetBuilder))
-    e.injectFunction((FunctionIdentifier("winnow_spans"),
-      info("winnow_spans", classOf[graft.functions.WinnowSpans]),
-      graft.functions.WinnowFunctions.winnowBuilder))
-    e.injectFunction((FunctionIdentifier("cdc_chunks"),
-      info("cdc_chunks", classOf[graft.functions.CdcChunks]),
-      graft.functions.CdcFunctions.cdcBuilder))
-    e.injectFunction((FunctionIdentifier("hll_sketch"),
-      info("hll_sketch", classOf[graft.functions.HllSketchAgg]),
-      graft.functions.Hll.sketchBuilder))
-    e.injectFunction((FunctionIdentifier("hll_union"),
-      info("hll_union", classOf[graft.functions.HllUnionAgg]),
-      graft.functions.Hll.unionBuilder))
-    e.injectFunction((FunctionIdentifier("hll_estimate"),
-      info("hll_estimate", classOf[graft.functions.HllEstimate]),
-      graft.functions.Hll.estimateBuilder))
-    e.injectFunction((FunctionIdentifier("cms_sketch"),
-      info("cms_sketch", classOf[graft.functions.CmsSketchAgg]),
-      graft.functions.Cms.sketchBuilder))
-    e.injectFunction((FunctionIdentifier("cms_merge"),
-      info("cms_merge", classOf[graft.functions.CmsMergeAgg]),
-      graft.functions.Cms.mergeBuilder))
-    e.injectFunction((FunctionIdentifier("cms_query"),
-      info("cms_query", classOf[graft.functions.CmsQuery]),
-      graft.functions.Cms.queryBuilder))
-    e.injectFunction((FunctionIdentifier("bloom_agg"),
-      info("bloom_agg", classOf[graft.functions.BloomAgg]),
-      graft.functions.Bloom.aggBuilder))
-    e.injectFunction((FunctionIdentifier("bloom_merge"),
-      info("bloom_merge", classOf[graft.functions.BloomMergeAgg]),
-      graft.functions.Bloom.mergeBuilder))
-    e.injectFunction((FunctionIdentifier("bloom_contains"),
-      info("bloom_contains", classOf[graft.functions.BloomContains]),
-      graft.functions.Bloom.containsBuilder))
-    e.injectFunction((FunctionIdentifier("topk_min"),
-      info("topk_min", classOf[graft.functions.TopKMinAgg]),
-      graft.functions.TopK.minBuilder))
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("cosine_sim", classOf[CosineSimilarity], VectorFunctions.cosineBuilder),
+      ("sq_dist", classOf[SquaredDistance], DistanceFunctions.sqDistBuilder),
+      ("bitset_intersect", classOf[BitsetIntersectCount], BitsetFunctions.intersectBuilder),
+      ("graft_in_set", classOf[InLiteralSet], SetMembership.inLiteralSetBuilder),
+      ("winnow_spans", classOf[WinnowSpans], WinnowFunctions.winnowBuilder),
+      ("cdc_chunks", classOf[CdcChunks], CdcFunctions.cdcBuilder),
+      ("hilbert_index", classOf[HilbertIndex], Hilbert.indexBuilder),
+      ("topk_min", classOf[TopKMinAgg], TopK.minBuilder),
+      ("hll_sketch", classOf[HllSketchAgg], Hll.sketchBuilder),
+      ("hll_union", classOf[HllUnionAgg], Hll.unionBuilder),
+      ("hll_estimate", classOf[HllEstimate], Hll.estimateBuilder),
+      ("cms_sketch", classOf[CmsSketchAgg], Cms.sketchBuilder),
+      ("cms_merge", classOf[CmsMergeAgg], Cms.mergeBuilder),
+      ("cms_query", classOf[CmsQuery], Cms.queryBuilder),
+      ("bloom_agg", classOf[BloomAgg], Bloom.aggBuilder),
+      ("bloom_merge", classOf[BloomMergeAgg], Bloom.mergeBuilder),
+      ("bloom_contains", classOf[BloomContains], Bloom.containsBuilder),
+      ("kmv_sketch", classOf[KmvSketchAgg], Kmv.sketchBuilder),
+      ("kmv_union", classOf[KmvUnionAgg], Kmv.unionBuilder),
+      ("kmv_estimate", classOf[KmvEstimate], Kmv.estimateBuilder),
+      ("kmv_union_est", classOf[KmvUnionEstimate], Kmv.unionEstBuilder),
+      ("kmv_inter_est", classOf[KmvInterEstimate], Kmv.interEstBuilder),
+      ("kmv_jaccard_micro", classOf[KmvJaccardMicro], Kmv.jaccardBuilder)
+    ).foreach { case (name, clazz, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
   }
 }

@@ -1001,7 +1001,6 @@ object DedupQueries {
     */
   def semantic(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val vecs = Similarity.prepared(Tables.embeddings(s, d)).select(col("vec_id"), col("v"))
     val cents = SimilarityQueries.kmeans5x2(s, d)
     // checkpoint the assignment: both self-join branches read it, and an
@@ -1026,7 +1025,6 @@ object DedupQueries {
     * top-20 by rounded cosine.
     */
   def embeddingPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = Similarity.prepared(Tables.embeddings(s, d))
     val anchors = vecs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("aid"), col("v").as("av"))
@@ -1190,7 +1188,6 @@ object DedupQueries {
     * the full-corpus path enters here via the shared [[tokFrame]].
     */
   private[graft] def winnowToks(toks: DataFrame, spanW: Int, winW: Int): DataFrame = {
-    graft.functions.WinnowFunctions.register(toks.sparkSession)
     toks
       .filter(size(col("toks")) >= spanW)
       .select(col("doc_id"),

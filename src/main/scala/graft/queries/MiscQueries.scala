@@ -256,7 +256,6 @@ object MiscQueries {
     * Cell = top 6 bits ≡ 64 curve segments (the "file" grain audited).
     */
   def layoutHilbert(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Hilbert.register(s)
     Tables.orders(s, d)
       .select(graft.functions.Hilbert.index(
         pmod(col("o_custkey"), lit(4096)).cast("long"),

@@ -19,7 +19,6 @@ object RefQueries {
     * columns.
     */
   def r1(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftOptimizations.install(s)
     melt(Tables.lineitem(s, d),
          Seq("l_orderkey", "l_linenumber"),
          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
@@ -70,7 +69,6 @@ object RefQueries {
     * Output is identical (hash-verified).
     */
   def r5(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftOptimizations.install(s)
     val unpiv = melt(Tables.lineitem(s, d),
                      Seq("l_orderkey", "l_linenumber"),
                      Seq("l_quantity", "l_discount"), "measure", "value")

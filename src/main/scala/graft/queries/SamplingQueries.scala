@@ -336,7 +336,6 @@ object SamplingQueries {
     */
   def diverseSample(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val vecs = graft.operators.Similarity.prepared(Tables.embeddings(s, d))
       .select("vec_id", "v")
     val cents = SimilarityQueries.kmeans5x2(s, d)

@@ -102,7 +102,6 @@ object SimilarityQueries {
   private val residualMemo = Memo.entry[DataFrame]("residualFrame")
   private def residualFrame(s: SparkSession, d: String): DataFrame =
     residualMemo(s, d) {
-      graft.functions.VectorFunctions.register(s)
       val full = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
       val seeds = full.filter(col("vec_id") < lit(ivfK(s, d)))
         .select(col("vec_id").as("sid"), col("v").as("sv"))
@@ -119,7 +118,6 @@ object SimilarityQueries {
 
   /** C13 — brute-force cosine similarity to vector 0, top-10. */
   def c13(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = prepared(Tables.embeddings(s, d))
     val target = vecs.filter(col("vec_id") === 0).select(col("v").as("tv"))
     vecs.crossJoin(broadcast(target))
@@ -130,7 +128,6 @@ object SimilarityQueries {
 
   /** Brute-force k-NN join: top-5 neighbours for each of 10 query vectors. */
   def knn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = prepared(Tables.embeddings(s, d))
     val queries = vecs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -143,7 +140,6 @@ object SimilarityQueries {
     * top-3 per query within its bucket only.
     */
   def lshAnn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val eb = bucketedVecs(s, d)
     val q = eb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("bucket"))
@@ -176,7 +172,6 @@ object SimilarityQueries {
     * engines; the accepted cost of the demonstration path.
     */
   def lshMultiprobe(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val eb = bucketedVecs(s, d)
     val anchors = lshAnchors(prepared(Tables.embeddings(s, d)))
     val q = withProbes(eb.filter(col("vec_id") < 10), anchors, flip = 3)
@@ -200,7 +195,6 @@ object SimilarityQueries {
     * AnnRecallSpec, which pins ≥0.9.
     */
   def lshBanded(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = prepared(Tables.embeddings(s, d))
     val anchors = vecs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("aid"), col("v").as("av"))
@@ -326,7 +320,6 @@ object SimilarityQueries {
     // per vector roughly halves the routing loss of a pure argmax
     // route for ~2× the level-2 work, the same recall/cost knob the
     // query side's nprobe turns)
-    graft.functions.TopK.register(vecs.sparkSession)
     val sKey = {
       val csq0 = round(round(cosineNative(col("v"), col("ssv")), 4)
         * 10000, 0).cast("long")
@@ -366,7 +359,6 @@ object SimilarityQueries {
     * that assignment, materialized).
     */
   def ivfAnn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val assigned = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
     val q = assigned.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("cell"))
@@ -390,7 +382,6 @@ object SimilarityQueries {
     * factored `ivfAnnCtes` with only the query-side rank cut changed.
     */
   def ivfProbe2(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val assigned = s.table(ivfFullState(s, d)).select("vec_id", "cell", "v")
     // the nprobe=2 routing needs fresh seed scoring (the index stores
     // only each vector's TOP-1 cell), but only over the PROBE-sized query
@@ -426,7 +417,6 @@ object SimilarityQueries {
     * is ~3n√k rows vs the flat path's n·k — the whole point of the path.
     */
   def ivfTwoLevel(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = prepared(Tables.embeddings(s, d))
     val k = ivfK(s, d)
     val seeds = vecs.filter(col("vec_id") < lit(k))
@@ -471,7 +461,6 @@ object SimilarityQueries {
     * selectivity). Same deterministic IVF machinery as [[ivfAnn]].
     */
   def ivfFiltered(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val assigned = s.table(ivfFullState(s, d))
       .select("vec_id", "v", "label", "cell")
     val q = assigned.filter(col("vec_id") < 10)
@@ -596,7 +585,6 @@ object SimilarityQueries {
     * `sim_pq_ann`/`sim_ivfpq_ann`.
     */
   def pqRerank(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val vecs = prepared(Tables.embeddings(s, d)).select("vec_id", "v")
     val cbs = pqCbs(s, d)
     val codes = pqCodesFrame(s, d)
@@ -641,7 +629,6 @@ object SimilarityQueries {
     * exactly.
     */
   def ivfPqAnn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cbs = pqCbs(s, d)
     // the index rows: persisted (vec_id, cell, 8 code bytes), pre-bucketed
     val codes = s.table(pqCodesState(s, d))
@@ -676,7 +663,6 @@ object SimilarityQueries {
     * the raw-vector composition.
     */
   def ivfPqResidual(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cbs = pqResCbs(s, d)
     // the index rows: persisted (vec_id, cell, 8 residual-code bytes)
     val codes = s.table(pqResCodesState(s, d))
@@ -805,7 +791,6 @@ object SimilarityQueries {
   private def ivfState(s: SparkSession, d: String): String =
     ivfStateMemo(s, d) {
       val tbl = graft.operators.Layout.stateName("graft_ivf_cells", d)
-      graft.functions.VectorFunctions.register(s)
       val corpus = prepared(Tables.embeddings(s, d))
         .filter(col("vec_id") < embSplit(s, d))
       val seeds = corpus.filter(col("vec_id") < lit(ivfK(s, d)))
@@ -839,7 +824,6 @@ object SimilarityQueries {
   private[graft] def ivfFullState(s: SparkSession, d: String): String =
     ivfFullMemo(s, d) {
       val tbl = graft.operators.Layout.stateName("graft_ivf_full", d)
-      graft.functions.VectorFunctions.register(s)
       val vecs = prepared(Tables.embeddings(s, d))
       val seeds = vecs.filter(col("vec_id") < lit(ivfK(s, d)))
         .select(col("vec_id").as("sid"), col("v").as("sv"))
@@ -899,11 +883,6 @@ object SimilarityQueries {
     */
   private[graft] def ivfProbe(s: SparkSession, d: String,
                               batch: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    // a foreachBatch micro-batch frame belongs to a CLONED session whose
-    // function registry may postdate the outer registration — resolve
-    // cosine_sim against the session that will analyze this plan
-    graft.functions.VectorFunctions.register(batch.sparkSession)
     val corpus = s.table(ivfState(s, d))
     val seeds = prepared(Tables.embeddings(s, d))
       .filter(col("vec_id") < lit(ivfK(s, d)))

@@ -35,7 +35,6 @@ object SketchQueries {
     * fact table.
     */
   def bloomSemiRevenue(s: SparkSession, d: String): DataFrame = {
-    Bloom.register(s)
     val urgent = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey")
@@ -60,7 +59,6 @@ object SketchQueries {
     * false positives.
     */
   def bloomDecontam(s: SparkSession, d: String): DataFrame = {
-    Bloom.register(s)
     val docs = Tables.documents(s, d)
     val blocklist = docs.filter(col("doc_id") % 10 === 0)
       .select(md5(col("text")).as("h"))
@@ -100,7 +98,6 @@ object SketchQueries {
     * every stage.
     */
   def cmsHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    Cms.register(s)
     val t = 5L
     // cost-based plan choice, MEASURED not guessed (the ANALYZE-style
     // stats pass): one cheap (count, approx-distinct) aggregate gives the
@@ -179,7 +176,6 @@ object SketchQueries {
     * the corpus is scanned once.
     */
   def kmvRolling(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Kmv.register(s)
     // NOTE (r13): a spread-before-hash + hash-distributed checkpoint was
     // tried here and REVERTED on measurement (1.19 → 1.59 s A/B at equal
     // box state): the day-grain consumers are tiny, so the extra exchange
@@ -217,7 +213,6 @@ object SketchQueries {
     * partition, 8·K bytes each, shuffle carries sketches not user-days).
     */
   def kmvUsers(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Kmv.register(s)
     val ev = Tables.events(s, d)
     val key = concat_ws(":", col("user_id").cast("string"),
       to_date(col("ts")).cast("string"))
@@ -244,7 +239,6 @@ object SketchQueries {
     * frame so the oracle pins both paths.
     */
   def kmvOverlap(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Kmv.register(s)
     val k = KmvOverlapK
     val ev = Tables.events(s, d)
     val hv = graft.operators.Sampling.hash60(col("user_id"), "kmvo")

@@ -249,7 +249,6 @@ object TextQueries {
     // is identical — (score desc, token asc) realized as
     // struct(-score, token) ascending; scores are tf·ln(N/df) ≥ 0, so
     // negation is an exact order flip with no NaN.
-    graft.functions.TopK.register(s)
     scored
       .groupBy("doc_id")
       .agg(graft.functions.TopK.minK(

@@ -85,7 +85,6 @@ class AggStateSpec extends SparkSpec {
     // appended like any monoid partial; the merged read's union estimate
     // must equal the one-shot sketch over all orders (HllSpec pins
     // union == one-shot register-exact, so estimates are bit-equal)
-    graft.functions.Hll.register(spark)
     val n = name("aggspec_hll")
     def partials(df: DataFrame) =
       df.groupBy("o_orderstatus")

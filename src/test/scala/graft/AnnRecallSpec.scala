@@ -13,7 +13,6 @@ class AnnRecallSpec extends SparkSpec {
   import spark.implicits._
 
   private def truth(): Map[Long, Set[Long]] = {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
     val queries = vecs.filter($"vec_id" < 10)
       .select($"vec_id".as("qid"), $"v".as("qv"))
@@ -66,7 +65,6 @@ class AnnRecallSpec extends SparkSpec {
 
   test("PQ ADC recall floor; exact rerank of the ADC shortlist recovers recall") {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
       .select($"vec_id", $"v")
     val queries = vecs.filter($"vec_id" < 10).select($"vec_id".as("qid"), $"v".as("qv"))
@@ -105,7 +103,6 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("IVF-PQ composed ANN: recall@5 floor vs brute force") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
       .select($"vec_id", $"v")
     val queries = vecs.filter($"vec_id" < 10).select($"vec_id".as("qid"), $"v".as("qv"))
@@ -128,7 +125,6 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("residual-encoded IVF-PQ: recall@5 at least matches raw-vector IVF-PQ") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
       .select($"vec_id", $"v")
     val queries = vecs.filter($"vec_id" < 10).select($"vec_id".as("qid"), $"v".as("qv"))
@@ -154,7 +150,6 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("banded LSH still prunes: candidate pairs below the 10x-corpus cross join") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
     val n = vecs.count()
     val anchors = vecs.filter($"vec_id" < 8)
@@ -171,7 +166,6 @@ class AnnRecallSpec extends SparkSpec {
 
   test("multi-probe still prunes: probed candidates well below 10x corpus") {
     import graft.queries.SimilarityQueries
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
     val n = vecs.count()
     val anchors = vecs.filter($"vec_id" < 8)
@@ -185,7 +179,6 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("bucketing actually prunes: per-query candidates well below the corpus") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf("sf0.01")))
     val n = vecs.count()
     val anchors = vecs.filter($"vec_id" < 8)

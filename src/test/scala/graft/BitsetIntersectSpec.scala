@@ -16,7 +16,6 @@ class BitsetIntersectSpec extends SparkSpec {
       .stripMargin)
 
   test("native merge-intersect equals the HOF fold on real dedup masks") {
-    BitsetFunctions.register(spark)
     import graft.operators.Dedup
     val toks = Dedup.distinctTokenRows(Tables.documents(spark, sf()), "doc_id", "text")
     // rebuild the masks exactly as jaccardVerifyBitset does (sorted keys)
@@ -38,7 +37,6 @@ class BitsetIntersectSpec extends SparkSpec {
   }
 
   test("null value slots match the fold exactly") {
-    BitsetFunctions.register(spark)
     // fold semantics: every LEFT value is read (null poisons the sum to
     // NULL); RIGHT values go through coalesce(b[k], 0), so a null right
     // slot — shared key or not — contributes 0 bits, never NULL
@@ -59,7 +57,6 @@ class BitsetIntersectSpec extends SparkSpec {
   }
 
   test("edge cases: disjoint, identical, empty maps, and codegen execution") {
-    BitsetFunctions.register(spark)
     val df = Seq(
       (Map(0L -> 5L, 2L -> 255L), Map(0L -> 3L, 2L -> 15L), 5L),   // (101&011)=1 bit + 4 bits
       (Map(0L -> 1L), Map(1L -> 1L), 0L),                          // disjoint words

@@ -13,7 +13,6 @@ class BloomSpec extends SparkSpec {
   import spark.implicits._
 
   test("no false negatives: every inserted key probes true") {
-    Bloom.register(spark)
     val keys = Tables.documents(spark, sf("sf0.01"))
       .select(md5($"text").as("h"))
     val filt = keys.agg(Bloom.agg($"h").as("f"))
@@ -24,7 +23,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("false-positive rate stays within 3x the analytic envelope") {
-    Bloom.register(spark)
     val n = 200
     val bits = 2048
     val hashes = 7
@@ -44,7 +42,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("merge of per-lang filters is byte-identical to the one-shot filter") {
-    Bloom.register(spark)
     val docs = Tables.documents(spark, sf("sf0.01"))
       .select($"lang", md5($"text").as("h"))
     val perLang = docs.groupBy("lang").agg(Bloom.agg($"h").as("f"))
@@ -56,7 +53,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("filter bytes are self-describing and shape-checked") {
-    Bloom.register(spark)
     val bytes = spark.range(100).agg(Bloom.agg($"id", 256, 3).as("f"))
       .select($"f").as[Array[Byte]].head()
     val (nb, nh, tc, words) = BloomFilterBits.deserialize(bytes)
@@ -73,7 +69,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("cross-class probe and cross-class merge fail loudly, never silently miss") {
-    Bloom.register(spark)
     // filter built over STRING keys, probed with a BIGINT: the hash domains
     // differ, so a silent probe would false-negative — must throw instead
     val err = intercept[Exception] {
@@ -100,10 +95,7 @@ class BloomSpec extends SparkSpec {
     }
   }
 
-  test("bloom SQL surface after register()") {
-    // build-time extensions injection is covered by GraftExtensionsSpec;
-    // this pins the per-session register() path on the shared session
-    Bloom.register(spark)
+  test("bloom SQL surface on a graft session") {
     val row = spark.sql(
       """SELECT bloom_contains(f, CAST(7 AS BIGINT)) AS hit,
         |       bloom_contains(f, CAST(999 AS BIGINT)) AS miss
@@ -115,7 +107,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("decontaminate equals the plain anti-join on randomized key sets") {
-    Bloom.register(spark)
     // a TINY filter (64 bits) over 300 blocklisted keys forces a high
     // false-positive rate, so the exact anti-join leg does real work —
     // exactness must hold regardless of how bad the filter is
@@ -133,7 +124,6 @@ class BloomSpec extends SparkSpec {
   }
 
   test("prefiltered semi-join is row-identical to the plain semi-join") {
-    Bloom.register(spark)
     val d = sf("sf0.01")
     val viaBloom = queries.SketchQueries.bloomSemiRevenue(spark, d).collect()
     val urgent = Tables.orders(spark, d)

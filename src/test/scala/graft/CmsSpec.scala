@@ -16,7 +16,6 @@ class CmsSpec extends SparkSpec {
     .select(explode(split($"text", " ")).as("tok")).filter($"tok" =!= "")
 
   test("every point estimate is an upper bound within the error envelope") {
-    Cms.register(spark)
     val toks = tokenRows
     val n = toks.count()
     val sketch = toks.agg(Cms.sketch($"tok").as("sk"))
@@ -35,7 +34,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("heavy hitters rank correctly through the sketch") {
-    Cms.register(spark)
     val toks = tokenRows
     val sketch = toks.agg(Cms.sketch($"tok").as("sk"))
     val top = toks.groupBy("tok").agg(count(lit(1)).as("n"))
@@ -50,7 +48,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("merge of per-lang sketches is byte-identical to the one-shot sketch") {
-    Cms.register(spark)
     val docs = Tables.documents(spark, sf("sf0.01"))
       .select($"lang", explode(split($"text", " ")).as("tok")).filter($"tok" =!= "")
     val perLang = docs.groupBy("lang").agg(Cms.sketch($"tok").as("sk"))
@@ -62,7 +59,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("sketch bytes are self-describing and shape-checked") {
-    Cms.register(spark)
     val sk = spark.range(100).agg(Cms.sketch($"id", 3, 64).as("sk"))
       .select($"sk").as[Array[Byte]].head()
     val (d, w, buf) = graft.functions.CmsSketch.deserialize(sk)
@@ -82,7 +78,6 @@ class CmsSpec extends SparkSpec {
     // slice is actually thin (the 100 TB point of the pattern): with
     // width >> distinct keys, collision noise stays below the threshold
     // for most singletons.
-    Cms.register(spark)
     val sh = Tables.documents(spark, sf("sf0.01"))
       .select($"doc_id", graft.operators.TextAnalysis.tokens($"text").as("toks"))
       .select(explode(graft.operators.Dedup.ngramShingles($"toks", 3)).as("shingle"))
@@ -106,7 +101,6 @@ class CmsSpec extends SparkSpec {
     // one CmsQuery instance probed with TWO different Literal sketches in
     // alternation must re-decode on each switch — a stale cache would
     // silently answer from the wrong sketch's counters
-    Cms.register(spark)
     val skA = spark.range(100).agg(Cms.sketch($"id", 3, 64).as("sk"))
       .select($"sk").as[Array[Byte]].head()
     val skB = spark.range(1).agg(Cms.sketch($"id", 3, 64).as("sk"))
@@ -122,10 +116,7 @@ class CmsSpec extends SparkSpec {
       "odd ids probe the 1-element sketch and must miss")
   }
 
-  test("cms SQL surface after register()") {
-    // build-time extensions injection is covered by GraftExtensionsSpec;
-    // this pins the per-session register() path on the shared session
-    Cms.register(spark)
+  test("cms SQL surface on a graft session") {
     val est = spark.sql(
       """SELECT cms_query(cms_sketch(id, 5, 2048), CAST(7 AS BIGINT)) AS n
         |FROM range(0, 50)""".stripMargin).as[Long].head()
@@ -133,7 +124,6 @@ class CmsSpec extends SparkSpec {
   }
 
   test("a constant sketch rides as a ConstBytes payload: bounded print, content equality") {
-    Cms.register(spark)
     val sk = spark.range(100).agg(Cms.sketch($"id", 3, 64).as("sk"))
       .select($"sk").as[Array[Byte]].head()
     val viaConst = spark.range(10).select($"id", Cms.query(lit(sk), $"id").as("est"))

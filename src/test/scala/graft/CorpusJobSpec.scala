@@ -111,7 +111,6 @@ class CorpusJobSpec extends SparkSpec {
       diversePerCell = cap, embeddingsDir = cfg.input))
     assert(f.diverseKept < f.mixKept, "the cap must bite on the fixture")
     // recompute the deterministic cells and verify the per-cell bound
-    graft.functions.VectorFunctions.register(spark)
     val vecs = graft.operators.Similarity.prepared(
       Tables.embeddings(spark, cfg.input)).select("vec_id", "v")
     val cents = graft.operators.Similarity.kmeansFit(vecs, k = 5, rounds = 2)

@@ -12,7 +12,6 @@ class CosineSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("native cosine is bit-identical to the composed fold on real embeddings") {
-    VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf()))
     val target = vecs.filter($"vec_id" === 3).select($"v".as("tv"))
     val both = vecs.crossJoin(broadcast(target)).select(
@@ -23,7 +22,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("native cosine nulls on unequal lengths, like the zip_with fold") {
-    VectorFunctions.register(spark)
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0))).toDF("a", "b")
     val row = df.select(Similarity.cosineNative($"a", $"b").as("n"),
                         Similarity.cosine($"a", $"b").as("f")).head()
@@ -31,7 +29,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("native cosine nulls on a null array element, like the fold") {
-    VectorFunctions.register(spark)
     val df = Seq(
       (Seq[Option[Double]](Some(1.0), None, Some(3.0)),
        Seq[Option[Double]](Some(4.0), Some(5.0), Some(6.0))),
@@ -44,7 +41,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("type mismatch fails analysis with a named error") {
-    VectorFunctions.register(spark)
     val df = Seq((1, 2)).toDF("a", "b")
     val e = intercept[Exception] {
       df.select(VectorFunctions.cosineSim($"a", $"b")).collect()
@@ -53,7 +49,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("codegen path actually compiles (no fallback to interpreted)") {
-    VectorFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf())).limit(10)
     val df = vecs.crossJoin(broadcast(vecs.select($"v".as("tv"))))
       .select(Similarity.cosineNative($"v", $"tv").as("c"))

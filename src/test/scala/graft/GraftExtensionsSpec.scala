@@ -4,9 +4,9 @@ import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Build-time installation path: one `withExtensions(new GraftExtensions)`
+/** The one install path: `withExtensions(new GraftExtensions)` alone
   * must provide the whole graft surface — optimizer rule + every custom
-  * function — with zero per-session register calls.
+  * function the `graft.functions` accessors call.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -24,7 +24,15 @@ class GraftExtensionsSpec extends SparkSpec {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s2 ne base) // a genuinely new session, same SparkContext
-      // every custom function resolves in plain SQL, no register() calls
+      // every name a graft.functions accessor passes to call_function
+      val names = Seq("cosine_sim", "sq_dist", "bitset_intersect",
+        "graft_in_set", "winnow_spans", "cdc_chunks", "hilbert_index",
+        "topk_min", "hll_sketch", "hll_union", "hll_estimate", "cms_sketch",
+        "cms_merge", "cms_query", "bloom_agg", "bloom_merge",
+        "bloom_contains", "kmv_sketch", "kmv_union", "kmv_estimate",
+        "kmv_union_est", "kmv_inter_est", "kmv_jaccard_micro")
+      assert(names.filterNot(s2.catalog.functionExists) === Nil)
+      // every custom function resolves in plain SQL
       val row = s2.sql(
         """SELECT
           |  cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS cs,
@@ -50,6 +58,12 @@ class GraftExtensionsSpec extends SparkSpec {
           |      FROM VALUES (1L), (2L), (2L) AS t(x) GROUP BY x % 2)""".stripMargin).head()
       assert(bloomed.getBoolean(0) === true)
       assert(bloomed.getBoolean(1) === false)
+      // the KMV family and the Hilbert index resolve too
+      val kmvEst = s2.sql("""SELECT kmv_estimate(kmv_sketch(x, 8), 8)
+          |FROM VALUES (1L), (2L), (2L) AS t(x)""".stripMargin).head()
+      assert(kmvEst.getLong(0) === 2L)
+      val hilbert = s2.sql("SELECT hilbert_index(5L, 9L, 16)").head()
+      assert(hilbert.getLong(0) === graft.functions.HilbertOps.hilbert(5L, 9L, 16))
       // the optimizer rule is active at build time: a constant-false unpivot
       // branch is pruned from Expand
       import s2.implicits._
@@ -63,10 +77,20 @@ class GraftExtensionsSpec extends SparkSpec {
       // pruned branch's column must be gone from its projections
       assert(expandLine.isDefined, df.queryExecution.optimizedPlan.treeString)
       assert(!expandLine.get.contains("b#"), expandLine.get)
+      // a session built without the extension fails at analysis, naming
+      // the function
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      val bare = SparkSession.builder().master("local[4]").getOrCreate()
+      assert((bare ne base) && (bare ne s2))
+      val err = intercept[org.apache.spark.sql.AnalysisException](
+        bare.range(1).select(graft.functions.Kmv.sketch(col("id"))).collect())
+      assert(err.getCondition === "UNRESOLVED_ROUTINE", err.getMessage)
+      assert(err.getMessage.contains("kmv_sketch"), err.getMessage)
     } finally {
       SparkSession.setActiveSession(base)
       SparkSession.setDefaultSession(base)
-      // do NOT stop s2 — it shares the one SparkContext with every suite
+      // stop no session built here: they share the one SparkContext
     }
   }
 }

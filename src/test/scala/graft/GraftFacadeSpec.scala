@@ -114,7 +114,6 @@ class GraftFacadeSpec extends SparkSpec {
   }
 
   test("graft_in_set matches isin and keeps its string form bounded") {
-    graft.functions.SetMembership.register(spark)
     val keys = (0L until 5000L).filter(_ % 3 == 0)
     val df = spark.range(0, 10000).select($"id")
     val viaSet = df.filter(graft.functions.SetMembership.inLiteralSet(

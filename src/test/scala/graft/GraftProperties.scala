@@ -261,7 +261,6 @@ object GraftAlgoProperties extends Properties("graft.algo") {
       groups <- Gen.chooseNum(1, 7)
     } yield (n, groups)) { case (n, groups) =>
       import spark.implicits._
-      graft.functions.Hll.register(spark)
       val df = (0 until n).map(i => (i.toLong % 97, i % groups)).toDF("x", "g")
       val unioned = df.groupBy("g")
         .agg(graft.functions.Hll.sketch(col("x"), 8).as("sk"))
@@ -280,7 +279,6 @@ object GraftAlgoProperties extends Properties("graft.algo") {
     } yield (xs, parts)) { case (xs, parts) =>
       import spark.implicits._
       import graft.functions.Cms
-      Cms.register(spark)
       val df = xs.zipWithIndex.map { case (x, i) => (x, i % parts) }.toDF("x", "g")
       val oneShot = df.agg(Cms.sketch($"x", 4, 32).as("sk"))
         .select($"sk").as[Array[Byte]].head()

@@ -14,7 +14,6 @@ class HllSpec extends SparkSpec {
   private val rsd = 1.04 / math.sqrt(1 << Hll.DefaultPrecision) // ~1.6% at p=12
 
   test("estimate tracks exact distinct counts within 3*rsd at sf0.1") {
-    Hll.register(spark)
     val ev = Tables.events(spark, sf("sf0.1"))
     val exactUsers = ev.select(countDistinct("user_id")).as[Long].head()
     val approxUsers = ev.select(Hll.approxCountDistinct($"user_id")).as[Long].head()
@@ -29,14 +28,12 @@ class HllSpec extends SparkSpec {
   }
 
   test("linear-counting regime is near-exact for small cardinalities") {
-    Hll.register(spark)
     val n = 50L
     val est = spark.range(n).select(Hll.approxCountDistinct($"id")).as[Long].head()
     assert(math.abs(est - n) <= 1, s"est=$est")
   }
 
   test("union of per-day sketches has EXACTLY the registers of the global sketch") {
-    Hll.register(spark)
     val ev = Tables.events(spark, sf("sf0.01")).withColumn("day", to_date($"ts"))
     // per-day partial sketches (what a pipeline would store) ...
     val daily = ev.groupBy("day").agg(Hll.sketch($"user_id").as("sk"))
@@ -51,7 +48,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("sketches survive SQL, nulls are ignored, precisions can't mix") {
-    Hll.register(spark)
     Seq(Some("a"), Some("b"), None, Some("a")).toDF("x").createOrReplaceTempView("hll_t")
     val est = spark.sql("SELECT hll_estimate(hll_sketch(x)) FROM hll_t").as[Long].head()
     assert(est === 2L) // null contributes nothing; duplicate collapses

@@ -37,7 +37,6 @@ class IvfTwoLevelSpec extends SparkSpec {
       .select(col("vec_id").as("sid"), col("v").as("sv"))
 
   private def assign(vecs: DataFrame, k: Long): Map[Long, Long] = {
-    graft.functions.VectorFunctions.register(spark)
     SimilarityQueries
       .ivfAssign(vecs.select("vec_id", "v"), seedsOf(vecs, k), "vec_id", k)
       .select($"vec_id", $"cell").as[(Long, Long)].collect().toMap
@@ -80,7 +79,6 @@ class IvfTwoLevelSpec extends SparkSpec {
   }
 
   test("live embeddings: full coverage, deterministic, agreement floor") {
-    graft.functions.VectorFunctions.register(spark)
     val vecs = graft.operators.Similarity
       .prepared(Tables.embeddings(spark, sf())).select("vec_id", "v")
     val k = SimilarityQueries.ivfK(spark, sf())
@@ -106,7 +104,6 @@ class IvfTwoLevelSpec extends SparkSpec {
     // recall@3 vs brute force, so pin that directly: the two-level index
     // must hold the same kind of floor AnnRecallSpec pins for the exact
     // path, and sit within a modest band of the exact path's own recall.
-    graft.functions.VectorFunctions.register(spark)
     val vecs = graft.operators.Similarity
       .prepared(Tables.embeddings(spark, sf()))
     val queries = vecs.filter($"vec_id" < 10)

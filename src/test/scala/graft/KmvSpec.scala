@@ -29,7 +29,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("union of per-day sketches is byte-identical to the one-shot sketch") {
-    Kmv.register(spark)
     val ev = Tables.events(spark, sf("sf0.01"))
       .select(to_date($"ts").as("day"),
         Sampling.hash60($"user_id", "kmvspec").as("hv"))
@@ -43,7 +42,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("estimate tracks exact distinct within 3/sqrt(k-2) at sf0.1") {
-    Kmv.register(spark)
     val k = 256
     val rse = 1.0 / math.sqrt(k - 2.0)
     val ev = Tables.events(spark, sf("sf0.1"))
@@ -57,7 +55,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("set algebra: union/intersection/jaccard estimates within bound") {
-    Kmv.register(spark)
     val k = 256
     val rse = 1.0 / math.sqrt(k - 2.0)
     // two overlapping ranges: |A|=3000, |B|=3000, |A∩B|=1000
@@ -86,7 +83,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("sketches survive SQL; nulls ignored; bounded size") {
-    Kmv.register(spark)
     Seq(Some(5L), Some(7L), None, Some(5L)).toDF("hv")
       .createOrReplaceTempView("kmv_t")
     val est = spark.sql("SELECT kmv_estimate(kmv_sketch(hv, 8), 8) FROM kmv_t")

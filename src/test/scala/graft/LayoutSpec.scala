@@ -82,7 +82,6 @@ class LayoutSpec extends SparkSpec {
         s"jump between d=$d1 ($x1,$y1) and d=$d2 ($x2,$y2)")
     }
     // the codegen'd expression agrees with the JVM reference on a fuzz set
-    Hilbert.register(spark)
     val rnd = new scala.util.Random(42)
     val fuzz = Seq.fill(2000)((rnd.nextInt(1 << Hilbert.Bits).toLong,
                                rnd.nextInt(1 << Hilbert.Bits).toLong))

@@ -93,7 +93,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("PruneExpandBranches never fires on non-literal or surviving branches") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftOptimizations.install(spark)
     import spark.implicits._
     val df = Seq((1, 10.0, 20.0)).toDF("id", "a", "b")
       .unpivot(Array(col("id")), Array(col("a"), col("b")), "m", "v")
@@ -104,7 +103,6 @@ class PlanAuditSpec extends SparkSpec {
 
   test("PruneExpandBranches tolerates unevaluable conjuncts (scalar subquery)") {
     import org.apache.spark.sql.functions._
-    graft.plans.GraftOptimizations.install(spark)
     import spark.implicits._
     Seq((1, 10.0, 20.0)).toDF("id", "a", "b")
       .unpivot(Array(col("id")), Array(col("a"), col("b")), "m", "v")
@@ -255,6 +253,13 @@ class PlanAuditSpec extends SparkSpec {
       docs.filter(col("doc_id") % 10 =!= 0), md5(col("text")),
       docs.filter(col("doc_id") % 10 === 0).select(md5(col("text")).as("h"))),
       BloomPayload)
+  }
+
+  test("sim_lsh_multiprobe: the anchor vectors never print in the plan") {
+    // measured when the anchors were inlined literals and a pushed filter
+    // repeated the margins under each of the 12 flipped-bit probes:
+    // 567,578 chars at sf0.01
+    assertBoundedPlan(SimilarityQueries.lshMultiprobe(spark, sf()), "explode(probes")
   }
 
   test("sim_quant_int8 is a pure map stage: no hash exchange at all") {

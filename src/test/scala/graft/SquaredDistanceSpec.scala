@@ -18,7 +18,6 @@ class SquaredDistanceSpec extends SparkSpec {
       lit(0.0), (acc, x) => acc + x)
 
   test("native sq_dist is bit-identical to the fold on real embeddings") {
-    DistanceFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf()))
     val target = vecs.filter($"vec_id" === 3).select($"v".as("tv"))
     val both = vecs.crossJoin(broadcast(target)).select(
@@ -28,7 +27,6 @@ class SquaredDistanceSpec extends SparkSpec {
   }
 
   test("native sq_dist nulls on unequal lengths and null elements, like the fold") {
-    DistanceFunctions.register(spark)
     val lens = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0))).toDF("a", "b")
       .select(DistanceFunctions.sqDist($"a", $"b").as("n"),
               foldSqDist($"a", $"b").as("f")).head()
@@ -43,7 +41,6 @@ class SquaredDistanceSpec extends SparkSpec {
   }
 
   test("codegen path actually compiles (no fallback to interpreted)") {
-    DistanceFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf())).limit(10)
     val df = vecs.crossJoin(broadcast(vecs.select($"v".as("tv"))))
       .select(DistanceFunctions.sqDist($"v", $"tv").as("d"))
@@ -55,7 +52,6 @@ class SquaredDistanceSpec extends SparkSpec {
   test("kmeans assignment hashes are unchanged by the native swap") {
     // belt-and-braces on top of bit-parity: the full assignment frame for
     // the seed centroids equals the fold-built equivalent row-for-row
-    DistanceFunctions.register(spark)
     val vecs = Similarity.prepared(Tables.embeddings(spark, sf()))
       .select($"vec_id", $"v")
     val cents = Similarity.kmeansFit(vecs, k = 5, rounds = 1)

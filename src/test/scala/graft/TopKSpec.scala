@@ -14,7 +14,6 @@ class TopKSpec extends SparkSpec {
     slice(array_sort(collect_list(c)), 1, k)
 
   test("matches the collect_list reference on struct values, across partitions and ties") {
-    TopK.register(spark)
     // duplicate sort keys (score ties), negative scores, many partitions so
     // partial aggregation + merge paths both run
     val rows = for {
@@ -29,7 +28,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("k larger than the group returns the whole group sorted; nulls skipped") {
-    TopK.register(spark)
     val df = Seq((1L, Some(3)), (1L, None), (1L, Some(1)), (2L, Some(9)))
       .toDF("g", "v").repartition(3)
     val got = df.groupBy("g")
@@ -40,7 +38,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("SQL surface and serialization round-trip under a wide shuffle") {
-    TopK.register(spark)
     spark.range(0, 1000).selectExpr("id % 4 as g", "id as v")
       .repartition(16).createOrReplaceTempView("graft_topk_t")
     val got = spark.sql(
