@@ -47,9 +47,21 @@ import org.apache.spark.sql.functions._
   */
 object Classifier {
 
+  /** Labeled hashed-unigram [[milliFeatures]] of a (doc_id, source, text)
+    * frame: y = 1 for source `target`, tokens hashed into `buckets`.
+    * Lazy; a training caller materializes it ([[Materialize.frame]]).
+    */
+  def features(docs: DataFrame, target: String, buckets: Int): DataFrame =
+    milliFeatures(docs
+      .select(col("doc_id"),
+        when(col("source") === target, lit(1L)).otherwise(lit(0L)).as("y"),
+        explode(TextAnalysis.tokens(col("text"))).as("token"))
+      .select(col("doc_id"), col("y"),
+        pmod(TextAnalysis.tokenHash(col("token")), lit(buckets.toLong)).as("bucket"))
+      .groupBy("doc_id", "y", "bucket").agg(count(lit(1)).as("tf")))
+
   /** Doc-normalized integer milli-features off (doc_id, y, bucket, tf):
-    * xm = (tf·1000) div n_toks. Callers should localCheckpoint the
-    * result — it is consumed every training round.
+    * xm = (tf·1000) div n_toks.
     */
   def milliFeatures(db: DataFrame): DataFrame =
     db.withColumn("xm",

@@ -66,7 +66,7 @@ object Dedup {
                     md5(concat_ws(" ", slice(col("toks"), i, lit(w)))).as("span_md5"))))
         .as("sp"))
       .select(col(idCol), col("sp.start"), col("sp.span_md5"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val dup = wins.groupBy("span_md5")
       .agg(countDistinct(idCol).as("nd"))
       .filter(col("nd") >= 2)
@@ -444,47 +444,23 @@ object Dedup {
       .groupBy(col("__n")).agg(min(col("__nb")).as("__mn"))
       .select(col("__n").as("__mid"), least(col("__n"), col("__mn")).as("__mv"))
 
-  /** Eager localCheckpoint that COUNTS rows satisfying `flag` via an
-    * accumulator riding the materialization job itself — fusing the
-    * "produce the next frame" and "probe its state" actions that
-    * [[connectedComponents]] previously ran as TWO blocking jobs per
-    * iteration into one. On a real cluster every blocking job on the CC
-    * critical path is a full job-submission round-trip, and the iteration
-    * count is what it is — halving the jobs halves the serial latency.
-    *
-    * The count is exact for the == 0 test even under task retries:
-    * accumulator updates from re-run tasks can only ADD increments, and
-    * only rows with `flag` true increment — a truly flag-free frame always
-    * reports 0, and a non-zero report only ever errs toward one more
-    * (harmless) iteration. Returns (checkpointed frame projected to
-    * `keep`, flagged-row count).
-    */
-  private[graft] def checkpointCounting(df: DataFrame, flag: Column,
-                                        keep: Seq[String]): (DataFrame, Long) = {
-    val acc = df.sparkSession.sparkContext.longAccumulator("graft.cc.flagged")
-    // the side-effecting probe must survive optimization: nondeterministic
-    // stops Catalyst from folding, pruning, or re-evaluating it, and the
-    // checkpoint materializes every output column exactly once per row
-    val tick = udf { c: Boolean => if (c) acc.add(1L); true }.asNondeterministic()
-    // Materialize.frame: eager localCheckpoint by default, reliable
-    // checkpoint under spark.graft.checkpoint.dir (cluster posture — see
-    // that object's accumulator note for why the count stays zero-exact)
-    val ck = Materialize.frame(
-      df.withColumn("__probe", tick(coalesce(flag, lit(false)))))
-    (ck.select(keep.map(col): _*), acc.value)
-  }
-
   def connectedComponents(pairs: DataFrame, nodes: DataFrame, idCol: String,
                           maxIter: Int = 20): DataFrame = {
     // materialize the (expensive, LSH+jaccard-derived) pair list once, as
     // an UNDIRECTED edge list — symmetrizing it would double what every
     // checkpoint stores and every remap join carries; instead each round's
     // neighbour-min unions the two directed projections lazily (same
-    // shuffle volume into the groupBy, half the materialized bytes)
-    val (g0, e0) = checkpointCounting(
+    // shuffle volume into the groupBy, half the materialized bytes).
+    // Each blocking job below materializes a frame with its flagged-row
+    // count observed on that same job: the loop's probes cost no
+    // submission round-trip of their own
+    def counted(df: DataFrame, flag: Column): (DataFrame, Long) = {
+      val (ck, m) = Materialize.observed(df, count_if(flag).as("__n"))
+      (ck, m("__n").asInstanceOf[Long])
+    }
+    val (g0, e0) = counted(
       pairs.select(col("a").as("src"), col("b").as("dst"))
-        .filter(col("src") =!= col("dst")),
-      lit(true), Seq("src", "dst"))
+        .filter(col("src") =!= col("dst")), lit(true))
     var g = g0
     // Hybrid finish (r13, guide §2.6): the contracted edge set shrinks
     // geometrically, and once it fits one task's memory the remaining
@@ -525,7 +501,7 @@ object Dedup {
         // like a per-round relabel (roots coalesce to themselves). The
         // per-partition forest pre-pass pays off only when the funneled
         // edge set is big enough to dominate the extra stage — ne is the
-        // MEASURED count riding the checkpoint accumulators, so the gate
+        // MEASURED count riding the checkpoint jobs, so the gate
         // costs nothing (r13: mm_phash_clusters' ~25k-edge graph lost
         // 0.1-0.2 s to an always-on pre-pass; dedup_clusters' ~4M-edge
         // one gains ~1.8 s from it).
@@ -563,11 +539,10 @@ object Dedup {
         // the second pass is exact). Each iteration of this loop is now
         // exactly ONE blocking job jumping depth by 4x — round 5 paid two
         // (checkpoint, then a separate .head() probe)
-        val (m2, nChanged) = checkpointCounting(
-          squared(squared(m).select("__mid", "__mv")),
-          col("__chg"), Seq("__mid", "__mv"))
+        val (m2, nChanged) = counted(
+          squared(squared(m).select("__mid", "__mv")), col("__chg"))
         mStable = nChanged == 0L
-        m = m2
+        m = m2.select("__mid", "__mv")
         j += 1
       }
       // relabel LAZILY against the checkpointed m (no job — see the labels
@@ -579,7 +554,7 @@ object Dedup {
       labels = prevLabels
         .join(m, prevLabels("comp") === m("__mid"), "left_outer")
         .select(col("id"), coalesce(col("__mv"), col("comp")).as("comp"))
-      val (g2, nEdges) = checkpointCounting(
+      val (g2, nEdges) = counted(
         g.join(m.select(col("__mid").as("__sid"), col("__mv").as("__sv")),
                col("src") === col("__sid"))
           .join(m.select(col("__mid").as("__did"), col("__mv").as("__dv")),
@@ -587,8 +562,7 @@ object Dedup {
           .select(least(col("__sv"), col("__dv")).as("src"),
                   greatest(col("__sv"), col("__dv")).as("dst"))
           .filter(col("src") =!= col("dst"))
-          .distinct(),
-        lit(true), Seq("src", "dst"))
+          .distinct(), lit(true))
       g = g2
       ne = nEdges
       done = nEdges == 0L

@@ -52,7 +52,7 @@ object DedupState {
             k: Int, r: Int, n: Names, buckets: Int): Unit = {
     // the token rows feed BOTH writes (band derivation + their own table);
     // checkpoint so the corpus tokenize runs once in this setup step
-    val toks = Dedup.distinctTokenRows(corpus, idCol, textCol).localCheckpoint(true)
+    val toks = Dedup.distinctTokenRows(corpus, idCol, textCol).transform(Materialize.frame)
     val bands = Dedup.minhashBands(
       Dedup.minhashSignatures(toks, idCol, k), idCol, k, r)
     Layout.writeBucketed(Dedup.longBands(bands, idCol, k / r), "band_key", n.bands, buckets)
@@ -116,7 +116,7 @@ object DedupState {
     * `standing`, CC the batch-sized contracted graph, and return the full
     * updated assignment — standing rows relabeled through the bounded
     * comp→comp map, batch rows appended. The result is EAGERLY
-    * materialized (localCheckpoint) so callers can overwrite the table or
+    * materialized ([[Materialize.frame]]) so callers can overwrite the table or
     * state it was derived from.
     */
   def mergedComps(s: SparkSession, idCol: String, batchIds: DataFrame,

@@ -1,45 +1,43 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** The lineage-truncation primitive for ITERATIVE operators (the CC
-  * star-contraction loop, the PageRank supersteps): each round must
-  * materialize its frame so round k never re-executes rounds 1..k−1 — but
-  * HOW it materializes is a deployment-posture choice.
+/** The one eager-materialization primitive: every frame `src/main`
+  * materializes with truncated lineage goes through [[frame]] (or
+  * [[observed]], [[shared]]) — iterative rounds (the CC star
+  * contraction, PageRank supersteps), memoized corpus state, multi-reader
+  * intermediates and pipeline stage outputs alike. HOW it materializes is
+  * the session's one durability posture, [[DirKey]]:
   *
-  *  - **Default (`spark.graft.checkpoint.dir` unset): eager
-  *    `localCheckpoint`.** Blocks live in executor storage
-  *    (MEMORY_AND_DISK, unreplicated) with lineage TRUNCATED — free on
-  *    local[*] and the fastest option on a healthy cluster, but an
-  *    executor loss mid-loop is fatal: the blocks are gone and there is no
-  *    lineage to recompute them.
-  *  - **Reliable mode (`spark.graft.checkpoint.dir=<fault-tolerant path>`):
-  *    persist → reliable `checkpoint()` → unpersist.** Rounds are written
+  *  - **Default (unset): eager `localCheckpoint`.** Blocks live in
+  *    executor storage (MEMORY_AND_DISK, unreplicated) with lineage
+  *    TRUNCATED — one job, no file write; free on local[*] and the fastest
+  *    option on a healthy cluster, but an executor loss is fatal to every
+  *    frame it held: the blocks are gone and there is no lineage to
+  *    recompute them.
+  *  - **Reliable (`spark.graft.checkpoint.dir=<fault-tolerant path>`):
+  *    persist → reliable `checkpoint()` → unpersist.** Frames are written
   *    to the shared filesystem (HDFS/object store); an executor loss costs
-  *    a re-read, never the job. The persist-before-checkpoint is the
-  *    standard recipe: a bare reliable checkpoint RE-RUNS the frame's plan
-  *    in the write job, doubling every round's compute — caching it makes
-  *    the write a cache scan, and the unpersist keeps the loop's executor
-  *    footprint one round deep.
+  *    a re-read, never the job. Cost: a second job per frame (the write)
+  *    and its bytes on the filesystem, which outlive the frame — Spark
+  *    removes reliable checkpoint files only under
+  *    `spark.cleaner.referenceTracking.cleanCheckpoints`. The
+  *    persist-before-checkpoint is the standard recipe: a bare reliable
+  *    checkpoint RE-RUNS the frame's plan in the write job — caching it
+  *    makes the write a cache scan, and the unpersist keeps the executor
+  *    footprint one frame deep.
   *
-  * One switch for every iterative operator, read per call so a session can
-  * turn it on for a long CC job and off for interactive work. Row-level
-  * results are IDENTICAL either way (ReliableCheckpointSpec pins CC + rank
-  * output equality and that round files land under the directory).
-  *
-  * Accumulator note: [[Dedup.checkpointCounting]] rides a counting
-  * accumulator on the materialization job. Under reliable mode the write
-  * job re-reads the CACHE, not the plan, so the probe UDF still fires
-  * exactly once per row in the common path; a cache-evicted partition
-  * recomputes and can over-count — safe here because every consumer tests
-  * `count == 0`, and rows can only ADD increments (same argument as task
-  * retries, documented there).
+  * Read per call, so a session can turn it on for a long CC job and off
+  * for interactive work; the memo ([[graft.queries.Memo]]) keys every
+  * entry on it. Row-level results are IDENTICAL either way
+  * (ReliableCheckpointSpec pins CC + rank output equality and that frames
+  * land under the directory).
   */
 object Materialize {
 
-  /** Session conf key: when set (non-empty), iterative rounds checkpoint
-    * reliably under this directory instead of `localCheckpoint`.
+  /** Session conf key: when set (non-empty), frames checkpoint reliably
+    * under this directory instead of `localCheckpoint`.
     */
   val DirKey = "spark.graft.checkpoint.dir"
 
@@ -57,7 +55,7 @@ object Materialize {
       case Some(dir) =>
         // setCheckpointDir is sticky per SparkContext (it appends a
         // per-context UUID subdir); only (re)set it when the configured
-        // root changed, so all rounds of a job share one tree
+        // root changed, so all frames of a job share one tree
         val cur = lastDir.get()
         if (cur != dir) {
           s.sparkContext.setCheckpointDir(dir)
@@ -69,6 +67,20 @@ object Materialize {
         ck
       case None => df.localCheckpoint(eager = true)
     }
+  }
+
+  /** [[frame]] with the named aggregates `aggs` (a row count, min/max,
+    * `count_if(flag)`, ...) observed on the materialization's own job:
+    * the value a caller would otherwise take with a second action over
+    * the frame comes back with it. Under the reliable posture the
+    * observation sits below the persisted plan, so it fires once, on the
+    * job that fills the cache. Returns (frame, aggregate name → value;
+    * null over an empty frame where the aggregate is).
+    */
+  def observed(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val ck = frame(df.observe(obs, aggs.head, aggs.tail: _*))
+    (ck, obs.get)
   }
 
   private val lastDir = new java.util.concurrent.atomic.AtomicReference[String](null)

@@ -155,24 +155,27 @@ object Similarity {
     */
   def kmeansAssign(vecs: DataFrame, cents: Seq[(Int, Seq[Double])]): DataFrame = {
     require(cents.nonEmpty, "centroid set is empty")
-    // native codegen'd squared-L2 (bit-identical to the aggregate(zip_with)
-    // fold it replaced — same strict left-to-right accumulation): the
-    // assignment evaluates it k times per row, the suite's hottest scalar
-    def sqDist(cv: Seq[Double]): Column = {
-      val litC = typedLit(cv) // one Literal node (see withBuckets)
-      round(graft.functions.DistanceFunctions.sqDist(col("v"), litC), 6)
-    }
-    val scored = array(cents.map { case (cid, cv) =>
-      struct(sqDist(cv).as("dist"), lit(cid).as("cid"))
+    vecs.withColumn("best", nearest(col("v"), cents))
+      .select(col("vec_id"), col("v"),
+        col("best").getField("cid").as("cluster"),
+        col("best").getField("dist").as("dist"))
+  }
+
+  /** The (dist, cid) struct of the entry of `codes` nearest to `v` — the
+    * [[kmeansAssign]] rule, shared with [[pqEncode]]. `sq_dist` is native
+    * codegen'd, bit-identical to the aggregate(zip_with) fold it replaced.
+    */
+  private def nearest(v: Column, codes: Seq[(Int, Seq[Double])]): Column = {
+    val scored = array(codes.map { case (cid, cv) =>
+      struct(
+        round(graft.functions.DistanceFunctions.sqDist(v, typedLit(cv)), 6).as("dist"),
+        lit(cid).as("cid"))
     }: _*)
     // element_at(array_sort(...), 1), NOT array_min: tried in r13 — the
     // identical least element, but ArrayMin's interpreted-ordering eval
     // measured 4x SLOWER on the PQ scans (sim_pq_ann 1.38 -> 6.07 s,
     // same plan shape); the sort form stays
-    vecs.withColumn("best", element_at(array_sort(scored), 1))
-      .select(col("vec_id"), col("v"),
-        col("best").getField("cid").as("cluster"),
-        col("best").getField("dist").as("dist"))
+    element_at(array_sort(scored), 1)
   }
 
   /** `rounds` Lloyd update rounds from deterministic seeds (the first k
@@ -319,14 +322,8 @@ object Similarity {
     */
   def pqEncode(vecs: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
     cbs.zipWithIndex.foldLeft(vecs) { case (df, (cb, m)) =>
-      val sub = slice(col("v"), m * PqSub + 1, PqSub)
-      val scored = array(cb.map { case (cid, cv) =>
-        struct(
-          round(graft.functions.DistanceFunctions.sqDist(sub, typedLit(cv)), 6)
-            .as("dist"),
-          lit(cid).as("cid"))
-      }: _*)
-      df.withColumn(s"c$m", element_at(array_sort(scored), 1).getField("cid"))
+      df.withColumn(s"c$m",
+        nearest(slice(col("v"), m * PqSub + 1, PqSub), cb).getField("cid"))
     }
   }
 

@@ -55,7 +55,7 @@ object TextAnalysis {
     unigramLogprobOfTf(
       tokenRows(docs, idCol, textCol)
         .groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true),
+        .transform(Materialize.frame),
       idCol)
 
   /** [[unigramLogprob]] from an already-materialized `(id, token, tf)`

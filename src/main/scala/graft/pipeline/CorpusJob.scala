@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.Tables
 import graft.functions.Bloom
-import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.operators.{Dedup, Materialize, Sampling, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -57,9 +57,10 @@ import org.apache.spark.sql.types.StructType
   * actually reviews); the returned frame is the curated corpus.
   *
   * Checkpoints, and who reads them. Each active stage's output is one
-  * eager `localCheckpoint`, and its funnel count is an `Observation` on
-  * that checkpoint's own job ([[StageStore.observed]]), so a count costs
-  * no job. Their readers:
+  * eager [[Materialize.frame]] (executor-local or reliable, per the
+  * session's checkpoint posture), and its funnel count is an
+  * `Observation` on that checkpoint's own job ([[StageStore.observed]]),
+  * so a count costs no job. Their readers:
   *  - exact, bow: the next stage's key aggregate and its semi-join;
   *  - near: both branches of the Bloom decontamination split;
   *  - clean0 (the tail's input): the fuzzy tier's train side and its
@@ -292,7 +293,7 @@ object CorpusJob {
     // materialize it once, or each re-runs the Bloom decontamination (and,
     // in the stream, the raw ⋉ keepers join) and ships the filter literal
     // inside every task binary
-    val (clean0, clean0Stats) = StageStore.checkpointObserved(decontaminated, rowCount)
+    val (clean0, clean0Stats) = Materialize.observed(decontaminated, rowCount)
     val nClean0 = rows(clean0Stats)
 
     // 3a. FUZZY decontamination (the dedup_decontam_fuzzy tier composed):
@@ -404,21 +405,15 @@ object CorpusJob {
         // labeled, doc-normalized hashed-unigram features (the
         // text_quality_classifier construction with the configurable
         // trusted-domain label)
-        val feats = graft.operators.Classifier.milliFeatures(quality
-            .select(col("doc_id"),
-              when(col("source") === cfg.clfTarget, lit(1L)).otherwise(lit(0L)).as("y"),
-              explode(TextAnalysis.tokens(col("text"))).as("token"))
-            .select(col("doc_id"), col("y"),
-              pmod(TextAnalysis.tokenHash(col("token")), lit(256L)).as("bucket"))
-            .groupBy("doc_id", "y", "bucket").agg(count(lit(1)).as("tf")))
-          .localCheckpoint(true)
+        val feats = Materialize.frame(
+          graft.operators.Classifier.features(quality, cfg.clfTarget, 256))
         val w = graft.operators.Classifier.trainLogreg(feats, 256, 3)
         val scored = graft.operators.Classifier.score(feats, w)
           .select("doc_id", "score_nano")
           .join(quality.select(col("doc_id"),
             size(TextAnalysis.tokens(col("text"))).cast("long").as("__nt")),
             "doc_id")
-          .localCheckpoint(true)
+          .transform(Materialize.frame)
         // the selection's bounds pass sums the token weights anyway: the
         // budget derives from that total instead of a separate aggregate
         def budgetOf(total: Long): Long = (total * cfg.budgetShare).toLong

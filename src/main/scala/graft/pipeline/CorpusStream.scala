@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.Bloom
-import graft.operators.{Dedup, DedupState, Layout, TextAnalysis}
+import graft.operators.{Dedup, DedupState, Layout, Materialize, TextAnalysis}
 import graft.sinks.TableSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -211,7 +211,7 @@ object CorpusStream {
     // ascending-ingest contract, checked against the persisted standing
     // max: the batch's id range is observed on its own checkpoint job
     // (both ends null for an empty batch)
-    val (b, ids) = StageStore.checkpointObserved(batch0,
+    val (b, ids) = Materialize.observed(batch0,
       min("doc_id").as("lo"), max("doc_id").as("hi"))
     val lo = Option(ids("lo")).map(_.asInstanceOf[Long])
     val batchMaxId = Option(ids("hi")).map(_.asInstanceOf[Long])
@@ -227,7 +227,7 @@ object CorpusStream {
     val newHashes = bh.join(
         stateTable(s, n, n.hashes, wm, bh.limit(0)).select("h"),
         Seq("h"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val exactKeep = b.join(newHashes.select("doc_id"), Seq("doc_id"), "left_semi")
     // 1b. bag-of-words head over the exact keepers
     val bbh = exactKeep.select(col("doc_id"),
@@ -236,13 +236,13 @@ object CorpusStream {
     val newBows = bbh.join(
         stateTable(s, n, n.bows, wm, bbh.limit(0)).select("bh"),
         Seq("bh"), "left_anti")
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val bowKeep = exactKeep
       .join(newBows.select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     // 2. near-dup head: batch fingerprints + edges vs (standing ∪ batch),
     // assignments advanced through the proven contraction transition
-    val sim = Dedup.simhash(bowKeep, "doc_id", "text").localCheckpoint(true)
+    val sim = Dedup.simhash(bowKeep, "doc_id", "text").transform(Materialize.frame)
     val standingSims = stateTable(s, n, n.sims, wm, sim.limit(0))
     val selfEdges = Dedup.hammingPairs(sim, "doc_id", "simhash",
       bits = 60, nBands = 4, maxHamming = 3).select("a", "b")
@@ -250,15 +250,15 @@ object CorpusStream {
       "simhash", bits = 60, nBands = 4, maxHamming = 3).select("a", "b")
     val standingComps = compsAt(s, n, wm,
       sim.select(col("doc_id"), col("doc_id").as("comp")).limit(0))
-    // mergedComps materializes its result eagerly (localCheckpoint)
+    // mergedComps materializes its result eagerly (Materialize.frame)
     val compsSnap = DedupState.mergedComps(s, "doc_id", bowKeep.select("doc_id"),
       selfEdges.unionByName(crossEdges), standingComps)
     // 3. decontamination blocklist delta: eval docs hash ORIGINAL text;
     // the eval docs themselves also persist (the fuzzy tier's probe side)
     val blockDelta = b.filter(col("doc_id") % 10 === 0)
-      .select(md5(col("text")).as("h")).localCheckpoint(true)
+      .select(md5(col("text")).as("h")).transform(Materialize.frame)
     val evalDelta = b.filter(col("doc_id") % 10 === 0)
-      .select("doc_id", "text").localCheckpoint(true)
+      .select("doc_id", "text").transform(Materialize.frame)
     // ---- writes: every one replaces only this epoch's partition; the
     // marker goes LAST, so a crash anywhere leaves the epoch uncommitted
     // and the replay overwrites the same partitions

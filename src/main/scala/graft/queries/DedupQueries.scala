@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Dedup, DedupState, Similarity, TextAnalysis}
+import graft.operators.{Dedup, DedupState, Materialize, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -643,7 +643,7 @@ object DedupQueries {
     val corpus = cdcFrame(s, d).filter(col("doc_id") < sp)
       .select("chunk_md5").distinct()
     val batch = cdcFrame(s, d).filter(col("doc_id") >= sp)
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val tot = batch.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
     val hits = batch.join(corpus, Seq("chunk_md5"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_corpus_chunks"))
@@ -1008,7 +1008,7 @@ object DedupQueries {
     // corpus scan plus k sq_dist evaluations per row (same move as the
     // shingle frame in ngramPairs)
     val assigned = Similarity.kmeansAssign(vecs, cents)
-      .select("vec_id", "v", "cluster").localCheckpoint(true)
+      .select("vec_id", "v", "cluster").transform(Materialize.frame)
     val x = assigned.select(col("vec_id").as("va"), col("v").as("xa"), col("cluster").as("ca"))
     val y = assigned.select(col("vec_id").as("vb"), col("v").as("xb"), col("cluster").as("cb"))
     val pairs = x.join(y, col("ca") === col("cb") && col("va") < col("vb"))
@@ -1121,7 +1121,7 @@ object DedupQueries {
     */
   def spansMinimized(s: SparkSession, d: String): DataFrame = {
     // consumed twice (duplicate-set groupBy, occurrence semi-join)
-    val w = winnowedWindows(s, d).localCheckpoint(true)
+    val w = winnowedWindows(s, d).transform(Materialize.frame)
     val dup = w.groupBy("span_md5")
       .agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2)

@@ -83,10 +83,11 @@ object Memo {
     s"${entries.map(_.hits).sum}/${entries.map(_.misses).sum}"
 
   /** Unpersist every checkpointed frame inside an evicted value (frames
-    * ride alone or in tuples). A `localCheckpoint(true)` plan is a
-    * `LogicalRDD` over the persisted RDD — unpersist THAT rdd; `df.rdd`
+    * ride alone or in tuples). A [[Materialize.frame]] plan is a
+    * `LogicalRDD` over the checkpointed RDD — unpersist THAT rdd; `df.rdd`
     * would wrap it in a fresh deserializing RDD whose unpersist frees
-    * nothing.
+    * nothing. That frees a local checkpoint's blocks; a reliable
+    * checkpoint's files stay under the checkpoint dir.
     */
   private def unpersistDeep(v: Any): Unit = v match {
     case df: org.apache.spark.sql.Dataset[_] =>

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.CentroidAgg
-import graft.operators.{AsOfJoin, Layout, Similarity}
+import graft.operators.{AsOfJoin, Layout, Materialize, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -609,7 +609,7 @@ object MiscQueries {
   def medianScalable(s: SparkSession, d: String): DataFrame = {
     val v = Tables.lineitem(s, d).select(
         (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").as("v"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val (n, vals, _) = graft.operators.OrderStats.selectRanksOf(
       v, m => Seq((m + 1) / 2, m / 2 + 1).distinct, bins = MedianBins.toInt)
     val (k1, k2) = ((n + 1) / 2, n / 2 + 1)
@@ -637,7 +637,7 @@ object MiscQueries {
       .filter(col("value").isNotNull)
       .select(col("event_type").as("g"),
         floor(col("value") * 10000).cast("long").as("v"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val res = graft.operators.OrderStats.selectRanksGrouped(
       v, (_, n) => Seq((n + 1) / 2, n / 2 + 1).distinct)
     res.toSeq.sortBy(_._1).map { case (g, (n, vals)) =>

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Materialize, Similarity}
 import graft.operators.Similarity._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -724,7 +724,7 @@ object SimilarityQueries {
         floor(col("tf").cast("double")
           * log(col("n").cast("double") / col("df").cast("double"))
           * lit(1000.0)).cast("long").as("wm"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val norm = w.groupBy("doc_id").agg(sum(col("wm") * col("wm")).as("n2"))
     val pairs = w.as("a")
       .join(w.as("b"),

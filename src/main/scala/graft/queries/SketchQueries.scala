@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Bloom, Cms, KmvOps}
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -184,7 +185,7 @@ object SketchQueries {
       .select(to_date(col("ts")).as("day"),
         graft.operators.Sampling.hash60(col("user_id"), "kmvr").as("hv"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val daily = h.groupBy("day")
       .agg(graft.functions.Kmv.sketch(col("hv"), KmvK).as("sk"))
     val days = daily.select(col("day").as("d0"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Classifier, Dedup, Sampling, TextAnalysis}
+import graft.operators.{Classifier, Dedup, Materialize, Sampling, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -559,13 +559,14 @@ object TextQueries {
       val sTbl = graft.operators.Layout.stateName("graft_bm25s_parts", d)
       val standing = Tables.documents(s, d)
         .filter(col("doc_id") < DedupQueries.splitId(s, d))
-      val tf = TextAnalysis.tokenRows(standing, "doc_id", "text")
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
+      // the corpus stats ride the tf checkpoint's own job
+      val (tf, st0) = Materialize.observed(
+        TextAnalysis.tokenRows(standing, "doc_id", "text")
+          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
+        sum("tf").as("t"), max("tf").as("mtf"))
       val dlW = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
       val postings = tf.withColumn("dl", sum("tf").over(dlW))
-      val st0 = tf.agg(sum("tf").as("t"), max("tf").as("mtf")).head()
-      val (bigT, maxTf) = (st0.getLong(0), st0.getLong(1))
+      val (bigT, maxTf) = (st0("t").asInstanceOf[Long], st0("mtf").asInstanceOf[Long])
       val bigN = standing.count()
       val toks = tf.groupBy("token").agg(count(lit(1)).as("df"))
         .withColumn("idf_micro",
@@ -636,17 +637,17 @@ object TextQueries {
   private val bm25AdvMemo = Memo.entry[(String, String, String)]("bm25AdvState")
 
   private def bm25Partials(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val tf = TextAnalysis.tokenRows(docs, "doc_id", "text")
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    // the stat row's sums ride the tf checkpoint's own job
+    val (tf, st) = Materialize.observed(
+      TextAnalysis.tokenRows(docs, "doc_id", "text")
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
+      coalesce(sum("tf"), lit(0L)).as("t"), coalesce(max("tf"), lit(0L)).as("maxtf"))
     val dlW = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     val postings = tf.withColumn("dl", sum("tf").over(dlW))
     val toks = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val spark = docs.sparkSession
-    val st = tf.agg(coalesce(sum("tf"), lit(0L)).as("t"),
-                    coalesce(max("tf"), lit(0L)).as("maxtf")).head()
-    val stats = spark.createDataFrame(
-        Seq((st.getLong(0), docs.count(), st.getLong(1))))
+    val stats = spark.createDataFrame(Seq((st("t").asInstanceOf[Long], docs.count(),
+        st("maxtf").asInstanceOf[Long])))
       .toDF("t", "n", "maxtf")
     (postings, toks, stats)
   }
@@ -901,7 +902,7 @@ object TextQueries {
       .select(col("token"), col("tf"),
         posexplode(split(col("token"), "(?!^)(?=.)")).as(Seq("p0", "sym")))
       .select(col("token"), col("tf"), (col("p0") + 1).cast("long").as("pos"), col("sym"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val out = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long, Long)]()
     var exhausted = false
     for (r <- 1 to 3 if !exhausted) {
@@ -938,7 +939,7 @@ object TextQueries {
         .withColumn("sym", when(col("tk").isNotNull, lit(a + b)).otherwise(col("sym")))
         .withColumn("npos", row_number().over(wTok).cast("long"))
         .select(col("token"), col("tf"), col("npos").as("pos"), col("sym"))
-        .localCheckpoint(true)
+        .transform(Materialize.frame)
       val vocabAfter = syms.select(countDistinct(col("sym"))).head().getLong(0)
       out += ((r.toLong, a, b, c, vocabAfter))
       }
@@ -1015,30 +1016,17 @@ object TextQueries {
     * engines train the IDENTICAL model.
     */
   /** The classifier's labeled, doc-normalized hashed-feature relation
-    * (doc_id, y, bucket, xm) for an arbitrary documents frame,
-    * checkpointed — consumed every training round plus the scoring pass.
-    * Normalization is PER DOC, so features computed over a filtered
-    * frame are identical to filtering features computed over the corpus
-    * — the property that lets the stored-weights probe featurize only
-    * its batch.
+    * (doc_id, y, bucket, xm) for an arbitrary documents frame, lazy.
+    * Normalization is PER DOC, so the stored-weights probe featurizes
+    * only its batch. Training callers materialize it (read every round);
+    * a frozen-weights scoring pass reads it once (r13: materializing it
+    * there was a pure extra blocking job).
     */
-  private[graft] def clfFeaturesOf(docs: DataFrame,
-                                   checkpoint: Boolean = true): DataFrame = {
-    val feats = Classifier.milliFeatures(docs
-      .select(col("doc_id"),
-        when(col("source") === ClfTarget, lit(1L)).otherwise(lit(0L)).as("y"),
-        explode(TextAnalysis.tokens(col("text"))).as("token"))
-      .select(col("doc_id"), col("y"),
-        pmod(TextAnalysis.tokenHash(col("token")), lit(ClfBuckets.toLong)).as("bucket"))
-      .groupBy("doc_id", "y", "bucket").agg(count(lit(1)).as("tf")))
-    // checkpoint only for TRAINING callers (consumed once per round):
-    // a frozen-weights scoring pass reads the features exactly once, so
-    // the eager materialization there was a pure extra blocking job (r13)
-    if (checkpoint) feats.localCheckpoint(true) else feats
-  }
+  private[graft] def clfFeaturesOf(docs: DataFrame): DataFrame =
+    Classifier.features(docs, ClfTarget, ClfBuckets)
 
   private[graft] def clfFeatures(s: SparkSession, d: String): DataFrame =
-    clfFeaturesOf(Tables.documents(s, d))
+    Materialize.frame(clfFeaturesOf(Tables.documents(s, d)))
 
   /** Full-corpus trained model (features, weights), built once per
     * (session, dir): `text_quality_classifier`, `text_quality_tiers` and
@@ -1171,7 +1159,8 @@ object TextQueries {
       val tbl = graft.operators.Layout.stateName("graft_clfw_parts", d)
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") < DedupQueries.splitId(s, d))
-      val w = Classifier.trainLogreg(clfFeaturesOf(corpus), ClfBuckets, ClfRounds)
+      val w = Classifier.trainLogreg(
+        Materialize.frame(clfFeaturesOf(corpus)), ClfBuckets, ClfRounds)
       graft.operators.Layout.writeBucketed(w, "bucket", tbl, 4)
       tbl
     }
@@ -1204,7 +1193,7 @@ object TextQueries {
       val batch = Tables.documents(s, d)
         .filter(col("doc_id") >= DedupQueries.splitId(s, d))
       graft.operators.Materialize.shared(
-        Classifier.score(clfFeaturesOf(batch, checkpoint = false), s.table(tbl)),
+        Classifier.score(clfFeaturesOf(batch), s.table(tbl)),
         col("doc_id"))
     }
 

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Write-path semantics of the reference sink (O17,
@@ -55,12 +56,12 @@ object TableSink {
                     partitionCol: String, partitionValue: String,
                     numFiles: Int = 1): Unit = {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    // localCheckpoint MATERIALIZES the partition (distributed, block store)
-    // before the overwrite: reading and overwriting one path in a single
+    // Materialize.frame MATERIALIZES the partition (block store, or the
+    // reliable checkpoint dir) before the overwrite: reading and overwriting one path in a single
     // lazy plan is rejected by Spark (and would be unsafe if it weren't)
     val part = spark.read.parquet(path)
       .filter(org.apache.spark.sql.functions.col(partitionCol) === partitionValue)
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     overwriteWindow(part.repartition(numFiles), path, partitionCol)
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{RunLedger, Sessions, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,10 +53,10 @@ object ScaleSmoke {
         when(pmod(col("id"), lit(10L)) < 7, lit(7L))
           .otherwise(pmod(abs(hash(col("id"))), lit(skewKeys)).cast("long")).as("k"),
         col("id").as("rowid"), (col("id") % 1000L).as("v"))
-      .localCheckpoint(true) // both runs time the JOIN, not range codegen
+      .transform(Materialize.frame) // both runs time the JOIN, not range codegen
     val skewDim = spark.range(skewKeys)
       .select(col("id").as("dk"), (col("id") % 97L).as("attr"))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     // Heavy CPU-bound per-joined-row work (nested sha2 + hash), folded to
     // ONE (xor-of-row-hash, count) pair. Two jobs at once: (a) on
     // local[32] every concurrently-running task stretches to a similar
@@ -231,9 +231,9 @@ object ScaleSmoke {
     // edge derivation) hits the same checkpointed frame instead of
     // re-deriving the LSH + verify pipeline (~15s per derivation at 10x)
     val pairFrame = graft.queries.DedupQueries.defs("dedup_minhash_pairs")(spark, dir)
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val rankFrame = graft.queries.GraphQueries.defs("graph_domain_rank")(spark, dir)
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
 
     // every verified pair must be within one replica (vocabularies are
     // disjoint, so a cross-replica pair means the pipeline is broken)
@@ -300,10 +300,10 @@ object ScaleSmoke {
     // quadratic accident blowup (the 32-bit failure mode) would put
     // pair count within an order of nDocs², not nDocs.
     val phashFrame = graft.queries.MultimodalQueries.defs("mm_phash_pairs")(spark, dir)
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val phCross = phashFrame
       .filter(floor(col("media_a") / Offset) =!= floor(col("media_b") / Offset))
-      .localCheckpoint(true)
+      .transform(Materialize.frame)
     val crossN = phCross.count()
     val sibN = phCross.filter(col("media_a") % Offset === col("media_b") % Offset).count()
     require(crossN > 0L, "phash found none of the planted cross-replica byte-twins")

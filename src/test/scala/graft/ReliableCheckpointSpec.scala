@@ -55,6 +55,12 @@ class ReliableCheckpointSpec extends SparkSpec {
       graft.queries.DedupQueries.shingleFrame(spark, sf())
       assert(rddDirsUnder(dir) > before,
         "shingleFrame must checkpoint reliably under the configured root")
+      // spansMinimized's window frame, once the tokens beneath are built
+      graft.queries.DedupQueries.winnowedWindows(spark, sf())
+      val beforeSpans = rddDirsUnder(dir)
+      graft.queries.DedupQueries.spansMinimized(spark, sf())
+      assert(rddDirsUnder(dir) > beforeSpans,
+        "spansMinimized must checkpoint reliably under the configured root")
     } finally spark.conf.unset(Materialize.DirKey)
   }
 }

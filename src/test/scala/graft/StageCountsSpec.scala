@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Materialize
 import graft.pipeline.{CorpusJob, CorpusStream, StageStore}
 import org.apache.spark.sql.functions._
 
@@ -7,8 +8,9 @@ import org.apache.spark.sql.functions._
   * ([[StageStore.observed]]): every funnel count equals an explicit
   * `count()` of that stage's output — when the stage is computed, when it
   * is read back from a sealed resume dir (where no observation fires),
-  * and with no resume dir at all. The stream's batch id range rides its
-  * batch checkpoint the same way, empty batch included.
+  * and with no resume dir at all, under either checkpoint posture. The
+  * stream's batch id range rides its batch checkpoint the same way, empty
+  * batch included.
   */
 class StageCountsSpec extends SparkSpec {
 
@@ -27,6 +29,12 @@ class StageCountsSpec extends SparkSpec {
     assert(store.misses === 0, "the re-run must read every stage back")
     val plain = CorpusJob.execute(spark,
       cfg.copy(out = tempDir("graft-counts-out"), resumeDir = ""))._2
+    // the same plain run with every stage checkpointed reliably: the
+    // counts observed below a persisted plan still fire
+    spark.conf.set(Materialize.DirKey, tempDir("graft-counts-ck"))
+    val reliable = try CorpusJob.execute(spark,
+      cfg.copy(out = tempDir("graft-counts-out"), resumeDir = ""))._2
+    finally spark.conf.unset(Materialize.DirKey)
 
     def stage(name: String) = spark.read.parquet(s"$dir/$name/data")
     val explicit = Seq(
@@ -36,7 +44,8 @@ class StageCountsSpec extends SparkSpec {
       "spancut" -> stage("spancut").filter(col("n_cut") > 0).count(),
       "screened" -> stage("screened").count(), "quality" -> stage("quality").count(),
       "budget" -> stage("budget").count(), "mixed" -> stage("mixed").count())
-    for ((run, f) <- Seq("computed" -> computed, "resumed" -> resumed, "plain" -> plain)) {
+    for ((run, f) <- Seq("computed" -> computed, "resumed" -> resumed, "plain" -> plain,
+                         "reliable" -> reliable)) {
       val observed = Seq(
         "exact" -> f.exactKept, "bow" -> f.bowKept, "near" -> f.nearKept,
         "clean0" -> f.cleanKept, "fuzzy" -> f.fuzzyKept, "spancut" -> f.spanCutDocs,
